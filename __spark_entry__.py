@@ -176,19 +176,6 @@ def _marker_sql_padded(padded_col: str, words) -> str:
     return f"len(regexp_extract_all({padded_col}, '{pat}'))"
 
 
-def _marker_sql_old(col: str, words) -> str:
-    """SQL twin of textstats._marker_hits."""
-    padded = f"(' ' || lower({col}) || ' ')"
-    terms = []
-    for w in words:
-        pat = f" {w} "
-        terms.append(
-            f"CAST((length({padded}) - length(replace({padded}, '{pat}', ' ')))"
-            f" / {len(pat) - 1} AS INT)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
@@ -405,11 +392,9 @@ def _q_near_dup_jaccard(spark, sf):
 
 
 def _q_lang_id(spark, sf):
-    # r6: the four staged regexp_count arms are replaced by ONE Arrow
-    # batch kernel (tokenize once, count marker membership per language —
-    # textstats.lang_id_batched; values identical, equivalence pinned by
-    # unit test). The r5 staged-regex formulation remains available as
-    # textstats.lang_id for engines without Python workers.
+    # ONE Arrow batch kernel: tokenize once, count marker membership per
+    # language (textstats.lang_id_batched). Frozen test rows pin its edge
+    # cases; the lang_id oracle below pins the query.
     d = _t(spark, sf, "documents", spread=True)
     return d.select(
         "doc_id",
@@ -1312,7 +1297,8 @@ SELECT query_id, rank, vec_id, cosine FROM ranked WHERE rank <= 10
 """
 
 def _cos_expr_sql(a: str, b: str) -> str:
-    """SQL twin of similarity._cosine: left-to-right double accumulation."""
+    """SQL twin of similarity.cosine_batched: left-to-right double
+    accumulation."""
     dot = (
         f"list_sum([CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) "
         f"FOR i IN generate_series(1, len({a}))])"
@@ -1329,7 +1315,7 @@ def _cos_expr_sql(a: str, b: str) -> str:
 
 
 def _rademacher_proj_sql(v: str, i: int) -> str:
-    """DuckDB twin of similarity._rademacher_sign projection: same integer
+    """DuckDB twin of one similarity._sign_matrix projection: same integer
     sign derivation, same left-to-right double accumulation."""
     return (
         f"list_sum([CAST({v}[j] AS DOUBLE) * CAST(1 - 2 * "
@@ -1339,7 +1325,8 @@ def _rademacher_proj_sql(v: str, i: int) -> str:
 
 
 def _bucket_sql(v: str, h: int = 8) -> str:
-    """DuckDB twin of similarity.sign_lsh_bucket (Rademacher sign LSH)."""
+    """DuckDB twin of similarity.sign_lsh_bucket_batched (Rademacher sign
+    LSH)."""
     terms = " + ".join(
         f"(CASE WHEN {_rademacher_proj_sql(v, i)} > 0 THEN {2**i} ELSE 0 END)"
         for i in range(h)

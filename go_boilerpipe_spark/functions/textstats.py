@@ -1,10 +1,9 @@
 """Text-analysis column functions for training-data pipelines.
 
-All built-in Catalyst expressions (JVM-side, codegen) — language ID,
-quality scoring, token counting, fingerprinting over a text column.
+Quality scoring, token counting and fingerprinting are built-in Catalyst
+expressions (JVM-side, codegen); language ID is one Arrow batch kernel.
 Each has an ANSI-SQL twin in __spark_entry__.oracle_sql() so DuckDB can
-verify values at small scale; the expressions themselves are what run at
-100 TB (no Python in the plan).
+verify values at small scale.
 """
 
 from __future__ import annotations
@@ -13,10 +12,9 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Deterministic marker-word sets for the n-gram language-ID heuristic:
-# high-frequency function words, disjoint enough to discriminate. One
-# regexp_count alternation per language keeps the plan within codegen
-# limits regardless of list size.
+# Deterministic marker-word sets for the language-ID heuristic (the "en"
+# set doubles as the stopword list of quality_features): high-frequency
+# function words, disjoint enough to discriminate.
 LANG_MARKERS = {
     "en": ("the", "and", "of", "to", "is", "in", "that", "it", "was",
            "for", "with", "his", "they", "this", "have"),
@@ -34,8 +32,8 @@ def padded_lc(text: Column) -> Column:
 
     Stage this ONCE per row in its own projection and pass the staged
     column into every ``_marker_hits`` call (VERDICT r3 item 1:
-    recomputing the full-text pass per language arm re-scans the text 4x
-    per row, and these trees run interpreted so Catalyst CSE does not
+    recomputing the full-text pass per call re-scans the text once per
+    feature, and these trees run interpreted so Catalyst CSE does not
     rescue; PLANS.md lesson 1 applied to a string). The wrap spaces let a
     fixed-width ``(?<=\\s)`` lookbehind fire on the first token and a
     ``(?=\\s)`` lookahead on the last."""
@@ -61,61 +59,28 @@ def _marker_hits(padded: Column, words) -> Column:
     return F.regexp_count(padded, F.lit(pat)).cast("int")
 
 
-def cjk_char_count(text: Column) -> Column:
-    return F.length(text) - F.length(
-        F.regexp_replace(text, "[\\x{4e00}-\\x{9fff}]", "")
-    )
-
-
-def lang_id(text: Column, padded: Column | None = None) -> Column:
-    """Heuristic language ID: CJK-ratio gate, then marker-word argmax.
-    Returns a language code string ('und' when nothing matches).
-
-    Pass ``padded`` (a column staged with :func:`padded_lc` in its own
-    projection) on any hot path — otherwise the widening regex pass is
-    embedded once per language arm in this expression tree (4 full-text
-    scans per row, VERDICT r3 item 1)."""
-    if padded is None:
-        padded = padded_lc(text)
-    scores = [
-        (code, _marker_hits(padded, ws)) for code, ws in LANG_MARKERS.items()
-    ]
-    best_code = F.lit("und")
-    best_score = F.lit(0)
-    # deterministic order: iterate in fixed dict order; strictly-greater wins
-    for code, score in scores:
-        is_better = score > best_score
-        best_code = F.when(is_better, F.lit(code)).otherwise(best_code)
-        best_score = F.when(is_better, score).otherwise(best_score)
-    return F.when(
-        cjk_char_count(text) * 5 > F.length(text), F.lit("zh")
-    ).otherwise(best_code)
-
-
 _LANGID_UDF = None
 
 
 def _langid_kernel_factory():
-    """Arrow-batched twin of :func:`lang_id` (guide §4.2: hand whole
-    batches to native code instead of four Java-regex lookaround scans
-    per row). Equivalence to the Catalyst expression, case by case:
+    """Heuristic language ID as an Arrow batch kernel (guide §4.2: hand
+    whole batches to native code instead of four Java-regex scans per
+    row): a CJK-ratio gate, then a marker-word argmax. Returns a language
+    code string ('und' when nothing matches).
 
-    - tokenization: the regex counts matches of ``(?<=\\s)(w1|..)(?=\\s)``
-      over the space-wrapped lowercased text — every match is a FULL
-      whitespace-delimited token (the lookarounds pin both boundaries),
-      so the count equals membership counting over an ASCII-``\\s`` split
-      (Java default ``\\s`` == Python ``re.ASCII`` ``\\s``);
-    - casing: ``str.lower()`` and the JVM's Locale.ROOT lowercasing both
-      implement Unicode default+special casing (lowering never creates
-      ASCII whitespace, so token boundaries are stable);
-    - argmax: same fixed LANG_MARKERS order, strictly-greater wins;
-    - CJK gate: code-point count in [U+4E00, U+9FFF] vs Spark length()
-      (= code points) — ``len(t)`` in Python counts the same;
-    - NULL text: every Catalyst branch nulls out and the whens fall
-      through to 'und'.
+    - tokens: an ASCII-``\\s`` split of the lowercased text (Java's
+      default ``\\s`` == Python ``re.ASCII`` ``\\s``); a token counts
+      for every language whose LANG_MARKERS set holds it;
+    - casing: ``str.lower()`` implements Unicode default+special casing,
+      like the JVM's Locale.ROOT lowercasing;
+    - argmax: fixed LANG_MARKERS order, strictly-greater wins;
+    - CJK gate: 'zh' when more than a fifth of the code points are in
+      [U+4E00, U+9FFF];
+    - NULL text: 'und'.
 
-    tests/test_spark_layer.py pins batched == Catalyst on adversarial
-    inputs (NULL, empty, whitespace runs, CJK, non-ASCII casing)."""
+    Frozen test rows pin the edges (NULL, empty, whitespace runs, CJK,
+    non-ASCII casing, ties) and the ``lang_id`` DuckDB twin pins the
+    query."""
     import re
 
     ws = re.compile(r"\s+", re.ASCII)
@@ -154,9 +119,8 @@ def _langid_kernel_factory():
 
 
 def lang_id_batched(text: Column) -> Column:
-    """Arrow-batched :func:`lang_id` — one vectorized pass per batch
-    instead of four full-text Java-regex scans per row (values
-    identical; see :func:`_langid_kernel_factory`)."""
+    """Heuristic language ID of a text column — one vectorized pass per
+    batch; see :func:`_langid_kernel_factory`."""
     global _LANGID_UDF
     if _LANGID_UDF is None:
         from pyspark.sql.functions import pandas_udf

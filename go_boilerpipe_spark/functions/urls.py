@@ -123,12 +123,10 @@ _NORM_URL_UDF = None
 
 
 def _norm_url_kernel():
-    """Arrow twin of the staged Catalyst normalization: one call to the
-    pure reference port (``str(normurl.parse(raw))``) per URL. The port
-    and the Catalyst twin are the SAME specification implemented twice —
-    pinned equal by the 300-case fuzz differential (tests) and re-checked
-    value-for-value over every bench URL distribution this round. Null
-    in → null out (the twin's regexp chain null-propagates)."""
+    """One call to the pure reference port (``str(normurl.parse(raw))``)
+    per URL. The port and :func:`normalize_url` are the same
+    specification implemented twice, pinned equal by the 300-case fuzz
+    differential in the tests. Null in → null out."""
     from typing import Iterator
 
     import pandas as pd
@@ -150,85 +148,22 @@ def _norm_url_kernel():
     return kernel
 
 
-def with_normalized_url(
-    df, url_col: str, out_col: str = "norm_url", use_arrow: bool = True
-):
-    """Staged normalize_url for corpus-scale scans: each intermediate
-    (scheme, rest, host, path, fold) lives in its own projection column,
-    so the plan carries ONE copy of each subtree instead of the
-    column-expression form's multiplicative nesting (the single-Column
-    variant compiles to a multi-MiB task binary — PLANS.md lesson 1
-    applied to strings). Semantics identical to :func:`normalize_url`.
+def with_normalized_url(df, url_col: str, out_col: str = "norm_url"):
+    """:func:`normalize_url` for corpus-scale scans, as a column of ``df``.
 
-    ``use_arrow=True`` (default, r6) normalizes through the pure
-    reference port in one Arrow kernel instead of the ~20-projection
-    regexp chain: steady-state throughput is comparable, but the chain's
-    whole-stage-codegen unit costs seconds of FIRST-EXECUTION compile
-    that a single-shot run pays in full (measured cold 4.2 s → ~0.8 s at
-    50k urls). The Catalyst chain stays behind ``use_arrow=False`` (it is
-    the no-Python-workers path and the differential-test reference)."""
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
+    Normalizes through the pure reference port in one Arrow kernel: the
+    equivalent Catalyst chain (~20 regexp projections) has comparable
+    steady-state throughput, but its whole-stage-codegen unit costs
+    seconds of FIRST-EXECUTION compile that a single-shot run pays in full
+    (measured cold 4.2 s → ~0.8 s at 50k urls). The values are pinned by
+    the tests against :func:`normalize_url` and the ``url_normalize``
+    DuckDB twin."""
+    from pyspark.sql.functions import pandas_udf
 
-        global _NORM_URL_UDF
-        if _NORM_URL_UDF is None:
-            _NORM_URL_UDF = pandas_udf(_norm_url_kernel(), "string")
-        return df.withColumn(out_col, _NORM_URL_UDF(F.col(url_col)))
-    d = df.withColumn("_u_s", F.regexp_replace(F.col(url_col), "[?#].*$", ""))
-    d = d.withColumn("_u_scheme", F.regexp_extract("_u_s", _SCHEME_RE, 1))
-    d = d.withColumn(
-        "_u_rest",
-        F.when(F.col("_u_scheme") == "", F.col("_u_s")).otherwise(
-            F.substr(F.col("_u_s"), F.length("_u_scheme") + F.lit(2))
-        ),
-    )
-    d = d.withColumn(
-        "_u_auth",
-        (F.col("_u_scheme") == "") | F.col("_u_rest").startswith("//"),
-    )
-    d = d.withColumn(
-        "_u_hostpath",
-        F.when(
-            F.col("_u_rest").startswith("//"),
-            F.substr(F.col("_u_rest"), F.lit(3)),
-        ).otherwise(F.col("_u_rest")),
-    )
-    d = d.withColumn(
-        "_u_host",
-        F.when(
-            F.col("_u_auth"), F.regexp_extract("_u_hostpath", "^([^/]*)", 1)
-        ).otherwise(F.lit("")),
-    )
-    d = d.withColumn(
-        "_u_path",
-        F.when(
-            F.col("_u_auth"),
-            F.substr(F.col("_u_hostpath"), F.length("_u_host") + F.lit(1)),
-        ).otherwise(F.col("_u_rest")),
-    )
-    d = d.withColumn("_u_clean", go_path_clean(F.col("_u_path")))
-    d = d.withColumn(
-        out_col,
-        F.lower(
-            F.concat(
-                F.when(F.col("_u_scheme") == "", F.lit("http")).otherwise(
-                    F.col("_u_scheme")
-                ),
-                F.lit("://"),
-                F.col("_u_host"),
-                F.when(
-                    (F.col("_u_host") != "")
-                    & (~F.col("_u_clean").startswith("/")),
-                    F.lit("/"),
-                ).otherwise(F.lit("")),
-                F.col("_u_clean"),
-            )
-        ),
-    )
-    return d.drop(
-        "_u_s", "_u_scheme", "_u_rest", "_u_auth", "_u_hostpath",
-        "_u_host", "_u_path", "_u_clean",
-    )
+    global _NORM_URL_UDF
+    if _NORM_URL_UDF is None:
+        _NORM_URL_UDF = pandas_udf(_norm_url_kernel(), "string")
+    return df.withColumn(out_col, _NORM_URL_UDF(F.col(url_col)))
 
 
 DEFAULT_QUERY_KEY_BLACKLIST = (

@@ -2,8 +2,9 @@
 
 Deterministic, oracle-twinned building blocks a 100 TB curation run needs
 beyond dedup/quality: benchmark decontamination, stratified sampling, and
-vocabulary statistics. All pure Catalyst expressions (no Python UDFs);
-hash primitives are md5-hex so the DuckDB twins compute identical values.
+vocabulary statistics. Catalyst expressions, plus map-side Arrow kernels
+for the per-doc token work; hash primitives are md5-hex so the DuckDB
+twins compute identical values.
 """
 
 from __future__ import annotations
@@ -143,12 +144,11 @@ _SEGMENT_HASH_UDFS: dict = {}
 
 
 def _segment_hashes_kernel_factory(seg_tokens: int):
-    """Arrow twin of the segment transform in :func:`segment_dedup`: per
-    doc, md5 hex of each consecutive ``seg_tokens``-token segment (same
-    tokenization and space-joined UTF-8 preimages as the Catalyst path).
-    Null text emits ``[None]`` — the JVM's ``greatest(null, 1)`` keeps one
-    index whose join/md5 is null, and posexplode of either array yields
-    the same single (0, null) row."""
+    """Per doc, the md5 hex of each consecutive ``seg_tokens``-token
+    segment: ``trim(' ')`` + ASCII-``\\s`` split, space-joined UTF-8
+    preimages. Null text emits ``[None]``: one (0, null) segment row.
+    Values are pinned by frozen test rows and the ``segment_dedup`` DuckDB
+    twin."""
     import hashlib
     import re
     from typing import Iterator
@@ -186,7 +186,6 @@ def segment_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     seg_tokens: int = 10,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """CCNet-style segment-level dedup: split each doc into consecutive
     ``seg_tokens``-token segments, hash each, and mark every segment whose
@@ -194,59 +193,26 @@ def segment_dedup(
     pipelines drop duplicated boilerplate paragraphs this way while
     keeping the unique remainder of each page.
 
-    One explode + one shuffle on the segment hash (uniform key). The
-    segment array is staged in its own projection so the per-index slice
-    pass does not re-evaluate the token split per element (O(n²) trap).
-
-    ``use_arrow=True`` (default, r6) computes the segment hash array in
-    one Arrow kernel — the Catalyst segment transform is interpreted HOF
-    work (~0.5 ms/doc; measured ~1.5 s → ~0.9 s at sf1.0). Values are
-    bit-identical (differential unit test); ``use_arrow=False`` keeps the
-    pure-Catalyst plan."""
+    One Arrow kernel computes each doc's segment hash array (the Catalyst
+    slice-and-join transform was interpreted HOF work, ~0.5 ms/doc;
+    measured ~1.5 s → ~0.9 s at sf1.0), then one posexplode and one
+    shuffle on the segment hash (uniform key)."""
     from pyspark.sql import Window
+    from pyspark.sql.functions import pandas_udf
 
     from .util import spread_small
 
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
-
-        if seg_tokens not in _SEGMENT_HASH_UDFS:
-            _SEGMENT_HASH_UDFS[seg_tokens] = pandas_udf(
-                _segment_hashes_kernel_factory(seg_tokens), "array<string>"
-            )
-        sized = spread_small(docs, per_core_bytes=128 << 20)
-        segs = sized.select(
-            F.col(id_col),
-            F.posexplode(
-                _SEGMENT_HASH_UDFS[seg_tokens](F.col(text_col))
-            ).alias("seg_idx", "seg_hash"),
+    if seg_tokens not in _SEGMENT_HASH_UDFS:
+        _SEGMENT_HASH_UDFS[seg_tokens] = pandas_udf(
+            _segment_hashes_kernel_factory(seg_tokens), "array<string>"
         )
-    else:
-        staged_toks = spread_small(docs).select(
-            F.col(id_col),
-            F.split(F.trim(F.col(text_col)), "\\s+").alias("_toks"),
-        )
-        toks = F.col("_toks")
-        n_seg = F.greatest(
-            F.ceil(F.size(toks) / F.lit(float(seg_tokens))).cast("int"),
-            F.lit(1),
-        )
-        idx = F.sequence(F.lit(0), n_seg - 1)
-        staged = staged_toks.select(
-            F.col(id_col),
-            F.transform(
-                idx,
-                lambda i: F.array_join(
-                    F.slice(toks, i * seg_tokens + 1, seg_tokens), " "
-                ),
-            ).alias("_segs"),
-        )
-        segs = staged.select(
-            id_col, F.posexplode("_segs").alias("seg_idx", "seg_text")
-        ).select(
-            id_col, "seg_idx",
-            F.md5(F.col("seg_text").cast("binary")).alias("seg_hash"),
-        )
+    sized = spread_small(docs, per_core_bytes=128 << 20)
+    segs = sized.select(
+        F.col(id_col),
+        F.posexplode(
+            _SEGMENT_HASH_UDFS[seg_tokens](F.col(text_col))
+        ).alias("seg_idx", "seg_hash"),
+    )
     w = (
         Window.partitionBy("seg_hash")
         .orderBy(id_col, "seg_idx")
@@ -265,11 +231,10 @@ def segment_dedup(
 
 def _term_counts_kernel():
     """Per-doc distinct terms + occurrence counts in one Arrow pass:
-    the same ``lower → trim(' ') → ASCII-\\s split`` tokenization as the
-    Catalyst explode (lang_id-kernel casing equivalence), folded into a
-    ``Counter``. Null text yields empty arrays (the Catalyst explode of a
-    null token array emits no rows; exploding the empty zip does the
-    same, so the doc is absent from the output either way)."""
+    ``lower → trim(' ') → ASCII-\\s split`` tokenization folded into a
+    ``Counter`` (``str.lower()`` implements Unicode default casing, like
+    the JVM's Locale.ROOT lowercasing). Null text
+    yields empty arrays, so the doc is absent from the output."""
     import re
     from collections import Counter
     from typing import Iterator
@@ -310,7 +275,6 @@ def doc_token_rarity(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-doc token rarity: the mean document frequency of the doc's
     tokens (low mean-df = rare vocabulary). An integer-exact stand-in for
@@ -318,80 +282,46 @@ def doc_token_rarity(
     between JVM and C runtimes, while BIGINT sums and one final division
     are bit-identical in every engine — so the oracle can hash-match.
 
-    Two shuffles: the df count (map-side partial agg) and the term join
-    (broadcast the df table when the vocab fits, else shuffle join).
+    An Arrow kernel ships DISTINCT (term, count) pairs per doc instead of
+    exploding every occurrence: the explode, shuffle, and join-probe
+    volumes drop by the corpus's within-doc repetition factor (~2× here;
+    more on template-heavy web text). Two shuffles follow: the df count
+    (map-side partial agg) and the term join (broadcast the df table when
+    the vocab fits, else shuffle join). ``sum_df = Σ count·df`` and
+    ``n_tokens = Σ count`` are exact BIGINT totals."""
+    from pyspark.sql.functions import pandas_udf
 
-    ``use_arrow=True`` (default, r6) ships DISTINCT (term, count) pairs
-    per doc out of an Arrow kernel instead of exploding every occurrence:
-    the explode, shuffle, and join-probe volumes drop by the corpus's
-    within-doc repetition factor (~2× here; more on template-heavy web
-    text), and the df count's partial-dedup phase hashes pairs instead of
-    raw occurrences. Local-mode wall is a wash (the agg dominates at this
-    size); the win is shuffle bytes at scale (guide §2). ``sum_df =
-    Σ count·df`` and ``n_tokens = Σ count`` are the same BIGINT totals
-    and df stays ``count_distinct`` over doc ids, so the output is
-    bit-identical even for inputs with duplicated doc_id values
-    (differential-tested). ``use_arrow=False`` keeps the explode plan."""
     from .util import spread_small
 
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
-
-        global _TERM_COUNTS_UDF
-        if _TERM_COUNTS_UDF is None:
-            _TERM_COUNTS_UDF = pandas_udf(
-                _term_counts_kernel(),
-                "terms array<string>, counts array<long>",
-            )
-        staged = spread_small(docs, per_core_bytes=128 << 20).select(
-            F.col(id_col), _TERM_COUNTS_UDF(F.col(text_col)).alias("_tc")
+    global _TERM_COUNTS_UDF
+    if _TERM_COUNTS_UDF is None:
+        _TERM_COUNTS_UDF = pandas_udf(
+            _term_counts_kernel(),
+            "terms array<string>, counts array<long>",
         )
-        pairs = staged.select(
-            F.col(id_col),
-            F.explode(F.arrays_zip("_tc.terms", "_tc.counts")).alias("_p"),
-        ).select(
-            F.col(id_col),
-            F.col("_p.terms").alias("term"),
-            F.col("_p.counts").alias("cnt"),
-        )
-        # count_distinct, not count(*): pairs are distinct per input ROW,
-        # so a corpus with duplicated doc_id values (re-keyed/unioned
-        # input) would otherwise inflate df relative to the Catalyst
-        # reference. The partial-dedup phase now runs over the already
-        # mostly-distinct pairs instead of raw occurrences, so the
-        # volume win stands.
-        dfs = pairs.groupBy("term").agg(
-            F.count_distinct(F.col(id_col)).alias("df")
-        )
-        return (
-            pairs.join(dfs, "term")
-            .groupBy(id_col)
-            .agg(
-                F.sum("cnt").cast("bigint").alias("n_tokens"),
-                F.sum(F.col("cnt") * F.col("df")).cast("bigint").alias(
-                    "sum_df"
-                ),
-            )
-            .withColumn(
-                "mean_df", F.round(F.col("sum_df") / F.col("n_tokens"), 4)
-            )
-        )
-
-    toks = spread_small(docs).select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), "\\s+")
-        ).alias("term"),
+    staged = spread_small(docs, per_core_bytes=128 << 20).select(
+        F.col(id_col), _TERM_COUNTS_UDF(F.col(text_col)).alias("_tc")
     )
-    dfs = toks.groupBy("term").agg(
-        F.count_distinct(id_col).alias("df")
+    pairs = staged.select(
+        F.col(id_col),
+        F.explode(F.arrays_zip("_tc.terms", "_tc.counts")).alias("_p"),
+    ).select(
+        F.col(id_col),
+        F.col("_p.terms").alias("term"),
+        F.col("_p.counts").alias("cnt"),
+    )
+    # count_distinct, not count(*): pairs are distinct per input ROW, so a
+    # corpus with duplicated doc_id values (re-keyed/unioned input) would
+    # otherwise count one doc's term twice in its df
+    dfs = pairs.groupBy("term").agg(
+        F.count_distinct(F.col(id_col)).alias("df")
     )
     return (
-        toks.join(dfs, "term")
+        pairs.join(dfs, "term")
         .groupBy(id_col)
         .agg(
-            F.count("*").alias("n_tokens"),
-            F.sum("df").cast("bigint").alias("sum_df"),
+            F.sum("cnt").cast("bigint").alias("n_tokens"),
+            F.sum(F.col("cnt") * F.col("df")).cast("bigint").alias("sum_df"),
         )
         .withColumn(
             "mean_df", F.round(F.col("sum_df") / F.col("n_tokens"), 4)
@@ -400,47 +330,31 @@ def doc_token_rarity(
 
 
 def _repetition_kernel():
-    """Arrow twin of the Catalyst run-length fold, value-identical.
-
-    The fold over the SORTED bigram array computes, per doc: ``top`` =
-    the longest run = the max bigram count, and ``dup`` = Σ positions in
-    runs of length > 1 = Σ counts over bigrams with count > 1 — both
-    functions of the bigram MULTISET only, so a ``Counter`` replaces the
-    sort+fold exactly (sort order differences between UTF-16 code units
-    and code points cannot matter). Other equivalences: ``str.lower()``
-    == the JVM's Locale.ROOT lowercasing (the lang_id kernel's argued and
-    test-pinned equivalence); tokenization is the ASCII-``\\s`` split;
-    ``round(x, 6)`` is replicated with ``Decimal(x).quantize(1e-6,
-    HALF_UP)`` — ``Decimal(float)`` takes the exact binary value, which
-    is precisely Spark's BigDecimal HALF_UP rounding of a double; the
-    divisions are IEEE doubles on both sides. Null text → (1, 1.0, 1.0):
-    the JVM builds a single-null bigram array (``greatest(null,1)`` keeps
-    one index) and the fold's ``eqNullSafe`` counts it as a run of one —
-    pinned by the differential test."""
+    """Per-doc bigram counts in one Arrow pass: ``n`` = bigram positions,
+    ``top`` = the max bigram count, ``dup`` = Σ counts over bigrams with
+    count > 1. Tokenization is ``str.lower()`` + ``trim(' ')`` + the
+    ASCII-``\\s`` split; a doc with fewer than two tokens has the single
+    whole-token "bigram". Null text → (1, 1, 1): one null bigram, a run of
+    one. Only integers cross the Arrow boundary — the shares are divided
+    and rounded on the JVM, where ``round`` goes through
+    ``Double.toString`` (21/240000 rounds to 8.8e-05 there, not to the
+    8.7e-05 that rounding the exact binary value gives)."""
     import re
     from collections import Counter
-    from decimal import ROUND_HALF_UP, Decimal
     from typing import Iterator
 
     import pandas as pd
 
     ws = re.compile(r"\s+", re.ASCII)
-    q6 = Decimal("0.000001")
-
-    def r6(x: float) -> float:
-        return float(Decimal(x).quantize(q6, rounding=ROUND_HALF_UP))
 
     def kernel(batches):
         for texts in batches:
             n_l, top_l, dup_l = [], [], []
             for t in texts:
                 if t is None:
-                    # JVM: null text -> _bgs = [null] (greatest(null,1)=1
-                    # index, null join), and the fold's eqNullSafe treats
-                    # the single null as a run of 1 -> (1, 1.0, 1.0)
                     n_l.append(1)
-                    top_l.append(1.0)
-                    dup_l.append(1.0)
+                    top_l.append(1)
+                    dup_l.append(1)
                     continue
                 toks = ws.split(t.lower().strip(" "))
                 if len(toks) >= 2:
@@ -450,19 +364,10 @@ def _repetition_kernel():
                     )
                 else:
                     counts = Counter({" ".join(toks): 1})
-                n = sum(counts.values())
-                top = max(counts.values())
-                dup = sum(c for c in counts.values() if c > 1)
-                n_l.append(n)
-                top_l.append(r6(top / n))
-                dup_l.append(r6(dup / n))
-            yield pd.DataFrame(
-                {
-                    "n_bigrams": pd.Series(n_l, dtype="object"),
-                    "top_bigram_share": pd.Series(top_l, dtype="object"),
-                    "dup_bigram_frac": pd.Series(dup_l, dtype="object"),
-                }
-            )
+                n_l.append(sum(counts.values()))
+                top_l.append(max(counts.values()))
+                dup_l.append(sum(c for c in counts.values() if c > 1))
+            yield pd.DataFrame({"n": n_l, "top": top_l, "dup": dup_l})
 
     kernel.__annotations__ = {
         "batches": Iterator[pd.Series],
@@ -478,7 +383,6 @@ def repetition_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Gopher/MassiveText-style repetition signals, integer-exact:
 
@@ -487,105 +391,29 @@ def repetition_stats(
     - ``dup_bigram_frac``: fraction of bigram positions whose bigram
       occurs more than once within the doc.
 
-    Fully MAP-SIDE (r5): a per-doc statistic needs no cross-row data, so
-    the r4 explode → groupBy(doc,bigram) → groupBy(doc) plan paid two
-    shuffles for nothing. Now: sort the staged bigram array and fold
-    run-lengths in one pass (count of a bigram = length of its run in
-    the sorted array) — zero exchanges, integer-exact, same output, and
-    at 100 TB the operator costs exactly one scan.
+    Fully MAP-SIDE: a per-doc statistic needs no cross-row data, so one
+    Arrow kernel counts the bigrams (see :func:`_repetition_kernel`) and
+    the JVM divides and rounds — zero exchanges, and at 100 TB the
+    operator costs exactly one scan."""
+    from pyspark.sql.functions import pandas_udf
 
-    ``use_arrow=True`` (default, r6) computes all three statistics in one
-    Arrow kernel: the Catalyst bigram transform + sort + run-length fold
-    are interpreted HOFs (~0.9 ms/doc; measured 1.6 s → ~0.7 s at sf1.0
-    50k docs). Values are bit-identical — see the kernel docstring for
-    the case-by-case argument, pinned by a differential unit test.
-    ``use_arrow=False`` keeps the pure-Catalyst plan."""
     from .util import spread_small
 
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
-
-        global _REPETITION_UDF
-        if _REPETITION_UDF is None:
-            _REPETITION_UDF = pandas_udf(
-                _repetition_kernel(),
-                "n_bigrams bigint, top_bigram_share double,"
-                " dup_bigram_frac double",
-            )
-        sized = spread_small(docs, per_core_bytes=128 << 20)
-        staged = sized.select(
-            F.col(id_col), _REPETITION_UDF(F.col(text_col)).alias("_st")
+    global _REPETITION_UDF
+    if _REPETITION_UDF is None:
+        _REPETITION_UDF = pandas_udf(
+            _repetition_kernel(), "n bigint, top bigint, dup bigint"
         )
-        return staged.select(
-            id_col,
-            F.col("_st")["n_bigrams"].alias("n_bigrams"),
-            F.col("_st")["top_bigram_share"].alias("top_bigram_share"),
-            F.col("_st")["dup_bigram_frac"].alias("dup_bigram_frac"),
-        )
-
-    # token array staged in its OWN projection: the bigram transform
-    # references it once per bigram, and an inline split() subtree would
-    # re-tokenize the full text per element (O(n²) in doc length — the
-    # PLANS.md lesson-1 trap; this cost repetition_stats ~2x at sf0.1)
-    staged_toks = spread_small(docs).select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), "\\s+").alias("_toks"),
+    sized = spread_small(docs, per_core_bytes=128 << 20)
+    staged = sized.select(
+        F.col(id_col), _REPETITION_UDF(F.col(text_col)).alias("_st")
     )
-    toks = F.col("_toks")
-    n_bg = F.greatest(F.size(toks) - 1, F.lit(1))
-    idx = F.sequence(F.lit(1), n_bg)
-    staged = staged_toks.select(
-        F.col(id_col),
-        F.transform(
-            idx, lambda i: F.array_join(F.slice(toks, i, 2), " ")
-        ).alias("_bgs"),
-    )
-    zero = F.lit(0).cast("long")
-    fold = F.aggregate(
-        F.array_sort(F.col("_bgs")),
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            zero.alias("run"),
-            zero.alias("top"),   # max run length = max bigram count
-            zero.alias("dup"),   # positions in runs of length > 1
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1)
-            .otherwise(F.lit(1).cast("long"))
-            .alias("run"),
-            F.greatest(
-                acc["top"],
-                F.when(x.eqNullSafe(acc["prev"]), acc["run"] + 1).otherwise(
-                    F.lit(1).cast("long")
-                ),
-            ).alias("top"),
-            (
-                acc["dup"]
-                + F.when(
-                    x.eqNullSafe(acc["prev"]),
-                    # run 1→2 counts both positions; each further +1
-                    F.when(acc["run"] == 1, F.lit(2).cast("long")).otherwise(
-                        F.lit(1).cast("long")
-                    ),
-                ).otherwise(zero)
-            ).alias("dup"),
-        ),
-    )
-    stats = staged.select(
-        F.col(id_col),
-        F.size("_bgs").cast("bigint").alias("n_bigrams"),
-        fold.alias("_st"),
-    )
-    return stats.select(
+    n = F.col("_st.n")
+    return staged.select(
         id_col,
-        "n_bigrams",
-        F.round(F.col("_st")["top"] / F.col("n_bigrams"), 6).alias(
-            "top_bigram_share"
-        ),
-        F.round(F.col("_st")["dup"] / F.col("n_bigrams"), 6).alias(
-            "dup_bigram_frac"
-        ),
+        n.alias("n_bigrams"),
+        F.round(F.col("_st.top") / n, 6).alias("top_bigram_share"),
+        F.round(F.col("_st.dup") / n, 6).alias("dup_bigram_frac"),
     )
 
 
@@ -923,15 +751,12 @@ _WINDOW_HASH_UDFS: dict = {}
 
 
 def _window_hashes_kernel_factory(n: int):
-    """Arrow twin of the window-md5 transform in
-    :func:`duplicated_ngram_stats`: per doc, the md5 hex of every
-    ``n``-token window (same ``trim(' ')`` + ASCII-``\\s`` split, same
-    space-joined UTF-8 preimages). Docs shorter than ``n`` tokens emit
-    the one whole-doc window; null text emits ``[None]`` — the JVM's
-    ``greatest(null, 1)`` keeps one index whose join/md5 is null, and the
-    explode of either array produces the same single null row. No
-    cross-doc cache: unlike shingles, 13-gram windows rarely repeat
-    across documents, so a cache would only cost memory."""
+    """Per doc, the md5 hex of every ``n``-token window (``trim(' ')`` +
+    ASCII-``\\s`` split, space-joined UTF-8 preimages). Docs shorter than
+    ``n`` tokens emit the one whole-doc window; null text emits
+    ``[None]``, one null window row. No cross-doc cache: unlike shingles,
+    13-gram windows rarely repeat across documents, so a cache would only
+    cost memory."""
     import hashlib
     import re
     from typing import Iterator
@@ -975,7 +800,6 @@ def duplicated_ngram_stats(
     text_col: str = "text",
     n: int = 13,
     min_docs: int = 2,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Cross-document exact-substring audit (Lee et al., "Deduplicating
     Training Data Makes Language Models Better"): for every ``n``-token
@@ -1011,44 +835,33 @@ def duplicated_ngram_stats(
     no duplicated window rejoin through a LEFT join + coalesce(0). The
     small-input spread guard parallelizes the window-hash generation
     (one-row-group tables scan as one split — see operators.util)."""
+    from pyspark.sql.functions import pandas_udf
+
     from .util import spread_small
 
     staged = spread_small(docs.select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), "\\s+").alias("_toks")
     ))
-    toks = F.col("_toks")
-    n_w = F.greatest(F.size(toks) - (n - 1), F.lit(1))
+    n_w = F.greatest(F.size(F.col("_toks")) - (n - 1), F.lit(1))
     totals = staged.select(
         F.col(id_col), n_w.cast("bigint").alias("total_windows")
     )
-    if use_arrow:
-        # r6: the window-md5 transform is interpreted HOF work (~0.5
-        # ms/doc) and runs on BOTH sides of the docfreq join; the Arrow
-        # kernel produces the identical hash array at hashlib speed.
-        # totals above stays on the cheap JVM size() expression so the
-        # kernel is not re-evaluated a third time for the count.
-        from pyspark.sql.functions import pandas_udf
-
-        if n not in _WINDOW_HASH_UDFS:
-            _WINDOW_HASH_UDFS[n] = pandas_udf(
-                _window_hashes_kernel_factory(n), "array<string>"
-            )
-        src = spread_small(
-            docs.select(F.col(id_col), F.col(text_col)),
-            per_core_bytes=128 << 20,
+    # the window hashes come from an Arrow kernel (the Catalyst window-md5
+    # transform was interpreted HOF work, ~0.5 ms/doc, on BOTH sides of
+    # the docfreq join); totals above stays on the cheap JVM size()
+    # expression so the kernel is not evaluated a third time for the count
+    if n not in _WINDOW_HASH_UDFS:
+        _WINDOW_HASH_UDFS[n] = pandas_udf(
+            _window_hashes_kernel_factory(n), "array<string>"
         )
-        wins = src.select(
-            F.col(id_col),
-            F.explode(_WINDOW_HASH_UDFS[n](F.col(text_col))).alias("_h"),
-        )
-    else:
-        idx = F.sequence(F.lit(0), n_w - 1)
-        win_hash = lambda i: F.md5(  # noqa: E731
-            F.array_join(F.slice(toks, i + 1, n), " ").cast("binary")
-        )
-        wins = staged.select(
-            F.col(id_col), F.explode(F.transform(idx, win_hash)).alias("_h")
-        )
+    src = spread_small(
+        docs.select(F.col(id_col), F.col(text_col)),
+        per_core_bytes=128 << 20,
+    )
+    wins = src.select(
+        F.col(id_col),
+        F.explode(_WINDOW_HASH_UDFS[n](F.col(text_col))).alias("_h"),
+    )
     docfreq = wins.groupBy("_h").agg(
         F.count_distinct(F.col(id_col)).alias("_df")
     )

@@ -1,18 +1,19 @@
 """Deduplication operators for web-text corpora.
 
-All pure DataFrame compositions (no Python UDFs): exact hash-dedup,
-MinHash+LSH banding, SimHash, and n-gram Jaccard verification. Hash
+Exact hash-dedup, MinHash+LSH banding, SimHash, winnowing, and n-gram
+Jaccard verification. Per-doc signatures come from map-side Arrow
+kernels; banding, bucketing and pairing are DataFrame compositions. Hash
 primitives are md5-hex (portable: identical in DuckDB for the oracle
 checks) — at production scale swap md5 for xxhash64 with one line; the
-structure (explode → min-agg → band → self-join on band key) is the part
-that matters for the shuffle plan.
+structure (signature → band → self-join on band key) is the part that
+matters for the shuffle plan.
 
 Scale notes:
 - exact dedup: one hash + one groupBy shuffle on the hash (uniform keys);
-- MinHash LSH: shingle explode is map-side; the only shuffles are the
-  per-doc signature agg and the band self-join, whose keys are the band
-  buckets (uniform by construction — hashes);
-- SimHash: one explode + two aggs; candidate pairs join on a 16-bit
+- MinHash LSH: signatures are a map-side projection; the only shuffle is
+  the band self-join, whose keys are the band buckets (uniform by
+  construction — hashes);
+- SimHash: a map-side signature; candidate pairs join on a 16-bit
   prefix bucket so the self-join never goes quadratic;
 - Jaccard verify: runs only on candidate pairs from a bucketed join,
   never all-pairs.
@@ -42,111 +43,57 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def _stage_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Project the token array once; downstream shingle expressions
-    reference it many times and must not re-evaluate the split per
-    element (O(n²) otherwise)."""
-    return df.select(
-        F.col(id_col),
-        F.split(F.trim(F.col(text_col)), "\\s+").alias("_toks"),
-    )
-
-
-def _word_shingles(n: int, toks_col: str = "_toks"):
-    """Distinct n-word shingles from a staged token-array column."""
-    toks = F.col(toks_col)
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
-    shingle = lambda i: F.array_join(F.slice(toks, i + 1, n), " ")  # noqa: E731
-    return F.when(
-        cnt >= n, F.array_distinct(F.transform(idx, shingle))
-    ).otherwise(F.array(F.array_join(toks, " ")))
-
-
-def _minhash_kernel_factory(num_hashes: int, shingle_n: int):
-    """Build the per-batch MinHash kernel. Bit-identical to the JVM
-    explode/min-agg plan: Java-regex tokenization (``trim`` strips ASCII
-    spaces, ``\\s+`` is the ASCII class — ``re.ASCII`` matches Java's
-    default), the same ``"s{j}:" || shingle`` md5 preimages, and the
-    lexicographic-min of hex, computed as a bytewise min of digests
-    (hex encoding is order-preserving). The per-seed prefix md5 state is
-    precomputed once and ``copy()``-ed per shingle."""
-    import hashlib
-    import re
-
-    # bytes prefixes, not HASH objects — hashlib states don't pickle, so
-    # the per-seed states are rebuilt per batch (num_hashes md5 inits,
-    # negligible) and copy()-ed per shingle
-    prefixes = [f"s{j}:".encode("ascii") for j in range(num_hashes)]
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def kernel(texts: pd.Series) -> pd.Series:
-        prefix_states = [hashlib.md5(p) for p in prefixes]
-        out = []
-        for t in texts:
-            if t is None:
-                # JVM path: null text -> null shingle -> min() over no
-                # non-null inputs -> all-null signature columns
-                out.append([None] * num_hashes)
-                continue
-            toks = ws.split(t.strip(" "))
-            cnt = len(toks)
-            if cnt >= shingle_n:
-                shingles = {
-                    " ".join(toks[i : i + shingle_n])
-                    for i in range(cnt - shingle_n + 1)
-                }
-            else:
-                shingles = {" ".join(toks)}
-            best: list = [None] * num_hashes
-            for sh in shingles:
-                b = sh.encode("utf-8")
-                for j in range(num_hashes):
-                    h = prefix_states[j].copy()
-                    h.update(b)
-                    d = h.digest()
-                    if best[j] is None or d < best[j]:
-                        best[j] = d
-            out.append([d.hex() for d in best])
-        return pd.Series(out)
-
-    return kernel
-
-
-# per-task shingle-digest cache bound: ~260k entries ≈ tens of MB. Never
-# hit at bench scale (≈30k distinct shingles); at crawl scale it bounds
-# task memory while still deduplicating the high-frequency boilerplate
-# shingles that dominate web corpora.
-_MINHASH_CACHE_CAP = 1 << 18
+# Per-task byte budget shared by the hash caches of the MinHash, SimHash
+# and winnowing kernels: the cached keys (shingles or tokens) plus their
+# digests, counted with ``sys.getsizeof``. A MinHash entry at 12 hashes
+# takes about 840 bytes, so the ≈30k distinct shingles of the bench corpus
+# (~25 MB) stay under it; at crawl scale it bounds task memory while still
+# deduplicating the high-frequency boilerplate shingles that dominate web
+# corpora. Past the budget, digests are computed per occurrence; values
+# never change.
+_HASH_CACHE_BYTES = 64 << 20
 
 
 def _minhash_kernel_iter_factory(num_hashes: int, shingle_n: int):
-    """Iterator (per-partition) variant of the MinHash kernel: identical
-    values to :func:`_minhash_kernel_factory` (same preimages, same
-    bytewise min over the same per-doc shingle set — a min over a set is
-    order-independent), but the shingle→digest work is DEDUPLICATED
-    across the partition's documents. Web corpora repeat shingles heavily
-    across documents (boilerplate, templates; measured 8.7× on the bench
-    corpus at 5k docs), so hashing each distinct shingle once replaces
-    ``num_hashes`` md5 computations per occurrence with one dict hit.
+    """Per-partition MinHash kernel. Tokenization follows Java regex
+    semantics (``trim`` strips ASCII spaces, ``\\s+`` is the ASCII class —
+    ``re.ASCII`` matches Java's default); docs shorter than ``shingle_n``
+    tokens use one whole-token shingle; the preimage of seed ``j`` is
+    ``"s{j}:" || shingle`` and the signature keeps the lexicographic-min md5
+    hex per seed, computed as a bytewise min of digests (hex encoding is
+    order-preserving). Null text gives an all-null signature. The values
+    are pinned by frozen test rows and by the DuckDB twins of the LSH
+    queries.
+
+    The shingle→digest work is DEDUPLICATED across the partition's
+    documents. Web corpora repeat shingles heavily across documents
+    (boilerplate, templates; measured 8.7× on the bench corpus at 5k
+    docs), so hashing each distinct shingle once replaces ``num_hashes``
+    md5 computations per occurrence with one dict hit. A min over a set
+    is order-independent, so batching and caching never change values.
 
     The cache lives inside the generator body, so its lifetime is exactly
     one partition of one query execution — no state leaks across tasks or
     queries (a closure-level cache on a plain pandas_udf WOULD persist in
     the reused worker process, which the no-result-caching bench doctrine
-    forbids). ``_CACHE_CAP`` bounds task memory at crawl scale: past the
-    cap, digests are still computed per occurrence, values unchanged."""
+    forbids). ``_HASH_CACHE_BYTES`` bounds it."""
     import hashlib
     import re
+    import sys
     from typing import Iterator
 
     prefixes = [f"s{j}:".encode("ascii") for j in range(num_hashes)]
     ws = re.compile(r"\s+", re.ASCII)
-    cache_cap = _MINHASH_CACHE_CAP  # bound at definition time (testable)
+    budget = _HASH_CACHE_BYTES  # bound at definition time (testable)
+    getsizeof = sys.getsizeof
 
     def kernel(batches):
         prefix_states = [hashlib.md5(p) for p in prefixes]
+        # every cached digest list has the same shape, hence the same size
+        probe = [st.digest() for st in prefix_states]
+        ds_bytes = getsizeof(probe) + sum(map(getsizeof, probe))
         cache: dict = {}
+        used = 0
         for texts in batches:
             out = []
             for t in texts:
@@ -172,8 +119,9 @@ def _minhash_kernel_iter_factory(num_hashes: int, shingle_n: int):
                             h = st.copy()
                             h.update(b)
                             ds.append(h.digest())
-                        if len(cache) < cache_cap:
+                        if used < budget:
                             cache[sh] = ds
+                            used += getsizeof(sh) + ds_bytes
                     for j in range(num_hashes):
                         d = ds[j]
                         if best[j] is None or d < best[j]:
@@ -194,20 +142,20 @@ def _minhash_kernel_iter_factory(num_hashes: int, shingle_n: int):
 _MINHASH_UDFS: dict = {}
 
 
-def minhash_signatures_batched(
+def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 12,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """Arrow-batched MinHash signatures (VERDICT r4 item 2): one map-side
-    pandas UDF computes the whole signature, replacing the
-    explode-shingles → num_hashes×md5 → min partial-agg plan. Structural
-    win at scale: the per-doc signature SHUFFLE disappears entirely — the
-    kernel is a map-side projection, so banding consumes signatures with
-    no exchange before the bucket join. Values are bit-identical to
-    :func:`minhash_signatures` (same preimages, same min).
+    """Per-doc MinHash signature: for seed s, min over shingles of
+    md5(s || shingle) (lexicographic min of hex = a valid min-hash), as
+    columns ``mh0..mh{num_hashes-1}``.
+
+    One map-side Arrow kernel computes the whole signature, so there is
+    no per-doc signature SHUFFLE: banding consumes signatures with no
+    exchange before the bucket join.
 
     Small inputs are round-robin repartitioned to the default parallelism
     before the UDF: a single small parquet file reads as ONE split, and
@@ -240,37 +188,6 @@ def minhash_signatures_batched(
     return sig.select(
         id_col, *[F.col("_sig")[j].alias(f"mh{j}") for j in range(num_hashes)]
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 12,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Per-doc MinHash signature: for seed s, min over shingles of
-    md5(s || shingle) (lexicographic min of hex = a valid min-hash).
-
-    ``use_arrow=True`` (default) routes through the map-side Arrow
-    kernel (:func:`minhash_signatures_batched` — no signature shuffle);
-    ``use_arrow=False`` keeps the pure-Catalyst explode/min-agg plan
-    (same values, useful where Python workers are unavailable)."""
-    if use_arrow:
-        return minhash_signatures_batched(
-            df, id_col, text_col, num_hashes, shingle_n
-        )
-    sh = _stage_tokens(df, id_col, text_col).select(
-        F.col(id_col), F.explode(_word_shingles(shingle_n)).alias("sh")
-    )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"s{j}:"), F.col("sh")).cast("binary"))).alias(
-            f"mh{j}"
-        )
-        for j in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -419,14 +336,14 @@ def minhash_lsh_pairs_capped(
 
 
 def _simhash_kernel_factory(bits: int):
-    """Map-side SimHash kernel, bit-identical to the explode/56-agg plan:
-    same Java-regex tokenization as the JVM path (``trim`` strips ASCII
-    spaces, ``\\s+`` via ``re.ASCII``), token hash = int of the first 14
-    md5 hex chars, bit b of the result set iff strictly more tokens have
-    bit b set than clear (votes = 2·ones − n > 0 — ties stay 0 like the
-    JVM's ``> 0``). Bit votes are numpy-vectorized per doc."""
+    """Map-side SimHash kernel: Java-regex tokenization (``trim`` strips
+    ASCII spaces, ``\\s+`` via ``re.ASCII``), token hash = int of the first
+    14 md5 hex chars, bit b of the result set iff strictly more tokens have
+    bit b set than clear (votes = 2·ones − n > 0 — ties stay 0, as in the
+    DuckDB twin's ``> 0``). Bit votes are numpy-vectorized per doc."""
     import hashlib
     import re
+    import sys
 
     import numpy as np
 
@@ -434,17 +351,19 @@ def _simhash_kernel_factory(bits: int):
     md5 = hashlib.md5
     shifts = np.arange(bits, dtype=np.uint64)
     weights = (np.uint64(1) << shifts).astype(np.int64)
+    budget = _HASH_CACHE_BYTES
+    getsizeof = sys.getsizeof
 
     def kernel(batches):
         # per-partition token→hash cache (r6): bit b's vote total is
         # Σ_occurrences bit_b(hash(tok)) = Σ_distinct count(tok)·bit_b —
         # identical integer sums, with each distinct token md5-hashed
         # once per partition instead of once per occurrence. Same
-        # lifetime/cap discipline as the MinHash iterator kernel.
+        # lifetime and byte budget as the MinHash iterator kernel.
         from collections import Counter
 
         cache: dict = {}
-        cache_cap = _MINHASH_CACHE_CAP
+        used = 0
         for texts in batches:
             out = []
             for t in texts:
@@ -459,8 +378,9 @@ def _simhash_kernel_factory(bits: int):
                     h = cache.get(tok)
                     if h is None:
                         h = int(md5(tok.encode("utf-8")).hexdigest()[:14], 16)
-                        if len(cache) < cache_cap:
+                        if used < budget:
                             cache[tok] = h
+                            used += getsizeof(tok) + getsizeof(h)
                     hs[i] = h
                     cnt[i] = c
                     n += c
@@ -485,58 +405,29 @@ _SIMHASH_UDFS: dict = {}
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 56, use_arrow: bool = True) -> DataFrame:
+            bits: int = 56) -> DataFrame:
     """Per-doc SimHash over whitespace tokens.
 
     Token hash = first 14 hex chars of md5 (56 bits — stays in positive
     int64 in every engine). simhash bit b = majority of token-hash bit b.
 
-    ``use_arrow=True`` (default) computes the whole signature in one
-    map-side Arrow kernel — a per-doc statistic needs no shuffle, while
-    the Catalyst path pays an explode plus a 56-aggregate exchange (and
-    its large codegen unit). Values are bit-identical; docs with NULL
-    text are absent from the output either way (the explode drops them;
-    the kernel path filters them)."""
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
+    One map-side Arrow kernel computes the whole signature — a per-doc
+    statistic needs no shuffle. Docs with NULL text are absent from the
+    output."""
+    from pyspark.sql.functions import pandas_udf
 
-        if bits not in _SIMHASH_UDFS:
-            _SIMHASH_UDFS[bits] = pandas_udf(
-                _simhash_kernel_factory(bits), "long"
-            )
-        from .util import spread_small
+    from .util import spread_small
 
-        # same small-input parallelism guard as the MinHash kernel
-        sized = spread_small(
-            df.filter(F.col(text_col).isNotNull()), per_core_bytes=128 << 20
-        )
-        return sized.select(
-            F.col(id_col),
-            _SIMHASH_UDFS[bits](F.col(text_col)).alias("simhash"),
-        )
-    toks = df.select(
+    if bits not in _SIMHASH_UDFS:
+        _SIMHASH_UDFS[bits] = pandas_udf(_simhash_kernel_factory(bits), "long")
+    # same small-input parallelism guard as the MinHash kernel
+    sized = spread_small(
+        df.filter(F.col(text_col).isNotNull()), per_core_bytes=128 << 20
+    )
+    return sized.select(
         F.col(id_col),
-        F.explode(F.split(F.trim(F.col(text_col)), "\\s+")).alias("tok"),
+        _SIMHASH_UDFS[bits](F.col(text_col)).alias("simhash"),
     )
-    h = F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 14), 16, 10).cast(
-        "long"
-    )
-    toks = toks.select(id_col, h.alias("h"))
-    bit_aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
-            .otherwise(-1)
-        ).alias(f"b{b}")
-        for b in range(bits)
-    ]
-    per_doc = toks.groupBy(id_col).agg(*bit_aggs)
-    sim = None
-    for b in range(bits):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(2 ** b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sim = term if sim is None else sim + term
-    return per_doc.select(F.col(id_col), sim.alias("simhash"))
 
 
 def simhash_near_pairs(
@@ -716,35 +607,34 @@ def embedding_near_dup_pairs(
 
 
 def _winnow_kernel_factory(shingle_n: int, window: int):
-    """Arrow twin of the Catalyst winnowing plan, value-identical: same
-    Java-regex tokenization as the MinHash kernel (``trim`` strips ASCII
-    spaces, ``\\s+`` under ``re.ASCII``), shingle hash = md5 hex of the
-    space-joined slice (UTF-8), window minima over the hex strings (hex
-    is ASCII, so Python's code-point order equals the JVM's UTF-16
-    order), fingerprint = md5 of the ``'|'``-joined sorted distinct
-    minima. Short docs (< shingle_n tokens) hash the whole-token join;
-    fewer hashes than ``window`` yield one whole-array minimum — both
-    exactly the ``greatest(…, 1)`` index-sequence semantics of the JVM
-    path. Null text → ``md5("")``: on the JVM side a null text flows to a
-    single null minimum, ``array_join`` SKIPS nulls (empty string), and
-    the outer md5 hashes that — so the kernel emits the same value, not a
-    null (pinned by the differential unit test).
+    """Per-partition winnowing kernel: same Java-regex tokenization as the
+    MinHash kernel (``trim`` strips ASCII spaces, ``\\s+`` under
+    ``re.ASCII``), shingle hash = md5 hex of the space-joined slice
+    (UTF-8), window minima over the hex strings (hex is ASCII, so
+    code-point order equals UTF-16 order), fingerprint = md5 of the
+    ``'|'``-joined sorted distinct minima. Short docs (< shingle_n tokens)
+    hash the whole-token join; fewer hashes than ``window`` yield one
+    whole-array minimum. Null text → ``md5("")``, the fingerprint of an
+    empty minima list, not a null. The values are pinned by frozen test
+    rows and by the ``fingerprint_winnow`` DuckDB twin.
 
     Same per-partition shingle→digest dedup as the MinHash iterator
-    kernel (boilerplate shingles repeat across docs), same cache bound."""
+    kernel (boilerplate shingles repeat across docs), same byte budget."""
     import hashlib
     import re
+    import sys
     from typing import Iterator
 
     ws = re.compile(r"\s+", re.ASCII)
-    cache_cap = _MINHASH_CACHE_CAP
+    budget = _HASH_CACHE_BYTES
+    getsizeof = sys.getsizeof
     md5 = hashlib.md5
 
-    null_fp = md5(b"").hexdigest()  # JVM: null text -> join of skipped
-    # null minimum = "" -> md5("")
+    null_fp = md5(b"").hexdigest()
 
     def kernel(batches):
         cache: dict = {}
+        used = 0
         for texts in batches:
             out = []
             for t in texts:
@@ -765,8 +655,9 @@ def _winnow_kernel_factory(shingle_n: int, window: int):
                     d = cache.get(sh)
                     if d is None:
                         d = md5(sh.encode("utf-8")).hexdigest()
-                        if len(cache) < cache_cap:
+                        if used < budget:
                             cache[sh] = d
+                            used += getsizeof(sh) + getsizeof(d)
                     hs.append(d)
                 n_win = max(len(hs) - window + 1, 1)
                 minima = {min(hs[i : i + window]) for i in range(n_win)}
@@ -790,66 +681,25 @@ def winnow_fingerprint(
     text_col: str = "text",
     shingle_n: int = 3,
     window: int = 4,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Winnowing document fingerprint (Schleimer et al.): rolling k-gram
     hashes, keep the minimum of each sliding window, fingerprint = md5 of
     the sorted distinct minima. Stable under small local edits; one
-    map-side pass, no shuffle.
+    map-side Arrow kernel pass, no shuffle."""
+    from pyspark.sql.functions import pandas_udf
 
-    ``use_arrow=True`` (default, r6) computes the whole fingerprint in
-    one Arrow kernel: the Catalyst formulation runs ~1 ms/doc of
-    interpreted HOF evaluation (the shingle-md5 transform and the
-    window-min transform cannot codegen), measured 2.2 s → ~1 s at sf1.0
-    50k docs. Values are bit-identical (differential unit test);
-    ``use_arrow=False`` keeps the pure-Catalyst plan for engines without
-    Python workers."""
     from .util import spread_small
 
-    if use_arrow:
-        from pyspark.sql.functions import pandas_udf
-
-        key = (shingle_n, window)
-        if key not in _WINNOW_UDFS:
-            _WINNOW_UDFS[key] = pandas_udf(
-                _winnow_kernel_factory(shingle_n, window), "string"
-            )
-        sized = spread_small(df, per_core_bytes=128 << 20)
-        return sized.select(
-            F.col(id_col),
-            _WINNOW_UDFS[key](F.col(text_col)).alias("winnow_fp"),
+    key = (shingle_n, window)
+    if key not in _WINNOW_UDFS:
+        _WINNOW_UDFS[key] = pandas_udf(
+            _winnow_kernel_factory(shingle_n, window), "string"
         )
-
-    # token array staged first: the shingle-hash transform slices it once
-    # per shingle, and an inline split() would re-tokenize the text per
-    # element (O(n²) — same trap as the hash array below)
-    staged_toks = spread_small(df).select(
+    sized = spread_small(df, per_core_bytes=128 << 20)
+    return sized.select(
         F.col(id_col),
-        F.split(F.trim(F.col(text_col)), "\\s+").alias("_toks"),
+        _WINNOW_UDFS[key](F.col(text_col)).alias("winnow_fp"),
     )
-    toks = F.col("_toks")
-    cnt = F.size(toks)
-    n_sh = F.greatest(cnt - shingle_n + 1, F.lit(1))
-    sh_idx = F.sequence(F.lit(0), n_sh - 1)
-    shingle_hash = lambda i: F.md5(  # noqa: E731
-        F.array_join(F.slice(toks, i + 1, shingle_n), " ").cast("binary")
-    )
-    # materialize the hash array in its own projection: the window-min pass
-    # references it O(n) times, and inlining it there would re-evaluate all
-    # shingle md5s per window (O(n²) blowup)
-    staged = staged_toks.select(
-        F.col(id_col), F.transform(sh_idx, shingle_hash).alias("_hs")
-    )
-    hashes = F.col("_hs")
-    n_win = F.greatest(F.size(hashes) - window + 1, F.lit(1))
-    win_idx = F.sequence(F.lit(0), n_win - 1)
-    minima = F.transform(
-        win_idx, lambda i: F.array_min(F.slice(hashes, i + 1, window))
-    )
-    fp = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(minima)), "|").cast("binary")
-    )
-    return staged.select(F.col(id_col), fp.alias("winnow_fp"))
 
 
 def duplicate_clusters(
@@ -1025,13 +875,11 @@ _SHINGLE_SET_UDFS: dict = {}
 
 
 def _shingle_set_kernel_factory(shingle_n: int):
-    """Arrow twin of ``_word_shingles``: the doc's DISTINCT n-word
-    shingles (same tokenization/fallback as the MinHash kernel). Element
-    ORDER differs from the Catalyst ``array_distinct`` (Python set order
-    vs first-occurrence order) — callers may only consume the arrays as
-    SETS (sizes of intersections/unions), which is exactly what the
-    Jaccard verify does. Null text → null array (the Catalyst transform
-    chain null-propagates)."""
+    """The doc's DISTINCT n-word shingles (same tokenization/fallback as
+    the MinHash kernel). Element order is Python set order, so callers
+    may only consume the arrays as SETS (sizes of intersections/unions),
+    which is exactly what the Jaccard verify does. Null text → null
+    array."""
     import re
     from typing import Iterator
 
@@ -1072,10 +920,10 @@ def jaccard_verify_pairs(
     shingle_n: int = 3,
     threshold: float = 0.8,
     prune_candidates: bool = False,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs (the verify stage after any
     LSH): broadcast-safe join of shingle sets onto the (small) pair list.
+    One Arrow kernel builds each doc's shingle set.
 
     ``prune_candidates=True`` computes shingle sets ONLY for docs that
     appear in a pair (left-semi prune) — at crawl scale candidates are a
@@ -1086,6 +934,8 @@ def jaccard_verify_pairs(
     lazy+prune 3.4 s vs lazy no-prune 5.7 s vs eager checkpoint 5.0 s).
     For a pairs plan WITHOUT reusable exchanges (custom candidate
     sources), materialize pairs first or leave the prune off."""
+    from pyspark.sql.functions import pandas_udf
+
     if prune_candidates:
         cand_ids = (
             pairs.select(F.col("id_a").alias(id_col))
@@ -1093,25 +943,14 @@ def jaccard_verify_pairs(
             .distinct()
         )
         df = df.join(cand_ids, id_col, "leftsemi")
-    if use_arrow:
-        # r6: the shingle-set HOF (array_distinct ∘ transform) is
-        # interpreted, ~0.3-0.5 ms/doc, and sets_df feeds BOTH join
-        # sides (computed twice). The kernel emits the identical SET
-        # (order differs; only intersection/union sizes are consumed).
-        from pyspark.sql.functions import pandas_udf
-
-        if shingle_n not in _SHINGLE_SET_UDFS:
-            _SHINGLE_SET_UDFS[shingle_n] = pandas_udf(
-                _shingle_set_kernel_factory(shingle_n), "array<string>"
-            )
-        sets_df = df.select(
-            F.col(id_col),
-            _SHINGLE_SET_UDFS[shingle_n](F.col(text_col)).alias("sh_set"),
+    if shingle_n not in _SHINGLE_SET_UDFS:
+        _SHINGLE_SET_UDFS[shingle_n] = pandas_udf(
+            _shingle_set_kernel_factory(shingle_n), "array<string>"
         )
-    else:
-        sets_df = _stage_tokens(df, id_col, text_col).select(
-            F.col(id_col), _word_shingles(shingle_n).alias("sh_set")
-        )
+    sets_df = df.select(
+        F.col(id_col),
+        _SHINGLE_SET_UDFS[shingle_n](F.col(text_col)).alias("sh_set"),
+    )
     j = (
         pairs.join(sets_df.withColumnRenamed(id_col, "id_a")
                    .withColumnRenamed("sh_set", "sh_a"), "id_a")

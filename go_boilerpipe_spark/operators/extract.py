@@ -212,57 +212,6 @@ def _counting_kernel(counters):
     return kernel
 
 
-DEBUG_SCHEMA_DDL = (
-    "url string, content string, filter_names array<string>, "
-    "blocks_after array<int>, content_blocks_after array<int>"
-)
-
-
-def extract_debug_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Debug variant (LoggingPipeline analog, serve.go:172-204): per-filter
-    block/content counts for localizing a byte-diff to the first diverging
-    filter — the --debug mode of the extraction UDF."""
-    from ..kernel.document import extract_debug
-
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        out = {k: [] for k in ("url", "content", "names", "nb", "ncb")}
-        for url, html in zip(urls, htmls):
-            names, nb, ncb = [], [], []
-            content = None
-            if html is not None:
-                html_str, clean = _decode_html(html)
-                doc, snaps = extract_debug(html_str)
-                content = doc.content() if clean else _scrub(doc.content())
-                for name, blocks in snaps:
-                    names.append(name)
-                    nb.append(len(blocks))
-                    ncb.append(sum(1 for b in blocks if b[7]))
-            out["url"].append(url)
-            out["content"].append(content)
-            out["names"].append(names)
-            out["nb"].append(nb)
-            out["ncb"].append(ncb)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(out["url"], pa.string()),
-                pa.array(out["content"], pa.string()),
-                pa.array(out["names"], pa.list_(pa.string())),
-                pa.array(out["nb"], pa.list_(pa.int32())),
-                pa.array(out["ncb"], pa.list_(pa.int32())),
-            ],
-            names=["url", "content", "filter_names", "blocks_after",
-                   "content_blocks_after"],
-        )
-
-
-def extract_articles_debug(df):
-    return df.select("url", "html").mapInArrow(
-        extract_debug_batches, DEBUG_SCHEMA_DDL
-    )
-
-
 def extract_articles_deduped(
     df, parallelism: int | None = None, repartition: bool = True,
     counters=None,

@@ -1,9 +1,11 @@
 """Similarity search over an embedding column (array<float>).
 
 Brute-force cosine top-k as the exact baseline, and a sign-LSH bucketed
-variant as the scale path. Dot products use F.zip_with + F.aggregate —
-left-to-right float64 accumulation, so results are bit-reproducible across
-engines (the DuckDB oracle sums in the same order via list comprehension).
+variant as the scale path. Every dot product and norm accumulates in
+float64 dimension by dimension, left to right — in numpy kernels for pair
+scoring and bucketing, in an F.zip_with + F.aggregate fold for the IVF
+centroid scores — so results are bit-reproducible across engines (the
+DuckDB oracle sums in the same order via list comprehension).
 
 Scale notes (10^9+ vectors):
 - brute force is a broadcast of the (small) query set against the corpus —
@@ -22,26 +24,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _cosine(a, b):
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    nb = F.sqrt(
-        F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-    return dot / (na * nb)
-
-
 def _cosine_pd_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine, bit-identical to :func:`_cosine`: float32 →
+    """Arrow-batched cosine ``dot / (sqrt(Σa²)·sqrt(Σb²))``: float32 →
     float64 exact cast, dimension-by-dimension left-to-right accumulation
-    (explicit j-loop, not BLAS — blocking/FMA would reorder the adds),
-    sqrt/divide in the same op order. Rows with null or length-mismatched
+    (explicit j-loop, not BLAS — blocking/FMA would reorder the adds), the
+    same op order as the DuckDB twin (``__spark_entry__._cos_expr_sql``),
+    so the values are bit-identical. Rows with null or length-mismatched
     vectors yield NaN here and are masked to NULL by the Catalyst wrapper."""
     va, vb = a.values, b.values
     n = len(va)
@@ -80,11 +68,11 @@ _COSINE_PD = None
 
 
 def cosine_batched(a, b):
-    """Batched twin of :func:`_cosine` for flat column contexts (pair
-    scoring after an LSH/IVF join, brute-force scoring) — not usable
-    inside HOF lambdas (ivf_cells keeps the fold). NULL semantics match
-    the fold: null input or length mismatch → NULL (zip_with's null pad
-    poisons the dot)."""
+    """Cosine of two array columns for flat column contexts (pair scoring
+    after an LSH/IVF join, brute-force scoring) — not usable inside HOF
+    lambdas (ivf_cells keeps a fold). Null input or length mismatch →
+    NULL; a zero vector → NaN (0/0). Values are pinned by frozen test rows
+    and the DuckDB twins of the ANN queries."""
     global _COSINE_PD
     if _COSINE_PD is None:
         from pyspark.sql.functions import pandas_udf
@@ -126,41 +114,13 @@ def cosine_topk(
 _LSH_MULT = 2654435761
 
 
-def _rademacher_sign(i: int, j):
-    """Deterministic ±1 for hyperplane ``i`` and 1-based dimension ``j``
-    (integer arithmetic only, so the DuckDB twin computes the identical
-    sign). A seeded Rademacher projection is a valid random hyperplane for
-    sign LSH and needs no per-dimension literals."""
-    v = (F.lit(i).cast("long") * 131 + j.cast("long")) * F.lit(_LSH_MULT)
-    return (1 - 2 * F.shiftright(v, 13).bitwiseAND(F.lit(1))).cast("double")
-
-
-def sign_lsh_bucket(vec, h: int = 8):
-    """Bucket id from the signs of ``h`` seeded Rademacher projections of
-    the FULL vector. (The round-1 version used the signs of the first h
-    components, which collapses to a single bucket on all-positive
-    post-ReLU embeddings — VERDICT r1 item 8. Random ±1 projections stay
-    balanced for any input distribution.)"""
-    idx = F.sequence(F.lit(1), F.size(vec))
-    bucket = F.lit(0)
-
-    def _term(i):
-        # bind i via closure: PySpark requires the lambda arity to match
-        return lambda x, j: x.cast("double") * _rademacher_sign(i, j)
-
-    for i in range(h):
-        proj = F.aggregate(
-            F.zip_with(vec, idx, _term(i)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** i)).otherwise(F.lit(0))
-    return bucket
-
-
 def _sign_matrix(h: int, d: int):
-    """The h×d ±1 matrix from the SAME integer derivation as
-    :func:`_rademacher_sign` (hyperplane i, 1-based dimension j)."""
+    """The h×d ±1 seeded Rademacher matrix: hyperplane i, 1-based
+    dimension j, sign ``1 − 2·(((i·131 + j)·_LSH_MULT >> 13) & 1)``.
+    Integer arithmetic only, so the DuckDB twin
+    (``__spark_entry__._rademacher_proj_sql``) derives the identical sign;
+    a seeded Rademacher projection is a valid random hyperplane for sign
+    LSH and needs no per-dimension literals."""
     i = np.arange(h, dtype=np.int64)[:, None]
     j = np.arange(1, d + 1, dtype=np.int64)[None, :]
     v = (i * 131 + j) * _LSH_MULT
@@ -168,21 +128,20 @@ def _sign_matrix(h: int, d: int):
 
 
 def sign_lsh_bucket_batched(vec, h: int = 8):
-    """Arrow-batched twin of :func:`sign_lsh_bucket` — the 10^9-vector
-    map-side path (VERDICT r2 item 2: the h separate Catalyst HOF folds
-    are interpreted O(h·d) per row and were the bottleneck of
-    dedup_embedding / ann_cosine_lsh).
+    """Bucket id from the signs of ``h`` seeded Rademacher projections of
+    the FULL vector (:func:`_sign_matrix`), computed in an Arrow kernel —
+    the 10^9-vector map-side path. (Signs of the first h components would
+    collapse to a single bucket on all-positive post-ReLU embeddings;
+    random ±1 projections stay balanced for any input distribution.)
 
-    Bit-identical to the Catalyst fold and the DuckDB twin by
-    construction: the signs come from the same integer derivation, the
-    cast chain is the same (float32 → float64 exact), and the projection
-    accumulates dimension-by-dimension in the same left-to-right order —
-    an explicit per-dimension numpy loop over an (n, h) accumulator, NOT a
-    BLAS matmul, because BLAS blocking/FMA reorders the float64 adds and a
-    near-zero projection could flip a bucket bit. The loop is d vectorized
-    numpy ops per batch (~100× fewer interpreter transitions than the
-    per-row fold). Nulls and empty vectors bucket to 0, matching the
-    Catalyst version's null semantics."""
+    Bit-identical to the DuckDB twin by construction: the cast chain is
+    float32 → float64 exact, and the projection accumulates
+    dimension-by-dimension in left-to-right order — an explicit
+    per-dimension numpy loop over an (n, h) accumulator, NOT a BLAS matmul,
+    because BLAS blocking/FMA reorders the float64 adds and a near-zero
+    projection could flip a bucket bit. Nulls and empty vectors bucket to
+    0. Values are pinned by frozen test rows and the DuckDB twins of
+    ``dedup_embedding`` and ``ann_cosine_lsh``."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("int")
@@ -266,9 +225,9 @@ def centroids_struct(centroids: DataFrame, cid_col: str = "cid",
             # r6: the centroid norm is part of the packed struct, computed
             # ONCE on this one-row build side — ivf_cells previously
             # re-derived it per (row × centroid) inside the scoring lambda.
-            # Same expression as _cosine's nb, so the quotient is
-            # bit-identical. cid is unique, so the struct sort order is
-            # unchanged by the extra trailing field.
+            # Same left-to-right accumulation as the DuckDB twin's norm,
+            # so the quotient is bit-identical. cid is unique, so the
+            # struct sort order is unchanged by the extra trailing field.
             _sq_norm_root(F.col(cvec_col)).alias("cnorm"),
         ).alias("c")
     ).agg(F.array_sort(F.collect_list("c")).alias("_cents"))
@@ -276,7 +235,9 @@ def centroids_struct(centroids: DataFrame, cid_col: str = "cid",
 
 
 def _sq_norm_root(vec):
-    """sqrt(Σ x²) with _cosine's exact cast/accumulation order."""
+    """sqrt(Σ x²) as a Catalyst fold: float32 → float64 cast, left-to-right
+    accumulation — the order of the DuckDB twin's norm and of
+    :func:`_cosine_pd_kernel`."""
     return F.sqrt(
         F.aggregate(
             vec, F.lit(0.0),
@@ -294,8 +255,8 @@ def ivf_cells(vec, cents_col, nprobe: int = 1, vnorm=None):
     Without it the vector's own norm — a 64-element fold — is evaluated
     inside the lambda for EVERY centroid (O(centroids × dim) interpreted
     work per row where O(dim) suffices). The cosine is ``dot / (na·nb)``
-    in the same op order as :func:`_cosine`, so values are bit-identical
-    either way."""
+    either way, in the DuckDB twin's op order; frozen test rows pin that
+    both forms pick the same cells."""
     na = vnorm if vnorm is not None else _sq_norm_root(vec)
     scored = F.transform(
         cents_col,

@@ -38,6 +38,37 @@ def value_hash(df: pd.DataFrame) -> str:
     ).hexdigest()[:16]
 
 
+TABLES = ("region nation customer supplier part orders lineitem events "
+          "documents embeddings").split()
+
+
+def register_views(con, sf_dir: str) -> None:
+    """One DuckDB view per table of ``sf_dir``, under the table's name."""
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+        )
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]:
+    """(match, detail) for a Spark result against its oracle's: column
+    names, row count, then the value hash of the canonical frames. On a
+    match the detail is ``rows=N hash=H``."""
+    cs, co = canon(sdf), canon(odf)
+    if list(cs.columns) != list(co.columns):
+        return False, f"cols spark={list(cs.columns)} oracle={list(co.columns)}"
+    if len(cs) != len(co):
+        return False, f"rows spark={len(cs)} oracle={len(co)}"
+    hs, ho = value_hash(cs), value_hash(co)
+    if hs != ho:
+        detail = f"value hash {hs} != {ho}"
+        diff = cs.compare(co)
+        if len(diff):
+            detail += "\n" + diff.head(6).to_string()[:1200]
+        return False, detail
+    return True, f"rows={len(cs)} hash={hs}"
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -48,11 +79,7 @@ def main():
     spark = build_session(master="local[8]", shuffle_partitions=8)
 
     con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem events "
-              "documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    register_views(con, sf_dir)
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -79,24 +106,12 @@ def main():
             print(f"FAIL  {name:24s} duckdb error: {str(e)[:200]}")
             failures += 1
             continue
-        cs, co = canon(sdf), canon(odf)
-        if list(cs.columns) != list(co.columns):
-            print(f"FAIL  {name:24s} cols spark={list(cs.columns)} oracle={list(co.columns)}")
-            failures += 1
-            continue
-        if len(cs) != len(co):
-            print(f"FAIL  {name:24s} rows spark={len(cs)} oracle={len(co)}")
-            failures += 1
-            continue
-        hs, ho = value_hash(cs), value_hash(co)
-        if hs != ho:
-            print(f"FAIL  {name:24s} value hash {hs} != {ho}")
-            diff = cs.compare(co) if cs.shape == co.shape else None
-            if diff is not None and len(diff):
-                print(diff.head(6).to_string()[:1200])
-            failures += 1
+        ok, detail = compare(sdf, odf)
+        if ok:
+            print(f"OK    {name:24s} {detail} {dt_s:.1f}s")
         else:
-            print(f"OK    {name:24s} rows={len(cs)} hash={hs} {dt_s:.1f}s")
+            print(f"FAIL  {name:24s} {detail}")
+            failures += 1
 
     spark.stop()
     sys.exit(1 if failures else 0)

@@ -1,0 +1,69 @@
+"""Query-level oracle test: the queries() entries whose operators run as
+Arrow kernels are compared against their oracle_sql() twins in DuckDB,
+with the canonicalise-and-hash rule of scripts/check_oracles.py, on a
+small stand-in generated by scripts/gen_standin_sf.py."""
+
+import importlib.util
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
+
+QUERIES = (
+    "url_normalize", "url_dates", "dedup_minhash_lsh", "dedup_minhash_capped",
+    "dedup_simhash", "near_dup_jaccard", "lang_id", "fingerprint_winnow",
+    "ann_cosine_lsh", "dedup_embedding", "segment_dedup", "token_rarity",
+    "repetition_stats", "dup_ngrams", "dedup_clusters",
+)
+
+
+def _check_oracles():
+    spec = importlib.util.spec_from_file_location(
+        "check_oracles", ROOT / "scripts" / "check_oracles.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="module")
+def standin(tmp_path_factory):
+    out = tmp_path_factory.mktemp("standin")
+    subprocess.run(
+        [sys.executable, str(ROOT / "scripts" / "gen_standin_sf.py"),
+         "0.001", str(out)],
+        check=True, capture_output=True,
+    )
+    return str(out)
+
+
+@pytest.fixture(scope="module")
+def spark():
+    from go_boilerpipe_spark.spark_session import build_session
+
+    s = build_session(app_name="oracles", master="local[4]",
+                      shuffle_partitions=4)
+    yield s
+    s.stop()
+
+
+def test_arrow_kernel_queries_match_duckdb_oracles(spark, standin):
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    co = _check_oracles()
+    con = duckdb.connect()
+    co.register_views(con, standin)
+    queries, oracles = entry.queries(), entry.oracle_sql()
+    failures = {}
+    for name in QUERIES:
+        sdf = queries[name](spark, standin).toPandas()
+        odf = con.execute(oracles[name]).df()
+        ok, detail = co.compare(sdf, odf)
+        if not ok:
+            failures[name] = detail
+    assert not failures, failures

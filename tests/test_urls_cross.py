@@ -94,8 +94,9 @@ def test_normalize_matches_pure_port(spark):
 
 
 def test_staged_normalize_matches_column_form(spark):
-    # with_normalized_url (projection-staged, corpus-scale plan) must
-    # equal the single-Column normalize_url on every case
+    # with_normalized_url (the Arrow kernel over the pure port, the
+    # corpus-scale plan) must equal the single-Column normalize_url on
+    # every case
     df = spark.createDataFrame([(u,) for u in CASES], "url string")
     col_form = {
         r["url"]: r["n"]
@@ -108,15 +109,6 @@ def test_staged_normalize_matches_column_form(spark):
         for r in urls.with_normalized_url(df, "url").collect()
     }
     assert staged == col_form
-    # r6: both the Arrow kernel (pure-port, default) and the staged
-    # Catalyst chain must match the single-Column form
-    chain = {
-        r["url"]: r["norm_url"]
-        for r in urls.with_normalized_url(
-            df, "url", use_arrow=False
-        ).collect()
-    }
-    assert chain == col_form
 
 
 QUERY_CASES = [
