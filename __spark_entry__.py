@@ -76,9 +76,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     ensure_shipped(spark)
     pages = synthesize_pages(spark, 70, partitions=4)
-    extracted = extract_articles(
-        pages.filter(F.col("html").isNotNull()), parallelism=8
-    )
+    extracted = extract_articles(pages.filter(F.col("html").isNotNull()))
     base_url = F.regexp_replace("url", r"[?&]rep=\d+$", "")
     golden = golden_df(spark)
     return (
@@ -824,7 +822,7 @@ def _q_token_budget_pack(spark, sf):
 
 def _q_host_skew(spark, sf):
     """Crawl-skew audit: docs per host with corpus share — the statistic
-    that justifies the url-hash repartition in the extraction job.
+    of the crawl-ordered input the extraction job reads.
 
     The corpus total is a scalar aggregate cross-joined back (broadcast of
     ONE row), not a global `sum() over ()` window — the window funnels all
@@ -1064,7 +1062,7 @@ def _q_extract_links(spark, sf):
     from go_boilerpipe_spark.sources.pages import synthesize_pages
 
     pages = synthesize_pages(spark, 35, partitions=4)
-    links = extract_links_df(pages, parallelism=8)
+    links = extract_links_df(pages)
     host = F.try_parse_url(F.col("resolved"), F.lit("HOST"))
     return links.groupBy("url").agg(
         F.count("*").alias("n_links"),
@@ -1085,7 +1083,7 @@ def _q_web_pipeline(spark, sf):
     pages = synthesize_pages(
         spark, 60, skew=True, null_html_every=20, partitions=4
     )
-    extracted = extract_articles(pages, parallelism=8).filter(
+    extracted = extract_articles(pages).filter(
         F.col("parse_error").isNull() & (F.col("content") != "")
     )
     flags = dedup.exact_dedup(extracted, id_col="url", text_col="content")
@@ -1111,7 +1109,7 @@ def _q_extract_golden(spark, sf):
     from go_boilerpipe_spark.sources.pages import golden_df, synthesize_pages
 
     pages = synthesize_pages(spark, 35, partitions=4)
-    extracted = extract_articles(pages, parallelism=8)
+    extracted = extract_articles(pages)
     golden = golden_df(spark)
     base_url = F.regexp_replace("url", r"[?&]rep=\d+$", "")
     return (

@@ -116,7 +116,7 @@ def _extract_bench(cores: int, n_docs: int = N_DOCS, halve: bool = False,
         pages = spark.read.parquet(corpus).filter(F.col("html").isNotNull())
         if halve:
             pages = pages.filter(F.xxhash64("url") % 2 == 0)
-        extracted = extract_articles(pages, parallelism=4 * cores)
+        extracted = extract_articles(pages)
 
         def run():
             return extracted.agg(
@@ -136,7 +136,6 @@ def _extract_bench(cores: int, n_docs: int = N_DOCS, halve: bool = False,
         # spin up all python workers on a small repartitioned slice
         extract_articles(
             spark.read.parquet(corpus).limit(16 * cores),
-            parallelism=4 * cores,
         ).count()
 
         load_before = os.getloadavg()[0]

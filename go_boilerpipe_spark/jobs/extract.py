@@ -7,12 +7,14 @@ config; stdin/file/url acquisition is replaced by the table scan.
     spark-submit --py-files dist/go_boilerpipe_spark.zip \
         -m go_boilerpipe_spark.jobs.extract \
         --source /data/pages --sink /data/extracted \
-        [--streaming] [--langs en,zh] [--parallelism 4096] \
-        [--chunk-bytes 1073741824] [--no-repartition]
+        [--streaming] [--langs en,zh] [--chunk-bytes 1073741824]
 
 Batch mode uses the checkpoint-resumable chunked job; --streaming uses the
 Trigger.AvailableNow structured-streaming drain. Both are idempotent
-re-run-to-resume.
+re-run-to-resume. Neither shuffles the pages: the kernel runs on the
+scan's splits, which follow bytes — ``--chunk-bytes`` sizes the batch
+job's file groups and ``spark.sql.files.maxPartitionBytes`` (a
+``--conf``) sizes the tasks within them.
 """
 
 from __future__ import annotations
@@ -30,10 +32,7 @@ def main(argv=None):
                     help="use Structured Streaming (Trigger.AvailableNow)")
     ap.add_argument("--langs", default=None,
                     help="comma-separated lang filter (pushed to the scan)")
-    ap.add_argument("--parallelism", type=int, default=None)
     ap.add_argument("--chunk-bytes", type=int, default=1 << 30)
-    ap.add_argument("--no-repartition", action="store_true",
-                    help="skip the xxhash64(url) shuffle (uniform sources)")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
@@ -45,9 +44,7 @@ def main(argv=None):
     if args.streaming:
         from ..streaming.extract_stream import run_extract_stream
 
-        ok = run_extract_stream(
-            spark, args.source, args.sink, parallelism=args.parallelism
-        )
+        ok = run_extract_stream(spark, args.source, args.sink)
         print(json.dumps({"mode": "streaming", "drained": bool(ok)}))
     else:
         from ..plans.extract_job import ExtractJob
@@ -56,9 +53,7 @@ def main(argv=None):
             spark,
             args.source,
             args.sink,
-            parallelism=args.parallelism,
             chunk_target_bytes=args.chunk_bytes,
-            repartition=not args.no_repartition,
             langs=langs,
         )
         stats = job.run()

@@ -17,6 +17,8 @@ from .rfc3339 import parse_rfc3339
 from .textblock import TextBlock
 
 _CK = _load_ckernel()
+# which kernel this process runs: "c", or the ~20x slower "pure" fallback
+KERNEL_PATH = "pure" if _CK is None else "c"
 
 
 class Document:

@@ -9,8 +9,12 @@ materialization, no per-row Python anywhere in the driver-visible plan.
 Scale notes (100 TB / 1000-executor design):
 - the kernel is a pure per-document function ⇒ embarrassingly parallel,
   deterministic under any partitioning (N vs 4N executors byte-identical);
-- input is repartitioned on xxhash64(url) upstream (plans/extract_job.py)
-  to defuse host-level clustering in crawl order; AQE handles residual skew;
+- it runs on the scan's splits, with no exchange: kernel cost follows
+  bytes, and bytes are balanced where they are read — the job groups
+  files into chunks by size (plans/extract_job.py) and the scan splits
+  them by ``spark.sql.files.maxPartitionBytes``. A url hash would balance
+  row counts, not bytes, and push the whole html column through shuffle
+  storage; each extra Python task also costs a worker round trip;
 - Arrow batches are *byte*-capped by the caller via
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` plus the size-aware
   re-chunking below, keeping Python-worker memory bounded even when single
@@ -19,11 +23,12 @@ Scale notes (100 TB / 1000-executor design):
 
 from __future__ import annotations
 
+import time
 from typing import Iterator
 
 import pyarrow as pa
 
-from ..kernel.document import extract_content
+from ..kernel.document import KERNEL_PATH, extract_content
 
 # Sink schema — FIXTURES.md §4.
 OUTPUT_SCHEMA_DDL = (
@@ -160,21 +165,14 @@ def _make_batch(urls, titles, authors, dates, contents, nbs, ncbs, errs):
 
 class PartitionCountersParam:
     """AccumulatorParam merging {partition_id: [docs_out, parse_errors,
-    content_chars]} dicts — the per-partition lineage counters, accumulated
-    INSIDE the extraction kernel so lineage needs zero post-write scans of
-    the chunk (VERDICT r2 item 4).
+    content_chars, kernel_s, pure]} dicts — the per-partition lineage
+    counters, accumulated INSIDE the extraction kernel so lineage needs
+    zero post-write scans of the chunk (VERDICT r2 item 4). ``pure`` is 1
+    when the task's worker runs the pure-Python kernel, 0 on the C path.
 
-    Exactness contract (ADVICE r3): with ``dedup_payloads=False`` the
-    counting mapInArrow runs in the job's final RESULT stage, where Spark
-    applies each task's accumulator update exactly once per successful
-    task — the counters are exact. With ``dedup_payloads=True`` the
-    counting stage feeds a shuffle (the join back to keyed rows), i.e. it
-    is a SHUFFLE-MAP stage, and Spark may re-run map tasks on fetch
-    failures / speculation and re-apply their updates — under those
-    (routine-at-100TB) conditions the dedup-path counters can OVER-count
-    and must be treated as approximate telemetry; the authoritative
-    docs_out for that path is the sink's write metrics / observe() row
-    counts on the result stage."""
+    Exactness contract (ADVICE r3): the counting mapInArrow runs in the
+    job's final RESULT stage, where Spark applies each task's accumulator
+    update exactly once per successful task — the counters are exact."""
 
     def zero(self, value):
         return {}
@@ -182,16 +180,17 @@ class PartitionCountersParam:
     def addInPlace(self, a, b):
         for k, v in b.items():
             cur = a.get(k)
-            if cur is None:
-                a[k] = list(v)
-            else:
-                a[k] = [cur[0] + v[0], cur[1] + v[1], cur[2] + v[2]]
+            a[k] = list(v) if cur is None else [x + y for x, y in zip(cur, v)]
         return a
 
 
 def _counting_kernel(counters):
     """Wrap the Arrow kernel with per-task counter accumulation: one local
-    tally per task, ONE accumulator update at iterator exhaustion."""
+    tally per task, ONE accumulator update at iterator exhaustion.
+
+    ``kernel_s`` is the task's time inside :func:`extract_record_batches`
+    (decode, kernel, Arrow encode), net of waits on the input stream and
+    on the downstream consumer."""
 
     def kernel(batches):
         import pyarrow.compute as pc
@@ -199,7 +198,20 @@ def _counting_kernel(counters):
 
         pid = TaskContext.get().partitionId()
         docs = errs = chars = 0
-        for out in extract_record_batches(batches):
+        busy = waited = 0.0
+
+        def timed(it):
+            nonlocal waited
+            t = time.perf_counter()
+            for b in it:
+                waited += time.perf_counter() - t
+                yield b
+                t = time.perf_counter()
+            waited += time.perf_counter() - t
+
+        t = time.perf_counter()
+        for out in extract_record_batches(timed(batches)):
+            busy += time.perf_counter() - t
             docs += out.num_rows
             err_col = out.column("parse_error")
             errs += out.num_rows - err_col.null_count
@@ -207,72 +219,24 @@ def _counting_kernel(counters):
             if s.is_valid:
                 chars += s.as_py()
             yield out
-        counters.add({pid: [docs, errs, chars]})
+            t = time.perf_counter()
+        busy += time.perf_counter() - t
+        pure = int(KERNEL_PATH == "pure")
+        counters.add({pid: [docs, errs, chars, busy - waited, pure]})
 
     return kernel
 
 
-def extract_articles_deduped(
-    df, parallelism: int | None = None, repartition: bool = True,
-    counters=None,
-):
-    """Extraction that runs the kernel ONCE per distinct html payload.
-
-    Real crawls re-fetch byte-identical pages constantly (mirrors,
-    recrawls, redirect aliases); with this operator the Python-kernel
-    cost scales with UNIQUE bytes while every url still gets its row.
-    Plan: hash → dropDuplicates(hash) → mapInArrow over uniques → join
-    results back on the hash. Two shuffles are added (dedup + join, both
-    on the uniform 128-bit hash), which pays off whenever
-    dup_rate × kernel_cost exceeds the shuffle cost — true for any
-    CPU-bound kernel at crawl dup rates. For an already-deduped source
-    use plain :func:`extract_articles` (no extra exchanges)."""
-    from pyspark.sql import functions as F
-
-    # sentinel for null html (null join keys never match; the null-html
-    # error row must still reach every affected url)
-    keyed = df.select("url", "html").withColumn(
-        "_h", F.coalesce(F.md5(F.col("html")), F.lit("__null_html__"))
-    )
-    uniq = (
-        keyed.select(F.col("_h").alias("url"), "html")  # hash rides as url
-        .dropDuplicates(["url"])
-    )
-    if repartition:
-        # ALWAYS an explicit partition count: repartition(col) without a
-        # number is AQE-coalescible, and a coalesced-to-one small stage
-        # serializes the Python kernel (r5 lesson from the MinHash guard)
-        n = parallelism or 4 * df.sparkSession.sparkContext.defaultParallelism
-        uniq = uniq.repartition(n, F.xxhash64("url"))
-    kernel = extract_record_batches if counters is None else _counting_kernel(counters)
-    ext = uniq.mapInArrow(kernel, OUTPUT_SCHEMA_DDL)
-    ext = ext.withColumnRenamed("url", "_h")
-    return keyed.drop("html").join(ext, "_h").drop("_h")
-
-
-def extract_articles(
-    df, parallelism: int | None = None, repartition: bool = True,
-    counters=None,
-):
+def extract_articles(df, counters=None):
     """Declare the extraction over a pages DataFrame.
 
     ``df`` needs (url, html); extra columns are pruned here so Catalyst can
     push column pruning into the scan (ReadSchema shows only url+html).
-    ``repartition=True`` shuffles on xxhash64(url) to defuse host-level
-    skew in crawl-ordered input; set False when the source is already
-    well-split (columnar, uniform) to avoid shuffling the full corpus.
+    The kernel runs on ``df``'s own partitions — no exchange; a caller that
+    wants other splits repartitions its input.
     ``counters``: optional dict accumulator (PartitionCountersParam)
     updated inside the kernel with per-partition lineage counters, so the
     job layer never re-reads the written output.
     """
-    from pyspark.sql import functions as F
-
-    pruned = df.select("url", "html")
-    if repartition:
-        # explicit count — repartition(col) without one is AQE-coalescible
-        # and a small stage coalesced to one partition serializes the
-        # Python kernel (r5 lesson from the MinHash guard)
-        n = parallelism or 4 * df.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n, F.xxhash64("url"))
     kernel = extract_record_batches if counters is None else _counting_kernel(counters)
-    return pruned.mapInArrow(kernel, OUTPUT_SCHEMA_DDL)
+    return df.select("url", "html").mapInArrow(kernel, OUTPUT_SCHEMA_DDL)

@@ -6,9 +6,9 @@ graph is plain DataFrame algebra — parse_url hosts, distinct edges —
 feeding operators/graph.py pagerank.
 
 Scale shape mirrors operators/extract.py: column pruning to (url, html)
-reaches the scan, optional explicit-count repartition on xxhash64(url)
-defuses crawl-order host skew, output batches split on a byte budget so
-link-farm pages (10^4+ outlinks) cannot balloon one Arrow batch.
+reaches the scan, the kernel runs on the scan's splits (no exchange), and
+output batches split on a row budget so link-farm pages (10^4+ outlinks)
+cannot balloon one Arrow batch.
 """
 
 from __future__ import annotations
@@ -86,19 +86,12 @@ def _make_batch(urls, hrefs, resolveds, anchors):
     )
 
 
-def extract_links_df(df, parallelism: int | None = None,
-                     repartition: bool = True):
+def extract_links_df(df):
     """Declare link extraction over a pages DataFrame with (url, html).
 
     Same contract as extract_articles: extra columns are pruned before
-    the Arrow stage so pruning reaches the scan; ``repartition=True``
-    shuffles on xxhash64(url) with an explicit partition count (an
-    uncounted repartition(col) is AQE-coalescible, which would serialize
-    the Python kernel on small stages)."""
-    from pyspark.sql import functions as F
-
-    pruned = df.select("url", "html")
-    if repartition:
-        n = parallelism or 4 * df.sparkSession.sparkContext.defaultParallelism
-        pruned = pruned.repartition(n, F.xxhash64("url"))
-    return pruned.mapInArrow(links_record_batches, OUTPUT_SCHEMA_DDL)
+    the Arrow stage so pruning reaches the scan, and the kernel runs on
+    ``df``'s own partitions, with no exchange."""
+    return df.select("url", "html").mapInArrow(
+        links_record_batches, OUTPUT_SCHEMA_DDL
+    )

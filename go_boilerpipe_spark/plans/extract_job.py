@@ -1,11 +1,17 @@
 """The corpus extraction job: scan → extract → sink, checkpoint-resumable.
 
 North-rule requirements implemented here (BASELINE.json):
-- explicit partitioning/skew handling: repartition on xxhash64(url) before
-  the Python stage; AQE for residual skew;
-- checkpoint-resumable incremental commits: the input's data files are
-  grouped into deterministic *chunks* (by size); each chunk is extracted
-  and committed independently (sink subdir ``chunk=<id>`` + a manifest
+- explicit partitioning/skew handling, by bytes — what kernel cost
+  follows: the input's data files are grouped into chunks by size
+  (:func:`plan_chunks`), the scan splits each chunk's files into byte
+  ranges of at most ``spark.sql.files.maxPartitionBytes`` (a deployment
+  setting; Spark narrows them when that spreads a chunk over every core),
+  and the kernel caps its output batches at ``_MAX_BATCH_BYTES``. The
+  plan is scan → null/lang filter → ``mapInArrow`` kernel → sink, with
+  no exchange: a url hash would balance row counts rather than bytes and
+  push the whole html column through shuffle storage;
+- checkpoint-resumable incremental commits: each chunk is extracted and
+  committed independently (sink subdir ``chunk=<id>`` + a manifest
   entry). A re-run skips committed chunks and overwrites partial ones —
   idempotent exactly-once at chunk granularity. This is the same
   file-group pattern Iceberg's ``Trigger.AvailableNow`` streaming uses;
@@ -14,7 +20,9 @@ North-rule requirements implemented here (BASELINE.json):
   with the manifest as a snapshot-property, which this module abstracts
   behind ``catalog``.
 - per-partition lineage + metrics: one row per task partition per chunk
-  (docs_in/out, parse errors, bytes, wall ms) written next to the sink.
+  (docs out, parse errors, content chars, kernel path and kernel
+  seconds), committed next to the sink like the chunk's data
+  (``_lineage/chunk=<id>``, overwritten on re-run).
 
 The reference has no notion of any of this (it is a single-document
 library, cmd/boilerpipe/extract.go:31-82 processes one doc per process);
@@ -118,26 +126,16 @@ class ExtractJob:
         spark,
         source: str,
         sink: str,
-        parallelism: int | None = None,
         chunk_target_bytes: int = 1 << 30,
-        repartition: bool = True,
         langs: tuple[str, ...] | None = None,
-        dedup_payloads: bool = False,
         catalog=None,
     ):
-        """``dedup_payloads=True`` extracts once per distinct html within
-        each chunk (operators.extract.extract_articles_deduped) — worth it
-        on raw crawls with high refetch rates; chunk-local only, so global
-        dedup still belongs to the dedup operators downstream."""
         self.spark = spark
         self.catalog = catalog or get_catalog(spark)
         self.source = source
         self.sink = sink
-        self.parallelism = parallelism
         self.chunk_target_bytes = chunk_target_bytes
-        self.repartition = repartition
         self.langs = langs
-        self.dedup_payloads = dedup_payloads
         self.manifest_dir = os.path.join(sink, "_manifest")
         self.lineage_dir = os.path.join(sink, "_lineage")
 
@@ -194,22 +192,15 @@ class ExtractJob:
         if self.langs:
             df = df.filter(F.col("lang").isin(*self.langs))
 
-        op = extract_articles
-        if self.dedup_payloads:
-            from ..operators.extract import extract_articles_deduped as op
         # per-partition lineage counters accumulate INSIDE the Arrow kernel
         # (one accumulator update per task); chunk totals ride the write via
         # observe(). Neither re-reads the written chunk — the old post-write
-        # groupBy scan doubled sink I/O per chunk (VERDICT r2 item 4). With
-        # dedup_payloads the partition counters describe the unique-payload
-        # kernel stage (the work actually done); totals always describe the
-        # written rows.
+        # groupBy scan doubled sink I/O per chunk (VERDICT r2 item 4).
         counters = spark.sparkContext.accumulator({}, PartitionCountersParam())
         obs = Observation(f"extract-{run_id}-{chunk_id}")
-        extracted = op(
-            df, parallelism=self.parallelism, repartition=self.repartition,
-            counters=counters,
-        ).withColumn("part_id", F.spark_partition_id())
+        extracted = extract_articles(df, counters=counters).withColumn(
+            "part_id", F.spark_partition_id()
+        )
         extracted = extracted.observe(
             obs,
             F.count(F.lit(1)).alias("docs_out"),
@@ -225,13 +216,15 @@ class ExtractJob:
 
         totals = obs.get
         lineage_rows = [
-            (int(pid), int(v[0]), int(v[1]), int(v[2]))
-            for pid, v in sorted(counters.value.items())
+            (int(pid), int(docs), int(errs), int(chars),
+             "pure" if pure else "c", float(kernel_s))
+            for pid, (docs, errs, chars, kernel_s, pure)
+            in sorted(counters.value.items())
         ]
         lineage = spark.createDataFrame(
             lineage_rows,
             schema="part_id int, docs_out bigint, parse_errors bigint, "
-                   "content_chars bigint",
+                   "content_chars bigint, kernel string, kernel_s double",
         ).withColumns(
             {
                 "run_id": F.lit(run_id),
@@ -239,7 +232,11 @@ class ExtractJob:
                 "committed_at": F.current_timestamp(),
             }
         )
-        self.catalog.append(lineage, self.lineage_dir)
+        # committed like the data: a chunk re-run after a crash between
+        # here and the manifest commit replaces its lineage, never adds to it
+        self.catalog.overwrite_partition(
+            lineage, self.lineage_dir, f"chunk={chunk_id}"
+        )
 
         docs_out = int(totals["docs_out"])
         parse_errors = int(totals["parse_errors"])

@@ -9,8 +9,10 @@ replication happens JVM-side with whole-stage codegen; no Python in the
 generation path.
 
 Skew mode assigns ~60% of replicas to docs 1+2 (both lasvegassun.com →
-two hosts own most rows), mirroring host-level clustering in crawl order —
-the thing ``repartition(P, xxhash64(url))`` exists to defuse.
+two hosts own most rows), mirroring host-level clustering in crawl order.
+Extraction does not rebalance it by url: kernel cost follows bytes, so the
+job's size-grouped chunks and the scan's ``maxPartitionBytes`` splits are
+what keep tasks even, whichever hosts the rows belong to.
 """
 
 from __future__ import annotations

@@ -31,7 +31,6 @@ def run_extract_stream(
     source: str,
     sink: str,
     checkpoint: str | None = None,
-    parallelism: int | None = None,
     max_files_per_trigger: int | None = None,
     timeout_sec: float | None = None,
 ) -> bool:
@@ -54,8 +53,7 @@ def run_extract_stream(
 
     def process_batch(batch_df, batch_id: int):
         extracted = extract_articles(
-            batch_df.filter(F.col("html").isNotNull()),
-            parallelism=parallelism,
+            batch_df.filter(F.col("html").isNotNull())
         ).withColumn("batch_id", F.lit(batch_id))
         extracted.write.mode("append").parquet(out_dir)
 

@@ -25,8 +25,8 @@ import pyarrow.parquet as pq
 sys.path.insert(0, %(repo)r)
 t = pq.read_table(%(corpus)r, columns=["url", "html"])
 htmls = t.column("html").to_pylist()[: %(max_docs)d]
-from go_boilerpipe_spark.kernel.document import extract_content, _CK
-mode = "pure" if _CK is None else "c"
+from go_boilerpipe_spark.kernel.document import KERNEL_PATH as mode
+from go_boilerpipe_spark.kernel.document import extract_content
 out = []
 t0 = time.monotonic()
 for h in htmls:

@@ -51,7 +51,7 @@ def test_skew_mode_urls_stay_unique(spark):
 class TestExtractOperator:
     def test_golden_parity_through_spark(self, spark, corpus):
         pages = spark.read.parquet(corpus).filter(F.col("html").isNotNull())
-        extracted = extract_articles(pages, parallelism=16)
+        extracted = extract_articles(pages)
         g = golden_df(spark)
         base = extracted.withColumn(
             "base_url", F.regexp_replace("url", r"[?&]rep=\d+$", "")
@@ -77,9 +77,9 @@ class TestExtractOperator:
                 .cast("long")
             )
         ).collect()[0][0]
-        a = checksum(extract_articles(pages, parallelism=3))
-        b = checksum(extract_articles(pages, parallelism=17))
-        c = checksum(extract_articles(pages, repartition=False))
+        a = checksum(extract_articles(pages.repartition(3)))
+        b = checksum(extract_articles(pages.repartition(17)))
+        c = checksum(extract_articles(pages))
         assert a == b == c
 
     def test_column_pruning_reaches_scan(self, spark, corpus):
@@ -147,7 +147,7 @@ class TestExtractOperator:
             for i, d in enumerate(docs)
         ]
         df = spark.createDataFrame(rows, "url string, html binary")
-        out = extract_articles(df, repartition=False).collect()
+        out = extract_articles(df).collect()
         assert len(out) == len(docs)
         errs = [r for r in out if r["parse_error"] is not None]
         assert not errs, errs[:3]
@@ -158,7 +158,7 @@ class TestExtractOperator:
 
     def test_null_html_yields_error_row(self, spark):
         pages = synthesize_pages(spark, 14, null_html_every=2, partitions=2)
-        out = extract_articles(pages, repartition=False)
+        out = extract_articles(pages)
         errs = out.filter(F.col("parse_error").isNotNull()).count()
         assert errs == 7
 
@@ -168,7 +168,7 @@ class TestExtractLinks:
         from go_boilerpipe_spark.operators.links import extract_links_df
 
         pages = spark.read.parquet(corpus)
-        links = extract_links_df(pages, parallelism=8)
+        links = extract_links_df(pages)
         per_page = {
             r["url"]: r["n"]
             for r in links.groupBy("url").agg(F.count("*").alias("n")).collect()
@@ -192,7 +192,7 @@ class TestExtractLinks:
         from go_boilerpipe_spark.operators.links import extract_links_df
 
         pages = spark.read.parquet(corpus)
-        links = extract_links_df(pages, parallelism=8)
+        links = extract_links_df(pages)
         edges = links.select(
             F.try_parse_url("url", F.lit("HOST")).alias("src"),
             F.try_parse_url("resolved", F.lit("HOST")).alias("dst"),
@@ -205,8 +205,7 @@ class TestExtractLinks:
 class TestExtractJob:
     def test_run_and_resume(self, spark, corpus, tmp_path):
         sink = str(tmp_path / "sink")
-        job = ExtractJob(spark, corpus, sink, parallelism=8,
-                         chunk_target_bytes=1 << 19)
+        job = ExtractJob(spark, corpus, sink, chunk_target_bytes=1 << 19)
         stats = job.run()
         assert stats["chunks_done"] >= 2
         assert stats["parse_errors"] == 0
@@ -1572,23 +1571,6 @@ class TestCuration:
         # column pruning reaches the scan-side projection
         plan = parse_pdfs(df)._jdf.queryExecution().executedPlan().toString()
         assert "doc_id" in plan and "payload" in plan
-
-    def test_extract_deduped_matches_plain(self, spark, corpus):
-        # crawl-dedup extraction: same per-url results as the plain
-        # operator (including null-html error rows), kernel runs once per
-        # unique payload
-        from go_boilerpipe_spark.operators.extract import (
-            extract_articles,
-            extract_articles_deduped,
-        )
-
-        pages = spark.read.parquet(corpus)
-        plain = {r["url"]: (r["title"], r["content"], r["parse_error"])
-                 for r in extract_articles(pages, parallelism=8).collect()}
-        dedup_ = {r["url"]: (r["title"], r["content"], r["parse_error"])
-                  for r in extract_articles_deduped(pages, parallelism=8).collect()}
-        assert plain == dedup_
-        assert sum(1 for v in plain.values() if v[2] is not None) == 4
 
     def test_curation_plan_shapes(self, spark):
         from go_boilerpipe_spark.operators import curation

@@ -27,9 +27,7 @@ def test_host_stats_accumulate_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")  # force multiple micro-batches
         .parquet(src)
     )
-    extracted = extract_articles(
-        pages.filter(F.col("html").isNotNull()), repartition=False
-    )
+    extracted = extract_articles(pages.filter(F.col("html").isNotNull()))
     stats = host_stats_stream(extracted)
 
     q = (

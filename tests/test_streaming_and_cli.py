@@ -27,14 +27,14 @@ def test_available_now_drain_and_resume(spark, tmp_path):
     sink = str(tmp_path / "extracted")
     write_pages_table(spark, src, 28, partitions=4)
 
-    ok = run_extract_stream(spark, src, sink, parallelism=8, timeout_sec=120)
+    ok = run_extract_stream(spark, src, sink, timeout_sec=120)
     assert ok
     out = read_stream_output(spark, sink)
     assert out.count() == 28
     assert out.filter(F.col("parse_error").isNotNull()).count() == 0
 
     # second drain with no new files: processes nothing new
-    ok = run_extract_stream(spark, src, sink, parallelism=8, timeout_sec=120)
+    ok = run_extract_stream(spark, src, sink, timeout_sec=120)
     assert ok
     assert read_stream_output(spark, sink).count() == 28
 
@@ -44,7 +44,7 @@ def test_available_now_drain_and_resume(spark, tmp_path):
     synthesize_pages(spark, 14, partitions=2).withColumn(
         "url", F.concat(F.col("url"), F.lit("&wave=2"))
     ).write.mode("append").parquet(more)
-    ok = run_extract_stream(spark, src, sink, parallelism=8, timeout_sec=120)
+    ok = run_extract_stream(spark, src, sink, timeout_sec=120)
     assert ok
     assert read_stream_output(spark, sink).count() == 42
 
@@ -59,8 +59,7 @@ def test_cli_batch_job(tmp_path, capsys):
     spark.stop()
 
     sink = str(tmp_path / "out")
-    main(["--source", src, "--sink", sink, "--master", "local[4]",
-          "--parallelism", "4"])
+    main(["--source", src, "--sink", sink, "--master", "local[4]"])
     out = capsys.readouterr().out.strip().splitlines()[-1]
     stats = json.loads(out)
     assert stats["mode"] == "batch"

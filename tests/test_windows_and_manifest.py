@@ -61,8 +61,7 @@ class TestManifestEdges:
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
         write_pages_table(spark, src, 14, partitions=2)
-        job = ExtractJob(spark, src, sink, parallelism=4,
-                         chunk_target_bytes=1 << 40)  # one chunk
+        job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)  # one chunk
         s1 = job.run()
         assert s1["chunks_done"] == 1
 
@@ -84,8 +83,7 @@ class TestManifestEdges:
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
         write_pages_table(spark, src, 14, partitions=2)
-        job = ExtractJob(spark, src, sink, parallelism=4,
-                         chunk_target_bytes=1 << 40)
+        job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
         job.run()
         n = read_extracted(spark, sink).count()
         assert n == 14
@@ -99,8 +97,7 @@ class TestManifestEdges:
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
         write_pages_table(spark, src, 14, partitions=2)
-        job = ExtractJob(spark, src, sink, parallelism=4,
-                         chunk_target_bytes=1 << 40)
+        job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
 
         # inject a failure between data write and manifest commit
         orig = job._commit_chunk
@@ -141,8 +138,7 @@ class TestManifestEdges:
             return orig(reader, *paths, **kw)
 
         monkeypatch.setattr(DataFrameReader, "parquet", guard)
-        job = ExtractJob(spark, src, sink, parallelism=4,
-                         chunk_target_bytes=1 << 40)
+        job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
         s = job.run()
         monkeypatch.undo()
 
@@ -200,14 +196,3 @@ def test_stream_dedup_drops_repeats(spark, tmp_path):
     out_n = drain("dedup_stream_norm", "ck_norm", normalize=True)
     assert out_n.count() == 7
 
-
-def test_job_dedup_payloads_same_output(spark, tmp_path):
-    src = str(tmp_path / "pages")
-    write_pages_table(spark, src, 28, partitions=2)
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    sa = ExtractJob(spark, src, a, parallelism=4).run()
-    sb = ExtractJob(spark, src, b, parallelism=4, dedup_payloads=True).run()
-    assert sa["docs_out"] == sb["docs_out"] == 28
-    ra = {r["url"]: r["content"] for r in read_extracted(spark, a).collect()}
-    rb = {r["url"]: r["content"] for r in read_extracted(spark, b).collect()}
-    assert ra == rb
