@@ -133,7 +133,8 @@ def _extract_bench(cores: int, n_docs: int = N_DOCS, halve: bool = False,
                 ).alias("errors"),
             ).collect()[0]
 
-        # spin up all python workers on a small repartitioned slice
+        # warm up on a small slice: the limit runs the kernel on one
+        # partition, so this starts one Python worker, not all of them
         extract_articles(
             spark.read.parquet(corpus).limit(16 * cores),
         ).count()

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .util import local_frame
+
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Flag exact duplicates; the smallest id per text-hash is the keeper."""
@@ -807,7 +809,8 @@ def duplicate_clusters(
         duplicate_clusters.last_rounds = 0
         duplicate_clusters.last_path = "local"
         id_type = edges.schema["u"].dataType
-        star = ids.sparkSession.createDataFrame(
+        star = local_frame(
+            ids.sparkSession,
             mapping,
             T.StructType(
                 [

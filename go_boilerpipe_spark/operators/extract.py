@@ -14,7 +14,9 @@ Scale notes (100 TB / 1000-executor design):
   files into chunks by size (plans/extract_job.py) and the scan splits
   them by ``spark.sql.files.maxPartitionBytes``. A url hash would balance
   row counts, not bytes, and push the whole html column through shuffle
-  storage; each extra Python task also costs a worker round trip;
+  storage; each extra Python task also adds a fixed cost (task launch and
+  Arrow stream set-up; the package ``__init__`` keeps it from including a
+  re-read of ``pyspark.zip``);
 - Arrow batches are *byte*-capped by the caller via
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` plus the size-aware
   re-chunking below, keeping Python-worker memory bounded even when single

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .util import local_frame
+
 RANK_SCALE = 10**12
 
 
@@ -173,7 +175,7 @@ def _pagerank_local(
     )
     n = len(node_set)
     if n == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     rank = {v: RANK_SCALE // n for v in node_set}
     base = (RANK_SCALE * (damping_den - damping_num) // damping_den) // n
     for _ in range(iters):
@@ -186,4 +188,4 @@ def _pagerank_local(
             v: base + (incoming.get(v, 0) * damping_num) // damping_den
             for v in node_set
         }
-    return spark.createDataFrame(sorted(rank.items()), schema)
+    return local_frame(spark, sorted(rank.items()), schema)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 
 def spread_small(df: DataFrame, per_core_bytes: int = 32 << 20) -> DataFrame:
@@ -43,6 +44,22 @@ def spread_small(df: DataFrame, per_core_bytes: int = 32 << 20) -> DataFrame:
     if est < target * per_core_bytes:
         return df.repartition(target)
     return df
+
+
+def local_frame(spark, rows, schema: T.StructType) -> DataFrame:
+    """DataFrame over driver-built ``rows`` (tuples in ``schema`` order),
+    planned as a JVM ``LocalTableScan``.
+
+    ``spark.createDataFrame(list)`` plans as ``Scan ExistingRDD`` over a
+    Python RDD, so every action on the frame starts Python tasks only to
+    hand the rows back to the JVM. An Arrow table reaches the JVM once,
+    from the driver, and the frame runs no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    columns = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 def no_pushdown(col):

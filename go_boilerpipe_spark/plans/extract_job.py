@@ -38,9 +38,21 @@ import uuid
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.extract import PartitionCountersParam, extract_articles
+from ..operators.util import local_frame
 from ..sources.catalog import ParquetCatalog, get_catalog
+
+
+_LINEAGE_SCHEMA = T.StructType([
+    T.StructField("part_id", T.IntegerType()),
+    T.StructField("docs_out", T.LongType()),
+    T.StructField("parse_errors", T.LongType()),
+    T.StructField("content_chars", T.LongType()),
+    T.StructField("kernel", T.StringType()),
+    T.StructField("kernel_s", T.DoubleType()),
+])
 
 
 def list_input_files(spark, path: str):
@@ -221,16 +233,19 @@ class ExtractJob:
             for pid, (docs, errs, chars, kernel_s, pure)
             in sorted(counters.value.items())
         ]
-        lineage = spark.createDataFrame(
-            lineage_rows,
-            schema="part_id int, docs_out bigint, parse_errors bigint, "
-                   "content_chars bigint, kernel string, kernel_s double",
-        ).withColumns(
-            {
-                "run_id": F.lit(run_id),
-                "chunk_id": F.lit(chunk_id),
-                "committed_at": F.current_timestamp(),
-            }
+        # an Arrow table plans as a LocalTableScan: the few lineage rows
+        # reach the JVM from the driver, with no Python task, and one
+        # partition writes one file per chunk
+        lineage = (
+            local_frame(spark, lineage_rows, _LINEAGE_SCHEMA)
+            .coalesce(1)
+            .withColumns(
+                {
+                    "run_id": F.lit(run_id),
+                    "chunk_id": F.lit(chunk_id),
+                    "committed_at": F.current_timestamp(),
+                }
+            )
         )
         # committed like the data: a chunk re-run after a crash between
         # here and the manifest commit replaces its lineage, never adds to it

@@ -15,7 +15,13 @@ from pyspark.sql import functions as F
 
 from go_boilerpipe_spark.kernel.document import KERNEL_PATH
 from go_boilerpipe_spark.operators.extract import extract_articles
-from go_boilerpipe_spark.plans.extract_job import ExtractJob, read_extracted
+from go_boilerpipe_spark.operators.util import local_frame
+from go_boilerpipe_spark.plans.extract_job import (
+    _LINEAGE_SCHEMA,
+    ExtractJob,
+    read_extracted,
+)
+from go_boilerpipe_spark.sources.catalog import ParquetCatalog
 from go_boilerpipe_spark.spark_session import build_session
 from tests.adversarial_inputs import adversarial_classes
 
@@ -63,6 +69,20 @@ def spark():
     s.stop()
 
 
+def _write_pages(path, rows):
+    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
+    pq.write_table(
+        pa.table({
+            "url": pa.array([u for u, _ in rows], pa.string()),
+            "warc_ts": pa.array([ts] * len(rows), pa.timestamp("us", "UTC")),
+            "html": pa.array([h for _, h in rows], pa.binary()),
+            "text": pa.array([None] * len(rows), pa.string()),
+            "lang": pa.array(["en"] * len(rows), pa.string()),
+        }),
+        path,
+    )
+
+
 @pytest.fixture(scope="module")
 def pages(tmp_path_factory):
     """Path of a pages table in ``_N_FILES`` parquet files, and the number
@@ -70,19 +90,8 @@ def pages(tmp_path_factory):
     path = tmp_path_factory.mktemp("splits") / "pages"
     path.mkdir()
     rows = _page_rows()
-    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
     for k in range(_N_FILES):
-        part = rows[k::_N_FILES]
-        pq.write_table(
-            pa.table({
-                "url": pa.array([u for u, _ in part], pa.string()),
-                "warc_ts": pa.array([ts] * len(part), pa.timestamp("us", "UTC")),
-                "html": pa.array([h for _, h in part], pa.binary()),
-                "text": pa.array([None] * len(part), pa.string()),
-                "lang": pa.array(["en"] * len(part), pa.string()),
-            }),
-            path / f"part-{k:05d}.parquet",
-        )
+        _write_pages(path / f"part-{k:05d}.parquet", rows[k::_N_FILES])
     return str(path), sum(1 for _, h in rows if h is not None)
 
 
@@ -190,3 +199,91 @@ def test_lineage_exact_after_crash_before_commit(spark, pages, tmp_path):
     assert calls == ["000000", "000000"]
     assert s["chunks_done"] == 1 and s["docs_out"] == n
     _assert_lineage_exact(spark, sink, n)
+
+
+_LINEAGE_ON_DISK = (
+    "struct<part_id:int,docs_out:bigint,parse_errors:bigint,"
+    "content_chars:bigint,kernel:string,kernel_s:double,run_id:string,"
+    "chunk_id:string,committed_at:timestamp>"
+)
+
+
+class _RecordingCatalog(ParquetCatalog):
+    """ParquetCatalog that keeps the frames written to ``_lineage``."""
+
+    def __init__(self, spark):
+        super().__init__(spark)
+        self.lineage = []
+
+    def overwrite_partition(self, df, table, partition):
+        if os.path.basename(table) == "_lineage":
+            self.lineage.append(df)
+        super().overwrite_partition(df, table, partition)
+
+
+def _lineage_chunk(spark, sink, chunk_id):
+    path = os.path.join(sink, "_lineage", f"chunk={chunk_id}")
+    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    return spark.read.parquet(path), files
+
+
+def test_lineage_local_scan_one_file_per_chunk(spark, pages, tmp_path):
+    # the lineage rows are built on the driver: writing them must start no
+    # Python task, and a chunk's few rows land in one file
+    src, n = pages
+    sink = str(tmp_path / "sink")
+    sizes = [os.path.getsize(os.path.join(src, f)) for f in os.listdir(src)]
+    catalog = _RecordingCatalog(spark)
+    # two files a chunk, and the scan gives each file its own task
+    job = ExtractJob(spark, src, sink, chunk_target_bytes=2 * min(sizes),
+                     catalog=catalog)
+    s = job.run()
+    assert s["chunks_total"] >= 2 and s["docs_out"] == n
+    assert len(catalog.lineage) == s["chunks_total"]
+    for df in catalog.lineage:
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+    for i in range(s["chunks_total"]):
+        lin, files = _lineage_chunk(spark, sink, f"{i:06d}")
+        assert lin.schema.simpleString() == _LINEAGE_ON_DISK
+        assert lin.count() > 1  # several tasks, still one file
+        assert len(files) == 1, files
+    _assert_lineage_exact(spark, sink, n)
+
+
+def test_all_null_html_chunk(spark, tmp_path):
+    # a chunk whose html is all null extracts nothing: it must still commit,
+    # with a readable lineage that counts no document, and resume
+    src = tmp_path / "pages"
+    src.mkdir()
+    rows = [(u, h) for u, h in _page_rows() if h is not None][:12]
+    _write_pages(src / "part-00000.parquet", rows)
+    _write_pages(src / "part-00001.parquet",
+                 [(f"http://null.test/p/{i}", None) for i in range(9)])
+    sink = str(tmp_path / "sink")
+    job = ExtractJob(spark, str(src), sink, chunk_target_bytes=1)
+
+    s1 = job.run()
+    assert s1["chunks_total"] == 2 and s1["chunks_done"] == 2
+    assert s1["docs_out"] == len(rows)
+    assert sorted(os.listdir(os.path.join(sink, "_manifest"))) == [
+        "000000.json", "000001.json"]
+    lin, _ = _lineage_chunk(spark, sink, "000001")
+    assert lin.schema.simpleString() == _LINEAGE_ON_DISK
+    # the kernel task still runs on the filtered-out split: a zero row
+    assert [r["docs_out"] for r in lin.collect()] == [0]
+    assert read_extracted(spark, sink).count() == len(rows)
+
+    s2 = job.run()
+    assert s2["chunks_skipped"] == 2 and s2["chunks_done"] == 0
+
+
+def test_empty_lineage_frame_round_trips(spark, tmp_path):
+    # a chunk with no task counters writes a lineage frame of zero rows; the
+    # Arrow table built from empty columns must keep the schema on disk
+    path = str(tmp_path / "lineage")
+    local_frame(spark, [], _LINEAGE_SCHEMA).coalesce(1).write.parquet(path)
+    back = spark.read.parquet(path)
+    assert back.schema.simpleString() == _LINEAGE_SCHEMA.simpleString()
+    assert back.count() == 0
