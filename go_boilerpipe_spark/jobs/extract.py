@@ -7,14 +7,15 @@ config; stdin/file/url acquisition is replaced by the table scan.
     spark-submit --py-files dist/go_boilerpipe_spark.zip \
         -m go_boilerpipe_spark.jobs.extract \
         --source /data/pages --sink /data/extracted \
-        [--streaming] [--langs en,zh] [--chunk-bytes 1073741824]
+        [--langs en,zh] [--chunk-bytes 1073741824]
 
-Batch mode uses the checkpoint-resumable chunked job; --streaming uses the
-Trigger.AvailableNow structured-streaming drain. Both are idempotent
-re-run-to-resume. Neither shuffles the pages: the kernel runs on the
-scan's splits, which follow bytes — ``--chunk-bytes`` sizes the batch
-job's file groups and ``spark.sql.files.maxPartitionBytes`` (a
-``--conf``) sizes the tasks within them.
+It runs the checkpoint-resumable chunked job (plans/extract_job.py) and
+prints its stats as one JSON line. A re-run resumes: it skips committed
+chunks and picks up files that landed since. The job does not shuffle
+the pages: the kernel runs on the scan's splits, which follow bytes —
+``--chunk-bytes`` sizes the file groups and
+``spark.sql.files.maxPartitionBytes`` (a ``--conf``) sizes the tasks
+within them.
 """
 
 from __future__ import annotations
@@ -28,36 +29,25 @@ def main(argv=None):
     ap = argparse.ArgumentParser(description="boilerpipe-spark extraction job")
     ap.add_argument("--source", required=True, help="pages table path")
     ap.add_argument("--sink", required=True, help="output table path")
-    ap.add_argument("--streaming", action="store_true",
-                    help="use Structured Streaming (Trigger.AvailableNow)")
     ap.add_argument("--langs", default=None,
                     help="comma-separated lang filter (pushed to the scan)")
     ap.add_argument("--chunk-bytes", type=int, default=1 << 30)
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 
+    from ..plans.extract_job import ExtractJob
     from ..spark_session import build_session
 
     spark = build_session(app_name="boilerpipe-extract", master=args.master)
     langs = tuple(args.langs.split(",")) if args.langs else None
-
-    if args.streaming:
-        from ..streaming.extract_stream import run_extract_stream
-
-        ok = run_extract_stream(spark, args.source, args.sink)
-        print(json.dumps({"mode": "streaming", "drained": bool(ok)}))
-    else:
-        from ..plans.extract_job import ExtractJob
-
-        job = ExtractJob(
-            spark,
-            args.source,
-            args.sink,
-            chunk_target_bytes=args.chunk_bytes,
-            langs=langs,
-        )
-        stats = job.run()
-        print(json.dumps({"mode": "batch", **stats}))
+    stats = ExtractJob(
+        spark,
+        args.source,
+        args.sink,
+        chunk_target_bytes=args.chunk_bytes,
+        langs=langs,
+    ).run()
+    print(json.dumps({"mode": "batch", **stats}))
     spark.stop()
 
 

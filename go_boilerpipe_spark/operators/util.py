@@ -24,10 +24,7 @@ def spread_small(df: DataFrame, per_core_bytes: int = 32 << 20) -> DataFrame:
     it fires only below ``cores × per_core_bytes`` — where the shuffle it
     adds is trivially cheap by construction — and never at crawl scale,
     where scan splits already provide the parallelism. Row-local values
-    are partitioning-invariant, so results are unchanged. Streaming
-    inputs pass through untouched."""
-    if df.isStreaming:
-        return df
+    are partitioning-invariant, so results are unchanged."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:

@@ -12,17 +12,17 @@ North-rule requirements implemented here (BASELINE.json):
   push the whole html column through shuffle storage;
 - checkpoint-resumable incremental commits: each chunk is extracted and
   committed independently (sink subdir ``chunk=<id>`` + a manifest
-  entry). A re-run skips committed chunks and overwrites partial ones —
-  idempotent exactly-once at chunk granularity. This is the same
-  file-group pattern Iceberg's ``Trigger.AvailableNow`` streaming uses;
-  on a real deployment the sink write becomes
-  ``df.writeTo(tbl).append()`` inside one Iceberg transaction per chunk
-  with the manifest as a snapshot-property, which this module abstracts
-  behind ``catalog``.
+  entry). A re-run skips committed chunks, overwrites partial ones and
+  picks up files that landed since — idempotent exactly-once at chunk
+  granularity, so this batch job is also the incremental one. A re-run
+  whose plan has fewer chunks (coarser ``chunk_target_bytes``, compacted
+  or removed inputs) first drops the manifest entries, data and lineage
+  of the chunk ids the plan no longer has.
 - per-partition lineage + metrics: one row per task partition per chunk
   (docs out, parse errors, content chars, kernel path and kernel
   seconds), committed next to the sink like the chunk's data
-  (``_lineage/chunk=<id>``, overwritten on re-run).
+  (``_lineage/chunk=<id>``, overwritten on re-run). The chunk's totals
+  in the stats and the manifest are the sums of the same counters.
 
 The reference has no notion of any of this (it is a single-document
 library, cmd/boilerpipe/extract.go:31-82 processes one doc per process);
@@ -36,13 +36,12 @@ import os
 import time
 import uuid
 
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.extract import PartitionCountersParam, extract_articles
 from ..operators.util import local_frame
-from ..sources.catalog import ParquetCatalog, get_catalog
+from ..sources.catalog import ParquetCatalog
 
 
 _LINEAGE_SCHEMA = T.StructType([
@@ -117,6 +116,9 @@ class _FS:
         self.fs.delete(dst, False)
         self.fs.rename(tmp, dst)
 
+    def delete(self, name: str):
+        self.fs.delete(self.child(name), True)
+
 
 def plan_chunks(files, target_bytes: int):
     """Greedy size-balanced file groups, deterministic for a fixed listing."""
@@ -143,7 +145,7 @@ class ExtractJob:
         catalog=None,
     ):
         self.spark = spark
-        self.catalog = catalog or get_catalog(spark)
+        self.catalog = catalog or ParquetCatalog(spark)
         self.source = source
         self.sink = sink
         self.chunk_target_bytes = chunk_target_bytes
@@ -167,6 +169,20 @@ class ExtractJob:
             f"{entry['chunk_id']}.json", entry
         )
 
+    def _drop_stale_chunks(self, done: dict, plan_ids: set):
+        """Remove every chunk id the plan no longer has: its manifest entry
+        first, so a crash part-way through never leaves a duplicate visible,
+        then its data and lineage dirs (also those a crashed run left with
+        no manifest entry)."""
+        manifest = _FS(self.spark, self.manifest_dir)
+        for chunk_id in sorted(done.keys() - plan_ids):
+            manifest.delete(f"{chunk_id}.json")
+        for table in (self.sink, self.lineage_dir):
+            fs = _FS(self.spark, table)
+            for name in fs.list_names():
+                if name.startswith("chunk=") and name[6:] not in plan_ids:
+                    fs.delete(name)
+
     # -- the job ----------------------------------------------------------------
 
     def run(self, run_id: str | None = None) -> dict:
@@ -174,11 +190,11 @@ class ExtractJob:
         files = self.catalog.list_data_files(self.source)
         chunks = plan_chunks(files, self.chunk_target_bytes)
         done = self._completed_chunks()
+        self._drop_stale_chunks(done, {f"{i:06d}" for i in range(len(chunks))})
 
         stats = {"run_id": run_id, "chunks_total": len(chunks),
                  "chunks_skipped": 0, "chunks_done": 0,
-                 "docs_in": 0, "docs_out": 0, "parse_errors": 0,
-                 "wall_sec": 0.0}
+                 "docs_out": 0, "parse_errors": 0, "wall_sec": 0.0}
         t_all = time.monotonic()
         for idx, chunk_files in enumerate(chunks):
             chunk_id = f"{idx:06d}"
@@ -188,7 +204,6 @@ class ExtractJob:
             entry = self._run_chunk(run_id, chunk_id, chunk_files)
             self._commit_chunk(entry)
             stats["chunks_done"] += 1
-            stats["docs_in"] += entry["docs_in"]
             stats["docs_out"] += entry["docs_out"]
             stats["parse_errors"] += entry["parse_errors"]
         stats["wall_sec"] = time.monotonic() - t_all
@@ -205,28 +220,17 @@ class ExtractJob:
             df = df.filter(F.col("lang").isin(*self.langs))
 
         # per-partition lineage counters accumulate INSIDE the Arrow kernel
-        # (one accumulator update per task); chunk totals ride the write via
-        # observe(). Neither re-reads the written chunk — the old post-write
+        # (one accumulator update per task) and the chunk totals are their
+        # sums, so nothing re-reads the written chunk — the old post-write
         # groupBy scan doubled sink I/O per chunk (VERDICT r2 item 4).
         counters = spark.sparkContext.accumulator({}, PartitionCountersParam())
-        obs = Observation(f"extract-{run_id}-{chunk_id}")
         extracted = extract_articles(df, counters=counters).withColumn(
             "part_id", F.spark_partition_id()
         )
-        extracted = extracted.observe(
-            obs,
-            F.count(F.lit(1)).alias("docs_out"),
-            F.coalesce(
-                F.sum(F.when(F.col("parse_error").isNotNull(), 1).otherwise(0)),
-                F.lit(0),
-            ).alias("parse_errors"),
-        )
 
-        # overwrite → idempotent re-run of a failed/partial chunk (on
-        # Iceberg: one transaction via overwritePartitions)
+        # overwrite → idempotent re-run of a failed/partial chunk
         self.catalog.overwrite_partition(extracted, self.sink, f"chunk={chunk_id}")
 
-        totals = obs.get
         lineage_rows = [
             (int(pid), int(docs), int(errs), int(chars),
              "pure" if pure else "c", float(kernel_s))
@@ -253,27 +257,23 @@ class ExtractJob:
             lineage, self.lineage_dir, f"chunk={chunk_id}"
         )
 
-        docs_out = int(totals["docs_out"])
-        parse_errors = int(totals["parse_errors"])
-
         return {
             "run_id": run_id,
             "chunk_id": chunk_id,
             "files": chunk_files,
-            "docs_in": docs_out,  # nulls filtered pre-UDF
-            "docs_out": docs_out,
-            "parse_errors": parse_errors,
+            "docs_out": sum(r[1] for r in lineage_rows),
+            "parse_errors": sum(r[2] for r in lineage_rows),
             "wall_sec": time.monotonic() - t0,
         }
 
 
 def read_extracted(spark, sink: str):
     """Read the extracted corpus, trusting the manifest over the directory
-    listing: a re-run with a smaller chunking can leave stale committed
-    chunk dirs from the previous run in the sink — globbing chunk=* would
-    return their rows as duplicates. The manifest listing goes through the
-    Hadoop FileSystem API so hdfs://, s3a://, and local sinks all honor it
-    (ADVICE r2)."""
+    listing: a chunk dir the manifest does not name (a crashed chunk, or a
+    stale one written by other means) is not read — globbing chunk=*
+    would return its rows as duplicates. The manifest listing goes through
+    the Hadoop FileSystem API so hdfs://, s3a://, and local sinks all honor
+    it (ADVICE r2)."""
     fs = _FS(spark, os.path.join(sink, "_manifest"))
     ids = sorted(f[:-5] for f in fs.list_names() if f.endswith(".json"))
     paths = [os.path.join(sink, f"chunk={cid}") for cid in ids]

@@ -1,12 +1,10 @@
-"""Table catalog abstraction: Iceberg on clusters, parquet dirs offline.
+"""Table seam of the extraction job: directories of parquet files.
 
-The north rule targets Iceberg tables (scan source + append sink with
-snapshot commits). This runtime has no Iceberg jars, so the engine talks
-to tables through this small seam: ``IcebergCatalog`` carries the real
-calls (DSv2 ``writeTo(...).append()`` inside one transaction per chunk,
-snapshot-id-based incremental reads), ``ParquetCatalog`` is the offline
-stand-in with the same contract. plans/extract_job.py and the streaming
-drain compose against the interface, not the format.
+plans/extract_job.py lists a table's data files and commits each chunk
+through this class, not through the format: a chunk is one partition
+subdirectory, overwritten whole, so a re-run replaces it. An Iceberg sink
+would implement the same two calls; none is shipped, because this
+runtime has no ``iceberg-spark-runtime`` jars to run it against.
 """
 
 from __future__ import annotations
@@ -15,22 +13,20 @@ import os
 
 
 class ParquetCatalog:
-    """Directory-of-parquet tables (offline / test implementation)."""
+    """Directory-of-parquet tables."""
 
     def __init__(self, spark):
         self.spark = spark
-
-    def read(self, table: str):
-        return self.spark.read.parquet(table)
-
-    def append(self, df, table: str):
-        df.write.mode("append").parquet(table)
 
     def overwrite_partition(self, df, table: str, partition: str):
         """Idempotent chunk commit: overwrite one partition subdirectory."""
         df.write.mode("overwrite").parquet(os.path.join(table, partition))
 
     def list_data_files(self, table: str):
+        # a mistyped path must not read as an empty table: the job drops
+        # the committed chunks its plan no longer has
+        if not os.path.isdir(table):
+            raise FileNotFoundError(f"no table directory: {table}")
         files = []
         for root, _dirs, names in os.walk(table):
             for f in names:
@@ -39,42 +35,3 @@ class ParquetCatalog:
                     files.append((p, os.path.getsize(p)))
         files.sort()
         return files
-
-
-class IcebergCatalog:
-    """Iceberg DSv2 implementation (requires iceberg-spark-runtime on the
-    session classpath; raises cleanly when absent)."""
-
-    def __init__(self, spark, catalog_name: str = "spark_catalog"):
-        self.spark = spark
-        self.catalog = catalog_name
-        try:
-            spark._jvm.org.apache.iceberg.Table  # noqa: B018
-        except Exception as e:  # pragma: no cover - offline runtime
-            raise RuntimeError(
-                "Iceberg runtime not on the classpath; use ParquetCatalog "
-                "or launch with --packages org.apache.iceberg:"
-                "iceberg-spark-runtime-3.5_2.12"
-            ) from e
-
-    def read(self, table: str):  # pragma: no cover - needs cluster
-        return self.spark.read.format("iceberg").load(f"{self.catalog}.{table}")
-
-    def append(self, df, table: str):  # pragma: no cover
-        df.writeTo(f"{self.catalog}.{table}").append()
-
-    def overwrite_partition(self, df, table: str, partition: str):  # pragma: no cover
-        # chunk-idempotent commit: one Iceberg transaction replacing the
-        # chunk's partition (dynamic overwrite)
-        df.writeTo(f"{self.catalog}.{table}").overwritePartitions()
-
-    def list_data_files(self, table: str):  # pragma: no cover
-        rows = self.spark.sql(
-            f"SELECT file_path, file_size_in_bytes FROM "
-            f"{self.catalog}.{table}.files ORDER BY file_path"
-        ).collect()
-        return [(r[0], r[1]) for r in rows]
-
-
-def get_catalog(spark, kind: str = "parquet"):
-    return IcebergCatalog(spark) if kind == "iceberg" else ParquetCatalog(spark)

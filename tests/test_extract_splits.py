@@ -1,15 +1,13 @@
-"""Extraction on the scan's splits, over a page set written by this module
-(no external inputs): the plan has no exchange, the output does not depend
-on how the input is partitioned, and the job's lineage stays exact across
-a resume and across a crash before the manifest commit."""
+"""Extraction on the scan's splits, over the page set of
+:mod:`tests.page_set` (no external inputs): the plan has no exchange, the
+output does not depend on how the input is partitioned, and the job reads
+each url exactly once, with exact lineage, across a resume, a crash before
+the manifest commit, a re-run with coarser chunks and files that land
+after a run."""
 
-import datetime
 import hashlib
 import os
-import random
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,42 +21,9 @@ from go_boilerpipe_spark.plans.extract_job import (
 )
 from go_boilerpipe_spark.sources.catalog import ParquetCatalog
 from go_boilerpipe_spark.spark_session import build_session
-from tests.adversarial_inputs import adversarial_classes
+from tests.page_set import page_rows, write_page_set, write_pages
 
-_WORDS = (
-    "the council voted on a plan to rebuild the harbor bridge after "
-    "years of delay while residents asked how the city would pay for "
-    "repairs schools roads and the new water system next spring"
-).split()
 _N_FILES = 4
-_NULL_EVERY = 11
-
-
-def _article(rng, i):
-    paras = "".join(
-        "<p>" + " ".join(rng.choice(_WORDS) for _ in range(rng.randint(25, 60)))
-        + ".</p>"
-        for _ in range(rng.randint(3, 8))
-    )
-    return (
-        f"<html><head><title>Harbor story {i}</title></head><body>"
-        "<div class=nav><a href=/>Home</a> | <a href=/news>News</a></div>"
-        f"<h1>Harbor story {i}</h1>{paras}"
-        "<div class=footer>Copyright 2026. All rights reserved.</div>"
-        "</body></html>"
-    )
-
-
-def _page_rows():
-    rng = random.Random(7)
-    docs = [_article(rng, i) for i in range(40)]
-    docs += [d for cls in adversarial_classes().values() for d in cls]
-    rows = []
-    for i, d in enumerate(docs):
-        html = None if i % _NULL_EVERY == _NULL_EVERY - 1 else (
-            d.encode("utf-8", "surrogateescape"))
-        rows.append((f"http://site{i % 3}.test/p/{i}", html))
-    return rows
 
 
 @pytest.fixture(scope="module")
@@ -69,30 +34,12 @@ def spark():
     s.stop()
 
 
-def _write_pages(path, rows):
-    ts = datetime.datetime(2026, 1, 1, tzinfo=datetime.timezone.utc)
-    pq.write_table(
-        pa.table({
-            "url": pa.array([u for u, _ in rows], pa.string()),
-            "warc_ts": pa.array([ts] * len(rows), pa.timestamp("us", "UTC")),
-            "html": pa.array([h for _, h in rows], pa.binary()),
-            "text": pa.array([None] * len(rows), pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-        }),
-        path,
-    )
-
-
 @pytest.fixture(scope="module")
 def pages(tmp_path_factory):
     """Path of a pages table in ``_N_FILES`` parquet files, and the number
     of its rows with non-null html."""
-    path = tmp_path_factory.mktemp("splits") / "pages"
-    path.mkdir()
-    rows = _page_rows()
-    for k in range(_N_FILES):
-        _write_pages(path / f"part-{k:05d}.parquet", rows[k::_N_FILES])
-    return str(path), sum(1 for _, h in rows if h is not None)
+    path = str(tmp_path_factory.mktemp("splits") / "pages")
+    return path, len(write_page_set(path, _N_FILES))
 
 
 def _digest(df):
@@ -134,7 +81,7 @@ def test_partition_invariance(spark, pages):
     df = spark.read.parquet(src)
     assert df.rdd.getNumPartitions() > 1
     scanned = extract_articles(df)
-    assert scanned.count() == len(_page_rows())  # null html → error rows
+    assert scanned.count() == len(page_rows())  # null html → error rows
     d = _digest(scanned)
     assert _digest(extract_articles(df.coalesce(1))) == d
     assert _digest(extract_articles(df.repartition(7))) == d
@@ -257,9 +204,9 @@ def test_all_null_html_chunk(spark, tmp_path):
     # with a readable lineage that counts no document, and resume
     src = tmp_path / "pages"
     src.mkdir()
-    rows = [(u, h) for u, h in _page_rows() if h is not None][:12]
-    _write_pages(src / "part-00000.parquet", rows)
-    _write_pages(src / "part-00001.parquet",
+    rows = [(u, h) for u, h in page_rows() if h is not None][:12]
+    write_pages(src / "part-00000.parquet", rows)
+    write_pages(src / "part-00001.parquet",
                  [(f"http://null.test/p/{i}", None) for i in range(9)])
     sink = str(tmp_path / "sink")
     job = ExtractJob(spark, str(src), sink, chunk_target_bytes=1)
@@ -287,3 +234,85 @@ def test_empty_lineage_frame_round_trips(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.schema.simpleString() == _LINEAGE_SCHEMA.simpleString()
     assert back.count() == 0
+
+
+def _assert_each_url_once(spark, sink, urls):
+    got = [r["url"] for r in read_extracted(spark, sink).select("url").collect()]
+    assert sorted(got) == sorted(urls)
+
+
+@pytest.mark.parametrize("crash_last", [False, True])
+def test_coarser_rerun_drops_stale_chunks(spark, pages, tmp_path, crash_last):
+    # a re-run whose plan has fewer chunks must drop the chunk ids it no
+    # longer has: their manifest entries, data and lineage — also the dirs
+    # of a chunk that crashed before its manifest commit
+    src, n = pages
+    sink = str(tmp_path / "sink")
+    fine = ExtractJob(spark, src, sink, chunk_target_bytes=1)
+    if crash_last:
+        commit = fine._commit_chunk
+
+        def crash_on_last(entry):
+            if entry["chunk_id"] == f"{_N_FILES - 1:06d}":
+                raise RuntimeError("crash before manifest commit")
+            commit(entry)
+
+        fine._commit_chunk = crash_on_last
+        with pytest.raises(RuntimeError):
+            fine.run()
+    else:
+        assert fine.run()["chunks_total"] == _N_FILES
+    s = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40).run()
+    assert s["chunks_total"] == 1 and s["chunks_done"] == 1
+
+    _assert_each_url_once(
+        spark, sink, [u for u, h in page_rows() if h is not None])
+    assert os.listdir(os.path.join(sink, "_manifest")) == ["000000.json"]
+    for table in (sink, os.path.join(sink, "_lineage")):
+        assert [d for d in os.listdir(table) if d.startswith("chunk=")] == [
+            "chunk=000000"]
+    _assert_lineage_exact(spark, sink, n)
+
+
+def test_missing_source_keeps_sink(spark, pages, tmp_path):
+    src, n = pages
+    sink = str(tmp_path / "sink")
+    ExtractJob(spark, src, sink, chunk_target_bytes=1).run()
+    with pytest.raises(FileNotFoundError):
+        ExtractJob(spark, src + "-typo", sink, chunk_target_bytes=1).run()
+    _assert_lineage_exact(spark, sink, n)
+
+
+def test_files_landing_after_a_run(spark, tmp_path):
+    # re-running the job is how it picks up new input: files whose names
+    # sort after the committed ones add chunks and skip the committed ones;
+    # one that sorts first shifts every chunk, and each url is still read once
+    src = tmp_path / "pages"
+    src.mkdir()
+    sink = str(tmp_path / "sink")
+    job = ExtractJob(spark, str(src), sink, chunk_target_bytes=1)
+    rows = page_rows()
+    waves = [rows[k::7] for k in range(7)]
+    written = []
+
+    def land(k):
+        write_pages(src / f"part-{k:05d}.parquet", waves[k])
+        written.extend(u for u, h in waves[k] if h is not None)
+
+    for k in (1, 2, 3, 4):
+        land(k)
+    s1 = job.run()
+    assert s1["chunks_total"] == 4 and s1["chunks_done"] == 4
+    _assert_each_url_once(spark, sink, written)
+
+    for k in (5, 6):
+        land(k)
+    s2 = job.run()
+    assert s2["chunks_skipped"] == 4 and s2["chunks_done"] == 2
+    _assert_each_url_once(spark, sink, written)
+
+    land(0)
+    s3 = job.run()
+    assert s3["chunks_total"] == 7
+    _assert_each_url_once(spark, sink, written)
+    _assert_lineage_exact(spark, sink, len(written))

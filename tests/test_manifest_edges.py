@@ -1,4 +1,5 @@
-"""Watermarked windowed aggregation + manifest failure-injection tests."""
+"""Manifest failure-injection tests of the extraction job, over the page set
+of :mod:`tests.page_set` (no external inputs)."""
 
 import json
 import os
@@ -7,60 +8,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from go_boilerpipe_spark.plans.extract_job import ExtractJob, read_extracted
-from go_boilerpipe_spark.sources.pages import write_pages_table
 from go_boilerpipe_spark.spark_session import build_session
-from go_boilerpipe_spark.streaming.extract_stream import PAGES_SCHEMA
-from go_boilerpipe_spark.streaming.windows import windowed_counts
+from tests.page_set import write_page_set
 
 
 @pytest.fixture(scope="module")
 def spark():
-    s = build_session(app_name="win-tests", master="local[4]",
+    s = build_session(app_name="manifest-tests", master="local[4]",
                       shuffle_partitions=4)
     yield s
     s.stop()
-
-
-def test_watermarked_window_counts_match_batch(spark, tmp_path):
-    src = str(tmp_path / "pages")
-    write_pages_table(spark, src, 70, partitions=4)
-
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-    q = (
-        windowed_counts(stream, window_len="1 hour", late="2 hours")
-        .writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")  # append requires the watermark: state bound
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(timeout=180)
-
-    got = spark.sql(
-        "SELECT win_start, lang, n_docs FROM win_counts"
-    )
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(
-            F.window(F.col("warc_ts").cast("timestamp"), "1 hour"), "lang"
-        )
-        .agg(F.count("*").alias("n_docs"))
-        .select(F.col("window.start").alias("win_start"), "lang", "n_docs")
-    )
-    # watermark append-mode emits only windows the watermark closed; with
-    # AvailableNow + bounded input that's all but the newest window(s)
-    g = {(r[0], r[1]): r[2] for r in got.collect()}
-    b = {(r[0], r[1]): r[2] for r in batch.collect()}
-    assert g, "no closed windows emitted"
-    assert all(b[k] == v for k, v in g.items())
 
 
 class TestManifestEdges:
     def test_changed_files_invalidate_chunk(self, spark, tmp_path):
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
-        write_pages_table(spark, src, 14, partitions=2)
+        n = len(write_page_set(src, 2))
         job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)  # one chunk
         s1 = job.run()
         assert s1["chunks_done"] == 1
@@ -74,7 +38,7 @@ class TestManifestEdges:
         assert s2["chunks_done"] == 1
         assert s2["chunks_skipped"] == 0
         # output remains exactly one copy (overwrite semantics)
-        assert read_extracted(spark, sink).count() == 14
+        assert read_extracted(spark, sink).count() == n
 
     def test_stale_chunk_dirs_excluded_by_manifest(self, spark, tmp_path):
         # ADVICE r1: a re-run whose input listing yields FEWER chunks used to
@@ -82,13 +46,13 @@ class TestManifestEdges:
         # as duplicate rows. The manifest is now the source of truth.
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
-        write_pages_table(spark, src, 14, partitions=2)
+        n = len(write_page_set(src, 2))
         job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
         job.run()
-        n = read_extracted(spark, sink).count()
-        assert n == 14
+        assert read_extracted(spark, sink).count() == n
 
-        # simulate a stale chunk dir from an older, finer chunking
+        # a chunk dir with no manifest entry (a run now drops the dirs of
+        # chunk ids its plan lacks, but a crash can still leave one)
         stale = read_extracted(spark, sink).limit(5)
         stale.write.mode("overwrite").parquet(os.path.join(sink, "chunk=000009"))
         assert read_extracted(spark, sink).count() == n  # stale rows excluded
@@ -96,7 +60,7 @@ class TestManifestEdges:
     def test_partial_failure_leaves_chunk_uncommitted(self, spark, tmp_path):
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
-        write_pages_table(spark, src, 14, partitions=2)
+        n = len(write_page_set(src, 2))
         job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
 
         # inject a failure between data write and manifest commit
@@ -116,16 +80,16 @@ class TestManifestEdges:
         job._commit_chunk = orig
         s = job.run()
         assert s["chunks_done"] == 1
-        assert read_extracted(spark, sink).count() == 14
+        assert read_extracted(spark, sink).count() == n
 
     def test_lineage_without_post_write_scan(self, spark, tmp_path,
                                              monkeypatch):
         # VERDICT r2 item 4: lineage counters must come from the write
-        # itself (kernel accumulator + observe), never from re-reading the
+        # itself (the kernel's accumulator), never from re-reading the
         # written chunk — guard every parquet read during the run
         src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
-        write_pages_table(spark, src, 20, partitions=2, null_html_every=7)
+        write_page_set(src, 2)  # every 11th html is null
 
         from pyspark.sql.readwriter import DataFrameReader
 
@@ -157,42 +121,4 @@ class TestManifestEdges:
         assert sum(r["content_chars"] for r in lin) == n_chars
         # one lineage row per extraction-task partition, keyed by part id
         assert len({(r["part_id"]) for r in lin}) == len(lin)
-
-
-def test_stream_dedup_drops_repeats(spark, tmp_path):
-    # the same urls land twice (recrawl); the streaming dedup keeps one
-    # row per normalized url within the watermark horizon
-    from go_boilerpipe_spark.streaming.dedup_stream import dedup_stream_exact
-
-    src = str(tmp_path / "pages")
-    write_pages_table(spark, src, 35, partitions=2)
-    first = spark.read.parquet(src)
-    # recrawl copy: same urls, 1 minute later (inside the watermark)
-    recrawl = first.withColumn(
-        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 1 MINUTE")
-    )
-    recrawl.write.mode("append").parquet(src)
-    assert spark.read.parquet(src).count() == 70
-
-    def drain(name, ck, normalize):
-        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(src)
-        q = (
-            dedup_stream_exact(stream, late="2 hours", normalize=normalize)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / ck))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(timeout=180)
-        return spark.sql(f"SELECT url FROM {name}")
-
-    # exact urls: each of the 35 unique urls kept once (recrawl dropped)
-    out = drain("dedup_stream_raw", "ck_raw", normalize=False)
-    assert out.count() == 35
-    assert out.distinct().count() == 35
-    # normalized urls: ?rep=k aliases collapse to the 7 base documents
-    out_n = drain("dedup_stream_norm", "ck_norm", normalize=True)
-    assert out_n.count() == 7
 
