@@ -22,6 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -29,6 +30,7 @@ from go_boilerpipe_spark.functions import textstats, urls  # noqa: E402
 from go_boilerpipe_spark.operators import curation, dedup, similarity  # noqa: E402
 from go_boilerpipe_spark.operators.extract import extract_articles  # noqa: E402
 from go_boilerpipe_spark.operators.multimodal import decode_media  # noqa: E402
+from go_boilerpipe_spark.operators.util import local_frame  # noqa: E402
 
 
 def _t(
@@ -696,8 +698,8 @@ def _q_ann_recall(spark, sf):
     )
     # derived from the arms list: a method missing from this grid would
     # silently vanish from the left-joined output
-    methods = spark.createDataFrame(
-        [(m,) for m, _, _ in arms], "method string"
+    methods = local_frame(
+        spark, [(m,) for m, _, _ in arms], T.StructType.fromDDL("method string")
     )
     grid = truth.select("query_id").distinct().crossJoin(
         F.broadcast(methods)
@@ -1016,7 +1018,8 @@ def _q_url_rules(spark, sf):
             F.col("doc_id").cast("string"),
         ).alias("url"),
     )
-    rules = spark.createDataFrame(
+    rules = local_frame(
+        spark,
         [
             ("hot0.example.com", "/p/", False),
             ("hot0.example.com", "/p/1", True),
@@ -1025,7 +1028,7 @@ def _q_url_rules(spark, sf):
             ("hot1.example.com", "/p/3", False),
             ("h7.example.com", "/p/", False),
         ],
-        "host string, path_prefix string, allow boolean",
+        T.StructType.fromDDL("host string, path_prefix string, allow boolean"),
     )
     return curation.url_rules_filter(u, rules).select("doc_id")
 

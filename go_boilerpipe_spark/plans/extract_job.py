@@ -16,13 +16,15 @@ North-rule requirements implemented here (BASELINE.json):
   picks up files that landed since — idempotent exactly-once at chunk
   granularity, so this batch job is also the incremental one. A re-run
   whose plan has fewer chunks (coarser ``chunk_target_bytes``, compacted
-  or removed inputs) first drops the manifest entries, data and lineage
-  of the chunk ids the plan no longer has.
+  or removed inputs) first drops the manifest entries and data of the
+  chunk ids the plan no longer has.
 - per-partition lineage + metrics: one row per task partition per chunk
   (docs out, parse errors, content chars, kernel path and kernel
-  seconds), committed next to the sink like the chunk's data
-  (``_lineage/chunk=<id>``, overwritten on re-run). The chunk's totals
-  in the stats and the manifest are the sums of the same counters.
+  seconds), carried in the chunk's manifest entry, so the manifest
+  rename commits data and lineage at once and a chunk runs one Spark
+  write. The chunk's totals in the stats and the manifest are the sums
+  of the same counters; :func:`read_lineage` returns every committed
+  row as a frame.
 
 The reference has no notion of any of this (it is a single-document
 library, cmd/boilerpipe/extract.go:31-82 processes one doc per process);
@@ -31,6 +33,7 @@ the job layer is where the Spark engine earns the 10^12-document scale.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import time
@@ -39,9 +42,12 @@ import uuid
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.extract import PartitionCountersParam, extract_articles
+from ..operators.extract import (
+    OUTPUT_SCHEMA_DDL,
+    PartitionCountersParam,
+    extract_articles,
+)
 from ..operators.util import local_frame
-from ..sources.catalog import ParquetCatalog
 
 
 _LINEAGE_SCHEMA = T.StructType([
@@ -51,12 +57,28 @@ _LINEAGE_SCHEMA = T.StructType([
     T.StructField("content_chars", T.LongType()),
     T.StructField("kernel", T.StringType()),
     T.StructField("kernel_s", T.DoubleType()),
+    T.StructField("run_id", T.StringType()),
+    T.StructField("chunk_id", T.StringType()),
+    T.StructField("committed_at", T.TimestampType()),
 ])
+# the per-partition counters a manifest entry's ``lineage`` list carries
+_LINEAGE_COUNTERS = tuple(_LINEAGE_SCHEMA.names[:6])
 
 
 def list_input_files(spark, path: str):
-    """Stable, sorted data-file list for deterministic chunking."""
-    return ParquetCatalog(spark).list_data_files(path)
+    """Stable, sorted ``(path, size)`` data-file list for deterministic
+    chunking. A mistyped path raises instead of reading as an empty table:
+    the job drops the committed chunks its plan no longer has."""
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"no table directory: {path}")
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for f in names:
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                p = os.path.join(root, f)
+                files.append((p, os.path.getsize(p)))
+    files.sort()
+    return files
 
 
 class _FS:
@@ -120,6 +142,14 @@ class _FS:
         self.fs.delete(self.child(name), True)
 
 
+def _manifest_entries(spark, sink: str) -> dict:
+    """``{chunk_id: entry}`` of every committed chunk: the manifest is the
+    sink's only commit record."""
+    fs = _FS(spark, os.path.join(sink, "_manifest"))
+    entries = (fs.read_json(f) for f in fs.list_names() if f.endswith(".json"))
+    return {e["chunk_id"]: e for e in entries}
+
+
 def plan_chunks(files, target_bytes: int):
     """Greedy size-balanced file groups, deterministic for a fixed listing."""
     chunks, cur, cur_bytes = [], [], 0
@@ -142,27 +172,18 @@ class ExtractJob:
         sink: str,
         chunk_target_bytes: int = 1 << 30,
         langs: tuple[str, ...] | None = None,
-        catalog=None,
     ):
         self.spark = spark
-        self.catalog = catalog or ParquetCatalog(spark)
         self.source = source
         self.sink = sink
         self.chunk_target_bytes = chunk_target_bytes
         self.langs = langs
         self.manifest_dir = os.path.join(sink, "_manifest")
-        self.lineage_dir = os.path.join(sink, "_lineage")
 
     # -- manifest --------------------------------------------------------------
 
     def _completed_chunks(self) -> dict:
-        fs = _FS(self.spark, self.manifest_dir)
-        done = {}
-        for f in fs.list_names():
-            if f.endswith(".json"):
-                e = fs.read_json(f)
-                done[e["chunk_id"]] = e
-        return done
+        return _manifest_entries(self.spark, self.sink)
 
     def _commit_chunk(self, entry: dict):
         _FS(self.spark, self.manifest_dir).write_json_atomic(
@@ -172,22 +193,21 @@ class ExtractJob:
     def _drop_stale_chunks(self, done: dict, plan_ids: set):
         """Remove every chunk id the plan no longer has: its manifest entry
         first, so a crash part-way through never leaves a duplicate visible,
-        then its data and lineage dirs (also those a crashed run left with
-        no manifest entry)."""
+        then its data dir (also one a crashed run left with no manifest
+        entry)."""
         manifest = _FS(self.spark, self.manifest_dir)
         for chunk_id in sorted(done.keys() - plan_ids):
             manifest.delete(f"{chunk_id}.json")
-        for table in (self.sink, self.lineage_dir):
-            fs = _FS(self.spark, table)
-            for name in fs.list_names():
-                if name.startswith("chunk=") and name[6:] not in plan_ids:
-                    fs.delete(name)
+        data = _FS(self.spark, self.sink)
+        for name in data.list_names():
+            if name.startswith("chunk=") and name[6:] not in plan_ids:
+                data.delete(name)
 
     # -- the job ----------------------------------------------------------------
 
     def run(self, run_id: str | None = None) -> dict:
         run_id = run_id or uuid.uuid4().hex[:12]
-        files = self.catalog.list_data_files(self.source)
+        files = list_input_files(self.spark, self.source)
         chunks = plan_chunks(files, self.chunk_target_bytes)
         done = self._completed_chunks()
         self._drop_stale_chunks(done, {f"{i:06d}" for i in range(len(chunks))})
@@ -229,56 +249,57 @@ class ExtractJob:
         )
 
         # overwrite → idempotent re-run of a failed/partial chunk
-        self.catalog.overwrite_partition(extracted, self.sink, f"chunk={chunk_id}")
+        extracted.write.mode("overwrite").parquet(
+            os.path.join(self.sink, f"chunk={chunk_id}"))
 
-        lineage_rows = [
-            (int(pid), int(docs), int(errs), int(chars),
-             "pure" if pure else "c", float(kernel_s))
+        # the lineage rides in the manifest entry, so the manifest commit
+        # is its only commit: a chunk re-run after a crash before it
+        # replaces the lineage with the data, never adds to it
+        lineage = [
+            dict(zip(_LINEAGE_COUNTERS, (
+                int(pid), int(docs), int(errs), int(chars),
+                "pure" if pure else "c", float(kernel_s))))
             for pid, (docs, errs, chars, kernel_s, pure)
             in sorted(counters.value.items())
         ]
-        # an Arrow table plans as a LocalTableScan: the few lineage rows
-        # reach the JVM from the driver, with no Python task, and one
-        # partition writes one file per chunk
-        lineage = (
-            local_frame(spark, lineage_rows, _LINEAGE_SCHEMA)
-            .coalesce(1)
-            .withColumns(
-                {
-                    "run_id": F.lit(run_id),
-                    "chunk_id": F.lit(chunk_id),
-                    "committed_at": F.current_timestamp(),
-                }
-            )
-        )
-        # committed like the data: a chunk re-run after a crash between
-        # here and the manifest commit replaces its lineage, never adds to it
-        self.catalog.overwrite_partition(
-            lineage, self.lineage_dir, f"chunk={chunk_id}"
-        )
-
+        now = datetime.datetime.now(datetime.timezone.utc)
         return {
             "run_id": run_id,
             "chunk_id": chunk_id,
             "files": chunk_files,
-            "docs_out": sum(r[1] for r in lineage_rows),
-            "parse_errors": sum(r[2] for r in lineage_rows),
+            "docs_out": sum(r["docs_out"] for r in lineage),
+            "parse_errors": sum(r["parse_errors"] for r in lineage),
             "wall_sec": time.monotonic() - t0,
+            "committed_at": now.isoformat(),
+            "lineage": lineage,
         }
 
 
 def read_extracted(spark, sink: str):
-    """Read the extracted corpus, trusting the manifest over the directory
-    listing: a chunk dir the manifest does not name (a crashed chunk, or a
-    stale one written by other means) is not read — globbing chunk=*
-    would return its rows as duplicates. The manifest listing goes through
-    the Hadoop FileSystem API so hdfs://, s3a://, and local sinks all honor
-    it (ADVICE r2)."""
-    fs = _FS(spark, os.path.join(sink, "_manifest"))
-    ids = sorted(f[:-5] for f in fs.list_names() if f.endswith(".json"))
-    paths = [os.path.join(sink, f"chunk={cid}") for cid in ids]
-    if paths:
-        return spark.read.option("basePath", sink).parquet(*paths)
+    """Read the extracted corpus, trusting only the manifest: a chunk dir
+    the manifest does not name (a crashed chunk, or a stale one written by
+    other means) is not read, and a sink with no committed chunk reads as
+    an empty frame of the committed schema. The manifest listing goes
+    through the Hadoop FileSystem API so hdfs://, s3a://, and local sinks
+    all honor it (ADVICE r2)."""
+    ids = sorted(_manifest_entries(spark, sink))
+    if not ids:
+        # the schema a committed sink reads with: partition discovery
+        # types the six-digit chunk id as int
+        return local_frame(spark, [], T.StructType.fromDDL(
+            OUTPUT_SCHEMA_DDL + ", part_id int, chunk int"))
     return spark.read.option("basePath", sink).parquet(
-        os.path.join(sink, "chunk=*")
-    )
+        *(os.path.join(sink, f"chunk={cid}") for cid in ids))
+
+
+def read_lineage(spark, sink: str):
+    """The committed lineage, one row per task partition per chunk, built
+    on the driver from the manifest entries: a ``LocalTableScan`` that
+    runs no Spark job to build."""
+    rows = [
+        tuple(r[k] for k in _LINEAGE_COUNTERS) + (
+            e["run_id"], cid, datetime.datetime.fromisoformat(e["committed_at"]))
+        for cid, e in sorted(_manifest_entries(spark, sink).items())
+        for r in e["lineage"]
+    ]
+    return local_frame(spark, rows, _LINEAGE_SCHEMA)

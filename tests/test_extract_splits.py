@@ -1,25 +1,26 @@
 """Extraction on the scan's splits, over the page set of
 :mod:`tests.page_set` (no external inputs): the plan has no exchange, the
-output does not depend on how the input is partitioned, and the job reads
-each url exactly once, with exact lineage, across a resume, a crash before
-the manifest commit, a re-run with coarser chunks and files that land
-after a run."""
+output does not depend on how the input is partitioned, and the job commits
+each chunk with one Spark write and one manifest entry that carries its
+lineage, and reads each url exactly once, with exact lineage, across a
+resume, a crash before the manifest commit, a re-run with coarser chunks and
+files that land after a run."""
 
 import hashlib
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from go_boilerpipe_spark.kernel.document import KERNEL_PATH
 from go_boilerpipe_spark.operators.extract import extract_articles
-from go_boilerpipe_spark.operators.util import local_frame
 from go_boilerpipe_spark.plans.extract_job import (
-    _LINEAGE_SCHEMA,
     ExtractJob,
     read_extracted,
+    read_lineage,
 )
-from go_boilerpipe_spark.sources.catalog import ParquetCatalog
 from go_boilerpipe_spark.spark_session import build_session
 from tests.page_set import page_rows, write_page_set, write_pages
 
@@ -54,7 +55,18 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_no_exchange_in_extraction_plans(spark, pages, tmp_path):
+def _record_writes(monkeypatch, record):
+    """Call ``record(writer, path)`` on every ``DataFrameWriter.parquet``."""
+    write = DataFrameWriter.parquet
+
+    def recording(writer, path, *args, **kwargs):
+        record(writer, path)
+        return write(writer, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+
+
+def test_no_exchange_in_extraction_plans(spark, pages, tmp_path, monkeypatch):
     src, _ = pages
     plan = _plan(extract_articles(spark.read.parquet(src)))
     assert "MapInArrow" in plan and "Exchange" not in plan, plan
@@ -62,15 +74,9 @@ def test_no_exchange_in_extraction_plans(spark, pages, tmp_path):
     sink = str(tmp_path / "sink")
     job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
     written = []
-    commit = job.catalog.overwrite_partition
-
-    def capture(df, table, partition):
-        if table == sink:
-            written.append(_plan(df))
-        commit(df, table, partition)
-
-    job.catalog.overwrite_partition = capture
+    _record_writes(monkeypatch, lambda w, _path: written.append(_plan(w._df)))
     job.run()
+    monkeypatch.undo()
     assert len(written) == 1
     assert "MapInArrow" in written[0], written[0]
     assert "Exchange" not in written[0], written[0]
@@ -92,7 +98,7 @@ def _assert_lineage_exact(spark, sink, n):
     assert out.count() == n
     n_err = out.filter(F.col("parse_error").isNotNull()).count()
     n_chars = out.select(F.sum(F.length("content"))).collect()[0][0] or 0
-    lin = spark.read.parquet(os.path.join(sink, "_lineage")).collect()
+    lin = read_lineage(spark, sink).collect()
     assert sum(r["docs_out"] for r in lin) == n
     assert sum(r["parse_errors"] for r in lin) == n_err
     assert sum(r["content_chars"] for r in lin) == n_chars
@@ -155,47 +161,30 @@ _LINEAGE_ON_DISK = (
 )
 
 
-class _RecordingCatalog(ParquetCatalog):
-    """ParquetCatalog that keeps the frames written to ``_lineage``."""
-
-    def __init__(self, spark):
-        super().__init__(spark)
-        self.lineage = []
-
-    def overwrite_partition(self, df, table, partition):
-        if os.path.basename(table) == "_lineage":
-            self.lineage.append(df)
-        super().overwrite_partition(df, table, partition)
-
-
-def _lineage_chunk(spark, sink, chunk_id):
-    path = os.path.join(sink, "_lineage", f"chunk={chunk_id}")
-    files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    return spark.read.parquet(path), files
-
-
-def test_lineage_local_scan_one_file_per_chunk(spark, pages, tmp_path):
-    # the lineage rows are built on the driver: writing them must start no
-    # Python task, and a chunk's few rows land in one file
+def test_one_write_per_chunk_lineage_in_manifest(spark, pages, tmp_path,
+                                                 monkeypatch):
+    # a chunk's only Spark write is its data: the lineage rows ride in its
+    # manifest entry, and read_lineage builds their frame on the driver
     src, n = pages
     sink = str(tmp_path / "sink")
     sizes = [os.path.getsize(os.path.join(src, f)) for f in os.listdir(src)]
-    catalog = _RecordingCatalog(spark)
     # two files a chunk, and the scan gives each file its own task
-    job = ExtractJob(spark, src, sink, chunk_target_bytes=2 * min(sizes),
-                     catalog=catalog)
+    job = ExtractJob(spark, src, sink, chunk_target_bytes=2 * min(sizes))
+    writes = []
+    _record_writes(monkeypatch, lambda _w, path: writes.append(path))
     s = job.run()
+    monkeypatch.undo()
     assert s["chunks_total"] >= 2 and s["docs_out"] == n
-    assert len(catalog.lineage) == s["chunks_total"]
-    for df in catalog.lineage:
-        plan = _plan(df)
-        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert len(writes) == s["chunks_total"], writes
 
     for i in range(s["chunks_total"]):
-        lin, files = _lineage_chunk(spark, sink, f"{i:06d}")
-        assert lin.schema.simpleString() == _LINEAGE_ON_DISK
-        assert lin.count() > 1  # several tasks, still one file
-        assert len(files) == 1, files
+        with open(os.path.join(sink, "_manifest", f"{i:06d}.json")) as f:
+            assert len(json.load(f)["lineage"]) > 1  # several tasks
+    lin = read_lineage(spark, sink)
+    plan = _plan(lin)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert lin.schema.simpleString() == _LINEAGE_ON_DISK
+    assert not os.path.exists(os.path.join(sink, "_lineage"))
     _assert_lineage_exact(spark, sink, n)
 
 
@@ -216,24 +205,55 @@ def test_all_null_html_chunk(spark, tmp_path):
     assert s1["docs_out"] == len(rows)
     assert sorted(os.listdir(os.path.join(sink, "_manifest"))) == [
         "000000.json", "000001.json"]
-    lin, _ = _lineage_chunk(spark, sink, "000001")
+    lin = read_lineage(spark, sink)
     assert lin.schema.simpleString() == _LINEAGE_ON_DISK
     # the kernel task still runs on the filtered-out split: a zero row
-    assert [r["docs_out"] for r in lin.collect()] == [0]
+    assert [r["docs_out"] for r in
+            lin.filter(F.col("chunk_id") == "000001").collect()] == [0]
     assert read_extracted(spark, sink).count() == len(rows)
 
     s2 = job.run()
     assert s2["chunks_skipped"] == 2 and s2["chunks_done"] == 0
 
 
-def test_empty_lineage_frame_round_trips(spark, tmp_path):
-    # a chunk with no task counters writes a lineage frame of zero rows; the
-    # Arrow table built from empty columns must keep the schema on disk
-    path = str(tmp_path / "lineage")
-    local_frame(spark, [], _LINEAGE_SCHEMA).coalesce(1).write.parquet(path)
-    back = spark.read.parquet(path)
-    assert back.schema.simpleString() == _LINEAGE_SCHEMA.simpleString()
-    assert back.count() == 0
+def test_empty_sink_lineage_frame(spark, tmp_path):
+    # a sink with no committed chunk has no lineage rows; the Arrow table
+    # built from empty columns keeps the pinned schema
+    lin = read_lineage(spark, str(tmp_path / "sink"))
+    assert lin.schema.simpleString() == _LINEAGE_ON_DISK
+    assert lin.count() == 0
+
+
+def test_uncommitted_sink_reads_empty(spark, tmp_path):
+    # only the manifest commits rows: a sink that does not exist, and one
+    # whose first chunk crashed before its manifest commit, read as empty
+    # frames of the schema a committed sink reads with
+    src = str(tmp_path / "pages")
+    sink = str(tmp_path / "sink")
+    n = len(write_page_set(src, 2))
+    missing = read_extracted(spark, sink)
+    assert missing.count() == 0
+
+    job = ExtractJob(spark, src, sink, chunk_target_bytes=1 << 40)
+    commit = job._commit_chunk
+
+    def crash(entry):
+        raise RuntimeError("crash before manifest commit")
+
+    job._commit_chunk = crash
+    with pytest.raises(RuntimeError):
+        job.run()
+    assert os.path.isdir(os.path.join(sink, "chunk=000000"))
+    crashed = read_extracted(spark, sink)
+    assert crashed.count() == 0
+    assert read_lineage(spark, sink).count() == 0
+
+    job._commit_chunk = commit
+    assert job.run()["chunks_done"] == 1
+    committed = read_extracted(spark, sink)
+    assert committed.count() == n
+    for empty in (missing, crashed):
+        assert empty.schema.simpleString() == committed.schema.simpleString()
 
 
 def _assert_each_url_once(spark, sink, urls):
@@ -244,8 +264,8 @@ def _assert_each_url_once(spark, sink, urls):
 @pytest.mark.parametrize("crash_last", [False, True])
 def test_coarser_rerun_drops_stale_chunks(spark, pages, tmp_path, crash_last):
     # a re-run whose plan has fewer chunks must drop the chunk ids it no
-    # longer has: their manifest entries, data and lineage — also the dirs
-    # of a chunk that crashed before its manifest commit
+    # longer has: their manifest entries (and the lineage they carry) and
+    # data — also the dir of a chunk that crashed before its manifest commit
     src, n = pages
     sink = str(tmp_path / "sink")
     fine = ExtractJob(spark, src, sink, chunk_target_bytes=1)
@@ -268,9 +288,11 @@ def test_coarser_rerun_drops_stale_chunks(spark, pages, tmp_path, crash_last):
     _assert_each_url_once(
         spark, sink, [u for u, h in page_rows() if h is not None])
     assert os.listdir(os.path.join(sink, "_manifest")) == ["000000.json"]
-    for table in (sink, os.path.join(sink, "_lineage")):
-        assert [d for d in os.listdir(table) if d.startswith("chunk=")] == [
-            "chunk=000000"]
+    assert [d for d in os.listdir(sink) if d.startswith("chunk=")] == [
+        "chunk=000000"]
+    assert not os.path.exists(os.path.join(sink, "_lineage"))
+    assert {r["chunk_id"] for r in read_lineage(spark, sink).collect()} == {
+        "000000"}
     _assert_lineage_exact(spark, sink, n)
 
 

@@ -7,7 +7,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from go_boilerpipe_spark.plans.extract_job import ExtractJob, read_extracted
+from go_boilerpipe_spark.plans.extract_job import (
+    ExtractJob,
+    read_extracted,
+    read_lineage,
+)
 from go_boilerpipe_spark.spark_session import build_session
 from tests.page_set import write_page_set
 
@@ -115,10 +119,10 @@ class TestManifestEdges:
             F.sum(F.length("content")).alias("c")
         ).collect()[0]["c"] or 0
 
-        lin = spark.read.parquet(os.path.join(sink, "_lineage")).collect()
+        lin = read_lineage(spark, sink).collect()
         assert sum(r["docs_out"] for r in lin) == n_out
         assert sum(r["parse_errors"] for r in lin) == n_err
         assert sum(r["content_chars"] for r in lin) == n_chars
-        # one lineage row per extraction-task partition, keyed by part id
-        assert len({(r["part_id"]) for r in lin}) == len(lin)
+        # one lineage row per extraction-task partition per chunk
+        assert len({(r["chunk_id"], r["part_id"]) for r in lin}) == len(lin)
 

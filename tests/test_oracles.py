@@ -67,3 +67,15 @@ def test_arrow_kernel_queries_match_duckdb_oracles(spark, standin):
         if not ok:
             failures[name] = detail
     assert not failures, failures
+
+
+def test_driver_lists_plan_as_local_scans(spark, standin):
+    # the ann_recall methods grid and the url_rules table are built on the
+    # driver: they reach the JVM as a LocalTableScan, not a Python RDD scan
+    import __spark_entry__ as entry
+
+    queries = entry.queries()
+    for name in ("ann_recall", "url_rules"):
+        df = queries[name](spark, standin)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -2,7 +2,6 @@
 training-data operators, on a shared local session."""
 
 import hashlib
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,13 +9,18 @@ from pyspark.sql import functions as F
 from go_boilerpipe_spark.operators import dedup, similarity
 from go_boilerpipe_spark.operators.extract import extract_articles
 from go_boilerpipe_spark.operators.multimodal import decode_media
-from go_boilerpipe_spark.plans.extract_job import ExtractJob, read_extracted
+from go_boilerpipe_spark.plans.extract_job import (
+    ExtractJob,
+    read_extracted,
+    read_lineage,
+)
 from go_boilerpipe_spark.sources.pages import (
     golden_df,
     synthesize_pages,
     write_pages_table,
 )
 from go_boilerpipe_spark.spark_session import build_session
+from tests.page_set import write_page_set
 
 
 def _rows_digest(rows):
@@ -203,22 +207,24 @@ class TestExtractLinks:
 
 
 class TestExtractJob:
-    def test_run_and_resume(self, spark, corpus, tmp_path):
+    def test_run_and_resume(self, spark, tmp_path):
+        src = str(tmp_path / "pages")
         sink = str(tmp_path / "sink")
-        job = ExtractJob(spark, corpus, sink, chunk_target_bytes=1 << 19)
+        n = len(write_page_set(src, 3))
+        job = ExtractJob(spark, src, sink, chunk_target_bytes=1)
         stats = job.run()
         assert stats["chunks_done"] >= 2
         assert stats["parse_errors"] == 0
         res = read_extracted(spark, sink)
-        assert res.count() == 136
+        assert res.count() == n
         # resume: nothing to redo
         stats2 = job.run()
         assert stats2["chunks_done"] == 0
         assert stats2["chunks_skipped"] == stats["chunks_total"]
-        # lineage written per partition per chunk
-        lineage = spark.read.parquet(os.path.join(sink, "_lineage"))
+        # lineage committed per partition per chunk
+        lineage = read_lineage(spark, sink)
         assert lineage.count() > 0
-        assert lineage.agg(F.sum("docs_out")).collect()[0][0] == 136
+        assert lineage.agg(F.sum("docs_out")).collect()[0][0] == n
 
 
 class TestDedup:
