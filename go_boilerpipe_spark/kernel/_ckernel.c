@@ -426,7 +426,7 @@ static int convert_newlines(const u32 *s, Py_ssize_t n, Buf *out)
 
 typedef struct {
     u32 *text;
-    Py_ssize_t text_len;
+    Py_ssize_t text_len, text_cap; /* text_cap: u32 slots allocated */
     long num_words, num_linked_words, nwiwl, nwl;
     long off_start, off_end;
     int tag_level;
@@ -442,22 +442,28 @@ static void cblock_free(CBlock *b)
     }
 }
 
-/* textblock.py:73-87 merge_next */
+/* textblock.py:73-87 merge_next. Appends b's text to a's in place; a's
+ * buffer doubles as it grows, so a run of k merges copies O(total) text,
+ * not O(k * total). On failure a is unchanged. */
 static int cblock_merge_next(CBlock *a, CBlock *b)
 {
-    u32 *nt = (u32 *)PyMem_Malloc(
-        (size_t)(a->text_len + 1 + b->text_len) * sizeof(u32));
-    if (!nt) {
-        PyErr_NoMemory();
-        return -1;
+    Py_ssize_t need = a->text_len + 1 + b->text_len;
+    if (need > a->text_cap) {
+        Py_ssize_t nc = a->text_cap * 2;
+        if (nc < need)
+            nc = need;
+        u32 *nt = (u32 *)PyMem_Realloc(a->text, (size_t)nc * sizeof(u32));
+        if (!nt) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        a->text = nt;
+        a->text_cap = nc;
     }
-    memcpy(nt, a->text, (size_t)a->text_len * sizeof(u32));
-    nt[a->text_len] = '\n';
-    memcpy(nt + a->text_len + 1, b->text,
+    a->text[a->text_len] = '\n';
+    memcpy(a->text + a->text_len + 1, b->text,
            (size_t)b->text_len * sizeof(u32));
-    PyMem_Free(a->text);
-    a->text = nt;
-    a->text_len = a->text_len + 1 + b->text_len;
+    a->text_len = need;
     if (b->off_start < a->off_start)
         a->off_start = b->off_start;
     if (b->off_end > a->off_end)
@@ -869,7 +875,7 @@ static int flush_block(Handler *h)
             PyErr_NoMemory();
             return -1;
         }
-        cb->text_len = xb - xa;
+        cb->text_len = cb->text_cap = xb - xa;
         cb->text = (u32 *)PyMem_Malloc(
             (size_t)(cb->text_len ? cb->text_len : 1) * sizeof(u32));
         if (!cb->text) {
@@ -2403,7 +2409,8 @@ static void f_trailing_headline(Handler *h)
     }
 }
 
-/* filters.py:287-332 F6/F8 block_proximity_fusion */
+/* filters.py:287-332 F6/F8 block_proximity_fusion. One pass compacts the
+ * array: blocks [0, w) are kept, a merged block is freed and not kept. */
 static int f_block_proximity_fusion(Handler *h, long max_dist,
                                     int content_only, int same_level_only)
 {
@@ -2426,38 +2433,35 @@ static int f_block_proximity_fusion(Handler *h, long max_dist,
         start_block = 1;
     }
 
-    Py_ssize_t i = start_block;
-    while (i < h->nblocks) {
+    Py_ssize_t w = start_block;
+    for (Py_ssize_t i = start_block; i < h->nblocks; i++) {
         CBlock *tb = h->blocks[i];
-        if (!tb->is_content) {
-            prev_block = tb;
-            i++;
-            continue;
-        }
-        /* Go-port quirk: the current block's own offsets (filter.go:362) */
-        long diff = tb->off_start - tb->off_end - 1;
-        if (diff <= max_dist) {
-            int merge = 1;
-            if (content_only && (!prev_block->is_content || !tb->is_content))
+        if (tb->is_content) {
+            /* Go-port quirk: the current block's own offsets
+             * (filter.go:362) */
+            long diff = tb->off_start - tb->off_end - 1;
+            int merge = diff <= max_dist;
+            if (content_only && !prev_block->is_content)
                 merge = 0;
             if (merge && same_level_only &&
                 prev_block->tag_level != tb->tag_level)
                 merge = 0;
             if (merge) {
-                if (cblock_merge_next(prev_block, tb) < 0)
+                if (cblock_merge_next(prev_block, tb) < 0) {
+                    /* keep the unvisited tail owned by the array */
+                    memmove(h->blocks + w, h->blocks + i,
+                            (size_t)(h->nblocks - i) * sizeof(CBlock *));
+                    h->nblocks = w + (h->nblocks - i);
                     return -1;
+                }
                 cblock_free(tb);
-                memmove(h->blocks + i, h->blocks + i + 1,
-                        (size_t)(h->nblocks - i - 1) * sizeof(CBlock *));
-                h->nblocks--;
                 continue;
             }
-            prev_block = tb;
-        } else {
-            prev_block = tb;
         }
-        i++;
+        prev_block = tb;
+        h->blocks[w++] = tb;
     }
+    h->nblocks = w;
     return 0;
 }
 
@@ -3063,7 +3067,7 @@ static int blocks_from_py(Handler *h, PyObject *blocks)
             return -1;
         }
         memset(cb, 0, sizeof(CBlock));
-        cb->text_len = PyUnicode_GET_LENGTH(text);
+        cb->text_len = cb->text_cap = PyUnicode_GET_LENGTH(text);
         cb->text = (u32 *)PyUnicode_AsUCS4Copy(text);
         if (!cb->text) {
             PyMem_Free(cb);

@@ -10,6 +10,13 @@ North-rule requirements implemented here (BASELINE.json):
   plan is scan → null/lang filter → ``mapInArrow`` kernel → sink, with
   no exchange: a url hash would balance row counts rather than bytes and
   push the whole html column through shuffle storage;
+- one Spark job per chunk: the read schema of the columns the job uses
+  (url, html, and lang when filtering by language) comes from the pending
+  files' parquet footers, read on the driver before the sink changes
+  (:func:`_read_schema`), so no schema-inference job runs before each
+  chunk's write. A file that lacks one of those columns or stores it with
+  another type raises ``ValueError`` naming it, instead of reading as null
+  html that the filter silently drops;
 - checkpoint-resumable incremental commits: each chunk is extracted and
   committed independently (sink subdir ``chunk=<id>`` + a manifest
   entry). A re-run skips committed chunks, overwrites partial ones and
@@ -39,8 +46,11 @@ import os
 import time
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from ..operators.extract import (
     OUTPUT_SCHEMA_DDL,
@@ -150,6 +160,33 @@ def _manifest_entries(spark, sink: str) -> dict:
     return {e["chunk_id"]: e for e in entries}
 
 
+def _read_schema(files, columns):
+    """The Spark read schema of ``columns``, from the parquet footers of
+    ``files`` read on the driver, so no schema-inference Spark job runs.
+    Every file must store every column with one Spark type: a file that
+    lacks one, or whose type differs from the first file's, raises
+    ``ValueError`` naming its path (Spark would read a missing column as
+    null and drop its rows at the html filter)."""
+    first = None
+    for path in files:
+        arrow = pq.read_schema(path)
+        missing = [c for c in columns if arrow.get_field_index(c) < 0]
+        if missing:
+            raise ValueError(f"{path}: no column {', '.join(missing)}")
+        schema = T.StructType()
+        for c in columns:
+            t = arrow.field(c).type
+            # Spark reads a dictionary-encoded column as its values
+            schema.add(c, from_arrow_type(
+                t.value_type if pa.types.is_dictionary(t) else t))
+        if first is None:
+            first = path, schema
+        elif schema != first[1]:
+            raise ValueError(f"{path}: read schema {schema.simpleString()}, "
+                             f"but {first[0]} has {first[1].simpleString()}")
+    return first[1]
+
+
 def plan_chunks(files, target_bytes: int):
     """Greedy size-balanced file groups, deterministic for a fixed listing."""
     chunks, cur, cur_bytes = [], [], 0
@@ -210,18 +247,25 @@ class ExtractJob:
         files = list_input_files(self.spark, self.source)
         chunks = plan_chunks(files, self.chunk_target_bytes)
         done = self._completed_chunks()
+        t_all = time.monotonic()
+        pending = []
+        for idx, chunk_files in enumerate(chunks):
+            chunk_id = f"{idx:06d}"
+            if chunk_id not in done or done[chunk_id]["files"] != chunk_files:
+                pending.append((chunk_id, chunk_files))
+        # every pending file is checked before the sink changes
+        schema = _read_schema(
+            [f for _, chunk_files in pending for f in chunk_files],
+            ("url", "html", "lang") if self.langs else ("url", "html"),
+        ) if pending else None
         self._drop_stale_chunks(done, {f"{i:06d}" for i in range(len(chunks))})
 
         stats = {"run_id": run_id, "chunks_total": len(chunks),
-                 "chunks_skipped": 0, "chunks_done": 0,
-                 "docs_out": 0, "parse_errors": 0, "wall_sec": 0.0}
-        t_all = time.monotonic()
-        for idx, chunk_files in enumerate(chunks):
-            chunk_id = f"{idx:06d}"
-            if chunk_id in done and done[chunk_id]["files"] == chunk_files:
-                stats["chunks_skipped"] += 1
-                continue
-            entry = self._run_chunk(run_id, chunk_id, chunk_files)
+                 "chunks_skipped": len(chunks) - len(pending),
+                 "chunks_done": 0, "docs_out": 0, "parse_errors": 0,
+                 "wall_sec": 0.0}
+        for chunk_id, chunk_files in pending:
+            entry = self._run_chunk(run_id, chunk_id, chunk_files, schema)
             self._commit_chunk(entry)
             stats["chunks_done"] += 1
             stats["docs_out"] += entry["docs_out"]
@@ -229,11 +273,12 @@ class ExtractJob:
         stats["wall_sec"] = time.monotonic() - t_all
         return stats
 
-    def _run_chunk(self, run_id: str, chunk_id: str, chunk_files) -> dict:
+    def _run_chunk(self, run_id: str, chunk_id: str, chunk_files,
+                   schema) -> dict:
         spark = self.spark
         t0 = time.monotonic()
 
-        df = spark.read.parquet(*chunk_files)
+        df = spark.read.schema(schema).parquet(*chunk_files)
         # predicate + column pruning reach the scan (ReadSchema: url, html)
         df = df.filter(F.col("html").isNotNull())
         if self.langs:

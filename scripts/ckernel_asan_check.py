@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """AddressSanitizer pass over the C kernel.
 
-Builds an ASan-instrumented variant of _ckernel.c, then runs the golden
-corpus, a 3000-case quirk-heavy fuzz, and adversarial inputs (deep
+Builds an ASan-instrumented variant of _ckernel.c, then runs the job
+tests' page set (tests/page_set.py), long merge-run pages of 2,000 and
+8,000 blocks, a 3000-case quirk-heavy fuzz, and adversarial inputs (deep
 nesting, 5000-attribute tags, 100-digit charrefs) through it. Any heap
 overflow / use-after-free aborts the process.
 
@@ -59,11 +60,27 @@ def main():
 
     ck.init_tables(_build_config())
 
-    for i in range(7):
-        html = open(f"/root/reference/testdata/{i}.html", "rb").read().decode(
-            "utf-8", "surrogateescape")
+    from tests.adversarial_inputs import long_run_pages
+    from tests.page_set import page_rows
+
+    pages = [h.decode("utf-8", "surrogateescape")
+             for _, h in page_rows() if h is not None]
+    for html in pages:
         ck.extract(html)
         ck.parse(html)
+
+    # long merge runs: the merged text grows in place and the block array
+    # is compacted in one pass; the ld+json page re-runs the filters on
+    # rebuilt raw blocks, whose text buffers start exactly full
+    long_runs = list(long_run_pages().values())
+    long_runs.append(long_run_pages(8000)["paragraphs"])
+    for html in long_runs:
+        ck.extract(html)
+        ck.extract(html, "Override Title")
+        ck.extract_content(html)
+        title, blocks, ld_json, dts, filtered = ck.parse(html)
+        ck.filter_blocks(blocks, title)
+        ck.filter_blocks_content(blocks, "Harbor notes today")
 
     rng = random.Random(555)
     pieces = [
@@ -107,7 +124,8 @@ def main():
         ck.filter_blocks(blocks, title)
         ck.filter_blocks(blocks, "Override Title")
         ck.filter_blocks_content(blocks, title)
-    print(f"ASAN: goldens + 3000 fuzz + adversarial inputs + "
+    print(f"ASAN: {len(pages)} page-set pages + {len(long_runs)} long-run "
+          f"pages + 3000 fuzz + adversarial inputs + "
           f"{len(cases)} parity-corpus cases (x2 filter_blocks each) clean")
 
 

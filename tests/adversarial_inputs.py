@@ -80,3 +80,40 @@ def full_pipeline_fuzz_cases(n: int = 400, seed: int = FULL_PIPELINE_FUZZ_SEED):
                 parts.append(rng.choice(tags))
         out.append("".join(parts))
     return out
+
+
+_RUN_WORDS = (
+    "the council voted on a plan to rebuild the harbor bridge after years "
+    "of delay while residents asked how the city would pay for"
+).split()
+
+
+def long_run_pages(n_items: int = 2000, seed: int = 11) -> dict[str, str]:
+    """Pages of ``n_items`` same-level content blocks that the proximity
+    fusion filters merge into one long run, shared by the parity gate and
+    the ASan run: a ``<p>`` run, a ``<ul><li>`` list, a ``<table>``, and
+    the ``<p>`` run with an ld+json headline, whose filters re-run on the
+    rebuilt raw blocks (``filter_blocks_content``)."""
+    rng = random.Random(seed)
+
+    def sentence():
+        n = rng.randint(18, 30)
+        return " ".join(rng.choice(_RUN_WORDS) for _ in range(n)) + "."
+
+    def page(body, head=""):
+        return ("<html><head><title>Harbor notes</title>" + head
+                + "</head><body><h1>Harbor notes</h1>" + body
+                + "</body></html>")
+
+    paras = "".join(f"<p>{sentence()}</p>" for _ in range(n_items))
+    ld = ('<script type="application/ld+json">'
+          '{"@type":"Article","headline":"Harbor notes today"}</script>')
+    return {
+        "paragraphs": page(paras),
+        "list": page("<ul>" + "".join(
+            f"<li>{sentence()}</li>" for _ in range(n_items)) + "</ul>"),
+        "table": page("<table>" + "".join(
+            f"<tr><td>{sentence()}</td></tr>" for _ in range(n_items))
+            + "</table>"),
+        "ldjson_paragraphs": page(paras, ld),
+    }

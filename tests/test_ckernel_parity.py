@@ -3,8 +3,9 @@
 The C extension must be byte-identical to the pure-Python kernel — which
 is the executable spec — on titles, block streams (all counters, offsets,
 tag levels, labels), ld+json capture, time attributes, and rendered
-content. Runs the golden corpus through BOTH paths plus targeted quirk
-inputs and a seeded tag-soup fuzz differential.
+content. Runs the golden corpus (when the reference inputs exist), the
+job tests' page set and long merge-run pages through BOTH paths, plus
+targeted quirk inputs and a seeded tag-soup fuzz differential.
 
 The 12k-doc corpus differential runs in scripts/ckernel_corpus_diff.py
 (invoked by bench verification), not here.
@@ -253,15 +254,24 @@ def _doc_fingerprint(d):
     )
 
 
+def _page_docs():
+    """The html of the job tests' page set (articles and adversarial
+    classes) plus the long merge-run pages."""
+    from tests.adversarial_inputs import long_run_pages
+    from tests.page_set import page_rows
+
+    docs = [h.decode("utf-8", "surrogateescape")
+            for _, h in page_rows() if h is not None]
+    return docs + list(long_run_pages().values())
+
+
 def test_full_pipeline_content_identical():
     # the C extract() path (parse + 12 filters in C for no-ld+json docs,
     # Python pipeline otherwise) must match the pure pipeline exactly —
     # content bytes, titles, dates, per-block flags and labels
     from go_boilerpipe_spark.kernel.document import extract_article
 
-    docs = [open(f"/root/reference/testdata/{i}.html", "rb").read().decode(
-        "utf-8", "surrogateescape") for i in range(7)]
-    for html in docs + QUIRKS:
+    for html in _page_docs() + QUIRKS:
         d_c = extract_article(html)
         d_p = _pure_extract(html)
         assert _doc_fingerprint(d_c) == _doc_fingerprint(d_p), html[:60]
@@ -343,7 +353,7 @@ def _pure_content_tuple(html):
 def test_extract_content_identical():
     # the Spark hot-path entry (C-side Content() rendering, no TextBlock
     # materialization) must equal extract_article + .content() on every
-    # golden, quirk, title-quirk (incl. ld+json override), fuzz, and
+    # page-set, long-run, quirk, title-quirk (incl. ld+json override), fuzz, and
     # adversarial case
     from tests.adversarial_inputs import (
         adversarial_classes,
@@ -352,13 +362,51 @@ def test_extract_content_identical():
 
     from go_boilerpipe_spark.kernel.document import extract_content
 
-    docs = [open(f"/root/reference/testdata/{i}.html", "rb").read().decode(
-        "utf-8", "surrogateescape") for i in range(7)]
-    cases = docs + QUIRKS + TITLE_QUIRKS + full_pipeline_fuzz_cases(400)
+    cases = _page_docs() + QUIRKS + TITLE_QUIRKS + full_pipeline_fuzz_cases(400)
     for cls in adversarial_classes().values():
         cases.extend(cls)
     for html in cases:
         assert extract_content(html) == _pure_content_tuple(html), html[:80]
+
+
+def _long_run_params():
+    from tests.adversarial_inputs import long_run_pages
+
+    return [pytest.param(html, id=name)
+            for name, html in long_run_pages().items()]
+
+
+@pytest.mark.parametrize("html", _long_run_params())
+def test_long_merge_runs_identical(html):
+    # ~2,000 same-level content blocks fuse into one: the C kernel grows
+    # the merged text in place and compacts the block array in one pass,
+    # and must still equal the pure pipeline block for block and byte for
+    # byte (the ld+json page re-runs the filters on rebuilt raw blocks)
+    from go_boilerpipe_spark.kernel.document import (
+        extract_article,
+        extract_content,
+    )
+
+    d_c = extract_article(html)
+    assert len(d_c.text_blocks) < 10  # the run did merge
+    assert _doc_fingerprint(d_c) == _doc_fingerprint(_pure_extract(html))
+    assert extract_content(html) == _pure_content_tuple(html)
+
+
+def test_long_paragraph_run_is_linear():
+    # merging a run of k blocks must copy O(total text), not O(k * total):
+    # a quadratic merge spends seconds on these 8,000 paragraphs (1.07 MB)
+    import time
+
+    from tests.adversarial_inputs import long_run_pages
+
+    from go_boilerpipe_spark.kernel.document import extract_content
+
+    html = long_run_pages(8000)["paragraphs"]
+    t0 = time.perf_counter()
+    n_blocks = extract_content(html)[4]
+    assert time.perf_counter() - t0 < 1.0
+    assert n_blocks == 1
 
 
 @pytest.mark.parametrize("html", _adversarial_params())

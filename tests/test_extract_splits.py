@@ -10,6 +10,8 @@ import hashlib
 import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
@@ -338,3 +340,52 @@ def test_files_landing_after_a_run(spark, tmp_path):
     assert s3["chunks_total"] == 7
     _assert_each_url_once(spark, sink, written)
     _assert_lineage_exact(spark, sink, len(written))
+
+
+def test_one_spark_job_per_chunk(spark, tmp_path):
+    # the read schema comes from the files' footers on the driver: no
+    # schema-inference job runs before each chunk's write
+    src = str(tmp_path / "pages")
+    write_page_set(src, 3)
+    job = ExtractJob(spark, src, str(tmp_path / "sink"), chunk_target_bytes=1)
+    sc = spark.sparkContext
+    sc.setJobGroup("one-job-per-chunk", "ExtractJob.run")
+    try:
+        s = job.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert s["chunks_done"] == 3
+    assert len(sc.statusTracker().getJobIdsForGroup("one-job-per-chunk")) == 3
+
+
+def _drift_html_name(table):
+    return table.rename_columns(
+        ["raw_html" if c == "html" else c for c in table.column_names])
+
+
+def _drift_html_type(table):
+    html = [None if h is None else h.decode("utf-8", "replace")
+            for h in table.column("html").to_pylist()]
+    return table.set_column(table.schema.get_field_index("html"), "html",
+                            pa.array(html, pa.string()))
+
+
+@pytest.mark.parametrize("drift", [_drift_html_name, _drift_html_type],
+                         ids=["renamed", "retyped"])
+@pytest.mark.parametrize("chunk_bytes", [1 << 30, 1], ids=["one", "three"])
+def test_drifted_schema_raises_before_any_chunk(spark, tmp_path, drift,
+                                                chunk_bytes):
+    # Spark reads a file without the html column as null html, which the
+    # filter drops when it shares a chunk with good files, and fails only
+    # after the earlier chunks committed when it has a chunk of its own;
+    # html stored as string beside binary files is drift too. Each raises,
+    # naming the file, before the sink changes.
+    src = tmp_path / "pages"
+    write_page_set(str(src), 2)
+    pq.write_table(drift(pq.read_table(src / "part-00001.parquet")),
+                   src / "part-00002.parquet")
+    sink = tmp_path / "sink"
+    job = ExtractJob(spark, str(src), str(sink), chunk_target_bytes=chunk_bytes)
+    with pytest.raises(ValueError, match="part-00002.parquet"):
+        job.run()
+    assert not list(sink.glob("_manifest/*.json"))
