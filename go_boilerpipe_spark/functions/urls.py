@@ -36,22 +36,6 @@ def with_default_scheme(url: Column) -> Column:
     )
 
 
-def clean_rooted_path(path: Column) -> Column:
-    """Go ``path.Clean`` for rooted URL paths (normurl.go:71-122), as a
-    Catalyst fold: split on "/", fold segments into a string accumulator —
-    empty/"." segments are skipped, ".." pops the last component (a pop at
-    the root is a no-op, the rooted semantics). The leading "" segment of a
-    rooted path makes the zero-value seed exact."""
-    folded = F.aggregate(
-        F.split(path, "/"),
-        F.lit(""),
-        lambda acc, s: F.when((s == "") | (s == "."), acc)
-        .when(s == "..", F.regexp_replace(acc, "/[^/]*$", ""))
-        .otherwise(F.concat(acc, F.lit("/"), s)),
-    )
-    return F.when(folded == "", F.lit("/")).otherwise(folded)
-
-
 def go_path_clean(path: Column) -> Column:
     """Full Go ``path.Clean`` as a Catalyst fold — BOTH rooted and
     relative semantics (relative paths KEEP leading ".." runs; a pop at

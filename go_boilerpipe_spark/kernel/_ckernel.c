@@ -19,12 +19,24 @@
  * the Python path's encode("utf-8","surrogateescape") arithmetic.
  *
  * Exposed:
- *   init_tables(cfg: dict)      -- must be called once before parse()
- *   parse(s: str) -> (title, blocks, ld_json, datetimes)
- *       blocks: list[(text, num_words, num_linked_words,
- *                     num_words_in_wrapped_lines, num_wrapped_lines,
- *                     offset, tag_level, labels_tuple)]
- *   unescape(s: str, attribute: bool=False) -> str   (for differentials)
+ *   init_tables(cfg: dict)      -- must be called once before the others
+ *   parse(html) -> (title, blocks, ld_json, datetimes)   raw, unfiltered
+ *   extract(html, resolve) -> (title, blocks, datetimes, merged)
+ *   extract_content(html, resolve)
+ *       -> (title, content, n_blocks, n_content, datetimes, merged)
+ *   blocks: list[(text, num_words, num_linked_words,
+ *                 num_words_in_wrapped_lines, num_wrapped_lines,
+ *                 offset_start, offset_end, tag_level, is_content,
+ *                 ((label, count), ...))]
+ *
+ * extract/extract_content run the 12-filter Article pipeline in C.  The
+ * title F2 matches is the ld+json headline when the page has one, and
+ * only Python merges ld+json, so on a page with ld+json (and only there)
+ * the kernel calls resolve(title, ld_json) -> (filter_title: str, merged)
+ * once, between parsing and filtering, and returns merged unchanged as
+ * the last item (None when resolve was not called).  An exception from
+ * resolve, or a result other than a (str, object) tuple, propagates
+ * (TypeError for the latter) after the document's state is freed.
  */
 
 #define PY_SSIZE_T_CLEAN
@@ -185,21 +197,6 @@ static TagEnt *tag_slot(const char *s, int n)
             return e;
         idx = (idx + 1) & (TAG_HASH_SIZE - 1);
     }
-}
-
-/* lookup from a UCS4 slice; names are ASCII — any char >127 => unknown */
-static TagEnt *tag_lookup_u32(const u32 *s, Py_ssize_t n)
-{
-    char tmp[32];
-    if (n <= 0 || n > 31)
-        return NULL;
-    for (Py_ssize_t i = 0; i < n; i++) {
-        if (s[i] > 127)
-            return NULL;
-        tmp[i] = (char)s[i];
-    }
-    TagEnt *e = tag_slot(tmp, (int)n);
-    return e->name ? e : NULL;
 }
 
 static int tag_insert(const char *s, Py_ssize_t n)
@@ -2928,17 +2925,20 @@ static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
     return res;
 }
 
-/* shared parse driver; run_filters: 0 = raw blocks, 1 = run the Article
- * pipeline in C when there is no ld+json (the ld+json headline can
- * override the title F2 uses, so those documents return raw blocks and
- * the caller runs the Python pipeline after the merge).
- * Returns (title, blocks, ld_json, datetimes, filtered: bool); with
- * render=1 returns the extract_content shape
- * (title, blocks|None, content|None, n_blocks, n_content, ld_json,
- *  datetimes, filtered) — content rendered in C when filtered, raw
- * blocks returned for the Python ld+json merge otherwise. */
-static PyObject *parse_impl_ex(PyObject *html, int run_filters,
-                               PyObject *title_override, int render)
+enum { MODE_PARSE, MODE_BLOCKS, MODE_CONTENT };
+
+/* The one per-document driver.  MODE_PARSE returns the raw blocks:
+ *   (title, blocks, ld_json, datetimes)
+ * MODE_BLOCKS and MODE_CONTENT also run the Article pipeline.  On a page
+ * with ld+json the merged headline decides what F2 matches
+ * (boilerpipe.go:47-73), so the driver calls
+ * resolve(title, ld_json) -> (filter_title: str, merged) once, between
+ * parsing and filtering, and filters with filter_title; merged is handed
+ * back unchanged as the last item, None when resolve was not called:
+ *   MODE_BLOCKS:  (title, blocks, datetimes, merged)
+ *   MODE_CONTENT: (title, content, n_blocks, n_content, datetimes, merged)
+ * title is the raw <title> text ('' when absent). */
+static PyObject *run_document(PyObject *html, int mode, PyObject *resolve)
 {
     if (!g_ready) {
         PyErr_SetString(PyExc_RuntimeError, "init_tables() not called");
@@ -2966,217 +2966,65 @@ static PyObject *parse_impl_ex(PyObject *html, int run_filters,
     if (rc == 0)
         rc = flush_block(&h);
 
-    int filtered = 0;
-    if (rc == 0 && run_filters &&
-        (title_override != NULL || PyList_GET_SIZE(h.ld_json) == 0)) {
-        /* title_override: the ld+json-merged title from the second call
-         * on documents whose first extract() returned filtered=False */
-        PyObject *tsrc = title_override ? title_override : h.title;
-        Py_UCS4 *tb = NULL;
-        Py_ssize_t tn = 0;
-        if (tsrc) {
-            tn = PyUnicode_GET_LENGTH(tsrc);
-            tb = PyUnicode_AsUCS4Copy(tsrc);
-            if (!tb)
-                rc = -1;
-        }
-        if (rc == 0) {
-            rc = run_article_pipeline(&h, (const u32 *)tb, tn);
-            filtered = (rc == 0);
-        }
-        PyMem_Free(tb);
-    }
-
-    PyObject *result = NULL;
-    if (rc == 0 && !render) {
-        PyObject *blocks = blocks_to_py(&h);
-        if (blocks) {
-            PyObject *title = h.title ? h.title : PyUnicode_New(0, 0);
-            if (h.title)
-                Py_INCREF(h.title);
-            result = Py_BuildValue("(NNOON)", title, blocks, h.ld_json,
-                                   h.datetimes, PyBool_FromLong(filtered));
-        }
-    } else if (rc == 0) {
-        PyObject *blocks = NULL, *content = NULL;
-        long nb = 0, nc = 0;
-        if (filtered) {
-            content = render_content(&h, &nb, &nc);
-            if (content) {
-                blocks = Py_None;
-                Py_INCREF(Py_None);
-            }
-        } else {
-            /* ld+json doc: raw blocks for the Python merge +
-             * filter_blocks_content second pass */
-            blocks = blocks_to_py(&h);
-            if (blocks) {
-                content = Py_None;
-                Py_INCREF(Py_None);
-            }
-        }
-        if (blocks && content) {
-            PyObject *title = h.title ? h.title : PyUnicode_New(0, 0);
-            if (h.title)
-                Py_INCREF(h.title);
-            result = Py_BuildValue("(NNNllOON)", title, blocks, content,
-                                   nb, nc, h.ld_json, h.datetimes,
-                                   PyBool_FromLong(filtered));
-        } else {
-            Py_XDECREF(blocks);
-            Py_XDECREF(content);
-        }
-    }
-    h_free(&h);
-    parser_free(&p);
-    PyMem_Free(buf);
-    return result;
-}
-
-static PyObject *parse_impl(PyObject *html, int run_filters,
-                            PyObject *title_override)
-{
-    return parse_impl_ex(html, run_filters, title_override, 0);
-}
-
-/* inverse of blocks_to_py: rebuild the CBlock array from the tuples a
- * previous extract()/parse() call returned, so the Article pipeline can
- * re-run WITHOUT re-parsing the document (the ld+json title-override
- * path: ~6% of real crawls carry ld+json whose merged headline must be
- * known before f_title_match; boilerpipe.go:124-148). */
-static int blocks_from_py(Handler *h, PyObject *blocks)
-{
-    PyObject *seq = PySequence_Fast(blocks, "blocks must be a sequence");
-    if (!seq)
-        return -1;
-    Py_ssize_t n = PySequence_Fast_GET_SIZE(seq);
-    for (Py_ssize_t i = 0; i < n; i++) {
-        PyObject *blk = PySequence_Fast_GET_ITEM(seq, i);
-        PyObject *text, *labels, *is_content;
-        long nw, nlw, nwiwl, nwl, o1, o2, tag_level;
-        if (!PyArg_ParseTuple(blk, "UlllllllOO!", &text, &nw, &nlw,
-                              &nwiwl, &nwl, &o1, &o2, &tag_level,
-                              &is_content, &PyTuple_Type, &labels)) {
-            Py_DECREF(seq);
-            return -1;
-        }
-        CBlock *cb = (CBlock *)PyMem_Malloc(sizeof(CBlock));
-        if (!cb) {
-            Py_DECREF(seq);
-            PyErr_NoMemory();
-            return -1;
-        }
-        memset(cb, 0, sizeof(CBlock));
-        cb->text_len = cb->text_cap = PyUnicode_GET_LENGTH(text);
-        cb->text = (u32 *)PyUnicode_AsUCS4Copy(text);
-        if (!cb->text) {
-            PyMem_Free(cb);
-            Py_DECREF(seq);
-            return -1;
-        }
-        cb->num_words = nw;
-        cb->num_linked_words = nlw;
-        cb->nwiwl = nwiwl;
-        cb->nwl = nwl;
-        cb->off_start = o1;
-        cb->off_end = o2;
-        cb->tag_level = (int)tag_level;
-        cb->is_content = PyObject_IsTrue(is_content);
-        Py_ssize_t np = PyTuple_GET_SIZE(labels);
-        for (Py_ssize_t j = 0; j < np; j++) {
-            PyObject *pair = PyTuple_GET_ITEM(labels, j);
-            long t, cnt;
-            if (!PyArg_ParseTuple(pair, "ll", &t, &cnt)) {
-                cblock_free(cb);
-                Py_DECREF(seq);
-                return -1;
-            }
-            if (t >= 0 && t < N_LABELS)
-                cb->labels[t] = cnt;
-        }
-        if (h->nblocks >= h->cap_blocks) {
-            Py_ssize_t nc = h->cap_blocks ? h->cap_blocks * 2 : 64;
-            CBlock **npb = (CBlock **)PyMem_Realloc(
-                h->blocks, (size_t)nc * sizeof(CBlock *));
-            if (!npb) {
-                cblock_free(cb);
-                Py_DECREF(seq);
-                PyErr_NoMemory();
-                return -1;
-            }
-            h->blocks = npb;
-            h->cap_blocks = nc;
-        }
-        h->blocks[h->nblocks++] = cb;
-    }
-    Py_DECREF(seq);
-    return 0;
-}
-
-/* filter_blocks(blocks, title) -> blocks: Article pipeline over
- * pre-parsed raw blocks — no tokenizer re-entry. With render=1 returns
- * (content, n_blocks, n_content) instead of the block tuples. */
-static PyObject *filter_blocks_impl(PyObject *args, int render)
-{
-    PyObject *blocks, *title = NULL;
-    if (!PyArg_ParseTuple(args, "O|O", &blocks, &title))
-        return NULL;
-    if (title == Py_None)
-        title = NULL;
-    if (title && !PyUnicode_Check(title)) {
-        PyErr_SetString(PyExc_TypeError, "title override must be str");
-        return NULL;
-    }
-    if (!g_ready) {
-        PyErr_SetString(PyExc_RuntimeError, "init_tables() not called");
-        return NULL;
-    }
-    Handler h;
-    if (h_init(&h) < 0) {
-        h_free(&h);
-        return NULL;
-    }
-    int rc = blocks_from_py(&h, blocks);
-    Py_UCS4 *tb = NULL;
-    Py_ssize_t tn = 0;
-    if (rc == 0 && title) {
-        tn = PyUnicode_GET_LENGTH(title);
-        tb = PyUnicode_AsUCS4Copy(title);
-        if (!tb)
+    PyObject *title = NULL, *merged = Py_None;
+    Py_INCREF(Py_None);
+    if (rc == 0) {
+        title = h.title ? h.title : PyUnicode_New(0, 0);
+        if (h.title)
+            Py_INCREF(h.title);
+        if (!title)
             rc = -1;
     }
-    if (rc == 0)
-        rc = run_article_pipeline(&h, (const u32 *)tb, tn);
-    PyMem_Free(tb);
+    if (rc == 0 && mode != MODE_PARSE) {
+        PyObject *filter_title = title, *res = NULL;
+        if (PyList_GET_SIZE(h.ld_json) > 0) {
+            res = PyObject_CallFunctionObjArgs(resolve, title, h.ld_json,
+                                               NULL);
+            if (!res) {
+                rc = -1;
+            } else if (!PyTuple_Check(res) || PyTuple_GET_SIZE(res) != 2 ||
+                       !PyUnicode_Check(PyTuple_GET_ITEM(res, 0))) {
+                PyErr_SetString(PyExc_TypeError,
+                                "resolve must return (str, object)");
+                rc = -1;
+            } else {
+                filter_title = PyTuple_GET_ITEM(res, 0);
+                Py_DECREF(merged);
+                merged = PyTuple_GET_ITEM(res, 1);
+                Py_INCREF(merged);
+            }
+        }
+        if (rc == 0) {
+            Py_ssize_t tn = PyUnicode_GET_LENGTH(filter_title);
+            Py_UCS4 *tb = PyUnicode_AsUCS4Copy(filter_title);
+            rc = tb ? run_article_pipeline(&h, (const u32 *)tb, tn) : -1;
+            PyMem_Free(tb);
+        }
+        Py_XDECREF(res);
+    }
+
     PyObject *result = NULL;
-    if (rc == 0 && !render) {
-        result = blocks_to_py(&h);
+    if (rc == 0 && mode != MODE_CONTENT) {
+        PyObject *blocks = blocks_to_py(&h);
+        if (blocks && mode == MODE_PARSE)
+            result = Py_BuildValue("(ONOO)", title, blocks, h.ld_json,
+                                   h.datetimes);
+        else if (blocks)
+            result = Py_BuildValue("(ONOO)", title, blocks, h.datetimes,
+                                   merged);
     } else if (rc == 0) {
         long nb = 0, nc = 0;
         PyObject *content = render_content(&h, &nb, &nc);
         if (content)
-            result = Py_BuildValue("(Nll)", content, nb, nc);
+            result = Py_BuildValue("(ONllOO)", title, content, nb, nc,
+                                   h.datetimes, merged);
     }
+    Py_XDECREF(title);
+    Py_DECREF(merged);
     h_free(&h);
+    parser_free(&p);
+    PyMem_Free(buf);
     return result;
-}
-
-static PyObject *py_filter_blocks(PyObject *self, PyObject *args)
-{
-    return filter_blocks_impl(args, 0);
-}
-
-static PyObject *py_filter_blocks_content(PyObject *self, PyObject *args)
-{
-    return filter_blocks_impl(args, 1);
-}
-
-static PyObject *py_extract_content(PyObject *self, PyObject *args)
-{
-    PyObject *html;
-    if (!PyArg_ParseTuple(args, "U", &html))
-        return NULL;
-    return parse_impl_ex(html, 1, NULL, 1);
 }
 
 static PyObject *py_parse(PyObject *self, PyObject *args)
@@ -3184,66 +3032,38 @@ static PyObject *py_parse(PyObject *self, PyObject *args)
     PyObject *html;
     if (!PyArg_ParseTuple(args, "U", &html))
         return NULL;
-    return parse_impl(html, 0, NULL);
+    return run_document(html, MODE_PARSE, NULL);
 }
 
 static PyObject *py_extract(PyObject *self, PyObject *args)
 {
-    PyObject *html, *override = NULL;
-    if (!PyArg_ParseTuple(args, "U|O", &html, &override))
+    PyObject *html, *resolve;
+    if (!PyArg_ParseTuple(args, "UO", &html, &resolve))
         return NULL;
-    if (override == Py_None)
-        override = NULL;
-    if (override && !PyUnicode_Check(override)) {
-        PyErr_SetString(PyExc_TypeError, "title override must be str");
-        return NULL;
-    }
-    return parse_impl(html, 1, override);
+    return run_document(html, MODE_BLOCKS, resolve);
 }
 
-static PyObject *py_unescape(PyObject *self, PyObject *args)
+static PyObject *py_extract_content(PyObject *self, PyObject *args)
 {
-    PyObject *txt;
-    int attribute = 0;
-    if (!PyArg_ParseTuple(args, "U|p", &txt, &attribute))
+    PyObject *html, *resolve;
+    if (!PyArg_ParseTuple(args, "UO", &html, &resolve))
         return NULL;
-    if (!g_ready) {
-        PyErr_SetString(PyExc_RuntimeError, "init_tables() not called");
-        return NULL;
-    }
-    Py_ssize_t n = PyUnicode_GET_LENGTH(txt);
-    Py_UCS4 *buf = PyUnicode_AsUCS4Copy(txt);
-    if (!buf)
-        return NULL;
-    Buf out = {0};
-    PyObject *res = NULL;
-    if (go_unescape_u32((const u32 *)buf, n, attribute, &out) == 0)
-        res = str_from_u32(out.p, out.len);
-    buf_free(&out);
-    PyMem_Free(buf);
-    return res;
+    return run_document(html, MODE_CONTENT, resolve);
 }
 
 static PyMethodDef ckernel_methods[] = {
     {"init_tables", py_init_tables, METH_VARARGS,
      "Install the shared kernel tables (idempotent)."},
     {"parse", py_parse, METH_VARARGS,
-     "parse(html) -> (title, raw_blocks, ld_json, datetimes, False)"},
-    {"filter_blocks", py_filter_blocks, METH_VARARGS,
-     "filter_blocks(blocks, title) -> blocks — run the Article pipeline "
-     "on pre-parsed raw blocks (ld+json title-override path; no re-parse)"},
-    {"filter_blocks_content", py_filter_blocks_content, METH_VARARGS,
-     "filter_blocks_content(blocks, title) -> (content, n_blocks, "
-     "n_content) — filter_blocks + C-side Content() rendering"},
-    {"extract_content", py_extract_content, METH_VARARGS,
-     "extract_content(html) -> (title, blocks|None, content|None, "
-     "n_blocks, n_content, ld_json, datetimes, filtered) — Spark hot "
-     "path: full pipeline + C-side Content() rendering, no block tuples"},
+     "parse(html) -> (title, raw_blocks, ld_json, datetimes)"},
     {"extract", py_extract, METH_VARARGS,
-     "extract(html) -> (title, blocks, ld_json, datetimes, filtered) — "
-     "runs the Article pipeline in C when no ld+json is present"},
-    {"unescape", py_unescape, METH_VARARGS,
-     "unescape(s, attribute=False) -> str (escape.go semantics)"},
+     "extract(html, resolve) -> (title, blocks, datetimes, merged) -- "
+     "parse + Article pipeline; resolve(title, ld_json) -> "
+     "(filter_title, merged) is called once on pages with ld+json"},
+    {"extract_content", py_extract_content, METH_VARARGS,
+     "extract_content(html, resolve) -> (title, content, n_blocks, "
+     "n_content, datetimes, merged) -- extract + C-side Content() "
+     "rendering, no block tuples"},
     {NULL, NULL, 0, NULL},
 };
 

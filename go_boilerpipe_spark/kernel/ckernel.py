@@ -3,7 +3,11 @@
 The C extension is an optional accelerator: byte-identical to the pure
 Python kernel (gated by tests/test_ckernel_parity.py — golden 7/7 through
 both paths plus corpus and fuzz differentials), so any mix of C and pure
-workers produces the same output.
+workers produces the same output. It exports ``init_tables``, ``parse``,
+``extract`` and ``extract_content``; the last two take a resolver that
+they call once on a page with ld+json, for the merged headline the
+filters match (``document._resolve_title``; the contract is in the
+``_ckernel.c`` header).
 
 Load order:
 1. ``GO_BP_SPARK_PURE=1`` in the environment disables the C path outright.

@@ -4,6 +4,12 @@ Ports ParseDocument (boilerpipe.go:34-74), Content/Text rendering
 (boilerpipe.go:76-106) and the parse event loop (boilerpipe.go:108-158),
 including the Go-specific HTML escape variant (&#39;/&#34;, not Python
 ``html.escape``'s &#x27;/&quot;).
+
+With the C kernel loaded, a document is one C call: parse, the 12
+filters and (for :func:`extract_content`) the Content() render. The
+ld+json merge stays in Python; on a page with ld+json the kernel calls
+:func:`_resolve_title` once between parsing and filtering. Without a
+compiler the pure modules run the same steps.
 """
 
 from __future__ import annotations
@@ -116,18 +122,42 @@ def parse_to_handler(html: str) -> ContentHandler:
     return h
 
 
-def _finish_document(title, text_blocks, ld_json, h_time) -> Document:
-    """Shared ParseDocument tail (boilerpipe.go:47-73): ld+json merge with
-    encoding/json partial-application semantics, then field precedence."""
-    doc = Document()
-    art = doc.linked_data
+def _merge_ld_json(ld_json) -> LinkedDataArticle:
+    """The ld+json merge of ParseDocument (boilerpipe.go:47-73), with
+    encoding/json partial-application semantics: merge each script body
+    in order, stopping after the first one that parses as an Article."""
+    art = LinkedDataArticle()
     for s in ld_json:
-        ok = merge_linked_data(art, s)
-        if not ok:
-            continue
-        if art.type == "Article":
+        if merge_linked_data(art, s) and art.type == "Article":
             break
+    return art
 
+
+def _resolve_title(title, ld_json):
+    """The C kernel's callback on a page with ld+json, made once between
+    parsing and filtering: returns the title F2 matches (the merged
+    headline, else the <title>) and the merged article, which the kernel
+    hands back unchanged."""
+    art = _merge_ld_json(ld_json)
+    return art.headline or title, art
+
+
+def _last_valid_time(datetimes):
+    """content_handler.go:103-113 applies each VALID <time datetime> in
+    order, so the last valid one wins."""
+    h_time = None
+    for v in datetimes:
+        t = parse_rfc3339(v)
+        if t is not None:
+            h_time = t
+    return h_time
+
+
+def _finish_document(title, text_blocks, art, h_time) -> Document:
+    """Shared ParseDocument tail (boilerpipe.go:47-73): field precedence
+    between the merged ld+json article and the page's own fields."""
+    doc = Document()
+    doc.linked_data = art
     doc.title = art.headline if art.headline else title
     doc.author = art.author_name
     doc.date = art.date_published if art.date_published is not None else h_time
@@ -135,15 +165,9 @@ def _finish_document(title, text_blocks, ld_json, h_time) -> Document:
     return doc
 
 
-def _assemble_c(title, blocks, ld_json, datetimes) -> Document:
-    """Build a Document from C-side results. rfc3339 parsing and the
-    ld+json merge stay in Python (content_handler.go:103-113 applies each
-    VALID datetime in order, so the last valid one wins)."""
-    h_time = None
-    for v in datetimes:
-        t = parse_rfc3339(v)
-        if t is not None:
-            h_time = t
+def _assemble_c(title, blocks, art, datetimes) -> Document:
+    """Build a Document from C-side results; rfc3339 parsing and the
+    ld+json merge stay in Python."""
     tbs = []
     for (text, nw, nlw, nwiwl, nwl, o1, o2, tag_level, is_content,
          label_pairs) in blocks:
@@ -160,51 +184,42 @@ def _assemble_c(title, blocks, ld_json, datetimes) -> Document:
         if label_pairs:
             tb.label_map = dict(label_pairs)
         tbs.append(tb)
-    return _finish_document(title, tbs, ld_json, h_time)
+    return _finish_document(title, tbs, art, _last_valid_time(datetimes))
 
 
-def _parse_document_c(html: str) -> Document:
-    """Compiled-kernel parse (no filters): byte-identical to the pure
-    path (gated by tests/test_ckernel_parity.py)."""
-    title, blocks, ld_json, datetimes, _ = _CK.parse(html)
-    return _assemble_c(title, blocks, ld_json, datetimes)
+def _decode(html):
+    if isinstance(html, (bytes, bytearray, memoryview)):
+        return bytes(html).decode("utf-8", errors="surrogateescape")
+    return html
 
 
 def parse_document(html) -> Document:
-    """ParseDocument — boilerpipe.go:34-74. Accepts str or (UTF-8) bytes."""
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode("utf-8", errors="surrogateescape")
+    """ParseDocument — boilerpipe.go:34-74. Accepts str or (UTF-8) bytes.
+    The C kernel's raw parse is byte-identical to the pure path (gated by
+    tests/test_ckernel_parity.py)."""
+    html = _decode(html)
     if _CK is not None:
-        return _parse_document_c(html)
+        title, blocks, ld_json, datetimes = _CK.parse(html)
+        return _assemble_c(title, blocks, _merge_ld_json(ld_json), datetimes)
     h = parse_to_handler(html)
     h.flush_block()
-    return _finish_document(h.title, h.text_blocks, h.ld_json, h.time)
+    return _finish_document(h.title, h.text_blocks,
+                            _merge_ld_json(h.ld_json), h.time)
 
 
 def extract_article(html) -> Document:
     """Parse + run the Article pipeline; returns the processed Document.
 
-    Fast path: the C kernel runs the whole pipeline (parse + 12 filters)
-    in one call for documents WITHOUT ld+json. Documents WITH ld+json
-    need the merged headline before F2 can match, so their raw blocks
-    from the first call are re-filtered in C with the final title as an
-    override (filter_blocks: no second parse — VERDICT r3 item 4). Both
-    pipelines are byte-parity gated, so the mix is invisible in output."""
+    The C kernel runs parse and the 12 filters in one call. On a page with
+    ld+json it calls :func:`_resolve_title` once before the filters, so F2
+    matches the merged headline; the pure pipeline is the reference and
+    the two are byte-parity gated."""
     if _CK is not None:
-        if isinstance(html, (bytes, bytearray, memoryview)):
-            html = bytes(html).decode("utf-8", errors="surrogateescape")
-        title, blocks, ld_json, datetimes, filtered = _CK.extract(html)
-        if not filtered:
+        title, blocks, datetimes, art = _CK.extract(
+            _decode(html), _resolve_title)
+        if art is None:  # no ld+json: the kernel made no Python call
             art = LinkedDataArticle()
-            for s in ld_json:
-                ok = merge_linked_data(art, s)
-                if not ok:
-                    continue
-                if art.type == "Article":
-                    break
-            final_title = art.headline if art.headline else title
-            blocks = _CK.filter_blocks(blocks, final_title)
-        return _assemble_c(title, blocks, ld_json, datetimes)
+        return _assemble_c(title, blocks, art, datetimes)
     doc = parse_document(html)
     article_pipeline(doc)
     return doc
@@ -215,9 +230,9 @@ def extract_content(html):
     ``(title, author, date, content, n_blocks, n_content)`` without
     materializing TextBlock objects — the C kernel renders Content()
     (Text(true,false) + Go EscapeString, boilerpipe.go:76-106) straight
-    from its block array. Byte-identical to
-    ``extract_article(html)`` + ``.content()`` (parity-gated by
-    tests/test_ckernel_parity.py and the 12k corpus differential)."""
+    from its block array in the same call that parses and filters.
+    Byte-identical to ``extract_article(html)`` + ``.content()``
+    (parity-gated by tests/test_ckernel_parity.py)."""
     if _CK is None:
         doc = extract_article(html)
         return (
@@ -225,33 +240,14 @@ def extract_content(html):
             len(doc.text_blocks),
             sum(1 for tb in doc.text_blocks if tb.is_content),
         )
-    if isinstance(html, (bytes, bytearray, memoryview)):
-        html = bytes(html).decode("utf-8", errors="surrogateescape")
-    (title, blocks, content, n_blocks, n_content,
-     ld_json, datetimes, filtered) = _CK.extract_content(html)
-    h_time = None
-    for v in datetimes:
-        t = parse_rfc3339(v)
-        if t is not None:
-            h_time = t
-    if not ld_json:  # common case: no ld+json, everything came from C
+    (title, content, n_blocks, n_content,
+     datetimes, art) = _CK.extract_content(_decode(html), _resolve_title)
+    h_time = _last_valid_time(datetimes)
+    if art is None:  # common case: no ld+json, no Python call was made
         return title, "", h_time, content, n_blocks, n_content
-    art = LinkedDataArticle()
-    for s in ld_json:
-        ok = merge_linked_data(art, s)
-        if not ok:
-            continue
-        if art.type == "Article":
-            break
-    final_title = art.headline if art.headline else title
-    if not filtered:
-        content, n_blocks, n_content = _CK.filter_blocks_content(
-            blocks, final_title
-        )
     date = art.date_published if art.date_published is not None else h_time
-    if art.body:
-        content = art.body
-    return final_title, art.author_name, date, content, n_blocks, n_content
+    return (art.headline or title, art.author_name, date,
+            art.body or content, n_blocks, n_content)
 
 
 def extract_debug(html):

@@ -296,31 +296,29 @@ def minhash_lsh_pairs_capped(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket_size: int = 64,
-    pre_dedup: bool = True,
 ) -> DataFrame:
     """Web-scale-hardened LSH candidate pairs (VERDICT r1 item 2):
 
-    1. ``pre_dedup``: exact-dedup FIRST, banding only the keeper of each
-       exact-duplicate cluster — a cluster of m byte-identical docs (viral
-       pages dominate crawls) contributes ONE representative instead of
-       O(m²) pairs in every band bucket;
+    1. exact-dedup FIRST, banding only the keeper of each exact-duplicate
+       cluster — a cluster of m byte-identical docs (viral pages dominate
+       crawls) contributes ONE representative instead of O(m²) pairs in
+       every band bucket;
     2. ``max_bucket_size``: residual oversized buckets (template farms,
        boilerplate-only docs) are excluded from the self-join; audit the
        exclusions with :func:`lsh_dropped_buckets`.
     """
-    if pre_dedup:
-        # keeper filter inline on the window result — one shuffle on the
-        # text hash, NO join back (the old exact_dedup + join-on-id plan
-        # paid a second exchange for the same answer)
-        from pyspark.sql import Window
+    # keeper filter inline on the window result — one shuffle on the
+    # text hash, NO join back (the old exact_dedup + join-on-id plan paid
+    # a second exchange for the same answer)
+    from pyspark.sql import Window
 
-        w = Window.partitionBy("_th")
-        df = (
-            df.withColumn("_th", F.md5(F.col(text_col).cast("binary")))
-            .withColumn("_keep", F.min(id_col).over(w))
-            .filter(F.col(id_col) == F.col("_keep"))
-            .drop("_th", "_keep")
-        )
+    w = Window.partitionBy("_th")
+    df = (
+        df.withColumn("_th", F.md5(F.col(text_col).cast("binary")))
+        .withColumn("_keep", F.min(id_col).over(w))
+        .filter(F.col(id_col) == F.col("_keep"))
+        .drop("_th", "_keep")
+    )
     stacked = _lsh_stacked(df, id_col, text_col, num_hashes, bands, shingle_n)
     capped = _cap_buckets(stacked, max_bucket_size)
     # merge hint: same single-kernel exchange-reuse reasoning as
@@ -432,43 +430,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bits: int = 56,
-    bucket_bits: int = 16,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash hamming distance, bucketed by the top
-    ``bucket_bits`` so the self-join is linear in bucket sizes. (A full
-    Hamming-ball guarantee needs multi-table rotation; one-bucket probing
-    is the standard recall/cost tradeoff and is what we verify.)
-    ``max_bucket_size`` drops oversized buckets (duplicate clusters share
-    the whole simhash → the same bucket) before the self-join."""
-    sh = simhash(df, id_col, text_col, bits)
-    bucketed = sh.withColumn(
-        "bucket", F.shiftright(F.col("simhash"), bits - bucket_bits)
-    )
-    if max_bucket_size is not None:
-        bucketed = _cap_buckets(bucketed, max_bucket_size)
-    # merge hint: single-kernel exchange reuse (see minhash_lsh_pairs)
-    a, b = bucketed.alias("a").hint("merge"), bucketed.alias("b").hint("merge")
-    pairs = a.join(
-        b,
-        (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-        F.bit_count(
-            F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-        ).alias("hamming"),
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
-
-
 def _bucket_pair_scorer_factory(id_name: str, vec_name: str,
                                 prefilter: float):
     """Per-bucket pairwise cosine kernel for ``applyInPandas``. Scores all
@@ -555,17 +516,15 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     h: int = 8,
-    max_bucket_size: int | None = None,
     bucket_col: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicates: sign-LSH bucket the vectors (the
     same Rademacher-projection LSH the similarity module uses), score
     within buckets only, keep pairs with cosine ≥ threshold. Near-identical
     vectors share sign patterns, so recall at ≥0.95 cosine is high while
-    the scoring never goes quadratic in the corpus. ``max_bucket_size``
-    caps bucket fan-in (identical embeddings all share one bucket).
-    ``bucket_col`` consumes a stored :func:`similarity.with_lsh_bucket`
-    column (same ``h``) instead of re-deriving the projection.
+    the scoring never goes quadratic in the corpus. ``bucket_col``
+    consumes a stored :func:`similarity.with_lsh_bucket` column (same
+    ``h``) instead of re-deriving the projection.
 
     r6 plan shape (guide §8: move heavy bytes once, decide on proxies):
     the r5 bucket SELF-JOIN materialized every candidate pair with BOTH
@@ -588,8 +547,6 @@ def embedding_near_dup_pairs(
     b = emb.select(
         F.col(id_col), F.col(vec_col), bucket_expr.alias("bucket")
     )
-    if max_bucket_size is not None:
-        b = _cap_buckets(b, max_bucket_size)
     id_type = emb.schema[id_col].dataType
     out_schema = T.StructType(
         [

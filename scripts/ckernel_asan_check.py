@@ -4,8 +4,10 @@
 Builds an ASan-instrumented variant of _ckernel.c, then runs the job
 tests' page set (tests/page_set.py), long merge-run pages of 2,000 and
 8,000 blocks, a 3000-case quirk-heavy fuzz, and adversarial inputs (deep
-nesting, 5000-attribute tags, 100-digit charrefs) through it. Any heap
-overflow / use-after-free aborts the process.
+nesting, 5000-attribute tags, 100-digit charrefs) through parse, extract
+and extract_content. Every ld+json page also runs with a raising and a
+wrong-type resolver, the kernel's error exits. Any heap overflow /
+use-after-free aborts the process.
 
 Must run with the ASan runtime preloaded; this script re-execs itself
 with LD_PRELOAD when needed:
@@ -44,8 +46,13 @@ def libasan():
 def main():
     if "ASAN_ACTIVE" not in os.environ:
         build()
+        # PYTHONMALLOC=malloc: PyMem_Malloc's small-object pools would
+        # hide the kernel's blocks and buffers from ASan. GO_BP_SPARK_PURE:
+        # the package must not load the uninstrumented kernel; the
+        # resolver it supplies is plain Python.
         env = dict(os.environ, LD_PRELOAD=libasan(),
-                   ASAN_OPTIONS="detect_leaks=0", ASAN_ACTIVE="1")
+                   ASAN_OPTIONS="detect_leaks=0", ASAN_ACTIVE="1",
+                   PYTHONMALLOC="malloc", GO_BP_SPARK_PURE="1")
         os.execve(sys.executable, [sys.executable, __file__], env)
 
     import importlib.util
@@ -60,27 +67,50 @@ def main():
 
     ck.init_tables(_build_config())
 
+    from go_boilerpipe_spark.kernel.document import _resolve_title
     from tests.adversarial_inputs import long_run_pages
     from tests.page_set import page_rows
+
+    def boom(title, ld_json):
+        raise LookupError("resolver failed")
+
+    def wrong_type(title, ld_json):
+        return [title, None]
+
+    n_ld = 0
+
+    def run(html):
+        """parse, then extract and extract_content with the real
+        resolver; on an ld+json page also with a raising and a
+        wrong-type resolver, whose errors must free the document."""
+        nonlocal n_ld
+        ld_json = ck.parse(html)[2]
+        ck.extract(html, _resolve_title)
+        ck.extract_content(html, _resolve_title)
+        if not ld_json:
+            return
+        n_ld += 1
+        for entry in (ck.extract, ck.extract_content):
+            for resolve, exc in ((boom, LookupError),
+                                 (wrong_type, TypeError)):
+                try:
+                    entry(html, resolve)
+                except exc:
+                    pass
+                else:
+                    raise AssertionError(f"{resolve.__name__} did not raise")
 
     pages = [h.decode("utf-8", "surrogateescape")
              for _, h in page_rows() if h is not None]
     for html in pages:
-        ck.extract(html)
-        ck.parse(html)
+        run(html)
 
     # long merge runs: the merged text grows in place and the block array
-    # is compacted in one pass; the ld+json page re-runs the filters on
-    # rebuilt raw blocks, whose text buffers start exactly full
+    # is compacted in one pass, also after an ld+json headline is resolved
     long_runs = list(long_run_pages().values())
     long_runs.append(long_run_pages(8000)["paragraphs"])
     for html in long_runs:
-        ck.extract(html)
-        ck.extract(html, "Override Title")
-        ck.extract_content(html)
-        title, blocks, ld_json, dts, filtered = ck.parse(html)
-        ck.filter_blocks(blocks, title)
-        ck.filter_blocks_content(blocks, "Harbor notes today")
+        run(html)
 
     rng = random.Random(555)
     pieces = [
@@ -92,20 +122,17 @@ def main():
         "<xmp>", "<iframe>", "<li>", "</li>",
     ]
     for _ in range(3000):
-        s = "".join(rng.choice(pieces) for _ in range(rng.randint(0, 40)))
-        ck.extract(s)
+        run("".join(rng.choice(pieces) for _ in range(rng.randint(0, 40))))
 
-    ck.extract("<p>" * 20000)
-    ck.extract("a " * 200000)
-    ck.extract("<a " + "x=y " * 5000 + ">t</a>")
-    ck.extract("<title>" + "w " * 50000 + "</title><body><p>x</p></body>")
-    ck.extract("&#" + "9" * 100 + ";")
+    run("<p>" * 20000)
+    run("a " * 200000)
+    run("<a " + "x=y " * 5000 + ">t</a>")
+    run("<title>" + "w " * 50000 + "</title><body><p>x</p></body>")
+    run("&#" + "9" * 100 + ";")
 
-    # VERDICT r3 item 8: the SAME corpora the parity gate pins — the
-    # 400-case full-pipeline differential and the named adversarial
-    # classes — run under the sanitizer in the same session, exercising
-    # extract(), parse(), the title-override path, and filter_blocks()
-    # (raw-block rebuild + filters-only re-entry).
+    # the SAME corpora the parity gate pins: the 400-case full-pipeline
+    # differential (with ld+json headlines, broken and empty ones) and
+    # the named adversarial classes
     from tests.adversarial_inputs import (
         adversarial_classes,
         full_pipeline_fuzz_cases,
@@ -115,18 +142,11 @@ def main():
     for name, cls in adversarial_classes().items():
         cases.extend(cls)
     for s in cases:
-        ck.extract(s)
-        ck.extract(s, "Override Title")
-        ck.extract_content(s)
-        # filter_blocks on EVERY case's raw blocks (parse never filters),
-        # both with and without a title override, both output shapes
-        title, blocks, ld_json, dts, filtered = ck.parse(s)
-        ck.filter_blocks(blocks, title)
-        ck.filter_blocks(blocks, "Override Title")
-        ck.filter_blocks_content(blocks, title)
+        run(s)
     print(f"ASAN: {len(pages)} page-set pages + {len(long_runs)} long-run "
-          f"pages + 3000 fuzz + adversarial inputs + "
-          f"{len(cases)} parity-corpus cases (x2 filter_blocks each) clean")
+          f"pages + 3000 fuzz + adversarial inputs + {len(cases)} "
+          f"parity-corpus cases through parse/extract/extract_content, "
+          f"raising and wrong-type resolvers on {n_ld} ld+json pages: clean")
 
 
 if __name__ == "__main__":

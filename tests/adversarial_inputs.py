@@ -62,9 +62,9 @@ def full_pipeline_fuzz_cases(n: int = 400, seed: int = FULL_PIPELINE_FUZZ_SEED):
             "</h1>", "<li>", "</li>", "<ul>", "</ul>", "<body>", "</body>",
             "<title>", "</title>", "<br>", " | ", " - ", " » ", ".com",
             "Comments", "add comment", "\x08", "\xa0", "'", "?", "!", ".",
-            # ld+json pieces: drive the merged-headline override path
-            # (filter_blocks / filter_blocks_content) through the fuzz,
-            # including broken JSON and an empty headline
+            # ld+json pieces: drive the merged-headline resolver call
+            # through the fuzz, including broken JSON and an empty
+            # headline
             '<script type="application/ld+json">'
             '{"@type":"Article","headline":"Fuzz Headline"}</script>',
             '<script type="application/ld+json">{broken</script>',
@@ -92,8 +92,8 @@ def long_run_pages(n_items: int = 2000, seed: int = 11) -> dict[str, str]:
     """Pages of ``n_items`` same-level content blocks that the proximity
     fusion filters merge into one long run, shared by the parity gate and
     the ASan run: a ``<p>`` run, a ``<ul><li>`` list, a ``<table>``, and
-    the ``<p>`` run with an ld+json headline, whose filters re-run on the
-    rebuilt raw blocks (``filter_blocks_content``)."""
+    the ``<p>`` run with an ld+json headline, which the kernel resolves
+    before it filters."""
     rng = random.Random(seed)
 
     def sentence():

@@ -5,7 +5,9 @@ is the executable spec — on titles, block streams (all counters, offsets,
 tag levels, labels), ld+json capture, time attributes, and rendered
 content. Runs the golden corpus (when the reference inputs exist), the
 job tests' page set and long merge-run pages through BOTH paths, plus
-targeted quirk inputs and a seeded tag-soup fuzz differential.
+targeted quirk inputs and a seeded tag-soup fuzz differential, and pins
+the contract of the resolver that extract/extract_content call on pages
+with ld+json.
 
 The 12k-doc corpus differential runs in scripts/ckernel_corpus_diff.py
 (invoked by bench verification), not here.
@@ -18,6 +20,8 @@ import pytest
 from go_boilerpipe_spark.kernel import ckernel
 from go_boilerpipe_spark.kernel.document import (
     _finish_document,
+    _merge_ld_json,
+    _resolve_title,
     article_pipeline,
     parse_to_handler,
 )
@@ -44,8 +48,7 @@ def pure_state(html):
 
 
 def c_state(html):
-    title, blocks, ld_json, dts, filtered = ck.parse(html)
-    assert filtered is False
+    title, blocks, ld_json, dts = ck.parse(html)
     out = []
     for (text, nw, nlw, nwiwl, nwl, o1, o2, tl, is_content,
          label_pairs) in blocks:
@@ -87,50 +90,6 @@ def test_goldens_bytewise_content_through_c():
         doc = extract_article(html)
         exp = open(f"tests/fixtures/golden/{i}.content.txt", "rb").read()
         assert doc.content().encode() == exp, f"golden {i} byte diff"
-
-
-def test_filter_blocks_equals_override_reparse():
-    # VERDICT r3 item 4: the filters-only re-entry (filter_blocks on the
-    # first call's raw blocks) must equal the old override re-parse path
-    # block-for-block — including on ld+json documents where the merged
-    # headline overrides the title F2 matches against.
-    import json
-
-    from go_boilerpipe_spark.kernel.document import extract_article
-    from go_boilerpipe_spark.kernel.ldjson import (
-        LinkedDataArticle,
-        merge_linked_data,
-    )
-
-    ld = json.dumps({"@type": "Article", "headline": "The Real Headline"})
-    body = "<p>" + " ".join(f"word{i} plain" for i in range(40)) + "</p>"
-    docs = [
-        "<html><head><title>Page | The Real Headline</title>"
-        f'<script type="application/ld+json">{ld}</script></head>'
-        f"<body><h1>The Real Headline</h1>{body}"
-        f"<div><a href=x>nav nav nav</a></div></body></html>",
-        # ld+json present but unparsable → headline stays the <title>
-        '<html><head><title>T</title><script type="application/ld+json">'
-        f"not json</script></head><body>{body}</body></html>",
-        # no ld+json: single-call fast path (filtered=True)
-        f"<html><head><title>T</title></head><body>{body}</body></html>",
-    ]
-    for i, html in enumerate(docs):
-        title, blocks, ld_json, dts, filtered = ck.extract(html)
-        if filtered:
-            continue
-        art = LinkedDataArticle()
-        for s in ld_json:
-            if merge_linked_data(art, s) and art.type == "Article":
-                break
-        ft = art.headline if art.headline else title
-        old = ck.extract(html, ft)
-        assert old[4] is True
-        new_blocks = ck.filter_blocks(blocks, ft)
-        assert new_blocks == old[1], f"doc {i} block diff"
-        # and the public API end-to-end still extracts
-        doc = extract_article(html)
-        assert doc.content() is not None
 
 
 QUIRKS = [
@@ -239,7 +198,8 @@ def test_fuzz_tag_soup_identical():
 def _pure_extract(html):
     h = parse_to_handler(html)
     h.flush_block()
-    d = _finish_document(h.title, h.text_blocks, h.ld_json, h.time)
+    d = _finish_document(h.title, h.text_blocks, _merge_ld_json(h.ld_json),
+                         h.time)
     article_pipeline(d)
     return d
 
@@ -266,8 +226,8 @@ def _page_docs():
 
 
 def test_full_pipeline_content_identical():
-    # the C extract() path (parse + 12 filters in C for no-ld+json docs,
-    # Python pipeline otherwise) must match the pure pipeline exactly —
+    # the C extract() path (parse + 12 filters in one C call, the ld+json
+    # headline resolved in between) must match the pure pipeline exactly —
     # content bytes, titles, dates, per-block flags and labels
     from go_boilerpipe_spark.kernel.document import extract_article
 
@@ -276,6 +236,8 @@ def test_full_pipeline_content_identical():
         d_p = _pure_extract(html)
         assert _doc_fingerprint(d_c) == _doc_fingerprint(d_p), html[:60]
 
+
+_LD_BODY = "<p>" + " ".join(f"word{i} plain" for i in range(40)) + "</p>"
 
 TITLE_QUIRKS = [
     # F2 exercises: separators, .com parts, removals, NBSP, apostrophes,
@@ -297,8 +259,8 @@ TITLE_QUIRKS = [
     "<body><p>%s</p><p>© Reuters All Rights</p><p>RÄTTA ARTIKELN här</p></body>" % ("word " * 30),
     "<body><p>%s</p><a href=x>Comment</a></body>" % ("word " * 30),
     "<body><p>%s</p><p>Thanks for your comments - this feedback is now closed</p></body>" % ("word " * 30),
-    # ld+json override path: the merged headline replaces what F2
-    # matches; these take the second C call with the title override
+    # ld+json: the merged headline replaces what F2 matches; the C kernel
+    # asks the resolver for it between parsing and filtering
     '<script type="application/ld+json">{"@type":"Article","headline":"Merged Headline"}</script>'
     "<title>Original Title</title><body><p>merged headline</p><p>%s</p></body>" % ("word " * 30),
     '<script type="application/ld+json">{"@type":"Article","headline":""}</script>'
@@ -307,6 +269,17 @@ TITLE_QUIRKS = [
     "<title>Broken LD</title><body><p>broken ld</p><p>%s</p></body>" % ("word " * 30),
     '<script type="application/ld+json">{"@type":"NewsArticle","headline":"News H"}</script>'
     "<body><p>news h</p><p>%s</p></body>" % ("word " * 30),
+    # the headline is the <h1> and the second part of the <title>
+    "<html><head><title>Page | The Real Headline</title>"
+    '<script type="application/ld+json">'
+    '{"@type": "Article", "headline": "The Real Headline"}</script></head>'
+    "<body><h1>The Real Headline</h1>%s"
+    "<div><a href=x>nav nav nav</a></div></body></html>" % _LD_BODY,
+    # ld+json present but unparsable: the <title> stays the F2 title
+    '<html><head><title>T</title><script type="application/ld+json">'
+    "not json</script></head><body>%s</body></html>" % _LD_BODY,
+    # no ld+json: the resolver is never called
+    "<html><head><title>T</title></head><body>%s</body></html>" % _LD_BODY,
     # F12 list-at-end / F11 same-level
     "<body><div><p>%s</p></div><ul><li>item one two three</li></ul></body>" % ("word " * 200),
     "<body><p>%s</p><div><p>%s</p></div></body>" % ("word " * 200, "word " * 120),
@@ -353,8 +326,8 @@ def _pure_content_tuple(html):
 def test_extract_content_identical():
     # the Spark hot-path entry (C-side Content() rendering, no TextBlock
     # materialization) must equal extract_article + .content() on every
-    # page-set, long-run, quirk, title-quirk (incl. ld+json override), fuzz, and
-    # adversarial case
+    # page-set, long-run, quirk, title-quirk (incl. ld+json headlines), fuzz,
+    # and adversarial case
     from tests.adversarial_inputs import (
         adversarial_classes,
         full_pipeline_fuzz_cases,
@@ -381,7 +354,7 @@ def test_long_merge_runs_identical(html):
     # ~2,000 same-level content blocks fuse into one: the C kernel grows
     # the merged text in place and compacts the block array in one pass,
     # and must still equal the pure pipeline block for block and byte for
-    # byte (the ld+json page re-runs the filters on rebuilt raw blocks)
+    # byte (the ld+json page resolves its headline before the filters)
     from go_boilerpipe_spark.kernel.document import (
         extract_article,
         extract_content,
@@ -420,6 +393,100 @@ def test_adversarial_classes_identical(html):
     d_c = extract_article(html)
     d_p = _pure_extract(html)
     assert _doc_fingerprint(d_c) == _doc_fingerprint(d_p), html[:80]
+
+
+# The resolver contract: extract/extract_content call
+# resolve(title, ld_json) -> (filter_title, merged) once on a page with
+# ld+json, never on a page without, and hand merged back as the last item.
+
+_LD_PAGE = next(h for h in TITLE_QUIRKS if "Merged Headline" in h)
+_ENTRIES = ("extract", "extract_content")
+
+
+def test_resolve_called_once_per_ld_json_page():
+    from tests.adversarial_inputs import full_pipeline_fuzz_cases
+
+    cases = TITLE_QUIRKS + full_pipeline_fuzz_cases(400)
+    n_ld = 0
+    for html in cases:
+        has_ld = bool(ck.parse(html)[2])
+        n_ld += has_ld
+        for entry in _ENTRIES:
+            calls = []
+
+            def resolve(title, ld_json):
+                calls.append(title)
+                return _resolve_title(title, ld_json)
+
+            merged = getattr(ck, entry)(html, resolve)[-1]
+            assert len(calls) == has_ld, (entry, html[:60])
+            assert (merged is None) == (not has_ld), (entry, html[:60])
+    assert 0 < n_ld < len(cases)
+
+
+@pytest.mark.parametrize("entry", _ENTRIES)
+def test_merged_is_handed_back_unchanged(entry):
+    sentinel = object()
+    assert ck.parse(_LD_PAGE)[2]
+    out = getattr(ck, entry)(_LD_PAGE, lambda title, ld: (title, sentinel))
+    assert out[-1] is sentinel
+
+
+@pytest.mark.parametrize("entry", _ENTRIES)
+def test_raising_resolver_propagates(entry):
+    class Boom(Exception):
+        pass
+
+    def boom(title, ld_json):
+        raise Boom("resolver failed")
+
+    fn = getattr(ck, entry)
+    before = fn(_LD_PAGE, _resolve_title)[:-1]
+    with pytest.raises(Boom, match="resolver failed"):
+        fn(_LD_PAGE, boom)
+    assert fn(_LD_PAGE, _resolve_title)[:-1] == before
+
+
+@pytest.mark.parametrize("entry", _ENTRIES)
+@pytest.mark.parametrize("bad", [
+    None, "title", ["title", None], ("title",), ("title", None, None),
+    (None, None), (b"title", None),
+], ids=["none", "str", "list", "1-tuple", "3-tuple", "none-title",
+        "bytes-title"])
+def test_wrong_type_resolver_raises_type_error(entry, bad):
+    fn = getattr(ck, entry)
+    with pytest.raises(TypeError, match=r"resolve must return \(str, object\)"):
+        fn(_LD_PAGE, lambda title, ld_json: bad)
+    assert fn(_LD_PAGE, _resolve_title)[-1] is not None
+
+
+def test_failed_merge_becomes_parse_error_row(monkeypatch):
+    # a page whose ld+json merge raises is one parse_error row; the
+    # kernel frees its state and the rest of the batch is extracted
+    import pyarrow as pa
+
+    from go_boilerpipe_spark.kernel import document
+    from go_boilerpipe_spark.operators.extract import extract_record_batches
+
+    pages = [TITLE_QUIRKS[0], _LD_PAGE, TITLE_QUIRKS[1]]
+    expected = [document.extract_content(h) for h in pages]
+
+    def boom(ld_json):
+        raise ValueError("merge failed")
+
+    monkeypatch.setattr(document, "_merge_ld_json", boom)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([f"http://x.test/{i}" for i in range(len(pages))]),
+         pa.array([h.encode() for h in pages], pa.binary())],
+        names=["url", "html"],
+    )
+    out = pa.Table.from_batches(list(extract_record_batches(iter([batch]))))
+    errs = out.column("parse_error").to_pylist()
+    assert errs == [None, "ValueError: merge failed", None]
+    contents = out.column("content").to_pylist()
+    assert contents[0] == expected[0][3] and contents[0]
+    assert contents[2] == expected[2][3] and contents[2]
+    assert contents[1] is None
 
 
 def test_extract_from_zip_rejects_planted_so(monkeypatch, tmp_path):

@@ -20,7 +20,7 @@ from go_boilerpipe_spark.sources.pages import (
     write_pages_table,
 )
 from go_boilerpipe_spark.spark_session import build_session
-from tests.page_set import write_page_set
+from tests.page_set import page_rows, write_page_set
 
 
 def _rows_digest(rows):
@@ -44,6 +44,16 @@ def corpus(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("corpus") / "pages")
     write_pages_table(spark, path, 140, skew=True, null_html_every=35)
     return path
+
+
+@pytest.fixture(scope="module")
+def page_set(tmp_path_factory):
+    """The job tests' page set in 4 parquet files: (path, urls with html,
+    urls with null html)."""
+    path = str(tmp_path_factory.mktemp("page_set") / "pages")
+    with_html = write_page_set(path, 4)
+    null_html = [u for u, h in page_rows() if h is None]
+    return path, with_html, null_html
 
 
 def test_skew_mode_urls_stay_unique(spark):
@@ -73,21 +83,26 @@ class TestExtractOperator:
         assert row["ok"] == 1.0
         assert row["tok"] == 1.0
 
-    def test_partitioning_invariance(self, spark, corpus):
-        pages = spark.read.parquet(corpus).filter(F.col("html").isNotNull())
+    def test_partitioning_invariance(self, spark, page_set):
+        path, with_html, _ = page_set
+        pages = spark.read.parquet(path).filter(F.col("html").isNotNull())
         checksum = lambda df: df.agg(  # noqa: E731
             F.sum(
                 F.conv(F.substring(F.md5(F.col("content").cast("binary")), 1, 8), 16, 10)
                 .cast("long")
-            )
-        ).collect()[0][0]
+            ),
+            F.count("*"),
+        ).collect()[0]
         a = checksum(extract_articles(pages.repartition(3)))
         b = checksum(extract_articles(pages.repartition(17)))
         c = checksum(extract_articles(pages))
         assert a == b == c
+        assert c[1] == len(with_html)
 
-    def test_column_pruning_reaches_scan(self, spark, corpus):
-        pages = spark.read.parquet(corpus)
+    def test_column_pruning_reaches_scan(self, spark, page_set):
+        # the page set also stores warc_ts, text and lang
+        pages = spark.read.parquet(page_set[0])
+        assert len(pages.columns) > 2
         plan = extract_articles(pages)._jdf.queryExecution().executedPlan().toString()
         assert "ReadSchema: struct<url:string,html:binary>" in plan
 
@@ -160,11 +175,14 @@ class TestExtractOperator:
                 if r[col] is not None:
                     r[col].encode("utf-8")
 
-    def test_null_html_yields_error_row(self, spark):
-        pages = synthesize_pages(spark, 14, null_html_every=2, partitions=2)
-        out = extract_articles(pages)
-        errs = out.filter(F.col("parse_error").isNotNull()).count()
-        assert errs == 7
+    def test_null_html_yields_error_row(self, spark, page_set):
+        path, with_html, null_html = page_set
+        out = extract_articles(spark.read.parquet(path))
+        errs = out.filter(F.col("parse_error").isNotNull()).collect()
+        assert null_html
+        assert sorted(r["url"] for r in errs) == sorted(null_html)
+        assert {r["parse_error"] for r in errs} == {"html is null"}
+        assert out.count() == len(with_html) + len(null_html)
 
 
 class TestExtractLinks:
