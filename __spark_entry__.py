@@ -457,7 +457,9 @@ def _queries_emb(spark, sf):
 
 def _q_ann_brute(spark, sf):
     e, q = _queries_emb(spark, sf)
-    return similarity.cosine_topk(e, q, k=10)
+    return similarity.cosine_topk(
+        e, q, arms=[("exact", "exact", 0)], k=10
+    ).drop("method")
 
 
 def _q_ann_lsh(spark, sf):
@@ -473,7 +475,9 @@ def _q_ann_lsh(spark, sf):
     _, q = _queries_emb(spark, sf)
     e = _t(spark, sf, "embeddings")
     e = similarity.with_lsh_bucket(e, h=8)
-    return similarity.cosine_topk_lsh(e, q, k=10, h=8, bucket_col="bucket")
+    return similarity.cosine_topk(
+        e, q, arms=[("lsh", "lsh", 0)], k=10, h=8, bucket_col="bucket"
+    ).drop("method")
 
 
 def _q_dedup_embedding(spark, sf):
@@ -516,7 +520,9 @@ def _ivf_centroids(e):
 
 def _q_ann_ivf(spark, sf):
     e, q = _queries_emb(spark, sf)
-    return similarity.cosine_topk_ivf(e, q, _ivf_centroids(e), k=10, nprobe=2)
+    return similarity.cosine_topk(
+        e, q, arms=[("ivf", "ivf", 2)], centroids=_ivf_centroids(e), k=10
+    ).drop("method")
 
 
 def _q_dedup_clusters(spark, sf):
@@ -655,45 +661,33 @@ def _q_events_salted(spark, sf):
 
 def _q_ann_recall(spark, sf):
     # recall@10 vs exact brute force, per query, for each ANN path:
-    # multi-probe sign-LSH and IVF with nprobe=2. The embedding base and
-    # the brute-force truth are persisted: truth is referenced by all three
-    # arms and the base by four subtrees — without the cache each arm
-    # re-scans and re-scores from parquet (VERDICT r2 item 7). The sign-LSH
-    # bucket is staged INTO the persisted base (VERDICT r3 item 3): one
-    # Arrow derivation materialized in the cache, both multiprobe arms
-    # consume it via bucket_col instead of re-deriving per arm.
+    # multi-probe sign-LSH and IVF with nprobe=2. The truth is a fourth,
+    # exact arm of the same cosine_topk plan: one candidate join, one
+    # Python scorer stage and one top-k window serve all four arms, and
+    # the persisted result is read both as the truth and as the probe.
+    # The sign-LSH bucket is staged INTO the persisted base (VERDICT r3
+    # item 3): one Arrow derivation materialized in the cache, both
+    # multiprobe arms consume it via bucket_col.
     e, q = _queries_emb(spark, sf)
     e = similarity.with_lsh_bucket(e, h=8).persist()
     q = q.persist()
-    truth = similarity.cosine_topk(e, q, k=10).select(
-        "query_id", F.col("vec_id").alias("tv")
-    ).persist()
-    # r6: the three arms run in ONE panel plan (similarity.
-    # cosine_topk_panel) instead of three unioned subplans — identical
-    # rows per method (differential-tested against the per-arm
-    # composition), but one candidate join + one Python scorer stage +
-    # one top-k window + one recall join instead of three of each, which
-    # also cuts the first-execution whole-stage-codegen bill the
-    # single-shot bench regime pays.
     arms = [
         ("lsh_multiprobe", "lsh", 1),
         ("lsh_multiprobe2", "lsh", 2),
         ("ivf_nprobe2", "ivf", 2),
     ]
-    panel = similarity.cosine_topk_panel(
-        e, q, arms=arms,
+    panel = similarity.cosine_topk(
+        e, q, arms=arms + [("exact", "exact", 0)],
         centroids=_ivf_centroids(e), k=10, h=8, bucket_col="bucket",
-    )
-    probe = panel.select(
-        "method", "query_id", F.col("vec_id").alias("pv")
-    )
+    ).persist()
+    exact = F.col("method") == "exact"
+    truth = panel.filter(exact).select("query_id", "vec_id")
     hits = (
         truth.join(
-            probe,
-            (truth.query_id == probe.query_id)
-            & (F.col("tv") == F.col("pv")),
+            panel.filter(~exact).select("method", "query_id", "vec_id"),
+            ["query_id", "vec_id"],
         )
-        .groupBy("method", truth.query_id)
+        .groupBy("method", "query_id")
         .agg(F.count("*").alias("h"))
     )
     # derived from the arms list: a method missing from this grid would

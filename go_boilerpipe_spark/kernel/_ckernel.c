@@ -1736,14 +1736,12 @@ static int run_parse(Parser *p, Handler *h)
                 return 0;
             }
             u32 c = s[j + 1];
-            int tok_start = 0, tok_end = 0, tok_comment = 0;
+            int tok_start = 0, tok_end = 0;
             if (is_ascii_alpha(c))
                 tok_start = 1;
             else if (c == '/')
                 tok_end = 1;
-            else if (c == '!' || c == '?')
-                tok_comment = 1;
-            else {
+            else if (c != '!' && c != '?') {
                 i = j + 1; /* '<' is part of text */
                 continue;
             }

@@ -1,19 +1,24 @@
-"""Similarity search over an embedding column (array<float>).
+"""Cosine top-k over an embedding column (array<float>).
 
-Brute-force cosine top-k as the exact baseline, and a sign-LSH bucketed
-variant as the scale path. Every dot product and norm accumulates in
-float64 dimension by dimension, left to right — in numpy kernels for pair
-scoring and bucketing, in an F.zip_with + F.aggregate fold for the IVF
-centroid scores — so results are bit-reproducible across engines (the
-DuckDB oracle sums in the same order via list comprehension).
+One operator, :func:`cosine_topk`, answers every top-k question as one
+or more arms of a single plan: ``exact`` (every corpus row is a
+candidate: the brute-force truth), ``lsh`` (Rademacher sign-LSH buckets,
+multi-probe within a number of bit flips) and ``ivf`` (inverted lists of
+broadcast coarse centroids, nprobe cells per query). Every dot product
+and norm accumulates in float64 dimension by dimension, left to right —
+in numpy kernels for pair scoring and bucketing, in an F.zip_with +
+F.aggregate fold for the IVF centroid scores — so results are
+bit-reproducible across engines (the DuckDB oracle sums in the same
+order via list comprehension).
 
 Scale notes (10^9+ vectors):
-- brute force is a broadcast of the (small) query set against the corpus —
-  one map-side pass + a per-query top-k (window over query partition);
-- sign-LSH buckets on the sign pattern of the first H components (a valid
-  axis-aligned random-projection LSH since embedding dims are arbitrary
-  rotations); the join key is the bucket id → shuffle is uniform; probing
-  stays within buckets so cost is Σ|bucket|·|queries in bucket|.
+- the (small) query set is broadcast: one map-side pass over the corpus
+  plus a per-(method, query) top-k window;
+- sign-LSH buckets on the signs of seeded ±1 projections of the full
+  vector; the join key is the bucket id, so probing stays within buckets
+  and cost is Σ|bucket|·|queries in bucket|;
+- IVF assignment is a map-side fold over one broadcast row holding every
+  centroid, so the plan is O(1) in centroid count.
 """
 
 from __future__ import annotations
@@ -22,6 +27,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Column names of the corpus, query and centroid tables.
+ID_COL, VEC_COL = "vec_id", "embedding"
+QUERY_ID_COL, QUERY_VEC_COL = "query_id", "query_vec"
+CID_COL, CVEC_COL = "cid", "cvec"
 
 
 def _cosine_pd_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -69,7 +79,7 @@ _COSINE_PD = None
 
 def cosine_batched(a, b):
     """Cosine of two array columns for flat column contexts (pair scoring
-    after an LSH/IVF join, brute-force scoring) — not usable inside HOF
+    after the :func:`cosine_topk` candidate join) — not usable inside HOF
     lambdas (ivf_cells keeps a fold). Null input or length mismatch →
     NULL; a zero vector → NaN (0/0). Values are pinned by frozen test rows
     and the DuckDB twins of the ANN queries."""
@@ -82,32 +92,6 @@ def cosine_batched(a, b):
         a.isNotNull() & b.isNotNull() & (F.size(a) == F.size(b)),
         _COSINE_PD(a, b),
     ).otherwise(F.lit(None).cast("double"))
-
-
-def cosine_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Exact top-k neighbors for each query vector (queries broadcast)."""
-    joined = emb.crossJoin(F.broadcast(queries))
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(cosine_batched(F.col(vec_col), F.col(query_vec_col)), 5).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col)  # deterministic tie-break
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
 
 
 # Knuth multiplicative constant; shared with the DuckDB bucket twin.
@@ -209,8 +193,7 @@ def quantize_int8(
     )
 
 
-def centroids_struct(centroids: DataFrame, cid_col: str = "cid",
-                     cvec_col: str = "cvec"):
+def centroids_struct(centroids: DataFrame):
     """Collapse the (small) centroid table into ONE row holding an
     array<struct<cid,cvec>> sorted by cid. Cross-joined (broadcast nested
     loop of a single row) onto the corpus, assignment becomes a pure
@@ -220,15 +203,15 @@ def centroids_struct(centroids: DataFrame, cid_col: str = "cid",
     item 3)."""
     packed = centroids.select(
         F.struct(
-            F.col(cid_col).alias("cid"),
-            F.col(cvec_col).alias("cvec"),
+            F.col(CID_COL).alias("cid"),
+            F.col(CVEC_COL).alias("cvec"),
             # r6: the centroid norm is part of the packed struct, computed
             # ONCE on this one-row build side — ivf_cells previously
             # re-derived it per (row × centroid) inside the scoring lambda.
             # Same left-to-right accumulation as the DuckDB twin's norm,
             # so the quotient is bit-identical. cid is unique, so the
             # struct sort order is unchanged by the extra trailing field.
-            _sq_norm_root(F.col(cvec_col)).alias("cnorm"),
+            _sq_norm_root(F.col(CVEC_COL)).alias("cnorm"),
         ).alias("c")
     ).agg(F.array_sort(F.collect_list("c")).alias("_cents"))
     return F.broadcast(packed)
@@ -279,209 +262,16 @@ def ivf_cells(vec, cents_col, nprobe: int = 1, vnorm=None):
     return F.transform(top, lambda t: -t.ncid)
 
 
-def cosine_topk_ivf(
-    emb: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 10,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cid_col: str = "cid",
-    cvec_col: str = "cvec",
-) -> DataFrame:
-    """IVF-style ANN: corpus vectors bucketed by coarse centroid
-    (broadcast centroid array + map-side argmax fold); each query probes
-    its top-``nprobe`` centroids' inverted lists."""
-    cents = centroids_struct(centroids, cid_col, cvec_col)
-    # stage the row's own norm before the assignment transform (same
-    # discipline as quantize_int8's absmax: an inline norm subtree would
-    # re-run per centroid; PLANS/plans r06 explain confirms the staged
-    # projection survives CollapseProject)
-    e = (
-        emb.crossJoin(cents)
-        .select("*", _sq_norm_root(F.col(vec_col)).alias("_vn"))
-        .withColumn(
-            "ivf_cell",
-            F.element_at(
-                ivf_cells(
-                    F.col(vec_col), F.col("_cents"), 1, vnorm=F.col("_vn")
-                ),
-                1,
-            ),
-        )
-        .drop("_cents", "_vn")
-    )
-    q = (
-        queries.crossJoin(cents)
-        .select("*", _sq_norm_root(F.col(query_vec_col)).alias("_vn"))
-        .withColumn(
-            "ivf_cell",
-            F.explode(
-                ivf_cells(
-                    F.col(query_vec_col), F.col("_cents"), nprobe,
-                    vnorm=F.col("_vn"),
-                )
-            ),
-        )
-        .drop("_cents", "_vn")
-    )
-    joined = e.join(F.broadcast(q), "ivf_cell")
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(cosine_batched(F.col(vec_col), F.col(query_vec_col)), 5).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
-
-
-def cosine_topk_panel(
-    emb: DataFrame,
-    queries: DataFrame,
-    arms: list,
-    centroids: DataFrame | None = None,
-    k: int = 10,
-    h: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cid_col: str = "cid",
-    cvec_col: str = "cvec",
-    bucket_col: str | None = None,
-) -> DataFrame:
-    """Several ANN arms in ONE plan (r6): each ``arms`` entry is
-    ``(method, kind, param)`` with kind ``"lsh"`` (param = multiprobe
-    flips) or ``"ivf"`` (param = nprobe). Output = the union of each
-    arm's top-``k`` with a leading ``method`` column — row-for-row equal
-    to running :func:`cosine_topk_lsh_multiprobe` /
-    :func:`cosine_topk_ivf` per arm and unioning (differential-tested):
-    the candidate sets per (method, query) are identical (same probe
-    derivations joined on a tagged common key), the scorer and
-    ``round(…, 5)`` are the same single batched kernel, and the top-k
-    window partitions by (method, query), so per-method ranking and
-    tie-breaks are untouched. The point is plan count: recall-style
-    evaluations that union M arms pay M bucket/cell joins, M Python
-    scorer stages, M windows, and M× whole-stage-codegen compilation —
-    this shape pays each ONCE (the corpus emits one tagged key row per
-    key kind, so the join input grows by #kinds ≤ 2, not #arms).
-    """
-    kinds = {kind for _, kind, _ in arms}
-    unknown = kinds - {"lsh", "ivf"}
-    if unknown:
-        raise ValueError(f"unknown panel arm kind(s): {sorted(unknown)}")
-    needs_lsh = "lsh" in kinds
-    needs_ivf = "ivf" in kinds
-    if needs_ivf and centroids is None:
-        raise ValueError("ivf arm needs centroids")
-    if bucket_col is not None:
-        check_bucket_h(emb, bucket_col, h)
-        e = emb.withColumnRenamed(bucket_col, "bucket")
-    elif needs_lsh:
-        e = emb.withColumn(
-            "bucket", sign_lsh_bucket_batched(F.col(vec_col), h)
-        )
-    else:
-        e = emb
-
-    key_structs = []
-    if needs_lsh:
-        key_structs.append(F.struct(
-            F.lit("b").alias("_kt"),
-            F.col("bucket").cast("long").alias("_key"),
-        ))
-    if needs_ivf:
-        cents = centroids_struct(centroids, cid_col, cvec_col)
-        e = e.crossJoin(cents).select(
-            "*", _sq_norm_root(F.col(vec_col)).alias("_vn")
-        )
-        cell = F.element_at(
-            ivf_cells(F.col(vec_col), F.col("_cents"), 1,
-                      vnorm=F.col("_vn")),
-            1,
-        )
-        key_structs.append(F.struct(
-            F.lit("c").alias("_kt"), cell.cast("long").alias("_key")
-        ))
-    ek = e.select(
-        F.col(id_col), F.col(vec_col),
-        F.explode(F.array(*key_structs)).alias("_k"),
-    ).select(
-        id_col, vec_col,
-        F.col("_k._kt").alias("_kt"), F.col("_k._key").alias("_key"),
-    )
-
-    probe_parts = []
-    for method, kind, param in arms:
-        if kind == "lsh":
-            probe_parts.append(queries.select(
-                F.lit(method).alias("method"),
-                F.col(query_id_col), F.col(query_vec_col),
-                F.lit("b").alias("_kt"),
-                F.explode(
-                    F.transform(
-                        sign_lsh_buckets_multiprobe(
-                            F.col(query_vec_col), h, param
-                        ),
-                        lambda b: b.cast("long"),
-                    )
-                ).alias("_key"),
-            ))
-        else:
-            qc = queries.crossJoin(cents).select(
-                "*", _sq_norm_root(F.col(query_vec_col)).alias("_vn")
-            )
-            probe_parts.append(qc.select(
-                F.lit(method).alias("method"),
-                F.col(query_id_col), F.col(query_vec_col),
-                F.lit("c").alias("_kt"),
-                F.explode(
-                    F.transform(
-                        ivf_cells(F.col(query_vec_col), F.col("_cents"),
-                                  param, vnorm=F.col("_vn")),
-                        lambda c: c.cast("long"),
-                    )
-                ).alias("_key"),
-            ))
-    probes = probe_parts[0]
-    for p in probe_parts[1:]:
-        probes = probes.unionByName(p)
-
-    joined = ek.join(F.broadcast(probes), ["_kt", "_key"])
-    scored = joined.select(
-        F.col("method"),
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_batched(F.col(vec_col), F.col(query_vec_col)), 5
-        ).alias("cosine"),
-    ).dropDuplicates(["method", query_id_col, id_col])
-    w = Window.partitionBy("method", query_id_col).orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("method", query_id_col, "rank", id_col, "cosine")
-    )
-
-
-def sign_lsh_buckets_multiprobe(vec, h: int = 8, flips: int = 1, base=None):
+def sign_lsh_buckets_multiprobe(vec, h: int = 8, flips: int = 1):
     """The base bucket plus all perturbations within ``flips`` bit flips
     (multi-probe: the standard recall/cost knob for sign LSH —
-    flips=1 → h+1 probes, flips=2 → h+1+C(h,2) probes; still a vanishing
-    fraction of the 2^h buckets). ``base`` lets the caller supply an
-    already-computed bucket column (e.g. the batched variant)."""
-    if base is None:
-        base = sign_lsh_bucket_batched(vec, h)
-    probes = [base] + [base.bitwiseXOR(F.lit(2 ** i)) for i in range(h)]
+    flips=0 → the base bucket alone, flips=1 → h+1 probes, flips=2 →
+    h+1+C(h,2) probes; still a vanishing fraction of the 2^h buckets).
+    The XOR masks are distinct, so the probes are too."""
+    base = sign_lsh_bucket_batched(vec, h)
+    probes = [base]
+    if flips >= 1:
+        probes += [base.bitwiseXOR(F.lit(2 ** i)) for i in range(h)]
     if flips >= 2:
         probes += [
             base.bitwiseXOR(F.lit((2 ** i) | (2 ** j)))
@@ -527,85 +317,120 @@ def check_bucket_h(df: DataFrame, bucket_col: str, h: int) -> None:
         )
 
 
-def cosine_topk_lsh_multiprobe(
+# Join-key tag of each arm kind: a corpus row emits one tagged key per
+# kind in use, a query one per key its arm probes.
+_KEY_TAG = {"exact": "a", "lsh": "b", "ivf": "c"}
+
+
+def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
+    arms: list,
+    centroids: DataFrame | None = None,
     k: int = 10,
     h: int = 8,
-    flips: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     bucket_col: str | None = None,
 ) -> DataFrame:
-    """Sign-LSH ANN probing the query's bucket and all neighbors within
-    ``flips`` bit flips. Corpus buckets via the Arrow-batched projection
-    (the corpus side is the 10^9-vector side); pass ``bucket_col`` when
-    the corpus already carries a :func:`with_lsh_bucket` column (same
-    ``h``) so the plan reuses the stored derivation."""
+    """Top-``k`` corpus vectors by cosine for each query, for one or more
+    arms in ONE plan. Each ``arms`` entry is ``(method, kind, param)``:
+
+    - ``"exact"``: every corpus row is a candidate (``param`` unused);
+    - ``"lsh"``: the query's sign-LSH bucket and every bucket within
+      ``param`` bit flips (:func:`sign_lsh_buckets_multiprobe`);
+    - ``"ivf"``: the inverted lists of the query's top-``param``
+      centroids (needs ``centroids``: ``cid``, ``cvec``).
+
+    Returns ``method, query_id, rank, vec_id, cosine``: per (method,
+    query), the top ``k`` by cosine (rounded to 5 places) descending,
+    ties to the smaller ``vec_id``. ``bucket_col`` names a stored
+    :func:`with_lsh_bucket` column (same ``h``) to reuse instead of
+    deriving the bucket in the plan.
+
+    Every arm is a tagged join key: the corpus emits one ``(tag, key)``
+    row per kind in use (``0``, its bucket, its nearest centroid) and
+    each query one row per key its arm probes, so all arms share one
+    broadcast join, one batched scorer stage and one window partitioned
+    by (method, query); the corpus side grows by the number of kinds,
+    not of arms. With unique ids a (method, query, vec) triple joins at
+    most once — a corpus row has one key per kind and one arm's probe
+    keys are distinct (distinct XOR masks, the top-nprobe of distinct
+    cids, one exact probe) — so no dedup is needed.
+    """
+    kinds = {kind for _, kind, _ in arms}
+    unknown = kinds - _KEY_TAG.keys()
+    if unknown:
+        raise ValueError(f"unknown arm kind(s): {sorted(unknown)}")
+    if "ivf" in kinds and centroids is None:
+        raise ValueError("ivf arm needs centroids")
+    e = emb
     if bucket_col is not None:
         check_bucket_h(emb, bucket_col, h)
         e = emb.withColumnRenamed(bucket_col, "bucket")
-    else:
+    elif "lsh" in kinds:
         e = emb.withColumn(
-            "bucket", sign_lsh_bucket_batched(F.col(vec_col), h)
+            "bucket", sign_lsh_bucket_batched(F.col(VEC_COL), h)
         )
-    q = queries.withColumn(
-        "bucket",
-        F.explode(
-            sign_lsh_buckets_multiprobe(F.col(query_vec_col), h, flips)
-        ),
+
+    corpus_keys = {"exact": F.lit(0), "lsh": F.col("bucket")}
+    if "ivf" in kinds:
+        cents = centroids_struct(centroids)
+        e = e.crossJoin(cents).select(
+            "*", _sq_norm_root(F.col(VEC_COL)).alias("_vn")
+        )
+        corpus_keys["ivf"] = F.element_at(
+            ivf_cells(F.col(VEC_COL), F.col("_cents"), 1, vnorm=F.col("_vn")),
+            1,
+        )
+    ek = e.select(
+        F.col(ID_COL), F.col(VEC_COL),
+        F.explode(F.array(*[
+            F.struct(F.lit(_KEY_TAG[kind]).alias("_kt"),
+                     corpus_keys[kind].cast("long").alias("_key"))
+            for kind in sorted(kinds)
+        ])).alias("_k"),
+    ).select(
+        ID_COL, VEC_COL,
+        F.col("_k._kt").alias("_kt"), F.col("_k._key").alias("_key"),
     )
-    joined = e.join(F.broadcast(q), "bucket")
+
+    probes = None
+    for method, kind, param in arms:
+        q = queries
+        if kind == "exact":
+            key = F.lit(0).cast("long")
+        elif kind == "lsh":
+            key = F.explode(sign_lsh_buckets_multiprobe(
+                F.col(QUERY_VEC_COL), h, param
+            ).cast("array<bigint>"))
+        else:
+            q = queries.crossJoin(cents).select(
+                "*", _sq_norm_root(F.col(QUERY_VEC_COL)).alias("_vn")
+            )
+            key = F.explode(ivf_cells(
+                F.col(QUERY_VEC_COL), F.col("_cents"), param,
+                vnorm=F.col("_vn"),
+            ).cast("array<bigint>"))
+        part = q.select(
+            F.lit(method).alias("method"),
+            F.col(QUERY_ID_COL), F.col(QUERY_VEC_COL),
+            F.lit(_KEY_TAG[kind]).alias("_kt"), key.alias("_key"),
+        )
+        probes = part if probes is None else probes.unionByName(part)
+
+    joined = ek.join(F.broadcast(probes), ["_kt", "_key"])
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(cosine_batched(F.col(vec_col), F.col(query_vec_col)), 5).alias("cosine"),
-    ).dropDuplicates([query_id_col, id_col])
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
+        F.col("method"),
+        F.col(QUERY_ID_COL),
+        F.col(ID_COL),
+        F.round(
+            cosine_batched(F.col(VEC_COL), F.col(QUERY_VEC_COL)), 5
+        ).alias("cosine"),
+    )
+    w = Window.partitionBy("method", QUERY_ID_COL).orderBy(
+        F.desc("cosine"), F.asc(ID_COL)
+    )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
-    )
-
-
-def cosine_topk_lsh(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    h: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    bucket_col: str | None = None,
-) -> DataFrame:
-    """Approximate top-k: probe only the query's sign-LSH bucket.
-
-    Recall < 1 by design; at corpus scale add multi-probe (flip one bit)
-    by unioning perturbed buckets — same plan shape. ``bucket_col`` reuses
-    a stored :func:`with_lsh_bucket` column instead of re-deriving."""
-    if bucket_col is not None:
-        check_bucket_h(emb, bucket_col, h)
-        e = emb.withColumnRenamed(bucket_col, "bucket")
-    else:
-        e = emb.withColumn(
-            "bucket", sign_lsh_bucket_batched(F.col(vec_col), h)
-        )
-    q = queries.withColumn(
-        "bucket", sign_lsh_bucket_batched(F.col(query_vec_col), h)
-    )
-    joined = e.join(F.broadcast(q), "bucket")
-    scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(cosine_batched(F.col(vec_col), F.col(query_vec_col)), 5).alias("cosine"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", id_col, "cosine")
+        .select("method", QUERY_ID_COL, "rank", ID_COL, "cosine")
     )

@@ -3,9 +3,10 @@
 
 Sweeps the sign-LSH width/probe knobs (h ∈ {8,12,16} × flips ∈ {1,2})
 and IVF nprobe ∈ {1,2,4} over the embeddings table, reporting mean
-recall@10 against the persisted brute-force truth next to the measured
-wall seconds of each arm, so a 100-TB operator picks a frontier point
-deliberately instead of inheriting the defaults. Results are recorded
+recall@10 against the persisted truth of an exact arm next to the
+measured wall seconds of each arm, so a 100-TB operator picks a frontier
+point deliberately instead of inheriting the defaults. Each frontier
+point is a one-arm ``similarity.cosine_topk`` call. Results are recorded
 in BENCH/BASELINE.md; oracle rows are untouched (the sweep never runs
 through queries()).
 
@@ -41,20 +42,20 @@ def main():
     spark.range(1000).select(warm(F.col("id").cast("double"))).count()
 
     e0, q = entry._queries_emb(spark, sf)
+    e0 = e0.persist()
     q = q.persist()
     q.count()
 
-    truth = similarity.cosine_topk(e0.persist(), q, k=10).select(
-        "query_id", F.col("vec_id").alias("tv")
-    ).persist()
+    def topk(emb, kind, param, **kw):
+        return similarity.cosine_topk(
+            emb, q, arms=[(kind, kind, param)], k=10, **kw
+        ).select("query_id", "vec_id")
+
+    truth = topk(e0, "exact", 0).persist()
     n_queries = truth.select("query_id").distinct().count()
 
     def recall_of(pred_df):
-        hits = truth.join(
-            pred_df.select("query_id", "vec_id"),
-            (truth["query_id"] == pred_df["query_id"])
-            & (truth["tv"] == pred_df["vec_id"]),
-        ).count()
+        hits = truth.join(pred_df, ["query_id", "vec_id"]).count()
         return hits / (10.0 * n_queries)
 
     rows = []
@@ -64,9 +65,7 @@ def main():
         base.count()  # materialize: the stored-bucket scenario
         for flips in (1, 2):
             t0 = time.monotonic()
-            pred = similarity.cosine_topk_lsh_multiprobe(
-                base, q, k=10, h=h, flips=flips, bucket_col="bucket"
-            )
+            pred = topk(base, "lsh", flips, h=h, bucket_col="bucket")
             pred.write.format("noop").mode("overwrite").save()
             dt = time.monotonic() - t0
             rows.append({
@@ -79,7 +78,7 @@ def main():
     cents = entry._ivf_centroids(e0)
     for nprobe in (1, 2, 4):
         t0 = time.monotonic()
-        pred = similarity.cosine_topk_ivf(e0, q, cents, k=10, nprobe=nprobe)
+        pred = topk(e0, "ivf", nprobe, centroids=cents)
         pred.write.format("noop").mode("overwrite").save()
         dt = time.monotonic() - t0
         rows.append({
@@ -89,9 +88,7 @@ def main():
         })
 
     t0 = time.monotonic()
-    similarity.cosine_topk(e0, q, k=10).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    topk(e0, "exact", 0).write.format("noop").mode("overwrite").save()
     rows.append({
         "arm": "brute force (truth)",
         "recall_at_10": 1.0,

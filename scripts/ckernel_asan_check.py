@@ -9,29 +9,33 @@ and extract_content. Every ld+json page also runs with a raising and a
 wrong-type resolver, the kernel's error exits. Any heap overflow /
 use-after-free aborts the process.
 
-Must run with the ASan runtime preloaded; this script re-execs itself
-with LD_PRELOAD when needed:
+Must run with the ASan runtime preloaded; this script builds the
+instrumented kernel into a private temporary directory (mode 0700, so no
+other user can swap the file before it is loaded, and concurrent runs do
+not share it), re-runs itself with LD_PRELOAD and the built path as its
+argument, and removes the directory when the run ends:
 
     python scripts/ckernel_asan_check.py
 """
 
 import os
 import random
+import shutil
 import subprocess
 import sys
 import sysconfig
+import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 SRC = REPO / "go_boilerpipe_spark" / "kernel" / "_ckernel.c"
-OUT = "/tmp/_ckernel_asan.so"
 
 
-def build():
+def build(out):
     inc = sysconfig.get_path("include")
     subprocess.run(
         ["gcc", "-O1", "-g", "-fPIC", "-shared", "-fsanitize=address",
-         "-I", inc, str(SRC), "-o", OUT],
+         "-I", inc, str(SRC), "-o", out],
         check=True,
     )
 
@@ -45,21 +49,30 @@ def libasan():
 
 def main():
     if "ASAN_ACTIVE" not in os.environ:
-        build()
-        # PYTHONMALLOC=malloc: PyMem_Malloc's small-object pools would
-        # hide the kernel's blocks and buffers from ASan. GO_BP_SPARK_PURE:
-        # the package must not load the uninstrumented kernel; the
-        # resolver it supplies is plain Python.
-        env = dict(os.environ, LD_PRELOAD=libasan(),
-                   ASAN_OPTIONS="detect_leaks=0", ASAN_ACTIVE="1",
-                   PYTHONMALLOC="malloc", GO_BP_SPARK_PURE="1")
-        os.execve(sys.executable, [sys.executable, __file__], env)
+        tmp = tempfile.mkdtemp(prefix="ckernel_asan_")
+        try:
+            so = os.path.join(tmp, "_ckernel_asan.so")
+            build(so)
+            # PYTHONMALLOC=malloc: PyMem_Malloc's small-object pools would
+            # hide the kernel's blocks and buffers from ASan.
+            # GO_BP_SPARK_PURE: the package must not load the
+            # uninstrumented kernel; the resolver it supplies is plain
+            # Python.
+            env = dict(os.environ, LD_PRELOAD=libasan(),
+                       ASAN_OPTIONS="detect_leaks=0", ASAN_ACTIVE="1",
+                       PYTHONMALLOC="malloc", GO_BP_SPARK_PURE="1")
+            rc = subprocess.run(
+                [sys.executable, __file__, so], env=env
+            ).returncode
+        finally:
+            shutil.rmtree(tmp)
+        sys.exit(rc != 0)
 
     import importlib.util
 
     sys.path.insert(0, str(REPO))
     spec = importlib.util.spec_from_file_location(
-        "go_boilerpipe_spark.kernel._ckernel", OUT
+        "go_boilerpipe_spark.kernel._ckernel", sys.argv[1]
     )
     ck = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(ck)

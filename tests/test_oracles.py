@@ -15,8 +15,9 @@ ROOT = Path(__file__).resolve().parents[1]
 QUERIES = (
     "url_normalize", "url_dates", "dedup_minhash_lsh", "dedup_minhash_capped",
     "dedup_simhash", "near_dup_jaccard", "lang_id", "fingerprint_winnow",
-    "ann_cosine_lsh", "dedup_embedding", "segment_dedup", "token_rarity",
-    "repetition_stats", "dup_ngrams", "dedup_clusters",
+    "ann_cosine_topk", "ann_cosine_lsh", "ann_cosine_ivf", "ann_recall",
+    "dedup_embedding", "segment_dedup", "token_rarity", "repetition_stats",
+    "dup_ngrams", "dedup_clusters",
 )
 
 

@@ -185,21 +185,32 @@ class TestExtractOperator:
         assert out.count() == len(with_html) + len(null_html)
 
 
+def _article_urls():
+    """The page set's article pages with html (each links to its site's
+    "/" and "/news")."""
+    return [u for u, h in page_rows() if h and b"<h1>Harbor story" in h]
+
+
 class TestExtractLinks:
-    def test_links_through_spark(self, spark, corpus):
+    def test_links_through_spark(self, spark, page_set):
         from go_boilerpipe_spark.operators.links import extract_links_df
 
-        pages = spark.read.parquet(corpus)
+        path, _, null_html = page_set
+        pages = spark.read.parquet(path)
         links = extract_links_df(pages)
-        per_page = {
-            r["url"]: r["n"]
-            for r in links.groupBy("url").agg(F.count("*").alias("n")).collect()
-        }
-        # every replica of golden doc 1 carries its 128 anchors
-        doc1 = [u for u in per_page if "lease-no-rent" in u]
-        assert doc1 and all(per_page[u] == 128 for u in doc1)
+        per_page = {}
+        for r in links.select("url", "resolved").collect():
+            per_page.setdefault(r["url"], []).append(r["resolved"])
+        # every non-null article page carries its 2 nav anchors, resolved
+        # against its own url
+        articles = _article_urls()
+        assert articles
+        for u in articles:
+            root = u[: u.index("/p/")]
+            assert sorted(per_page.get(u, [])) == [root + "/", root + "/news"]
         # null-html rows contribute no links and kill no tasks
         assert links.filter(F.col("href").isNull()).count() == 0
+        assert not set(null_html) & per_page.keys()
         # resolved links parse to hosts JVM-side
         hosts = (
             links.select(
@@ -208,20 +219,27 @@ class TestExtractLinks:
         )
         assert hosts > 1
 
-    def test_link_graph_feeds_pagerank(self, spark, corpus):
-        # composition: pages -> edges -> pagerank, all DataFrame algebra
+    def test_link_graph_feeds_pagerank(self, spark, page_set):
+        # composition: pages -> edges -> pagerank, all DataFrame algebra.
+        # Every link of the page set stays on its own host, so the graph
+        # is page to page (a host graph would be self-loops only).
         from go_boilerpipe_spark.operators import graph
         from go_boilerpipe_spark.operators.links import extract_links_df
 
-        pages = spark.read.parquet(corpus)
+        pages = spark.read.parquet(page_set[0])
         links = extract_links_df(pages)
         edges = links.select(
-            F.try_parse_url("url", F.lit("HOST")).alias("src"),
-            F.try_parse_url("resolved", F.lit("HOST")).alias("dst"),
+            F.col("url").alias("src"), F.col("resolved").alias("dst"),
         ).filter(F.col("dst").isNotNull())
-        ranks = graph.pagerank(edges, iters=2).collect()
+        ranks = {r["node"]: r["rank"]
+                 for r in graph.pagerank(edges, iters=2).collect()}
         assert len(ranks) > 1
-        assert all(r["rank"] > 0 for r in ranks)
+        assert all(r > 0 for r in ranks.values())
+        # the nav targets every article links to outrank every article
+        navs = [f"http://site{i}.test{p}"
+                for i in range(3) for p in ("/", "/news")]
+        articles = _article_urls()
+        assert min(ranks[u] for u in navs) > max(ranks[u] for u in articles)
 
 
 class TestExtractJob:
@@ -517,11 +535,11 @@ class TestSimilarity:
             map(tuple, staged.collect())
         )
 
-    def test_panel_matches_per_arm_composition(self, spark):
-        # r6: cosine_topk_panel must return row-for-row what running the
-        # three arms separately returns (same candidates per method, same
-        # scorer/rounding, per-method window) — including bucket
-        # collisions across methods and the k cutoff.
+    @staticmethod
+    def _fixture(spark):
+        # 60 vectors, queries 0-3, centroids 5-8: the arms' candidate
+        # sets overlap (the same (query, vec) pair is found by several
+        # methods) and each arm has more candidates than k
         import math
 
         rows = [(i, [math.sin(i * 7.0 + j) for j in range(8)])
@@ -534,25 +552,92 @@ class TestSimilarity:
         cents = emb.filter(F.col("vec_id").between(5, 8)).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
         )
-        e = similarity.with_lsh_bucket(emb, h=8)
-        panel = similarity.cosine_topk_panel(
-            e, q,
-            arms=[("m_lsh1", "lsh", 1), ("m_lsh2", "lsh", 2),
-                  ("m_ivf", "ivf", 2)],
-            centroids=cents, k=5, h=8, bucket_col="bucket",
-        ).collect()
-        got = sorted(map(tuple, panel))
+        return rows, similarity.with_lsh_bucket(emb, h=8), q, cents
+
+    _ARMS = [("m_exact", "exact", 0), ("m_lsh1", "lsh", 1),
+             ("m_lsh2", "lsh", 2), ("m_ivf", "ivf", 2)]
+
+    def test_exact_arm_matches_numpy_reference(self, spark):
+        # brute force in float64 over the float32-stored vectors,
+        # accumulated left to right, rounded to 5 places, ordered by
+        # cosine descending with ties to the smaller vec_id
+        import numpy as np
+
+        rows, e, q, _ = self._fixture(spark)
+        vecs = {i: np.asarray(v, dtype=np.float32).astype(np.float64)
+                for i, v in rows}
+
+        def cos(a, b):
+            dot = na2 = nb2 = 0.0
+            for x, y in zip(a, b):
+                dot += x * y
+                na2 += x * x
+                nb2 += y * y
+            return dot / (np.sqrt(na2) * np.sqrt(nb2))
+
         exp = []
-        for m, df in [
-            ("m_lsh1", similarity.cosine_topk_lsh_multiprobe(
-                e, q, k=5, h=8, flips=1, bucket_col="bucket")),
-            ("m_lsh2", similarity.cosine_topk_lsh_multiprobe(
-                e, q, k=5, h=8, flips=2, bucket_col="bucket")),
-            ("m_ivf", similarity.cosine_topk_ivf(
-                e, q, cents, k=5, nprobe=2)),
-        ]:
-            exp += [(m, *r) for r in map(tuple, df.collect())]
-        assert got == sorted(exp)
+        for qi in range(4):
+            scored = sorted(
+                ((round(float(cos(v, vecs[qi])), 5), vi)
+                 for vi, v in vecs.items()),
+                key=lambda t: (-t[0], t[1]),
+            )
+            exp += [("m_exact", qi, r + 1, vi, c)
+                    for r, (c, vi) in enumerate(scored[:5])]
+        got = similarity.cosine_topk(
+            e, q, arms=[("m_exact", "exact", 0)], k=5
+        ).collect()
+        assert sorted(map(tuple, got)) == sorted(exp)
+
+    def test_multiprobe_flips_zero_probes_base_bucket_only(self, spark):
+        df = spark.createDataFrame(
+            [([0.3, -1.0, 0.5, 2.0, -0.25, 0.1, 0.7, -0.6],)],
+            "v array<float>",
+        )
+        v = F.col("v")
+        r = df.select(
+            *[similarity.sign_lsh_buckets_multiprobe(v, 8, f).alias(f"p{f}")
+              for f in (0, 1, 2)],
+            similarity.sign_lsh_bucket_batched(v, 8).alias("base"),
+        ).first()
+        assert r["p0"] == [r["base"]]
+        assert len(r["p1"]) == 1 + 8 and len(set(r["p1"])) == 1 + 8
+        assert len(r["p2"]) == 1 + 8 + 28 and len(set(r["p2"])) == 1 + 8 + 28
+
+    def test_one_row_per_method_query_vec(self, spark):
+        # the operator runs no dedup: with k above every candidate count,
+        # each (method, query, vec) triple must still come out once even
+        # though the same pair is a candidate of several methods
+        from collections import Counter
+
+        _, e, q, cents = self._fixture(spark)
+        got = similarity.cosine_topk(
+            e, q, arms=self._ARMS, centroids=cents, k=100, h=8,
+            bucket_col="bucket",
+        ).collect()
+        triples = Counter((r["method"], r["query_id"], r["vec_id"])
+                          for r in got)
+        assert max(triples.values()) == 1
+        by_pair = Counter((qi, vi) for _, qi, vi in triples)
+        assert max(by_pair.values()) == len(self._ARMS)
+        assert len(triples) < 4 * 60 * len(self._ARMS)  # ANN arms prune
+
+    def test_panel_matches_per_arm_composition(self, spark):
+        # a four-arm call returns row for row the union of its one-arm
+        # calls (same candidates per method, same scorer and rounding,
+        # per-method window), including the k cutoff
+        _, e, q, cents = self._fixture(spark)
+
+        def run(arms):
+            return similarity.cosine_topk(
+                e, q, arms=arms, centroids=cents, k=5, h=8,
+                bucket_col="bucket",
+            ).collect()
+
+        got = sorted(map(tuple, run(self._ARMS)))
+        exp = sorted(tuple(r) for arm in self._ARMS for r in run([arm]))
+        assert got == exp
+        assert {r[0] for r in got} == {m for m, _, _ in self._ARMS}
 
     def test_self_is_rank_one(self, spark):
         import math
@@ -565,7 +650,9 @@ class TestSimilarity:
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-        top = similarity.cosine_topk(emb, q, k=3).collect()
+        top = similarity.cosine_topk(
+            emb, q, arms=[("exact", "exact", 0)], k=3
+        ).collect()
         rank1 = {r["query_id"]: r["vec_id"] for r in top if r["rank"] == 1}
         assert rank1 == {0: 0, 1: 1, 2: 2}
 
@@ -575,7 +662,9 @@ class TestSimilarity:
         q = emb.select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        top = similarity.cosine_topk_lsh(emb, q, k=1, h=4).collect()
+        top = similarity.cosine_topk(
+            emb, q, arms=[("lsh", "lsh", 0)], k=1, h=4
+        ).collect()
         assert {r["query_id"]: r["vec_id"] for r in top} == {i: i for i in range(10)}
 
 
@@ -723,13 +812,14 @@ class TestScaleHardening:
         )
         staged = similarity.with_lsh_bucket(emb, h=8)
 
-        for fn in (similarity.cosine_topk_lsh,
-                   similarity.cosine_topk_lsh_multiprobe):
-            derived = sorted(map(tuple, fn(emb, q, k=5, h=8).collect()))
-            stored = sorted(
-                map(tuple, fn(staged, q, k=5, h=8, bucket_col="bucket").collect())
-            )
-            assert stored == derived, fn.__name__
+        for flips in (0, 1):
+            arms = [("lsh", "lsh", flips)]
+            derived = sorted(map(tuple, similarity.cosine_topk(
+                emb, q, arms=arms, k=5, h=8).collect()))
+            stored = sorted(map(tuple, similarity.cosine_topk(
+                staged, q, arms=arms, k=5, h=8, bucket_col="bucket"
+            ).collect()))
+            assert stored == derived, flips
 
         d_pairs = sorted(map(tuple, dedup.embedding_near_dup_pairs(
             emb, threshold=0.3).collect()))
@@ -764,18 +854,21 @@ class TestScaleHardening:
         assert reread.schema["bucket"].metadata["lsh_h"] == 8
 
         for consumer in (
-            lambda df: similarity.cosine_topk_lsh(
-                df, q, k=3, h=12, bucket_col="bucket"),
-            lambda df: similarity.cosine_topk_lsh_multiprobe(
-                df, q, k=3, h=12, bucket_col="bucket"),
+            lambda df: similarity.cosine_topk(
+                df, q, arms=[("lsh", "lsh", 0)], k=3, h=12,
+                bucket_col="bucket"),
+            lambda df: similarity.cosine_topk(
+                df, q, arms=[("lsh", "lsh", 1)], k=3, h=12,
+                bucket_col="bucket"),
             lambda df: dedup.embedding_near_dup_pairs(
                 df, h=12, bucket_col="bucket"),
         ):
             with _pytest.raises(ValueError, match="h=8"):
                 consumer(reread)
         # matching h passes through unchanged
-        assert similarity.cosine_topk_lsh(
-            reread, q, k=3, h=8, bucket_col="bucket"
+        assert similarity.cosine_topk(
+            reread, q, arms=[("lsh", "lsh", 0)], k=3, h=8,
+            bucket_col="bucket",
         ).count() >= 1
 
     def test_ivf_broadcast_centroids_no_collect(self, spark):
@@ -790,7 +883,9 @@ class TestScaleHardening:
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("query_vec"),
         )
-        top = similarity.cosine_topk_ivf(emb, q, cents, k=3, nprobe=2).collect()
+        top = similarity.cosine_topk(
+            emb, q, arms=[("ivf", "ivf", 2)], centroids=cents, k=3
+        ).collect()
         rank1 = {r["query_id"]: r["vec_id"] for r in top if r["rank"] == 1}
         # each query's own vector lives in its own assigned cell → rank 1
         assert rank1 == {0: 0, 1: 1, 2: 2}
@@ -1394,7 +1489,9 @@ class TestCuration:
             cents = emb.filter(F.col("vec_id") < n_cents).select(
                 F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
             )
-            df = similarity.cosine_topk_ivf(emb, q, cents, k=3, nprobe=2)
+            df = similarity.cosine_topk(
+                emb, q, arms=[("ivf", "ivf", 2)], centroids=cents, k=3
+            )
             return len(df._jdf.queryExecution().executedPlan().toString())
 
         small, big = plan_len(4), plan_len(64)
