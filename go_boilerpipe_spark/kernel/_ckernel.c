@@ -15,8 +15,22 @@
  *
  * The input is a Python str; we take a UCS4 copy and scan uint32 arrays.
  * Lone surrogates (from surrogateescape decoding of invalid UTF-8) pass
- * through and count 1 byte in flush_block's byte-length gates, matching
- * the Python path's encode("utf-8","surrogateescape") arithmetic.
+ * through and count 1 byte in the byte-length gates, matching the Python
+ * path's encode("utf-8","surrogateescape") arithmetic.
+ *
+ * How a text slice flows, and where it is copied: the scanner finds the
+ * slice's end ('<') and notes in the same pass whether it holds '&' or
+ * '\r'.  A slice with neither reaches text_token as a pointer into the
+ * UCS4 copy; otherwise newline conversion and unescaping each copy it
+ * once, only when needed.  Raw text is passed the same way unless it
+ * holds '\r' or NUL.  text_token collapses spaces straight into text_buf
+ * (copy 1) and appends the same chars to token_buf (copy 2).
+ * flush_block counts tokens by walking token_buf in place: tokenize() is
+ * built in scratch only when the buffer holds U+2063.  The block keeps
+ * its own trimmed copy of text_buf (copy 3), and Content() is written
+ * once, escaped, into the result str of the right kind: the joined text
+ * is never built.  F2 normalizes a block text into scratch only when it
+ * is short enough to equal a title candidate.
  *
  * Exposed:
  *   init_tables(cfg: dict)      -- must be called once before the others
@@ -113,34 +127,45 @@ typedef struct {
 
 static unsigned char *g_word_bits;   /* \p{L}\p{Nd}\p{Nl}\p{No}  (is_word) */
 static unsigned char *g_tokw_bits;   /* [\p{L}0-9_] (tokenize word runs)   */
+static unsigned char *g_space_bits;  /* GO_SPACE (Go unicode.IsSpace)       */
 static PyObject *g_entities;         /* html.entities.html5 dict            */
-static u32 g_space[64];              /* GO_SPACE codepoints, sorted         */
-static int g_nspace;
 static int g_ready;
+
+/* ASCII classes, one byte per char: the per-character loops answer every
+ * test on an ASCII char with one load, before the Unicode bit tables */
+#define CL_SPACE 1 /* GO_SPACE */
+#define CL_TOKW 2  /* [\p{L}0-9_] */
+#define CL_WORD 4  /* \p{L}\p{Nd}\p{Nl}\p{No} */
+#define CL_PUNCT 8 /* handler.py _TOKEN_PUNCT */
+#define CL_TPUNCT 16 /* filters.py _RE_TITLE_PUNCT: ?!.-: */
+#define CL_APOS 32   /* ' (dropped by _normalize_title_text) */
+static unsigned char g_ascii_cls[128];
+static const char TOKEN_PUNCT[] = "\"'.,!@-:;$?()/";
 
 static inline int bit_test(const unsigned char *bits, u32 c)
 {
     return c < CP_MAX && (bits[c >> 3] >> (c & 7)) & 1;
 }
 
-static inline int is_word_char(u32 c) { return bit_test(g_word_bits, c); }
-static inline int is_tok_word(u32 c) { return bit_test(g_tokw_bits, c); }
+static inline int is_word_char(u32 c)
+{
+    return c < 128 ? g_ascii_cls[c] & CL_WORD : bit_test(g_word_bits, c);
+}
+
+static inline int is_tok_word(u32 c)
+{
+    return c < 128 ? g_ascii_cls[c] & CL_TOKW : bit_test(g_tokw_bits, c);
+}
 
 static inline int is_go_space(u32 c)
 {
-    if (c < 0x80) /* ASCII fast path: \t..\r and ' ' */
-        return (c >= 0x09 && c <= 0x0D) || c == 0x20;
-    int lo = 0, hi = g_nspace - 1;
-    while (lo <= hi) {
-        int mid = (lo + hi) >> 1;
-        if (g_space[mid] == c)
-            return 1;
-        if (g_space[mid] < c)
-            lo = mid + 1;
-        else
-            hi = mid - 1;
-    }
-    return 0;
+    return c < 128 ? g_ascii_cls[c] & CL_SPACE : bit_test(g_space_bits, c);
+}
+
+/* token punctuation set — handler.py:66 _TOKEN_PUNCT (all ASCII) */
+static inline int is_tok_punct(u32 c)
+{
+    return c < 128 && (g_ascii_cls[c] & CL_PUNCT);
 }
 
 /* tag property table: open addressing on lowercase-ASCII names */
@@ -563,20 +588,11 @@ static void trim_go_space(const u32 *s, Py_ssize_t *a, Py_ssize_t *b)
         (*b)--;
 }
 
-/* token punctuation set — handler.py:66 _TOKEN_PUNCT */
-static inline int is_tok_punct(u32 c)
-{
-    switch (c) {
-    case '"': case '\'': case '.': case ',': case '!': case '@':
-    case '-': case ':': case ';': case '$': case '?': case '(':
-    case ')': case '/':
-        return 1;
-    default:
-        return 0;
-    }
-}
-
 #define INVIS 0x2063u
+/* the private-use char inside the anchor markers "$\ue00a<" and
+ * ">\ue00a$" (handler.py ANCHOR_TEXT_START/END): text typed "$<" is no
+ * marker */
+#define ANCHOR_MARK 0xE00Au
 
 /* handler.py _junction_slow: the original marker-machine regexes over a
  * junction piece with word-adjacent edge markers attached.  Appends the
@@ -727,8 +743,8 @@ static int tokenize_to_scratch(Handler *h, const u32 *s0, Py_ssize_t n0)
     return 0;
 }
 
-/* utf-8 byte length of the token buffer (handler.py:385-389): lone
- * surrogateescape surrogates (DC80-DCFF) round-trip to ONE raw byte. */
+/* utf-8 byte length (filters.py:69-73): lone surrogateescape surrogates
+ * (DC80-DCFF) round-trip to ONE raw byte. */
 static Py_ssize_t utf8_byte_len(const u32 *s, Py_ssize_t n)
 {
     Py_ssize_t b = 0;
@@ -751,6 +767,115 @@ static Py_ssize_t utf8_byte_len(const u32 *s, Py_ssize_t n)
 static PyObject *str_from_u32(const u32 *s, Py_ssize_t n)
 {
     return PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND, s, n);
+}
+
+/* the running counts of flush_block's token loop (handler.py:397-427) */
+typedef struct {
+    long num_words, num_linked_words, num_wrapped_lines, num_tokens;
+    long num_words_current_line;
+    long current_line_length;
+    int in_anchor;
+} TokCount;
+
+/* one token t[0..L) of tokenize()'s output */
+static inline void count_token(TokCount *tc, const u32 *t, Py_ssize_t L,
+                               int has_word)
+{
+    if (L == 3 && t[0] == '$' && t[1] == ANCHOR_MARK && t[2] == '<') {
+        tc->in_anchor = 1;
+        return;
+    }
+    if (L == 3 && t[0] == '>' && t[1] == ANCHOR_MARK && t[2] == '$') {
+        tc->in_anchor = 0;
+        return;
+    }
+    tc->num_tokens++;
+    if (!has_word)
+        return;
+    tc->num_words++;
+    tc->num_words_current_line++;
+    if (tc->in_anchor)
+        tc->num_linked_words++;
+    tc->current_line_length += L + 1;
+    if (tc->current_line_length > 80) { /* max line length */
+        tc->num_wrapped_lines++;
+        tc->current_line_length = L;
+        tc->num_words_current_line = 1;
+    }
+}
+
+/* Count tokenize(s) without building it, s trimmed of GO_SPACE.  Without
+ * U+2063, tokenize() only inserts ' ' at word-run edges whose non-word
+ * char is not _TOKEN_PUNCT, so its tokens are the runs of s between
+ * ' ' chars and those edges.  Returns 0, having counted nothing that
+ * matters, when s holds a U+2063: the caller then tokenizes. */
+static int count_tokens_direct(const u32 *s, Py_ssize_t n, TokCount *tc)
+{
+    Py_ssize_t t0 = -1; /* start of the current token, -1 between */
+    int has_word = 0, prev_tokw = 0, prev_punct = 0;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        u32 c = s[i];
+        int cls;
+        if (c < 128) {
+            cls = g_ascii_cls[c];
+        } else {
+            if (c == INVIS)
+                return 0;
+            cls = (bit_test(g_tokw_bits, c) ? CL_TOKW : 0) |
+                  (bit_test(g_word_bits, c) ? CL_WORD : 0);
+        }
+        if (c == ' ') {
+            if (t0 >= 0)
+                count_token(tc, s + t0, i - t0, has_word);
+            t0 = -1;
+            continue;
+        }
+        int tokw = (cls & CL_TOKW) != 0;
+        if (t0 >= 0 && tokw != prev_tokw &&
+            !(tokw ? prev_punct : (cls & CL_PUNCT))) {
+            count_token(tc, s + t0, i - t0, has_word);
+            t0 = -1;
+        }
+        if (t0 < 0) {
+            t0 = i;
+            has_word = 0;
+        }
+        has_word |= cls & CL_WORD;
+        prev_tokw = tokw;
+        prev_punct = cls & CL_PUNCT;
+    }
+    if (t0 >= 0)
+        count_token(tc, s + t0, n - t0, has_word);
+    return 1;
+}
+
+/* tokenize() into h->scratch, then its strip + split(' ') */
+static int count_tokens_split(Handler *h, const u32 *s, Py_ssize_t n,
+                              TokCount *tc)
+{
+    if (tokenize_to_scratch(h, s, n) < 0)
+        return -1;
+    Py_ssize_t a = 0, b = h->scratch.len;
+    trim_go_space(h->scratch.p, &a, &b);
+    const u32 *tk = h->scratch.p;
+    if (a >= b) {
+        tc->num_tokens = 1; /* tokenize returned [""] */
+        return 0;
+    }
+    Py_ssize_t i = a;
+    while (i < b) {
+        while (i < b && tk[i] == ' ')
+            i++;
+        if (i >= b)
+            break;
+        Py_ssize_t j = i;
+        int has_word = 0;
+        while (j < b && tk[j] != ' ')
+            has_word |= is_word_char(tk[j++]);
+        count_token(tc, tk + i, j - i, has_word);
+        i = j;
+    }
+    return 0;
 }
 
 /* handler.py:364-466 flush_block */
@@ -779,75 +904,32 @@ static int flush_block(Handler *h)
         return 0;
     }
 
-    Py_ssize_t blen = utf8_byte_len(ts, tn);
-    if (blen == 0)
-        return 0;
-    if (blen == 1 && h->last_was_whitespace) {
+    /* the buffer's utf-8 length is 1 exactly when it holds one char of
+     * one byte (every char takes at least one); it is never 0 here */
+    if (tn == 1 && (ts[0] < 0x80 || (ts[0] >= 0xDC80 && ts[0] <= 0xDCFF)) &&
+        h->last_was_whitespace) {
         h->text_buf.len = 0;
         h->token_buf.len = 0;
         return 0;
     }
 
-    if (tokenize_to_scratch(h, ts, tn) < 0)
-        return -1;
-
-    /* strip + split(' ') over scratch, counting (handler.py:397-427) */
-    Py_ssize_t a = 0, b = h->scratch.len;
-    trim_go_space(h->scratch.p, &a, &b);
-    const u32 *tk = h->scratch.p;
-
-    long num_words = 0, num_linked_words = 0, num_wrapped_lines = 0;
-    long num_tokens = 0, num_words_current_line = 0;
-    long current_line_length = -1; /* don't count the first space */
-    int in_anchor = h->in_anchor_text;
-
-    if (a >= b) {
-        /* tokenize returned [""]: one empty non-word token */
-        num_tokens = 1;
-    } else {
-        Py_ssize_t i = a;
-        while (i < b) {
-            while (i < b && tk[i] == ' ')
-                i++;
-            if (i >= b)
-                break;
-            Py_ssize_t j = i;
-            while (j < b && tk[j] != ' ')
-                j++;
-            Py_ssize_t L = j - i;
-            if (L == 2 && tk[i] == '$' && tk[i + 1] == '<') {
-                in_anchor = 1;
-            } else if (L == 2 && tk[i] == '>' && tk[i + 1] == '$') {
-                in_anchor = 0;
-            } else {
-                int has_word = 0;
-                for (Py_ssize_t t = i; t < j; t++)
-                    if (is_word_char(tk[t])) {
-                        has_word = 1;
-                        break;
-                    }
-                if (has_word) {
-                    num_tokens++;
-                    num_words++;
-                    num_words_current_line++;
-                    if (in_anchor)
-                        num_linked_words++;
-                    current_line_length += L + 1;
-                    if (current_line_length > 80) { /* max line length */
-                        num_wrapped_lines++;
-                        current_line_length = L;
-                        num_words_current_line = 1;
-                    }
-                } else {
-                    num_tokens++;
-                }
-            }
-            i = j;
-        }
+    Py_ssize_t ta = 0, tb = tn;
+    trim_go_space(ts, &ta, &tb);
+    TokCount tc = {0, 0, 0, 0, 0, -1 /* don't count the first space */,
+                   h->in_anchor_text};
+    if (ta >= tb) {
+        tc.num_tokens = 1; /* tokenize returned [""] */
+    } else if (!count_tokens_direct(ts + ta, tb - ta, &tc)) {
+        TokCount fresh = {0, 0, 0, 0, 0, -1, h->in_anchor_text};
+        tc = fresh;
+        if (count_tokens_split(h, ts, tn, &tc) < 0)
+            return -1;
     }
-    h->in_anchor_text = in_anchor;
+    h->in_anchor_text = tc.in_anchor;
+    long num_words = tc.num_words, num_linked_words = tc.num_linked_words;
+    long num_wrapped_lines = tc.num_wrapped_lines;
 
-    if (num_tokens == 0)
+    if (tc.num_tokens == 0)
         /* Go-port quirk: buffers NOT reset (content_handler.go:328-330) */
         return 0;
 
@@ -856,7 +938,7 @@ static int flush_block(Handler *h)
         num_words_in_wrapped_lines = num_words;
         num_wrapped_lines = 1;
     } else {
-        num_words_in_wrapped_lines = num_words - num_words_current_line;
+        num_words_in_wrapped_lines = num_words - tc.num_words_current_line;
     }
 
     Py_ssize_t xa = 0, xb = h->text_buf.len;
@@ -930,7 +1012,10 @@ static int add_ws_if_necessary(Handler *h)
     return 0;
 }
 
-/* handler.py:301-354 text_token; d may alias h->scratch (flush first!) */
+/* handler.py:301-354 text_token.  The spaceRemover collapse writes
+ * straight into text_buf and token_buf copies what it appended.  An
+ * all-space d collapses to nothing, and d[0] is a space then, so it
+ * takes the was_first branch of the Python fast path. */
 static int text_token(Handler *h, const u32 *d, Py_ssize_t n)
 {
     if (h->flush) {
@@ -943,79 +1028,38 @@ static int text_token(Handler *h, const u32 *d, Py_ssize_t n)
     if (n == 0)
         return 0;
 
-    /* fast path: all-whitespace tokens */
-    int all_space = 1;
-    for (Py_ssize_t i = 0; i < n; i++)
-        if (!is_go_space(d[i])) {
-            all_space = 0;
-            break;
-        }
-    if (all_space) {
-        if (!h->last_was_whitespace) {
-            if (buf_push(&h->text_buf, ' ') < 0 ||
-                buf_push(&h->token_buf, ' ') < 0)
-                return -1;
-            h->last_was_whitespace = 1;
-        }
-        return 0;
-    }
-
-    int was_first = is_go_space(d[0]);
-    int was_last = is_go_space(d[n - 1]);
-
-    /* spaceRemover: collapse runs to ' ', strip — into scratch
-     * (free here: any pending flush already consumed it above) */
-    Buf *sc = &h->scratch;
-    sc->len = 0;
-    if (buf_reserve(sc, n) < 0)
+    Buf *tb = &h->text_buf;
+    if (buf_reserve(tb, n + 1) < 0)
         return -1;
-    int pending = 0;
+    u32 *o = tb->p;
+    Py_ssize_t start = tb->len, w = start;
+    if (is_go_space(d[0]) && !h->last_was_whitespace)
+        o[w++] = ' ';
+    Py_ssize_t body = w;
+    int pending = 0; /* a space run after the first non-space char */
     for (Py_ssize_t i = 0; i < n; i++) {
         u32 c = d[i];
         if (is_go_space(c)) {
-            if (sc->len)
-                pending = 1;
+            pending = w > body;
         } else {
             if (pending) {
-                sc->p[sc->len++] = ' ';
+                o[w++] = ' ';
                 pending = 0;
             }
-            sc->p[sc->len++] = c;
+            o[w++] = c;
         }
     }
-
-    if (sc->len == 0) {
-        if (was_first || was_last) {
-            if (!h->last_was_whitespace) {
-                if (buf_push(&h->text_buf, ' ') < 0 ||
-                    buf_push(&h->token_buf, ' ') < 0)
-                    return -1;
-            }
-            h->last_was_whitespace = 1;
-        } else {
-            h->last_was_whitespace = 0;
-        }
-        return 0;
+    if (w == body) {
+        h->last_was_whitespace = 1;
+    } else {
+        if (h->depth_block_tag == -1)
+            h->depth_block_tag = h->depth_tag;
+        if (pending) /* d ends in a space */
+            o[w++] = ' ';
+        h->last_was_whitespace = pending;
     }
-
-    if (was_first && !h->last_was_whitespace) {
-        if (buf_push(&h->text_buf, ' ') < 0 ||
-            buf_push(&h->token_buf, ' ') < 0)
-            return -1;
-    }
-    if (h->depth_block_tag == -1)
-        h->depth_block_tag = h->depth_tag;
-
-    if (buf_extend(&h->text_buf, sc->p, sc->len) < 0 ||
-        buf_extend(&h->token_buf, sc->p, sc->len) < 0)
-        return -1;
-    if (was_last) {
-        if (buf_push(&h->text_buf, ' ') < 0 ||
-            buf_push(&h->token_buf, ' ') < 0)
-            return -1;
-    }
-    h->last_was_whitespace = was_last;
-    return 0;
+    tb->len = w;
+    return buf_extend(&h->token_buf, o + start, w - start);
 }
 
 /* handler.py:132 — actions that change tag level */
@@ -1038,6 +1082,7 @@ static int action_start(Handler *h, int ta, const TagEnt *e)
             if (add_ws_if_necessary(h) < 0)
                 return -1;
             if (buf_push(&h->token_buf, '$') < 0 ||
+                buf_push(&h->token_buf, ANCHOR_MARK) < 0 ||
                 buf_push(&h->token_buf, '<') < 0 ||
                 buf_push(&h->token_buf, ' ') < 0)
                 return -1;
@@ -1081,6 +1126,7 @@ static int action_end(Handler *h, int ta)
             if (add_ws_if_necessary(h) < 0)
                 return -1;
             if (buf_push(&h->token_buf, '>') < 0 ||
+                buf_push(&h->token_buf, ANCHOR_MARK) < 0 ||
                 buf_push(&h->token_buf, '$') < 0 ||
                 buf_push(&h->token_buf, ' ') < 0)
                 return -1;
@@ -1644,7 +1690,7 @@ static int read_tag(Parser *p, Py_ssize_t i, Name *nm, Py_ssize_t *end,
 }
 
 /* TEXT delivery: ld+json capture (document.py:85-88) then text_token */
-static int deliver_text(Parser *p, Handler *h, const u32 *d, Py_ssize_t n)
+static int deliver_text(Handler *h, const u32 *d, Py_ssize_t n)
 {
     if (h->in_ld_json) {
         PyObject *t = str_from_u32(d, n);
@@ -1658,14 +1704,64 @@ static int deliver_text(Parser *p, Handler *h, const u32 *d, Py_ssize_t n)
     return text_token(h, d, n);
 }
 
-/* normal text: convert newlines + text-mode unescape into text_tmp */
-static int process_text(Parser *p, Py_ssize_t a, Py_ssize_t b)
+/* The chars a text slice's scan stops at or notes (MK_LT ends normal
+ * text); a slice with none of the others is delivered as it stands. */
+#define MK_LT 1
+#define MK_AMP 2 /* an entity to unescape (normal and RCDATA text) */
+#define MK_CR 4  /* a newline to convert */
+#define MK_NUL 8 /* raw text maps NUL to U+FFFD */
+static const unsigned char TEXT_MARK[128] = {
+    [0] = MK_NUL, ['\r'] = MK_CR, ['&'] = MK_AMP, ['<'] = MK_LT,
+};
+
+/* the marks of s[i..n) up to the first '<'; returns its index or n */
+static Py_ssize_t scan_text(const u32 *s, Py_ssize_t i, Py_ssize_t n,
+                            int *marks)
 {
-    p->attr_tmp.len = 0;
-    if (convert_newlines(p->s + a, b - a, &p->attr_tmp) < 0)
-        return -1;
-    p->text_tmp.len = 0;
-    return go_unescape_u32(p->attr_tmp.p, p->attr_tmp.len, 0, &p->text_tmp);
+    int m = 0;
+    for (; i < n; i++) {
+        u32 c = s[i];
+        if (c < 128 && TEXT_MARK[c]) {
+            if (c == '<')
+                break;
+            m |= TEXT_MARK[c];
+        }
+    }
+    *marks |= m;
+    return i;
+}
+
+static int slice_marks(const u32 *s, Py_ssize_t n)
+{
+    int m = 0;
+    for (Py_ssize_t i = 0; i < n; i++)
+        if (s[i] < 128)
+            m |= TEXT_MARK[s[i]];
+    return m;
+}
+
+/* normal or RCDATA text s[a..b): convert newlines, then text-mode
+ * unescape, each only when the slice's marks call for it */
+static int deliver_slice(Parser *p, Handler *h, Py_ssize_t a, Py_ssize_t b,
+                         int marks)
+{
+    const u32 *d = p->s + a;
+    Py_ssize_t n = b - a;
+    if (marks & MK_CR) {
+        p->attr_tmp.len = 0;
+        if (convert_newlines(d, n, &p->attr_tmp) < 0)
+            return -1;
+        d = p->attr_tmp.p;
+        n = p->attr_tmp.len;
+    }
+    if (marks & MK_AMP) {
+        p->text_tmp.len = 0;
+        if (go_unescape_u32(d, n, 0, &p->text_tmp) < 0)
+            return -1;
+        d = p->text_tmp.p;
+        n = p->text_tmp.len;
+    }
+    return deliver_text(h, d, n);
 }
 
 /* the fused iter_tokens + parse_to_handler loop
@@ -1697,19 +1793,22 @@ static int run_parse(Parser *p, Handler *h)
             p->raw = NULL;
             if (end > i) {
                 p->i = end;
-                if (raw_mode) {
+                int marks = slice_marks(s + i, end - i);
+                if (!raw_mode) {
+                    if (deliver_slice(p, h, i, end, marks) < 0)
+                        return -1;
+                } else if (marks & (MK_CR | MK_NUL)) {
                     p->text_tmp.len = 0;
                     if (convert_newlines(s + i, end - i, &p->text_tmp) < 0)
                         return -1;
                     for (Py_ssize_t t = 0; t < p->text_tmp.len; t++)
                         if (p->text_tmp.p[t] == 0)
                             p->text_tmp.p[t] = 0xFFFD;
-                } else {
-                    if (process_text(p, i, end) < 0)
+                    if (deliver_text(h, p->text_tmp.p, p->text_tmp.len) < 0)
                         return -1;
-                }
-                if (deliver_text(p, h, p->text_tmp.p, p->text_tmp.len) < 0)
+                } else if (deliver_text(h, s + i, end - i) < 0) {
                     return -1;
+                }
                 continue;
             }
             /* empty raw text: fall through to normal scanning */
@@ -1717,21 +1816,19 @@ static int run_parse(Parser *p, Handler *h)
         }
 
         Py_ssize_t text_start = i;
+        int marks = 0; /* of s[text_start..j) */
         for (;;) {
-            Py_ssize_t j = find_char(s, i, n, '<');
-            if (j == -1) {
+            Py_ssize_t j = scan_text(s, i, n, &marks);
+            if (j == n) {
                 p->i = n;
-                if (text_start < n) {
-                    if (process_text(p, text_start, n) < 0 ||
-                        deliver_text(p, h, p->text_tmp.p, p->text_tmp.len) < 0)
-                        return -1;
-                }
+                if (text_start < n &&
+                    deliver_slice(p, h, text_start, n, marks) < 0)
+                    return -1;
                 return 0;
             }
             if (j + 1 >= n) {
                 p->i = n;
-                if (process_text(p, text_start, n) < 0 ||
-                    deliver_text(p, h, p->text_tmp.p, p->text_tmp.len) < 0)
+                if (deliver_slice(p, h, text_start, n, marks) < 0)
                     return -1;
                 return 0;
             }
@@ -1749,8 +1846,7 @@ static int run_parse(Parser *p, Handler *h)
             if (text_start < j) {
                 /* emit accumulated text first; re-scan the tag after */
                 p->i = j;
-                if (process_text(p, text_start, j) < 0 ||
-                    deliver_text(p, h, p->text_tmp.p, p->text_tmp.len) < 0)
+                if (deliver_slice(p, h, text_start, j, marks) < 0)
                     return -1;
                 break;
             }
@@ -1795,9 +1891,7 @@ static int run_parse(Parser *p, Handler *h)
             if (tok_end) {
                 if (j + 2 >= n) {
                     p->i = n;
-                    if (process_text(p, text_start, n) < 0 ||
-                        deliver_text(p, h, p->text_tmp.p,
-                                     p->text_tmp.len) < 0)
+                    if (deliver_slice(p, h, text_start, n, marks) < 0)
                         return -1;
                     return 0;
                 }
@@ -1948,7 +2042,8 @@ static int f_terminating_blocks(Handler *h)
         trim_go_space(tb->text, &a, &b);
         const u32 *tx = tb->text + a;
         Py_ssize_t tn = b - a;
-        if (utf8_byte_len(tx, tn) >= 8) {
+        /* every char takes at least one utf-8 byte */
+        if (tn >= 8 || utf8_byte_len(tx, tn) >= 8) {
             Buf *sc = &h->scratch;
             sc->len = 0;
             if (buf_reserve(sc, tn) < 0)
@@ -2013,59 +2108,40 @@ static int normalize_title(const u32 *s, Py_ssize_t n, Buf *out)
     return 0;
 }
 
-/* the six separator char classes (filters.py:95-105); space membership
- * only in the last one */
+/* the six separator char classes (filters.py _TITLE_SEP_SETS), each
+ * with U+00BB (») too, the last with U+00A0 too */
 static const char *SEP_SETS[6] = {
-    "|\xc2\xbb-",          /* [\|»|-]   (duplicate | collapses) */
-    "|\xc2\xbb:",
-    "|\xc2\xbb:()",
-    "|\xc2\xbb:()-",
-    "|\xc2\xbb,:()-",
-    "|\xc2\xbb,:()- ",
+    "|-", "|:", "|:()", "|:()-", "|,:()-", "|,:()-",
 };
+static unsigned char g_sep[6][128]; /* SEP_SETS as tables (init_tables) */
 
-static int sep_in_set(u32 c, int set_idx)
+static inline int sep_in_set(u32 c, int set_idx)
 {
-    /* sets contain ASCII chars + U+00BB (») */
-    if (c == 0xBB)
-        return 1;
-    if (c > 127)
-        return 0;
-    const char *p = SEP_SETS[set_idx];
-    while (*p) {
-        if ((unsigned char)*p == 0xC2) {
-            p += 2; /* skip the utf-8 » */
-            continue;
-        }
-        if ((u32)(unsigned char)*p == c)
-            return 1;
-        p++;
-    }
-    return 0;
+    if (c < 128)
+        return g_sep[set_idx][c];
+    return c == 0xBB || (c == 0xA0 && set_idx == 5);
 }
 
 /* leftmost-greedy match of "[ ]*[set][ ]*" in s[p0..n) */
 static int sep_match(const u32 *s, Py_ssize_t n, Py_ssize_t p0, int set_idx,
-                     int set_has_space, Py_ssize_t *ms, Py_ssize_t *me)
+                     Py_ssize_t *ms, Py_ssize_t *me)
 {
     for (Py_ssize_t pp = p0; pp < n; pp++) {
         Py_ssize_t k = pp;
         while (k < n && s[k] == ' ')
             k++;
-        Py_ssize_t j = -1;
-        if (k < n && sep_in_set(s[k], set_idx))
-            j = k; /* greedy: maximal spaces, then the set char */
-        else if (set_has_space && k > pp)
-            j = k - 1; /* the set char is the run's last space */
-        if (j >= 0) {
-            Py_ssize_t e = j + 1;
+        if (k < n && sep_in_set(s[k], set_idx)) {
+            /* greedy: maximal spaces, the set char, maximal spaces */
+            Py_ssize_t e = k + 1;
             while (e < n && s[e] == ' ')
                 e++;
             *ms = pp;
             *me = e;
             return 1;
         }
-        /* no match starting at pp; leftmost scan advances one char */
+        /* no match at pp, nor at any later start inside its space run,
+         * which ends at the same non-separator s[k]: resume past it */
+        pp = k;
     }
     return 0;
 }
@@ -2136,20 +2212,16 @@ static int tset_has(const TitleSet *ts, const u32 *s, Py_ssize_t n)
 static int get_longest_part(const u32 *t, Py_ssize_t n, int set_idx,
                             TitleSet *ts)
 {
-    int set_has_space = (set_idx == 5);
-    Py_ssize_t pos = 0, ms, me;
-    /* first check there is at least one separator (len(parts)==1 -> "") */
-    if (!sep_match(t, n, 0, set_idx, set_has_space, &ms, &me))
+    Py_ssize_t ms, me;
+    /* at least one separator, or len(parts) == 1 -> "" */
+    int more = sep_match(t, n, 0, set_idx, &ms, &me);
+    if (!more)
         return 0;
     long longest_num_words = 0;
     const u32 *lp = NULL;
     Py_ssize_t lplen = 0;
-    pos = 0;
-    for (;;) {
-        Py_ssize_t ps, pe;
-        int more = sep_match(t, n, pos, set_idx, set_has_space, &ms, &me);
-        ps = pos;
-        pe = more ? ms : n;
+    for (Py_ssize_t ps = 0;;) {
+        Py_ssize_t pe = more ? ms : n;
         /* part = t[ps..pe) */
         if (!u32_contains(t + ps, pe - ps, DOTCOM, 4)) {
             long nwords = word_split_count(t + ps, pe - ps);
@@ -2161,15 +2233,14 @@ static int get_longest_part(const u32 *t, Py_ssize_t n, int set_idx,
         }
         if (!more)
             break;
-        pos = me;
+        ps = me;
+        more = sep_match(t, n, ps, set_idx, &ms, &me);
     }
-    if (lp == NULL || lplen == 0)
-        return 0;
     Py_ssize_t a = 0, b = lplen;
-    trim_go_space(lp, &a, &b);
-    if (b <= a)
-        return tset_add(ts, lp, 0);
-    return tset_add(ts, lp + a, b - a);
+    if (lp != NULL)
+        trim_go_space(lp, &a, &b);
+    /* an empty part is never a potential title (filters.py: `if pot`) */
+    return b > a ? tset_add(ts, lp + a, b - a) : 0;
 }
 
 /* filters.py:131-141 _add_potential_titles (single-space split parts) */
@@ -2252,6 +2323,21 @@ static int remove_first_lead(const u32 *t, Py_ssize_t n, TitleSet *ts)
     return tset_add(ts, t + z + 2, n - (z + 2));
 }
 
+/* A lower bound on the length of both normalized forms of a block text
+ * that F2 compares: its chars that are neither space nor dropped (an
+ * apostrophe, or ?!.-: in the second form).  No char lowers into those
+ * classes.  Counting stops once the bound passes cap. */
+static Py_ssize_t title_solid_len(const u32 *s, Py_ssize_t n, Py_ssize_t cap)
+{
+    Py_ssize_t k = 0;
+    for (Py_ssize_t i = 0; i < n && k <= cap; i++) {
+        u32 c = s[i];
+        k += c < 128 ? !(g_ascii_cls[c] & (CL_SPACE | CL_TPUNCT | CL_APOS))
+                     : !bit_test(g_space_bits, c);
+    }
+    return k;
+}
+
 /* filters.py:177-202 F2 document_title_match_classifier */
 static int f_title_match(Handler *h, const u32 *title0, Py_ssize_t tn0)
 {
@@ -2278,40 +2364,34 @@ static int f_title_match(Handler *h, const u32 *title0, Py_ssize_t tn0)
     if (remove_first_lead(title.p, title.len, &ts) < 0)
         goto done;
 
+    Py_ssize_t maxlen = 0;
+    for (int i = 0; i < ts.n; i++)
+        if (ts.len[i] > maxlen)
+            maxlen = ts.len[i];
+    Buf *nb = &h->scratch;
     for (Py_ssize_t bi = 0; bi < h->nblocks; bi++) {
         CBlock *tb = h->blocks[bi];
-        Buf nb = {0};
-        if (normalize_title(tb->text, tb->text_len, &nb) < 0)
+        if (title_solid_len(tb->text, tb->text_len, maxlen) > maxlen)
+            continue; /* both forms below are longer than any title */
+        if (normalize_title(tb->text, tb->text_len, nb) < 0)
             goto done;
-        if (tset_has(&ts, nb.p, nb.len)) {
+        int hit = tset_has(&ts, nb->p, nb->len);
+        if (!hit) {
+            /* strip the title punctuation class in place, then trim */
+            Py_ssize_t m = 0;
+            for (Py_ssize_t i = 0; i < nb->len; i++) {
+                u32 c = nb->p[i];
+                if (!(c < 128 && (g_ascii_cls[c] & CL_TPUNCT)))
+                    nb->p[m++] = c;
+            }
+            Py_ssize_t a = 0, b = m;
+            trim_go_space(nb->p, &a, &b);
+            hit = tset_has(&ts, nb->p + a, b - a);
+        }
+        if (hit) {
             tb->labels[LBL_TITLE]++;
-            buf_free(&nb);
-            rc = 0;
-            goto done;
+            break;
         }
-        /* strip the title punctuation class, then trim */
-        Buf pb = {0};
-        if (buf_reserve(&pb, nb.len) < 0) {
-            buf_free(&nb);
-            goto done;
-        }
-        for (Py_ssize_t i = 0; i < nb.len; i++) {
-            u32 c = nb.p[i];
-            if (c == '?' || c == '!' || c == '.' || c == '-' || c == ':')
-                continue;
-            pb.p[pb.len++] = c;
-        }
-        Py_ssize_t a = 0, b = pb.len;
-        trim_go_space(pb.p, &a, &b);
-        if (tset_has(&ts, pb.p + a, b - a)) {
-            tb->labels[LBL_TITLE]++;
-            buf_free(&pb);
-            buf_free(&nb);
-            rc = 0;
-            goto done;
-        }
-        buf_free(&pb);
-        buf_free(&nb);
     }
     rc = 0;
 done:
@@ -2640,12 +2720,6 @@ static int set_ranges(unsigned char *bits, PyObject *ranges)
     return 0;
 }
 
-static int cmp_u32(const void *a, const void *b)
-{
-    u32 x = *(const u32 *)a, y = *(const u32 *)b;
-    return x < y ? -1 : x > y ? 1 : 0;
-}
-
 static int mark_names(PyObject *names, int prop, int action)
 {
     PyObject *seq = PySequence_Fast(names, "names must be a sequence");
@@ -2677,7 +2751,7 @@ static int mark_names(PyObject *names, int prop, int action)
     return 0;
 }
 
-static PyObject *py_init_tables(PyObject *self, PyObject *args)
+static PyObject *py_init_tables(PyObject *Py_UNUSED(self), PyObject *args)
 {
     PyObject *cfg;
     if (!PyArg_ParseTuple(args, "O!", &PyDict_Type, &cfg))
@@ -2689,7 +2763,8 @@ static PyObject *py_init_tables(PyObject *self, PyObject *args)
     if (!g_word_bits) {
         g_word_bits = (unsigned char *)PyMem_Calloc(CP_MAX / 8 + 1, 1);
         g_tokw_bits = (unsigned char *)PyMem_Calloc(CP_MAX / 8 + 1, 1);
-        if (!g_word_bits || !g_tokw_bits)
+        g_space_bits = (unsigned char *)PyMem_Calloc(CP_MAX / 8 + 1, 1);
+        if (!g_word_bits || !g_tokw_bits || !g_space_bits)
             return PyErr_NoMemory();
     }
 
@@ -2718,16 +2793,22 @@ static PyObject *py_init_tables(PyObject *self, PyObject *args)
         g_tokw_bits[c >> 3] |= (unsigned char)(1u << (c & 7));
     g_tokw_bits['_' >> 3] |= (unsigned char)(1u << ('_' & 7));
 
-    /* GO_SPACE codepoints (sorted) */
-    Py_ssize_t gn = PyUnicode_GET_LENGTH(go_space);
-    if (gn > 64) {
-        PyErr_SetString(PyExc_ValueError, "go_space too large");
-        return NULL;
+    for (Py_ssize_t i = 0; i < PyUnicode_GET_LENGTH(go_space); i++) {
+        u32 c = (u32)PyUnicode_READ_CHAR(go_space, i);
+        g_space_bits[c >> 3] |= (unsigned char)(1u << (c & 7));
     }
-    g_nspace = (int)gn;
-    for (Py_ssize_t i = 0; i < gn; i++)
-        g_space[i] = (u32)PyUnicode_READ_CHAR(go_space, i);
-    qsort(g_space, (size_t)g_nspace, sizeof(u32), cmp_u32);
+
+    for (u32 c = 0; c < 128; c++)
+        g_ascii_cls[c] = (unsigned char)(
+            (bit_test(g_space_bits, c) ? CL_SPACE : 0) |
+            (bit_test(g_tokw_bits, c) ? CL_TOKW : 0) |
+            (bit_test(g_word_bits, c) ? CL_WORD : 0) |
+            (strchr(TOKEN_PUNCT, (int)c) && c ? CL_PUNCT : 0) |
+            (strchr("?!.-:", (int)c) && c ? CL_TPUNCT : 0) |
+            (c == '\'' ? CL_APOS : 0));
+    for (int si = 0; si < 6; si++)
+        for (const char *q = SEP_SETS[si]; *q; q++)
+            g_sep[si][(unsigned char)*q] = 1;
 
     Py_INCREF(entities);
     g_entities = entities;
@@ -2840,86 +2921,115 @@ static PyObject *blocks_to_py(Handler *h)
     return lst;
 }
 
+/* Go html.EscapeString: the extra chars each escaped ASCII char takes
+ * & -> &amp;  ' -> &#39;  " -> &#34;  (+4),  < -> &lt;  > -> &gt;  (+3) */
+static const unsigned char ESC_EXTRA[128] = {
+    ['&'] = 4, ['\''] = 4, ['"'] = 4, ['<'] = 3, ['>'] = 3,
+};
+
+static inline int is_strip_nl(u32 c) { return c == ' ' || c == '\n'; }
+
+/* write the escaped content into the str's data: the content blocks
+ * [b0..b1] from b0's char lo to b1's char hi, '\n'-joined */
+#define RENDER_INTO(T)                                                     \
+    do {                                                                   \
+        T *o = (T *)PyUnicode_DATA(res);                                   \
+        for (Py_ssize_t i = b0; i <= b1; i++) {                            \
+            const CBlock *cb = h->blocks[i];                               \
+            if (!cb->is_content)                                           \
+                continue;                                                  \
+            if (i > b0)                                                    \
+                *o++ = '\n';                                               \
+            Py_ssize_t e = i == b1 ? hi : cb->text_len;                    \
+            for (Py_ssize_t k = i == b0 ? lo : 0; k < e; k++) {            \
+                u32 c = cb->text[k];                                       \
+                const char *rep = NULL;                                    \
+                if (c < 128 && ESC_EXTRA[c])                               \
+                    rep = c == '&'    ? "&amp;"                            \
+                          : c == '\'' ? "&#39;"                            \
+                          : c == '"'  ? "&#34;"                            \
+                          : c == '<'  ? "&lt;"                             \
+                                      : "&gt;";                            \
+                if (rep)                                                   \
+                    while (*rep)                                           \
+                        *o++ = (T)*rep++;                                  \
+                else                                                       \
+                    *o++ = (T)c;                                           \
+            }                                                              \
+        }                                                                  \
+    } while (0)
+
 /* Content() rendered straight from the filtered block array
  * (boilerpipe.go:76-106 Text(true,false) + Go html.EscapeString):
  * '\n'-join of is_content texts, strip ' '/'\n' at both ends, escape
  * & ' < > " exactly like document.py go_escape_string. Skips the
  * per-block Python tuples and TextBlock objects entirely — the Spark
- * hot path only needs (content, n_blocks, n_content). */
+ * hot path only needs (content, n_blocks, n_content).  One pass counts
+ * the escaped length and the largest char, the second writes into a
+ * str of that size and kind: the joined text is never materialized. */
 static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
 {
-    Py_ssize_t total = 0;
-    long nb = 0, nc = 0;
+    /* the stripped span: content block b0 from char lo to b1's char hi */
+    Py_ssize_t b0 = -1, b1 = -1, lo = 0, hi = 0;
+    long nc = 0;
     for (Py_ssize_t i = 0; i < h->nblocks; i++) {
-        nb++;
-        if (h->blocks[i]->is_content) {
-            if (nc)
-                total += 1; /* '\n' separator */
-            total += h->blocks[i]->text_len;
-            nc++;
-        }
-    }
-    *n_blocks = nb;
-    *n_content = nc;
-    u32 *buf = (u32 *)PyMem_Malloc((size_t)(total ? total : 1) * sizeof(u32));
-    if (!buf) {
-        PyErr_NoMemory();
-        return NULL;
-    }
-    Py_ssize_t w = 0;
-    for (Py_ssize_t i = 0; i < h->nblocks; i++) {
-        CBlock *cb = h->blocks[i];
+        const CBlock *cb = h->blocks[i];
         if (!cb->is_content)
             continue;
-        if (w)
-            buf[w++] = '\n';
-        memcpy(buf + w, cb->text, (size_t)cb->text_len * sizeof(u32));
-        w += cb->text_len;
+        nc++;
+        Py_ssize_t k = 0;
+        if (b0 < 0) {
+            while (k < cb->text_len && is_strip_nl(cb->text[k]))
+                k++;
+            if (k == cb->text_len)
+                continue; /* all of it stripped, separators too */
+            b0 = i;
+            lo = k;
+        }
+        for (k = cb->text_len; k > 0 && is_strip_nl(cb->text[k - 1]); k--)
+            ;
+        if (k > (i == b0 ? lo : 0)) {
+            b1 = i;
+            hi = k;
+        }
     }
-    /* Python str.strip(" \n") */
-    Py_ssize_t a = 0, b = w;
-    while (a < b && (buf[a] == ' ' || buf[a] == '\n'))
-        a++;
-    while (b > a && (buf[b - 1] == ' ' || buf[b - 1] == '\n'))
-        b--;
-    /* escape: & -> &amp; (5)  ' -> &#39; (5)  " -> &#34; (5)
-     *         < -> &lt; (4)   > -> &gt; (4) */
+    *n_blocks = (long)h->nblocks;
+    *n_content = nc;
+    if (b0 < 0)
+        return PyUnicode_New(0, 0);
+
     Py_ssize_t out_n = 0;
-    for (Py_ssize_t i = a; i < b; i++) {
-        switch (buf[i]) {
-        case '&': case '\'': case '"': out_n += 5; break;
-        case '<': case '>': out_n += 4; break;
-        default: out_n += 1;
+    u32 maxc = 0;
+    for (Py_ssize_t i = b0; i <= b1; i++) {
+        const CBlock *cb = h->blocks[i];
+        if (!cb->is_content)
+            continue;
+        if (i > b0) {
+            out_n++; /* '\n' */
+            maxc = maxc > '\n' ? maxc : '\n';
+        }
+        Py_ssize_t e = i == b1 ? hi : cb->text_len;
+        Py_ssize_t k = i == b0 ? lo : 0;
+        out_n += e - k;
+        for (; k < e; k++) {
+            u32 c = cb->text[k];
+            out_n += c < 128 ? ESC_EXTRA[c] : 0;
+            maxc = maxc > c ? maxc : c;
         }
     }
-    u32 *out = (u32 *)PyMem_Malloc(
-        (size_t)(out_n ? out_n : 1) * sizeof(u32));
-    if (!out) {
-        PyMem_Free(buf);
-        PyErr_NoMemory();
+    PyObject *res = PyUnicode_New(out_n, maxc);
+    if (!res)
         return NULL;
+    switch (PyUnicode_KIND(res)) {
+    case PyUnicode_1BYTE_KIND:
+        RENDER_INTO(Py_UCS1);
+        break;
+    case PyUnicode_2BYTE_KIND:
+        RENDER_INTO(Py_UCS2);
+        break;
+    default:
+        RENDER_INTO(Py_UCS4);
     }
-    Py_ssize_t k = 0;
-    for (Py_ssize_t i = a; i < b; i++) {
-        u32 c = buf[i];
-        const char *rep = NULL;
-        switch (c) {
-        case '&': rep = "&amp;"; break;
-        case '\'': rep = "&#39;"; break;
-        case '"': rep = "&#34;"; break;
-        case '<': rep = "&lt;"; break;
-        case '>': rep = "&gt;"; break;
-        }
-        if (rep) {
-            for (const char *q = rep; *q; q++)
-                out[k++] = (u32)*q;
-        } else {
-            out[k++] = c;
-        }
-    }
-    PyObject *res = str_from_u32(out, k);
-    PyMem_Free(buf);
-    PyMem_Free(out);
     return res;
 }
 
@@ -3025,7 +3135,7 @@ static PyObject *run_document(PyObject *html, int mode, PyObject *resolve)
     return result;
 }
 
-static PyObject *py_parse(PyObject *self, PyObject *args)
+static PyObject *py_parse(PyObject *Py_UNUSED(self), PyObject *args)
 {
     PyObject *html;
     if (!PyArg_ParseTuple(args, "U", &html))
@@ -3033,7 +3143,7 @@ static PyObject *py_parse(PyObject *self, PyObject *args)
     return run_document(html, MODE_PARSE, NULL);
 }
 
-static PyObject *py_extract(PyObject *self, PyObject *args)
+static PyObject *py_extract(PyObject *Py_UNUSED(self), PyObject *args)
 {
     PyObject *html, *resolve;
     if (!PyArg_ParseTuple(args, "UO", &html, &resolve))
@@ -3041,7 +3151,7 @@ static PyObject *py_extract(PyObject *self, PyObject *args)
     return run_document(html, MODE_BLOCKS, resolve);
 }
 
-static PyObject *py_extract_content(PyObject *self, PyObject *args)
+static PyObject *py_extract_content(PyObject *Py_UNUSED(self), PyObject *args)
 {
     PyObject *html, *resolve;
     if (!PyArg_ParseTuple(args, "UO", &html, &resolve))
@@ -3068,7 +3178,7 @@ static PyMethodDef ckernel_methods[] = {
 static struct PyModuleDef ckernel_module = {
     PyModuleDef_HEAD_INIT, "_ckernel",
     "Compiled boilerpipe kernel hot path (see module docstring in the .c).",
-    -1, ckernel_methods,
+    -1, ckernel_methods, NULL, NULL, NULL, NULL,
 };
 
 PyMODINIT_FUNC PyInit__ckernel(void)

@@ -92,17 +92,12 @@ def terminating_blocks(doc) -> bool:
 
 # -- F2 DocumentTitleMatchClassifier (filter.go:130-267) ----------------------
 
-_TITLE_SEP_PATTERNS = [
-    re.compile(p)
-    for p in (
-        "[ ]*[\\|»|-][ ]*",
-        "[ ]*[\\|»|:][ ]*",
-        "[ ]*[\\|»|:\\(\\)][ ]*",
-        "[ ]*[\\|»|:\\(\\)\\-][ ]*",
-        "[ ]*[\\|»|,|:\\(\\)\\-][ ]*",
-        "[ ]*[\\|»|,|:\\(\\)\\- ][ ]*",
-    )
-]
+# filter.go's six separator patterns, "[ ]*[\|»|-][ ]*" up to
+# "[ ]*[\|»|,|:\(\)\-\xa0][ ]*", as the char sets their classes match (the
+# duplicate '|' collapses; the last set's NBSP never meets a normalized
+# title, which holds spaces instead); _split_title splits on them.
+_TITLE_SEP_SETS = ("|»-", "|»:", "|»:()", "|»:()-", "|»,:()-", "|»,:()-\xa0")
+
 # Go source "[\b ]+": \b in a Go string literal is the backspace character.
 _RE_WORD_SPLIT = re.compile("[\x08 ]+")
 _RE_TITLE_PUNCT = re.compile("[\\?\\!\\.\\-\\:]+")
@@ -110,8 +105,36 @@ _RE_REMOVE_TRAIL = re.compile(" - [^\\-]+$")
 _RE_REMOVE_LEAD = re.compile("^[^\\-]+ - ")
 
 
-def _get_longest_part(title: str, pattern) -> str:
-    parts = pattern.split(title)
+def _split_title(title: str, seps: str) -> list:
+    """``re.split("[ ]*[seps][ ]*", title)`` in one linear scan; ``seps``
+    holds no space.
+
+    A match that starts in a run of spaces needs a separator right after
+    the run. So when the char after a run is none, no match starts
+    anywhere in the run and the scan skips it whole. A backtracking regex
+    retries the run from every start, quadratic in its length (Go's RE2
+    is linear)."""
+    n = len(title)
+    parts = []
+    start = i = 0
+    while i < n:
+        k = i
+        while k < n and title[k] == " ":
+            k += 1
+        if k == n or title[k] not in seps:
+            i = k + 1
+            continue
+        e = k + 1  # greedy: the whole run, the separator, the next run
+        while e < n and title[e] == " ":
+            e += 1
+        parts.append(title[start:i])
+        start = i = e
+    parts.append(title[start:])
+    return parts
+
+
+def _get_longest_part(title: str, seps: str) -> str:
+    parts = _split_title(title, seps)
     if len(parts) == 1:
         return ""
     longest_num_words = 0
@@ -182,8 +205,8 @@ def document_title_match_classifier(doc) -> bool:
         return False
 
     potential = {title}
-    for pat in _TITLE_SEP_PATTERNS:
-        pot = _get_longest_part(title, pat)
+    for seps in _TITLE_SEP_SETS:
+        pot = _get_longest_part(title, seps)
         if pot:
             potential.add(pot)
     _add_potential_titles(potential, title, 4)

@@ -269,16 +269,22 @@ def sign_lsh_buckets_multiprobe(vec, h: int = 8, flips: int = 1):
     h+1+C(h,2) probes; still a vanishing fraction of the 2^h buckets).
     The XOR masks are distinct, so the probes are too."""
     base = sign_lsh_bucket_batched(vec, h)
-    probes = [base]
+    return F.array(*[_xor(base, m) for m in _probe_masks(h, flips)])
+
+
+def _probe_masks(h: int, flips: int) -> list:
+    """The XOR masks of the probes within ``flips`` bit flips, 0 first."""
+    masks = [0]
     if flips >= 1:
-        probes += [base.bitwiseXOR(F.lit(2 ** i)) for i in range(h)]
+        masks += [2 ** i for i in range(h)]
     if flips >= 2:
-        probes += [
-            base.bitwiseXOR(F.lit((2 ** i) | (2 ** j)))
-            for i in range(h)
-            for j in range(i + 1, h)
-        ]
-    return F.array(*probes)
+        masks += [(2 ** i) | (2 ** j)
+                  for i in range(h) for j in range(i + 1, h)]
+    return masks
+
+
+def _xor(bucket, mask: int):
+    return bucket if mask == 0 else bucket.bitwiseXOR(F.lit(mask))
 
 
 def with_lsh_bucket(
@@ -394,14 +400,33 @@ def cosine_topk(
     )
 
     probes = None
+    lsh_arms = [(method, flips) for method, kind, flips in arms
+                if kind == "lsh"]
+    if lsh_arms:
+        # every lsh arm probes XOR masks of the same query bucket: one
+        # bucket expression feeds one branch of (method, key) pairs
+        qb = queries.select(
+            QUERY_ID_COL, QUERY_VEC_COL,
+            sign_lsh_bucket_batched(F.col(QUERY_VEC_COL), h).alias("_qb"),
+        )
+        pairs = F.explode(F.array(*[
+            F.struct(F.lit(method).alias("method"),
+                     _xor(F.col("_qb"), m).cast("long").alias("_key"))
+            for method, flips in lsh_arms
+            for m in _probe_masks(h, flips)
+        ])).alias("_p")
+        probes = qb.select(QUERY_ID_COL, QUERY_VEC_COL, pairs).select(
+            F.col("_p.method").alias("method"),
+            F.col(QUERY_ID_COL), F.col(QUERY_VEC_COL),
+            F.lit(_KEY_TAG["lsh"]).alias("_kt"),
+            F.col("_p._key").alias("_key"),
+        )
     for method, kind, param in arms:
+        if kind == "lsh":
+            continue
         q = queries
         if kind == "exact":
             key = F.lit(0).cast("long")
-        elif kind == "lsh":
-            key = F.explode(sign_lsh_buckets_multiprobe(
-                F.col(QUERY_VEC_COL), h, param
-            ).cast("array<bigint>"))
         else:
             q = queries.crossJoin(cents).select(
                 "*", _sq_norm_root(F.col(QUERY_VEC_COL)).alias("_vn")

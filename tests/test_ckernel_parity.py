@@ -528,3 +528,152 @@ def test_extract_from_zip_rejects_planted_so(monkeypatch, tmp_path):
     assert ckernel._extract_from_zip() is not None
     assert so.stat().st_mtime_ns == before
     assert (d.stat().st_mode & 0o777) == 0o700
+
+
+# Targeted parity for the kernel's fast paths: each case runs through
+# both kernels as a raw block stream, a filtered block list (flags and
+# labels) and extract_content.
+
+_WORDS = "word " * 30
+
+
+def _assert_paths_identical(cases):
+    from go_boilerpipe_spark.kernel.document import (
+        extract_article,
+        extract_content,
+    )
+
+    for html in cases:
+        assert_same(html, html[:60])
+        assert (_doc_fingerprint(extract_article(html))
+                == _doc_fingerprint(_pure_extract(html))), html[:80]
+        assert extract_content(html) == _pure_content_tuple(html), html[:80]
+
+
+def test_text_delivery_paths_identical():
+    # a text slice reaches text_token as it stands unless it holds '&'
+    # (unescape) or '\r' (newline conversion); spaces collapse into the
+    # text buffer
+    _assert_paths_identical([
+        "<body><p>plain slice " + _WORDS + "</p></body>",
+        "<body><p>amp &amp; slice " + _WORDS + "</p></body>",
+        "<body><p>cr\rslice\r\nand crlf " + _WORDS + "</p></body>",
+        "<body><p>both &lt;\r\n&gt; " + _WORDS + "\r</p></body>",
+        "<body><p>&amp;" + _WORDS + "&gt;</p><p>&nbsp;x&#65;</p></body>",
+        "<body><p>ends in a bare &</p><p>&amp</p><p>&#</p></body>",
+        "<body><p>\r\n</p><p>\r</p><p>  </p><p> \t\n </p>" + _WORDS
+        + "</body>",
+        "<body><p> lead</p><p>trail </p><p> both </p><p>a <b> b </b> c"
+        "</p></body>",
+        "<body><p>x\xa0<a href=y>\xa0nbsp link\xa0</a>\xa0y " + _WORDS
+        + "</p></body>",
+        "<body><p>x　<a href=y>　ideo link　</a>　y "
+        + _WORDS + "</p></body>",
+        "<body><p>　\xa0</p><a href=y>\xa0</a><p>　" + _WORDS
+        + "　</p></body>",
+        "<title>\r\nT &amp; \rU</title><body><textarea>a &lt;\r\nb"
+        "</textarea><p>" + _WORDS + "</p></body>",
+        "<body><xmp>raw\r\nx\x00y &amp;</xmp><p>" + _WORDS + "</p></body>",
+        '<script type="application/ld+json">{"@type":"Article",\r\n'
+        '"headline":"H &amp; \x00"}</script><body><p>' + _WORDS
+        + "</p></body>",
+    ])
+
+
+def test_token_count_paths_identical():
+    # flush_block counts tokens while walking tokenize()'s junctions; a
+    # buffer holding U+2063 still tokenizes and splits
+    long_words = " ".join("w%03d" % i for i in range(60))
+    _assert_paths_identical([
+        "<body><p>no marker here " + _WORDS + "</p></body>",
+        "<body><p>a⁣b ⁣ c⁣.d " + _WORDS + "</p></body>",
+        "<body><p>⁣</p><p>⁣⁣ .</p><p>x⁣</p></body>",
+        "<body><p>typed $< and >$ markers " + _WORDS + " $<</p></body>",
+        "<body><p>$< words >$ <a href=x>$< in >$</a> >$ " + _WORDS
+        + "</p></body>",
+        "<body><p>(paren) \"quote\" a.b,c!d@e-f:g;h$i?j/k 'l' ..x.. "
+        + _WORDS + "</p></body>",
+        "<body><p>a<b>.</b>b a+b a+ +b a*b*c #x x# %y% " + _WORDS
+        + "</p></body>",
+        "<body><p>_ __ a_b _a b_ _1_ 1_2 " + _WORDS + "</p></body>",
+        "<body><p>" + long_words + " " + "x" * 100 + " " + long_words
+        + "</p></body>",
+        "<body><p>中文字符 混合 text, 日本語の文章。한국어 " + _WORDS
+        + "</p></body>",
+        "<body><p>Ⅻ ½ ²³ ١٢٣ word́s " + _WORDS + "</p></body>",
+        "<body><p>" + _WORDS + "<a href=x>linked words here and more "
+        "linked words</a> tail</p></body>",
+    ])
+
+
+def test_title_separator_classes_identical():
+    # F2 splits the title on six separator classes and matches block texts
+    # against the parts; blocks that match and blocks that do not
+    titles = [
+        "Left part here | Site", "Left part here » Site",
+        "Left part here - Site", "Left part here : Site",
+        "Left (part here) Site", "Left part here, Site",
+        "Left  part   here    Site", "Left\xa0part here\xa0|\xa0Site",
+        "Don't 'stop' | Site's", "example.com | Left part here",
+        "a|||b", "| lead sep", "trail sep |", "x » y » z » w",
+        "Part one - part two - part three",
+    ]
+    blocks = ["left part here", "site", "part here", "left", "y",
+              "dont stop", "x", "part two", "no match at all"]
+    cases = []
+    for t in titles:
+        for b in blocks:
+            cases.append("<title>%s</title><body><p>%s</p><p>%s</p></body>"
+                         % (t, b, _WORDS))
+    # an ld+json headline is not space-collapsed: a part of only tabs
+    # trims to nothing and is no potential title, so a block that
+    # normalizes to nothing is no title
+    cases.append(
+        '<script type="application/ld+json">{"@type":"Article",'
+        '"headline":"a|\\t\\t|b"}</script><body><p>\'</p><p>%s</p></body>'
+        % _WORDS)
+    _assert_paths_identical(cases)
+
+
+def test_render_kinds_identical():
+    # Content() is written straight into a str of the kind its largest
+    # char needs, each escaped char widened in place
+    esc = " &amp; &#39; &lt; &gt; &quot; "
+    cases = [
+        "<body><p>%s%s%s</p></body>" % (_WORDS, esc, extra)
+        for extra in ("ascii", "caf\xe9", "€ uro", "\U0001f600 smile",
+                      "bad \udc80\udcff bytes")
+    ]
+    cases.append(b"<body><p>" + _WORDS.encode() + esc.encode()
+                 + b"\xff\xfe bytes</p></body>")
+    cases = [c.decode("utf-8", "surrogateescape") if isinstance(c, bytes)
+             else c for c in cases]
+    _assert_paths_identical(cases)
+
+
+def _hostile_pages(n):
+    headline = ('<script type="application/ld+json">{"@type":"Article",'
+                '"headline":"a%sb"}</script>' % (" " * n))
+    body = "<body><p>a b</p><p>%s</p></body>" % _WORDS
+    title = "<title>a%s b</title>" % (" '" * n)
+    return [headline + body, title + body]
+
+
+def test_hostile_title_space_run_is_linear():
+    # a space run in the title that no separator follows: no separator
+    # match can start inside it, so both kernels skip it whole instead of
+    # retrying it from every position
+    import time
+
+    from go_boilerpipe_spark.kernel.document import extract_content
+
+    for html in _hostile_pages(32000):
+        t0 = time.perf_counter()
+        c = extract_content(html)
+        assert time.perf_counter() - t0 < 0.2
+    for html in _hostile_pages(8000):
+        t0 = time.perf_counter()
+        p = _pure_content_tuple(html)
+        assert time.perf_counter() - t0 < 0.5
+        assert extract_content(html) == p
+    assert c[3]  # the page still extracts
