@@ -13,6 +13,7 @@ The 12k-doc corpus differential runs in scripts/ckernel_corpus_diff.py
 (invoked by bench verification), not here.
 """
 
+import pathlib
 import random
 
 import pytest
@@ -26,6 +27,9 @@ from go_boilerpipe_spark.kernel.document import (
     parse_to_handler,
 )
 from go_boilerpipe_spark.kernel.rfc3339 import parse_rfc3339
+from tests.golden_inputs import needs_reference_html, reference_html
+
+GOLDEN = pathlib.Path(__file__).parent / "fixtures" / "golden"
 
 ck = ckernel.load()
 
@@ -74,21 +78,23 @@ def assert_same(html, note=""):
         assert a == b, (note, "block", k, a, b)
 
 
+@needs_reference_html(*range(7))
 def test_goldens_identical_block_streams():
     for i in range(7):
-        html = open(f"/root/reference/testdata/{i}.html", "rb").read()
+        html = reference_html(i).read_bytes()
         assert_same(html.decode("utf-8", "surrogateescape"), f"golden {i}")
 
 
+@needs_reference_html(*range(7))
 def test_goldens_bytewise_content_through_c():
     # the normative gate run through the C path explicitly
     from go_boilerpipe_spark.kernel.document import _CK, extract_article
 
     assert _CK is not None, "C kernel must be active in this test run"
     for i in range(7):
-        html = open(f"/root/reference/testdata/{i}.html", "rb").read()
+        html = reference_html(i).read_bytes()
         doc = extract_article(html)
-        exp = open(f"tests/fixtures/golden/{i}.content.txt", "rb").read()
+        exp = (GOLDEN / f"{i}.content.txt").read_bytes()
         assert doc.content().encode() == exp, f"golden {i} byte diff"
 
 

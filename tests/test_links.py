@@ -7,6 +7,7 @@ href values, and crawl-junk robustness.
 """
 
 from go_boilerpipe_spark.kernel.links import page_links
+from tests.golden_inputs import needs_reference_html, reference_html
 
 
 def test_basic_resolution_and_order():
@@ -77,10 +78,11 @@ def test_crawl_junk_never_raises():
     assert page_links("<a href=") == []
 
 
+@needs_reference_html(1)
 def test_golden_doc_counts_stable():
     # doc 1 of the reference corpus: 128 anchors, all resolving against
     # the page url, the first being the weather link
-    html = open("/root/reference/testdata/1.html", "rb").read().decode("utf-8")
+    html = reference_html(1).read_bytes().decode("utf-8")
     got = page_links(html, "https://lasvegassun.com/news/2017/apr/20/x/")
     assert len(got) == 128
     assert got[0] == (

@@ -20,6 +20,7 @@ from go_boilerpipe_spark.sources.pages import (
     write_pages_table,
 )
 from go_boilerpipe_spark.spark_session import build_session
+from tests.golden_inputs import needs_reference_html
 from tests.page_set import page_rows, write_page_set
 
 
@@ -56,13 +57,21 @@ def page_set(tmp_path_factory):
     return path, with_html, null_html
 
 
-def test_skew_mode_urls_stay_unique(spark):
+def test_skew_mode_urls_stay_unique(spark, tmp_path, monkeypatch):
     # ADVICE r1: skew mode remapped d but kept k=id//7, colliding on (d,k)
+    # urls come from meta.json's base urls and the replica counter only, so
+    # placeholder html stands in for the reference inputs
+    for i in range(7):
+        (tmp_path / f"{i}.html").write_bytes(b"<html><body>%d</body></html>" % i)
+    monkeypatch.setattr(
+        "go_boilerpipe_spark.sources.pages.REF_TESTDATA", tmp_path
+    )
     pages = synthesize_pages(spark, 200, skew=True, partitions=4)
     assert pages.select("url").distinct().count() == 200
 
 
 class TestExtractOperator:
+    @needs_reference_html(*range(7))
     def test_golden_parity_through_spark(self, spark, corpus):
         pages = spark.read.parquet(corpus).filter(F.col("html").isNotNull())
         extracted = extract_articles(pages)
