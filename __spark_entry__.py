@@ -372,23 +372,15 @@ def _q_dedup_simhash(spark, sf):
 
 
 def _q_near_dup_jaccard(spark, sf):
-    # candidate pairs are MATERIALIZED (persist) so the verify stage can
-    # left-semi prune the shingle-set computation to candidate docs only
-    # (jaccard_verify_pairs docstring: the normal 100-TB shape) — without
-    # the prune the interpreted shingle-set HOFs run over the FULL corpus
-    # twice (once per join side)
-    # lazy pairs + candidate prune: since the band self-join went
-    # shuffle-based (merge hint), the three pairs references resolve to
-    # ONE computation via exchange reuse, and the prune keeps the
-    # interpreted shingle-set HOFs off the full corpus (A/B at sf1.0:
-    # lazy+prune 3.4 s, eager-checkpoint+prune 5.0 s, lazy no-prune
-    # 5.7 s; a persist() would leak into later identical minhash plans
-    # via the cache manager and was rejected as unfair to the bench)
+    # lazy pairs: since the band self-join went shuffle-based (merge
+    # hint), the three pairs references of the verify stage's candidate
+    # prune resolve to ONE computation via exchange reuse (A/B at sf1.0:
+    # lazy 3.4 s, eager checkpoint 5.0 s; a persist() would leak into
+    # later identical minhash plans via the cache manager and was
+    # rejected as unfair to the bench)
     docs = _t(spark, sf, "documents", spread=True)
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=4)
-    return dedup.jaccard_verify_pairs(
-        docs, pairs, threshold=0.5, prune_candidates=True
-    )
+    return dedup.jaccard_verify_pairs(docs, pairs, threshold=0.5)
 
 
 def _q_lang_id(spark, sf):

@@ -8,7 +8,8 @@ verify values at small scale.
 
 from __future__ import annotations
 
-import pandas as pd
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -25,6 +26,29 @@ LANG_MARKERS = {
     "es": ("el", "los", "las", "es", "una", "que", "en", "por", "con",
            "para", "del", "se", "su", "como", "más"),
 }
+
+
+# Java's default ``\s``: the ASCII class [ \t\n\x0b\f\r]
+_JAVA_WS = re.compile(r"\s+", re.ASCII)
+
+
+def java_tokens(text: str) -> list:
+    """``split(trim(text), '\\s+')`` as the JVM evaluates it, the
+    tokenization every text kernel shares. ``trim`` strips ASCII spaces
+    only, so a leading or trailing tab survives and yields an empty first
+    or last token; ``\\s`` is the ASCII class, so NBSP is not a
+    separator while ``\\x0b``, ``\\f`` and ``\\r`` are. Empty and
+    all-space text give one ``''`` token."""
+    return _JAVA_WS.split(text.strip(" "))
+
+
+def shingles(tokens: list, n: int) -> list:
+    """The space-joined runs of ``n`` consecutive ``tokens``, in order and
+    with repeats; fewer than ``n`` tokens give one whole-document
+    shingle. Kernels that need the distinct set take ``set()`` of it."""
+    if len(tokens) < n:
+        return [" ".join(tokens)]
+    return [" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)]
 
 
 def padded_lc(text: Column) -> Column:
@@ -59,17 +83,13 @@ def _marker_hits(padded: Column, words) -> Column:
     return F.regexp_count(padded, F.lit(pat)).cast("int")
 
 
-_LANGID_UDF = None
+def _langid():
+    """Heuristic language ID of one document (guide §4.2: one Python
+    pass per document instead of four Java-regex scans per row): a
+    CJK-ratio gate, then a marker-word argmax. Returns a language code
+    string ('und' when nothing matches).
 
-
-def _langid_kernel_factory():
-    """Heuristic language ID as an Arrow batch kernel (guide §4.2: hand
-    whole batches to native code instead of four Java-regex scans per
-    row): a CJK-ratio gate, then a marker-word argmax. Returns a language
-    code string ('und' when nothing matches).
-
-    - tokens: an ASCII-``\\s`` split of the lowercased text (Java's
-      default ``\\s`` == Python ``re.ASCII`` ``\\s``); a token counts
+    - tokens: :func:`java_tokens` of the lowercased text; a token counts
       for every language whose LANG_MARKERS set holds it;
     - casing: ``str.lower()`` implements Unicode default+special casing,
       like the JVM's Locale.ROOT lowercasing;
@@ -81,52 +101,40 @@ def _langid_kernel_factory():
     Frozen test rows pin the edges (NULL, empty, whitespace runs, CJK,
     non-ASCII casing, ties) and the ``lang_id`` DuckDB twin pins the
     query."""
-    import re
-
-    ws = re.compile(r"\s+", re.ASCII)
     codes = list(LANG_MARKERS)
     lookup: dict = {}
     for i, (_, words) in enumerate(LANG_MARKERS.items()):
         for w in words:
             lookup.setdefault(w, []).append(i)
     n_codes = len(codes)
+    get = lookup.get
 
-    def kernel(texts: pd.Series) -> pd.Series:
-        out = []
-        get = lookup.get
-        for t in texts:
-            if t is None:
-                out.append("und")
-                continue
-            counts = [0] * n_codes
-            for tok in ws.split(t.lower()):
-                idxs = get(tok)
-                if idxs is not None:
-                    for i in idxs:
-                        counts[i] += 1
-            best_code, best = "und", 0
-            for i in range(n_codes):
-                if counts[i] > best:
-                    best, best_code = counts[i], codes[i]
-            if not t.isascii():
-                cjk = sum(1 for ch in t if "\u4e00" <= ch <= "\u9fff")
-                if cjk * 5 > len(t):
-                    best_code = "zh"
-            out.append(best_code)
-        return pd.Series(out)
+    def lang_of(t):
+        counts = [0] * n_codes
+        for tok in java_tokens(t.lower()):
+            idxs = get(tok)
+            if idxs is not None:
+                for i in idxs:
+                    counts[i] += 1
+        best_code, best = "und", 0
+        for i in range(n_codes):
+            if counts[i] > best:
+                best, best_code = counts[i], codes[i]
+        if not t.isascii():
+            cjk = sum(1 for ch in t if "\u4e00" <= ch <= "\u9fff")
+            if cjk * 5 > len(t):
+                best_code = "zh"
+        return best_code
 
-    return kernel
+    return lang_of
 
 
 def lang_id_batched(text: Column) -> Column:
-    """Heuristic language ID of a text column — one vectorized pass per
-    batch; see :func:`_langid_kernel_factory`."""
-    global _LANGID_UDF
-    if _LANGID_UDF is None:
-        from pyspark.sql.functions import pandas_udf
+    """Heuristic language ID of a text column, one Arrow kernel pass; see
+    :func:`_langid`."""
+    from ..operators.util import doc_udf
 
-        _LANGID_UDF = pandas_udf(_langid_kernel_factory(), "string")
-    return _LANGID_UDF(text)
+    return doc_udf(_langid, (), "string", "und")(text)
 
 
 def token_count_ws(text: Column) -> Column:

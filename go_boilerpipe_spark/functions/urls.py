@@ -103,33 +103,15 @@ def normalize_url(url: Column) -> Column:
     return F.lower(F.concat(eff_scheme, F.lit("://"), host, sep, cleaned))
 
 
-_NORM_URL_UDF = None
+def _norm_url():
+    """``str(normurl.parse(raw))``: the pure reference port, one call per
+    URL. The port and :func:`normalize_url` are the same specification
+    implemented twice, pinned equal by the 300-case fuzz differential in
+    the tests. Null in → null out."""
+    from .. import normurl
 
-
-def _norm_url_kernel():
-    """One call to the pure reference port (``str(normurl.parse(raw))``)
-    per URL. The port and :func:`normalize_url` are the same
-    specification implemented twice, pinned equal by the 300-case fuzz
-    differential in the tests. Null in → null out."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from go_boilerpipe_spark import normurl
-
-    def kernel(batches):
-        parse = normurl.parse
-        for raws in batches:
-            yield pd.Series(
-                [None if r is None else str(parse(r)) for r in raws],
-                dtype="object",
-            )
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
+    parse = normurl.parse
+    return lambda raw: str(parse(raw))
 
 
 def with_normalized_url(df, url_col: str, out_col: str = "norm_url"):
@@ -142,12 +124,10 @@ def with_normalized_url(df, url_col: str, out_col: str = "norm_url"):
     (measured cold 4.2 s → ~0.8 s at 50k urls). The values are pinned by
     the tests against :func:`normalize_url` and the ``url_normalize``
     DuckDB twin."""
-    from pyspark.sql.functions import pandas_udf
+    from ..operators.util import doc_udf
 
-    global _NORM_URL_UDF
-    if _NORM_URL_UDF is None:
-        _NORM_URL_UDF = pandas_udf(_norm_url_kernel(), "string")
-    return df.withColumn(out_col, _NORM_URL_UDF(F.col(url_col)))
+    udf = doc_udf(_norm_url, (), "string", None)
+    return df.withColumn(out_col, udf(F.col(url_col)))
 
 
 DEFAULT_QUERY_KEY_BLACKLIST = (

@@ -12,6 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textstats import java_tokens, shingles
+from .util import doc_udf, spread_small
+
 
 def contamination_pairs(
     docs: DataFrame,
@@ -140,45 +143,23 @@ def stratified_sample(
     return df.filter(bucket < threshold)
 
 
-_SEGMENT_HASH_UDFS: dict = {}
-
-
-def _segment_hashes_kernel_factory(seg_tokens: int):
+def _segment_hashes(seg_tokens: int):
     """Per doc, the md5 hex of each consecutive ``seg_tokens``-token
-    segment: ``trim(' ')`` + ASCII-``\\s`` split, space-joined UTF-8
-    preimages. Null text emits ``[None]``: one (0, null) segment row.
-    Values are pinned by frozen test rows and the ``segment_dedup`` DuckDB
-    twin."""
+    segment of its :func:`java_tokens`, space-joined UTF-8 preimages.
+    Values are pinned by frozen test rows and the ``segment_dedup``
+    DuckDB twin."""
     import hashlib
-    import re
-    from typing import Iterator
 
-    import pandas as pd
-
-    ws = re.compile(r"\s+", re.ASCII)
     md5 = hashlib.md5
 
-    def kernel(batches):
-        for texts in batches:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append([None])
-                    continue
-                toks = ws.split(t.strip(" "))
-                out.append([
-                    md5(
-                        " ".join(toks[i : i + seg_tokens]).encode("utf-8")
-                    ).hexdigest()
-                    for i in range(0, max(len(toks), 1), seg_tokens)
-                ])
-            yield pd.Series(out, dtype="object")
+    def hashes(t):
+        toks = java_tokens(t)
+        return [
+            md5(" ".join(toks[i : i + seg_tokens]).encode("utf-8")).hexdigest()
+            for i in range(0, len(toks), seg_tokens)
+        ]
 
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
+    return hashes
 
 
 def segment_dedup(
@@ -198,20 +179,12 @@ def segment_dedup(
     measured ~1.5 s → ~0.9 s at sf1.0), then one posexplode and one
     shuffle on the segment hash (uniform key)."""
     from pyspark.sql import Window
-    from pyspark.sql.functions import pandas_udf
 
-    from .util import spread_small
-
-    if seg_tokens not in _SEGMENT_HASH_UDFS:
-        _SEGMENT_HASH_UDFS[seg_tokens] = pandas_udf(
-            _segment_hashes_kernel_factory(seg_tokens), "array<string>"
-        )
-    sized = spread_small(docs, per_core_bytes=128 << 20)
-    segs = sized.select(
+    # null text: one (0, null) segment row
+    udf = doc_udf(_segment_hashes, (seg_tokens,), "array<string>", [None])
+    segs = spread_small(docs).select(
         F.col(id_col),
-        F.posexplode(
-            _SEGMENT_HASH_UDFS[seg_tokens](F.col(text_col))
-        ).alias("seg_idx", "seg_hash"),
+        F.posexplode(udf(F.col(text_col))).alias("seg_idx", "seg_hash"),
     )
     w = (
         Window.partitionBy("seg_hash")
@@ -229,46 +202,18 @@ def segment_dedup(
     )
 
 
-def _term_counts_kernel():
-    """Per-doc distinct terms + occurrence counts in one Arrow pass:
-    ``lower → trim(' ') → ASCII-\\s split`` tokenization folded into a
-    ``Counter`` (``str.lower()`` implements Unicode default casing, like
-    the JVM's Locale.ROOT lowercasing). Null text
-    yields empty arrays, so the doc is absent from the output."""
-    import re
+def _term_counts():
+    """Per-doc distinct terms + occurrence counts: :func:`java_tokens` of
+    the lowercased text folded into a ``Counter`` (``str.lower()``
+    implements Unicode default casing, like the JVM's Locale.ROOT
+    lowercasing)."""
     from collections import Counter
-    from typing import Iterator
 
-    import pandas as pd
+    def term_counts(t):
+        c = Counter(java_tokens(t.lower()))
+        return list(c.keys()), list(c.values())
 
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def kernel(batches):
-        for texts in batches:
-            terms_l, counts_l = [], []
-            for t in texts:
-                if t is None:
-                    terms_l.append([])
-                    counts_l.append([])
-                    continue
-                c = Counter(ws.split(t.lower().strip(" ")))
-                terms_l.append(list(c.keys()))
-                counts_l.append(list(c.values()))
-            yield pd.DataFrame(
-                {
-                    "terms": pd.Series(terms_l, dtype="object"),
-                    "counts": pd.Series(counts_l, dtype="object"),
-                }
-            )
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.DataFrame],
-    }
-    return kernel
-
-
-_TERM_COUNTS_UDF = None
+    return term_counts
 
 
 def doc_token_rarity(
@@ -289,18 +234,12 @@ def doc_token_rarity(
     (map-side partial agg) and the term join (broadcast the df table when
     the vocab fits, else shuffle join). ``sum_df = Σ count·df`` and
     ``n_tokens = Σ count`` are exact BIGINT totals."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .util import spread_small
-
-    global _TERM_COUNTS_UDF
-    if _TERM_COUNTS_UDF is None:
-        _TERM_COUNTS_UDF = pandas_udf(
-            _term_counts_kernel(),
-            "terms array<string>, counts array<long>",
-        )
-    staged = spread_small(docs, per_core_bytes=128 << 20).select(
-        F.col(id_col), _TERM_COUNTS_UDF(F.col(text_col)).alias("_tc")
+    # null text yields empty arrays, so the doc is absent from the output
+    udf = doc_udf(
+        _term_counts, (), "terms array<string>, counts array<long>", ([], [])
+    )
+    staged = spread_small(docs).select(
+        F.col(id_col), udf(F.col(text_col)).alias("_tc")
     )
     pairs = staged.select(
         F.col(id_col),
@@ -329,54 +268,22 @@ def doc_token_rarity(
     )
 
 
-def _repetition_kernel():
-    """Per-doc bigram counts in one Arrow pass: ``n`` = bigram positions,
-    ``top`` = the max bigram count, ``dup`` = Σ counts over bigrams with
-    count > 1. Tokenization is ``str.lower()`` + ``trim(' ')`` + the
-    ASCII-``\\s`` split; a doc with fewer than two tokens has the single
-    whole-token "bigram". Null text → (1, 1, 1): one null bigram, a run of
-    one. Only integers cross the Arrow boundary — the shares are divided
-    and rounded on the JVM, where ``round`` goes through
+def _repetition():
+    """Per-doc bigram counts: ``n`` = bigram positions, ``top`` = the max
+    bigram count, ``dup`` = Σ counts over bigrams with count > 1, over the
+    2-token :func:`shingles` of the lowercased text's :func:`java_tokens`
+    (a doc with fewer than two tokens has the single whole-token
+    "bigram"). Only integers cross the Arrow boundary — the shares are
+    divided and rounded on the JVM, where ``round`` goes through
     ``Double.toString`` (21/240000 rounds to 8.8e-05 there, not to the
     8.7e-05 that rounding the exact binary value gives)."""
-    import re
     from collections import Counter
-    from typing import Iterator
 
-    import pandas as pd
+    def counts(t):
+        c = Counter(shingles(java_tokens(t.lower()), 2)).values()
+        return sum(c), max(c), sum(k for k in c if k > 1)
 
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def kernel(batches):
-        for texts in batches:
-            n_l, top_l, dup_l = [], [], []
-            for t in texts:
-                if t is None:
-                    n_l.append(1)
-                    top_l.append(1)
-                    dup_l.append(1)
-                    continue
-                toks = ws.split(t.lower().strip(" "))
-                if len(toks) >= 2:
-                    counts = Counter(
-                        toks[i] + " " + toks[i + 1]
-                        for i in range(len(toks) - 1)
-                    )
-                else:
-                    counts = Counter({" ".join(toks): 1})
-                n_l.append(sum(counts.values()))
-                top_l.append(max(counts.values()))
-                dup_l.append(sum(c for c in counts.values() if c > 1))
-            yield pd.DataFrame({"n": n_l, "top": top_l, "dup": dup_l})
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.DataFrame],
-    }
-    return kernel
-
-
-_REPETITION_UDF = None
+    return counts
 
 
 def repetition_stats(
@@ -392,21 +299,13 @@ def repetition_stats(
       occurs more than once within the doc.
 
     Fully MAP-SIDE: a per-doc statistic needs no cross-row data, so one
-    Arrow kernel counts the bigrams (see :func:`_repetition_kernel`) and
+    Arrow kernel counts the bigrams (see :func:`_repetition`) and
     the JVM divides and rounds — zero exchanges, and at 100 TB the
     operator costs exactly one scan."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .util import spread_small
-
-    global _REPETITION_UDF
-    if _REPETITION_UDF is None:
-        _REPETITION_UDF = pandas_udf(
-            _repetition_kernel(), "n bigint, top bigint, dup bigint"
-        )
-    sized = spread_small(docs, per_core_bytes=128 << 20)
-    staged = sized.select(
-        F.col(id_col), _REPETITION_UDF(F.col(text_col)).alias("_st")
+    # null text: one null bigram, a run of one
+    udf = doc_udf(_repetition, (), "n bigint, top bigint, dup bigint", (1, 1, 1))
+    staged = spread_small(docs).select(
+        F.col(id_col), udf(F.col(text_col)).alias("_st")
     )
     n = F.col("_st.n")
     return staged.select(
@@ -503,8 +402,6 @@ def scrub_pii(
     hit counts ride along so the pipeline can audit scrub rates by
     source. Counts are taken on the progressively-scrubbed text, exactly
     mirroring what the replacement chain sees."""
-    from .util import spread_small
-
     d = spread_small(docs)
     cur = F.col(text_col)
     staged = []
@@ -734,8 +631,6 @@ def top_terms(
     ≥ min_len by frequency (ties broken by term, so the cut at rank k is
     deterministic). Explode is map-side; the count is one shuffle with
     map-side partial aggregation; the top-k is a tiny sort."""
-    from .util import spread_small
-
     toks = spread_small(docs).select(
         F.explode(F.split(F.trim(F.lower(F.col(text_col))), "\\s+")).alias("term")
     )
@@ -747,51 +642,18 @@ def top_terms(
     return counts.orderBy(F.desc("n"), F.asc("term")).limit(k)
 
 
-_WINDOW_HASH_UDFS: dict = {}
-
-
-def _window_hashes_kernel_factory(n: int):
-    """Per doc, the md5 hex of every ``n``-token window (``trim(' ')`` +
-    ASCII-``\\s`` split, space-joined UTF-8 preimages). Docs shorter than
-    ``n`` tokens emit the one whole-doc window; null text emits
-    ``[None]``, one null window row. No cross-doc cache: unlike shingles,
-    13-gram windows rarely repeat across documents, so a cache would only
-    cost memory."""
+def _window_hashes(n: int):
+    """Per doc, the md5 hex of each of its ``n``-token :func:`shingles`
+    (docs shorter than ``n`` tokens: the one whole-doc window). No
+    cross-doc cache: unlike shingles, 13-gram windows rarely repeat
+    across documents, so a cache would only cost memory."""
     import hashlib
-    import re
-    from typing import Iterator
 
-    import pandas as pd
-
-    ws = re.compile(r"\s+", re.ASCII)
     md5 = hashlib.md5
-
-    def kernel(batches):
-        for texts in batches:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append([None])
-                    continue
-                toks = ws.split(t.strip(" "))
-                cnt = len(toks)
-                if cnt >= n:
-                    out.append([
-                        md5(" ".join(toks[i : i + n]).encode("utf-8"))
-                        .hexdigest()
-                        for i in range(cnt - n + 1)
-                    ])
-                else:
-                    out.append(
-                        [md5(" ".join(toks).encode("utf-8")).hexdigest()]
-                    )
-            yield pd.Series(out, dtype="object")
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
+    return lambda t: [
+        md5(sh.encode("utf-8")).hexdigest()
+        for sh in shingles(java_tokens(t), n)
+    ]
 
 
 def duplicated_ngram_stats(
@@ -835,10 +697,6 @@ def duplicated_ngram_stats(
     no duplicated window rejoin through a LEFT join + coalesce(0). The
     small-input spread guard parallelizes the window-hash generation
     (one-row-group tables scan as one split — see operators.util)."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .util import spread_small
-
     staged = spread_small(docs.select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), "\\s+").alias("_toks")
     ))
@@ -850,17 +708,10 @@ def duplicated_ngram_stats(
     # transform was interpreted HOF work, ~0.5 ms/doc, on BOTH sides of
     # the docfreq join); totals above stays on the cheap JVM size()
     # expression so the kernel is not evaluated a third time for the count
-    if n not in _WINDOW_HASH_UDFS:
-        _WINDOW_HASH_UDFS[n] = pandas_udf(
-            _window_hashes_kernel_factory(n), "array<string>"
-        )
-    src = spread_small(
-        docs.select(F.col(id_col), F.col(text_col)),
-        per_core_bytes=128 << 20,
-    )
-    wins = src.select(
-        F.col(id_col),
-        F.explode(_WINDOW_HASH_UDFS[n](F.col(text_col))).alias("_h"),
+    # null text: one null window row
+    udf = doc_udf(_window_hashes, (n,), "array<string>", [None])
+    wins = spread_small(docs.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), F.explode(udf(F.col(text_col))).alias("_h")
     )
     docfreq = wins.groupBy("_h").agg(
         F.count_distinct(F.col(id_col)).alias("_df")

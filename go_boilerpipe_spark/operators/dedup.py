@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .util import local_frame
+from ..functions.textstats import java_tokens, shingles
+from .util import doc_udf, local_frame, spread_small
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -56,92 +57,56 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 _HASH_CACHE_BYTES = 64 << 20
 
 
-def _minhash_kernel_iter_factory(num_hashes: int, shingle_n: int):
-    """Per-partition MinHash kernel. Tokenization follows Java regex
-    semantics (``trim`` strips ASCII spaces, ``\\s+`` is the ASCII class —
-    ``re.ASCII`` matches Java's default); docs shorter than ``shingle_n``
-    tokens use one whole-token shingle; the preimage of seed ``j`` is
-    ``"s{j}:" || shingle`` and the signature keeps the lexicographic-min md5
+def _minhash(num_hashes: int, shingle_n: int):
+    """MinHash signature of one document: the preimage of seed ``j`` is
+    ``"s{j}:" || shingle`` over the distinct :func:`shingles` of its
+    :func:`java_tokens`, and the signature keeps the lexicographic-min md5
     hex per seed, computed as a bytewise min of digests (hex encoding is
-    order-preserving). Null text gives an all-null signature. The values
-    are pinned by frozen test rows and by the DuckDB twins of the LSH
-    queries.
+    order-preserving). The values are pinned by frozen test rows and by
+    the DuckDB twins of the LSH queries.
 
     The shingle→digest work is DEDUPLICATED across the partition's
     documents. Web corpora repeat shingles heavily across documents
     (boilerplate, templates; measured 8.7× on the bench corpus at 5k
     docs), so hashing each distinct shingle once replaces ``num_hashes``
     md5 computations per occurrence with one dict hit. A min over a set
-    is order-independent, so batching and caching never change values.
-
-    The cache lives inside the generator body, so its lifetime is exactly
-    one partition of one query execution — no state leaks across tasks or
-    queries (a closure-level cache on a plain pandas_udf WOULD persist in
-    the reused worker process, which the no-result-caching bench doctrine
-    forbids). ``_HASH_CACHE_BYTES`` bounds it."""
+    is order-independent, so caching never changes values. The cache
+    lives as long as this call's result, one partition
+    (:func:`util.doc_udf`); ``_HASH_CACHE_BYTES`` bounds it."""
     import hashlib
-    import re
     import sys
-    from typing import Iterator
 
-    prefixes = [f"s{j}:".encode("ascii") for j in range(num_hashes)]
-    ws = re.compile(r"\s+", re.ASCII)
-    budget = _HASH_CACHE_BYTES  # bound at definition time (testable)
+    prefix_states = [
+        hashlib.md5(f"s{j}:".encode("ascii")) for j in range(num_hashes)
+    ]
+    budget = _HASH_CACHE_BYTES
     getsizeof = sys.getsizeof
+    # every cached digest list has the same shape, hence the same size
+    probe = [st.digest() for st in prefix_states]
+    ds_bytes = getsizeof(probe) + sum(map(getsizeof, probe))
+    cache: dict = {}
+    used = 0
 
-    def kernel(batches):
-        prefix_states = [hashlib.md5(p) for p in prefixes]
-        # every cached digest list has the same shape, hence the same size
-        probe = [st.digest() for st in prefix_states]
-        ds_bytes = getsizeof(probe) + sum(map(getsizeof, probe))
-        cache: dict = {}
-        used = 0
-        for texts in batches:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append([None] * num_hashes)
-                    continue
-                toks = ws.split(t.strip(" "))
-                cnt = len(toks)
-                if cnt >= shingle_n:
-                    shingles = {
-                        " ".join(toks[i : i + shingle_n])
-                        for i in range(cnt - shingle_n + 1)
-                    }
-                else:
-                    shingles = {" ".join(toks)}
-                best: list = [None] * num_hashes
-                for sh in shingles:
-                    ds = cache.get(sh)
-                    if ds is None:
-                        b = sh.encode("utf-8")
-                        ds = []
-                        for st in prefix_states:
-                            h = st.copy()
-                            h.update(b)
-                            ds.append(h.digest())
-                        if used < budget:
-                            cache[sh] = ds
-                            used += getsizeof(sh) + ds_bytes
-                    for j in range(num_hashes):
-                        d = ds[j]
-                        if best[j] is None or d < best[j]:
-                            best[j] = d
-                out.append([d.hex() for d in best])
-            yield pd.Series(out)
+    def signature(t):
+        nonlocal used
+        per_shingle = []
+        for sh in set(shingles(java_tokens(t), shingle_n)):
+            ds = cache.get(sh)
+            if ds is None:
+                b = sh.encode("utf-8")
+                ds = []
+                for st in prefix_states:
+                    h = st.copy()
+                    h.update(b)
+                    ds.append(h.digest())
+                if used < budget:
+                    cache[sh] = ds
+                    used += getsizeof(sh) + ds_bytes
+            per_shingle.append(ds)
+        # a document has at least one shingle; column j holds seed j
+        return [min(seed).hex() for seed in zip(*per_shingle)]
 
-    # real annotation objects (module uses `from __future__ import
-    # annotations`, and the local Iterator import would not resolve from
-    # a string hint when pandas_udf infers the SCALAR_ITER eval type)
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
-
-
-_MINHASH_UDFS: dict = {}
+    return signature
 
 
 def minhash_signatures(
@@ -160,30 +125,18 @@ def minhash_signatures(
     exchange before the bucket join.
 
     Small inputs are round-robin repartitioned to the default parallelism
-    before the UDF: a single small parquet file reads as ONE split, and
-    AQE coalesces small upstream shuffles to one partition — either way
-    one Python worker would do all the hashing. The guard is the STATIC
-    optimizer size estimate (no execution — ``.rdd.getNumPartitions()``
-    under AQE materializes upstream stages just to count), and fires only
-    below ~128 MB×parallelism, where the extra exchange is trivially
-    cheap. At crawl scale the estimate is huge, the guard never fires,
-    and the kernel stays a pure map-side projection over the input's own
-    partitioning. Values are row-local, so partitioning never affects
-    them."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .util import spread_small
-
-    df = spread_small(df, per_core_bytes=128 << 20)
-
-    key = (num_hashes, shingle_n)
-    if key not in _MINHASH_UDFS:
-        _MINHASH_UDFS[key] = pandas_udf(
-            _minhash_kernel_iter_factory(num_hashes, shingle_n),
-            "array<string>",
-        )
-    sig = df.select(
-        F.col(id_col), _MINHASH_UDFS[key](F.col(text_col)).alias("_sig")
+    before the UDF (:func:`util.spread_small`): a single small parquet
+    file reads as ONE split, and AQE coalesces small upstream shuffles to
+    one partition — either way one Python worker would do all the
+    hashing. At crawl scale the guard never fires, and the kernel stays a
+    pure map-side projection over the input's own partitioning. Values
+    are row-local, so partitioning never affects them."""
+    # null text gives an all-null signature
+    udf = doc_udf(
+        _minhash, (num_hashes, shingle_n), "array<string>", [None] * num_hashes
+    )
+    sig = spread_small(df).select(
+        F.col(id_col), udf(F.col(text_col)).alias("_sig")
     )
     # _sig is an attribute of its own projection (the UDF runs once in a
     # single ArrowEvalPython node); the element reads below are cheap
@@ -335,73 +288,56 @@ def minhash_lsh_pairs_capped(
     )
 
 
-def _simhash_kernel_factory(bits: int):
-    """Map-side SimHash kernel: Java-regex tokenization (``trim`` strips
-    ASCII spaces, ``\\s+`` via ``re.ASCII``), token hash = int of the first
-    14 md5 hex chars, bit b of the result set iff strictly more tokens have
-    bit b set than clear (votes = 2·ones − n > 0 — ties stay 0, as in the
-    DuckDB twin's ``> 0``). Bit votes are numpy-vectorized per doc."""
+def _simhash(bits: int):
+    """SimHash of one document: token hash = int of the first 14 md5 hex
+    chars of each :func:`java_tokens` token, bit b of the result set iff
+    strictly more tokens have bit b set than clear (votes = 2·ones − n >
+    0 — ties stay 0, as in the DuckDB twin's ``> 0``). Bit votes are
+    numpy-vectorized per doc.
+
+    Per-partition token→hash cache (r6): bit b's vote total is
+    Σ_occurrences bit_b(hash(tok)) = Σ_distinct count(tok)·bit_b —
+    identical integer sums, with each distinct token md5-hashed once per
+    partition instead of once per occurrence. Same lifetime and byte
+    budget as the MinHash cache."""
     import hashlib
-    import re
     import sys
+    from collections import Counter
 
     import numpy as np
 
-    ws = re.compile(r"\s+", re.ASCII)
     md5 = hashlib.md5
     shifts = np.arange(bits, dtype=np.uint64)
     weights = (np.uint64(1) << shifts).astype(np.int64)
     budget = _HASH_CACHE_BYTES
     getsizeof = sys.getsizeof
+    cache: dict = {}
+    used = 0
 
-    def kernel(batches):
-        # per-partition token→hash cache (r6): bit b's vote total is
-        # Σ_occurrences bit_b(hash(tok)) = Σ_distinct count(tok)·bit_b —
-        # identical integer sums, with each distinct token md5-hashed
-        # once per partition instead of once per occurrence. Same
-        # lifetime and byte budget as the MinHash iterator kernel.
-        from collections import Counter
+    def simhash_of(t):
+        nonlocal used
+        counts = Counter(java_tokens(t))
+        n = 0
+        hs = np.empty(len(counts), dtype=np.uint64)
+        cnt = np.empty(len(counts), dtype=np.int64)
+        for i, (tok, c) in enumerate(counts.items()):
+            h = cache.get(tok)
+            if h is None:
+                h = int(md5(tok.encode("utf-8")).hexdigest()[:14], 16)
+                if used < budget:
+                    cache[tok] = h
+                    used += getsizeof(tok) + getsizeof(h)
+            hs[i] = h
+            cnt[i] = c
+            n += c
+        ones = (
+            ((hs[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
+            * cnt[:, None]
+        ).sum(axis=0, dtype=np.int64)
+        votes = 2 * ones - n
+        return int(weights[votes > 0].sum())
 
-        cache: dict = {}
-        used = 0
-        for texts in batches:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append(None)  # dropped by the caller's filter
-                    continue
-                counts = Counter(ws.split(t.strip(" ")))
-                n = 0
-                hs = np.empty(len(counts), dtype=np.uint64)
-                cnt = np.empty(len(counts), dtype=np.int64)
-                for i, (tok, c) in enumerate(counts.items()):
-                    h = cache.get(tok)
-                    if h is None:
-                        h = int(md5(tok.encode("utf-8")).hexdigest()[:14], 16)
-                        if used < budget:
-                            cache[tok] = h
-                            used += getsizeof(tok) + getsizeof(h)
-                    hs[i] = h
-                    cnt[i] = c
-                    n += c
-                ones = (
-                    ((hs[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-                    * cnt[:, None]
-                ).sum(axis=0, dtype=np.int64)
-                votes = 2 * ones - n
-                out.append(int(weights[votes > 0].sum()))
-            yield pd.Series(out, dtype="object")
-
-    from typing import Iterator
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
-
-
-_SIMHASH_UDFS: dict = {}
+    return simhash_of
 
 
 def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -414,19 +350,12 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     One map-side Arrow kernel computes the whole signature — a per-doc
     statistic needs no shuffle. Docs with NULL text are absent from the
     output."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .util import spread_small
-
-    if bits not in _SIMHASH_UDFS:
-        _SIMHASH_UDFS[bits] = pandas_udf(_simhash_kernel_factory(bits), "long")
     # same small-input parallelism guard as the MinHash kernel
-    sized = spread_small(
-        df.filter(F.col(text_col).isNotNull()), per_core_bytes=128 << 20
-    )
+    sized = spread_small(df.filter(F.col(text_col).isNotNull()))
     return sized.select(
         F.col(id_col),
-        _SIMHASH_UDFS[bits](F.col(text_col)).alias("simhash"),
+        doc_udf(_simhash, (bits,), "long", None)(F.col(text_col))
+        .alias("simhash"),
     )
 
 
@@ -565,73 +494,42 @@ def embedding_near_dup_pairs(
     return pairs.filter(F.col("cosine") >= threshold)
 
 
-def _winnow_kernel_factory(shingle_n: int, window: int):
-    """Per-partition winnowing kernel: same Java-regex tokenization as the
-    MinHash kernel (``trim`` strips ASCII spaces, ``\\s+`` under
-    ``re.ASCII``), shingle hash = md5 hex of the space-joined slice
-    (UTF-8), window minima over the hex strings (hex is ASCII, so
-    code-point order equals UTF-16 order), fingerprint = md5 of the
-    ``'|'``-joined sorted distinct minima. Short docs (< shingle_n tokens)
-    hash the whole-token join; fewer hashes than ``window`` yield one
-    whole-array minimum. Null text → ``md5("")``, the fingerprint of an
-    empty minima list, not a null. The values are pinned by frozen test
-    rows and by the ``fingerprint_winnow`` DuckDB twin.
+def _winnow(shingle_n: int, window: int):
+    """Winnowing fingerprint of one document: shingle hash = md5 hex of
+    each of its :func:`shingles` (UTF-8), window minima over the hex
+    strings (hex is ASCII, so code-point order equals UTF-16 order),
+    fingerprint = md5 of the ``'|'``-joined sorted distinct minima; fewer
+    hashes than ``window`` yield one whole-array minimum. The values are
+    pinned by frozen test rows and by the ``fingerprint_winnow`` DuckDB
+    twin.
 
-    Same per-partition shingle→digest dedup as the MinHash iterator
-    kernel (boilerplate shingles repeat across docs), same byte budget."""
+    Same per-partition shingle→digest dedup as the MinHash kernel
+    (boilerplate shingles repeat across docs), same byte budget."""
     import hashlib
-    import re
     import sys
-    from typing import Iterator
 
-    ws = re.compile(r"\s+", re.ASCII)
     budget = _HASH_CACHE_BYTES
     getsizeof = sys.getsizeof
     md5 = hashlib.md5
+    cache: dict = {}
+    used = 0
 
-    null_fp = md5(b"").hexdigest()
+    def fingerprint(t):
+        nonlocal used
+        hs = []
+        for sh in shingles(java_tokens(t), shingle_n):
+            d = cache.get(sh)
+            if d is None:
+                d = md5(sh.encode("utf-8")).hexdigest()
+                if used < budget:
+                    cache[sh] = d
+                    used += getsizeof(sh) + getsizeof(d)
+            hs.append(d)
+        n_win = max(len(hs) - window + 1, 1)
+        minima = {min(hs[i : i + window]) for i in range(n_win)}
+        return md5("|".join(sorted(minima)).encode("utf-8")).hexdigest()
 
-    def kernel(batches):
-        cache: dict = {}
-        used = 0
-        for texts in batches:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append(null_fp)
-                    continue
-                toks = ws.split(t.strip(" "))
-                cnt = len(toks)
-                if cnt >= shingle_n:
-                    shingles = [
-                        " ".join(toks[i : i + shingle_n])
-                        for i in range(cnt - shingle_n + 1)
-                    ]
-                else:
-                    shingles = [" ".join(toks)]
-                hs = []
-                for sh in shingles:
-                    d = cache.get(sh)
-                    if d is None:
-                        d = md5(sh.encode("utf-8")).hexdigest()
-                        if used < budget:
-                            cache[sh] = d
-                            used += getsizeof(sh) + getsizeof(d)
-                    hs.append(d)
-                n_win = max(len(hs) - window + 1, 1)
-                minima = {min(hs[i : i + window]) for i in range(n_win)}
-                fp = md5("|".join(sorted(minima)).encode("utf-8")).hexdigest()
-                out.append(fp)
-            yield pd.Series(out, dtype="object")
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
-
-
-_WINNOW_UDFS: dict = {}
+    return fingerprint
 
 
 def winnow_fingerprint(
@@ -644,20 +542,14 @@ def winnow_fingerprint(
     """Winnowing document fingerprint (Schleimer et al.): rolling k-gram
     hashes, keep the minimum of each sliding window, fingerprint = md5 of
     the sorted distinct minima. Stable under small local edits; one
-    map-side Arrow kernel pass, no shuffle."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .util import spread_small
-
-    key = (shingle_n, window)
-    if key not in _WINNOW_UDFS:
-        _WINNOW_UDFS[key] = pandas_udf(
-            _winnow_kernel_factory(shingle_n, window), "string"
-        )
-    sized = spread_small(df, per_core_bytes=128 << 20)
-    return sized.select(
-        F.col(id_col),
-        _WINNOW_UDFS[key](F.col(text_col)).alias("winnow_fp"),
+    map-side Arrow kernel pass, no shuffle. Null text fingerprints as
+    ``md5("")``, the fingerprint of an empty minima list, not a null."""
+    udf = doc_udf(
+        _winnow, (shingle_n, window), "string",
+        "d41d8cd98f00b204e9800998ecf8427e",  # md5("")
+    )
+    return spread_small(df).select(
+        F.col(id_col), udf(F.col(text_col)).alias("winnow_fp")
     )
 
 
@@ -831,45 +723,12 @@ def duplicate_clusters(
     )
 
 
-_SHINGLE_SET_UDFS: dict = {}
-
-
-def _shingle_set_kernel_factory(shingle_n: int):
-    """The doc's DISTINCT n-word shingles (same tokenization/fallback as
-    the MinHash kernel). Element order is Python set order, so callers
-    may only consume the arrays as SETS (sizes of intersections/unions),
-    which is exactly what the Jaccard verify does. Null text → null
-    array."""
-    import re
-    from typing import Iterator
-
-    import pandas as pd
-
-    ws = re.compile(r"\s+", re.ASCII)
-
-    def kernel(batches):
-        for texts in batches:
-            out = []
-            for t in texts:
-                if t is None:
-                    out.append(None)
-                    continue
-                toks = ws.split(t.strip(" "))
-                cnt = len(toks)
-                if cnt >= shingle_n:
-                    out.append(list({
-                        " ".join(toks[i : i + shingle_n])
-                        for i in range(cnt - shingle_n + 1)
-                    }))
-                else:
-                    out.append([" ".join(toks)])
-            yield pd.Series(out, dtype="object")
-
-    kernel.__annotations__ = {
-        "batches": Iterator[pd.Series],
-        "return": Iterator[pd.Series],
-    }
-    return kernel
+def _shingle_set(shingle_n: int):
+    """The doc's DISTINCT :func:`shingles`. Element order is Python set
+    order, so callers may only consume the arrays as SETS (sizes of
+    intersections/unions), which is exactly what the Jaccard verify
+    does."""
+    return lambda t: list(set(shingles(java_tokens(t), shingle_n)))
 
 
 def jaccard_verify_pairs(
@@ -879,37 +738,28 @@ def jaccard_verify_pairs(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.8,
-    prune_candidates: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs (the verify stage after any
     LSH): broadcast-safe join of shingle sets onto the (small) pair list.
-    One Arrow kernel builds each doc's shingle set.
+    One Arrow kernel builds each doc's shingle set (null text → null
+    array).
 
-    ``prune_candidates=True`` computes shingle sets ONLY for docs that
-    appear in a pair (left-semi prune) — at crawl scale candidates are a
-    vanishing fraction of the corpus. Since r6 the LSH candidate join is
-    shuffle-based, so a lazy ``pairs`` lineage referenced three times by
-    the prune resolves to ONE computation via exchange reuse — enable
-    the prune for any :func:`minhash_lsh_pairs` input (A/B at sf1.0:
-    lazy+prune 3.4 s vs lazy no-prune 5.7 s vs eager checkpoint 5.0 s).
-    For a pairs plan WITHOUT reusable exchanges (custom candidate
-    sources), materialize pairs first or leave the prune off."""
-    from pyspark.sql.functions import pandas_udf
-
-    if prune_candidates:
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .union(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        df = df.join(cand_ids, id_col, "leftsemi")
-    if shingle_n not in _SHINGLE_SET_UDFS:
-        _SHINGLE_SET_UDFS[shingle_n] = pandas_udf(
-            _shingle_set_kernel_factory(shingle_n), "array<string>"
-        )
-    sets_df = df.select(
-        F.col(id_col),
-        _SHINGLE_SET_UDFS[shingle_n](F.col(text_col)).alias("sh_set"),
+    Shingle sets are computed ONLY for docs that appear in a pair
+    (left-semi prune) — at crawl scale candidates are a vanishing
+    fraction of the corpus. The LSH candidate join is shuffle-based, so a
+    lazy ``pairs`` lineage referenced three times by the prune resolves
+    to ONE computation via exchange reuse (A/B at sf1.0: lazy+prune
+    3.4 s vs lazy no-prune 5.7 s vs eager checkpoint 5.0 s). For a pairs
+    plan WITHOUT reusable exchanges (custom candidate sources),
+    materialize pairs first."""
+    cand_ids = (
+        pairs.select(F.col("id_a").alias(id_col))
+        .union(pairs.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    udf = doc_udf(_shingle_set, (shingle_n,), "array<string>", None)
+    sets_df = df.join(cand_ids, id_col, "leftsemi").select(
+        F.col(id_col), udf(F.col(text_col)).alias("sh_set")
     )
     j = (
         pairs.join(sets_df.withColumnRenamed(id_col, "id_a")

@@ -4,28 +4,33 @@
 Usage: python scripts/dump_plans.py <out_dir> <suffix> [repo_root] [sf_dir]
 
 ``repo_root`` (default: this repo) is prepended to sys.path so the same
-script can dump plans from a git worktree of an older commit (the
-_before side of an optimization round's plan evidence).
+script can dump plans from a checkout of an older commit (the _before
+side of an optimization round's plan evidence). Without ``sf_dir`` the
+plans are taken over the sf0.001 stand-in, generated by
+``gen_standin_sf.py`` into a temporary directory that is removed
+afterwards. The session runs ``local[N]`` with N from
+``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (``nproc``).
 """
 
 from __future__ import annotations
 
 import os
 import pathlib
+import subprocess
 import sys
+import tempfile
 
 out_dir = pathlib.Path(sys.argv[1])
 suffix = sys.argv[2]
 root = sys.argv[3] if len(sys.argv) > 3 else str(
     pathlib.Path(__file__).resolve().parents[1]
 )
-sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf1.0"
 sys.path.insert(0, root)
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
 
-def main():
+def dump(sf_dir: str) -> None:
     import __spark_entry__ as entry
     from go_boilerpipe_spark.spark_session import build_session
 
@@ -50,6 +55,19 @@ def main():
             print("dumped", name, flush=True)
     finally:
         spark.stop()
+
+
+def main():
+    if len(sys.argv) > 4:
+        dump(sys.argv[4])
+        return
+    gen = pathlib.Path(__file__).resolve().parent / "gen_standin_sf.py"
+    with tempfile.TemporaryDirectory(prefix="standin-") as sf_dir:
+        subprocess.run(
+            [sys.executable, str(gen), "0.001", sf_dir],
+            check=True, stdout=subprocess.DEVNULL,
+        )
+        dump(sf_dir)
 
 
 if __name__ == "__main__":

@@ -80,3 +80,14 @@ def test_driver_lists_plan_as_local_scans(spark, standin):
         df = queries[name](spark, standin)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_pii_scrub_plans_one_round_robin_exchange(spark, standin):
+    # the query spreads its input, projects, then scrub_pii spreads again:
+    # spread_small sees the round-robin repartition under the projection
+    # and adds no second exchange
+    import __spark_entry__ as entry
+
+    df = entry.queries()["pii_scrub"](spark, standin)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan

@@ -318,17 +318,26 @@ class TestDedup:
         assert all(j >= 0.5 for j in out.values())
 
     def test_jaccard_prune_candidates_identical(self, docs):
-        # r5: the materialized-pairs prune path (shingles only for docs
-        # appearing in a candidate pair) must give identical results
+        # the verify stage computes shingle sets only for docs that appear
+        # in a candidate pair; on materialized pairs its output must equal
+        # a plain-Python Jaccard of every candidate pair
         pairs = dedup.minhash_lsh_pairs(docs, num_hashes=8, bands=8)
         pairs = pairs.persist()
         try:
-            base = sorted(map(tuple, dedup.jaccard_verify_pairs(
+            texts = dict(map(tuple, docs.collect()))
+
+            def sh(i):
+                t = texts[i].split(" ")
+                return {" ".join(t[k : k + 3]) for k in range(len(t) - 2)}
+
+            want = []
+            for a, b in sorted(map(tuple, pairs.collect())):
+                j = round(len(sh(a) & sh(b)) / len(sh(a) | sh(b)), 6)
+                if j >= 0.5:
+                    want.append((a, b, j))
+            got = sorted(map(tuple, dedup.jaccard_verify_pairs(
                 docs, pairs, threshold=0.5).collect()))
-            pruned = sorted(map(tuple, dedup.jaccard_verify_pairs(
-                docs, pairs, threshold=0.5, prune_candidates=True
-            ).collect()))
-            assert pruned == base and base
+            assert got == want and want
         finally:
             pairs.unpersist()
 
@@ -364,16 +373,17 @@ class TestDedup:
             assert got == want, bits
 
     def test_minhash_iter_kernel_matches_batch_kernel(self):
-        # the per-partition MinHash kernel (cross-doc shingle-digest
-        # dedup) against frozen signatures of the former per-batch
-        # kernel: split across arrow-batch boundaries, and with the cache
-        # byte budget exhausted (past it digests are computed per
-        # occurrence — values must not change).
+        # the MinHash kernel as the UDF runs it (cross-doc shingle-digest
+        # dedup per partition) against frozen signatures of the former
+        # per-batch kernel: split across arrow-batch boundaries, and with
+        # the cache byte budget exhausted (past it digests are computed
+        # per occurrence — values must not change).
         import random
 
         import pandas as pd
 
         from go_boilerpipe_spark.operators import dedup as dd
+        from go_boilerpipe_spark.operators.util import _doc_kernel
 
         rng = random.Random(7)
         vocab = ["alpha", "beta", "gamma", "delta", "x", "汉字", "a\u00a0b"]
@@ -385,7 +395,8 @@ class TestDedup:
         s = pd.Series(texts, dtype="object")
 
         def signatures(nh, sn, batches):
-            out = dd._minhash_kernel_iter_factory(nh, sn)(iter(batches))
+            kernel = _doc_kernel(dd._minhash, (nh, sn), [None] * nh)
+            out = kernel(iter(batches))
             sigs = pd.concat(list(out), ignore_index=True)
             return _rows_digest((i, tuple(sig)) for i, sig in enumerate(sigs))
 
@@ -426,11 +437,10 @@ class TestDedup:
             "id_a long, id_b long",
         )
         frozen = [(0, 1, 0.75), (0, 2, 1.0), (1, 2, 0.75)]
-        for prune in (False, True):
-            got = sorted(map(tuple, dedup.jaccard_verify_pairs(
-                docs, pairs, threshold=0.1, prune_candidates=prune
-            ).collect()))
-            assert got == frozen, prune
+        got = sorted(map(tuple, dedup.jaccard_verify_pairs(
+            docs, pairs, threshold=0.1
+        ).collect()))
+        assert got == frozen
 
     def test_winnow_arrow_bit_identical(self, spark):
         # the Arrow winnowing kernel against frozen fingerprints of the
