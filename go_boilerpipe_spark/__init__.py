@@ -5,7 +5,9 @@ A from-scratch reimplementation of the capabilities of jlubawy/go-boilerpipe
 Common-Crawl scale. See SURVEY.md for the blueprint.
 """
 
+import gc
 import os
+import sys
 
 __version__ = "0.1.0"
 
@@ -59,4 +61,60 @@ def install_zipimport_stat_check() -> bool:
     return True
 
 
+class _WorkerHeapFreeze:
+    """``sys.meta_path`` entry that finds no module; its only job is
+    :meth:`invalidate_caches`. See :func:`install_worker_heap_freeze`."""
+
+    freezes_worker_heap = True
+
+    def __init__(self):
+        self.modules = 0  # len(sys.modules) at the last freeze
+
+    @staticmethod
+    def find_spec(name, path=None, target=None):
+        return None
+
+    def invalidate_caches(self):
+        tc = sys.modules.get("pyspark.taskcontext")
+        if tc is None or tc.TaskContext.get() is None:
+            return
+        if len(sys.modules) > self.modules:
+            gc.freeze()
+            self.modules = len(sys.modules)
+
+
+def install_worker_heap_freeze() -> bool:
+    """Move a Python worker's long-lived objects into the collector's
+    permanent generation (``gc.freeze()``) at the start of a task, so that
+    the collection after each task walks only what that task allocated.
+    Returns True once the hook is installed.
+
+    PySpark's worker-reuse loop (``pyspark/daemon.py``) runs a full
+    ``gc.collect()`` after every task. Without a freeze that collection
+    walks the ~75k objects that pyspark, pyarrow, pandas and this package
+    leave behind at import: 36-45 ms in a quiet process and a median of
+    41 ms in a crawl-job worker, per task; on a frozen heap, 0.1 ms.
+
+    ``setup_spark_files`` (``pyspark/worker_util.py``) calls
+    ``importlib.invalidate_caches()`` at the start of every task, after the
+    daemon's collection and after ``TaskContext`` is set, and that call
+    reaches every ``sys.meta_path`` entry. The hook freezes there when a
+    ``TaskContext`` is set and ``sys.modules`` has grown since its last
+    freeze. A worker imports this package during its first task, so it
+    freezes at its second, and again only after a task imported a new
+    module. What a task leaves behind has been collected by then, so its
+    garbage never becomes permanent. The driver, tests and any process
+    without a ``TaskContext`` are left as they are.
+
+    Rejected designs: a ``spark.python.daemon.module`` that freezes before
+    the daemon forks would be a deployment setting every session must
+    carry; ``gc.disable()`` does not stop the daemon's explicit
+    ``gc.collect()``."""
+    if any(getattr(f, "freezes_worker_heap", False) for f in sys.meta_path):
+        return True
+    sys.meta_path.append(_WorkerHeapFreeze())
+    return True
+
+
 install_zipimport_stat_check()
+install_worker_heap_freeze()

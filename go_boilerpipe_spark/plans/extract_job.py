@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import datetime
 import json
+import logging
 import os
 import time
 import uuid
@@ -59,6 +60,7 @@ from ..operators.extract import (
 )
 from ..operators.util import local_frame
 
+_log = logging.getLogger(__name__)
 
 _LINEAGE_SCHEMA = T.StructType([
     T.StructField("part_id", T.IntegerType()),
@@ -264,13 +266,24 @@ class ExtractJob:
                  "chunks_skipped": len(chunks) - len(pending),
                  "chunks_done": 0, "docs_out": 0, "parse_errors": 0,
                  "wall_sec": 0.0}
+        kernels, pure_chunks = set(), []
         for chunk_id, chunk_files in pending:
             entry = self._run_chunk(run_id, chunk_id, chunk_files, schema)
             self._commit_chunk(entry)
             stats["chunks_done"] += 1
             stats["docs_out"] += entry["docs_out"]
             stats["parse_errors"] += entry["parse_errors"]
+            paths = {r["kernel"] for r in entry["lineage"]}
+            kernels |= paths
+            if "pure" in paths:
+                pure_chunks.append(chunk_id)
         stats["wall_sec"] = time.monotonic() - t_all
+        # the kernel paths of the chunks this run extracted, from their
+        # lineage; the pure fallback is about 20x slower than the C kernel
+        stats["kernel_paths"] = sorted(kernels)
+        if pure_chunks:
+            _log.warning("run %s: the pure-Python kernel ran in chunks %s",
+                         run_id, ", ".join(pure_chunks))
         return stats
 
     def _run_chunk(self, run_id: str, chunk_id: str, chunk_files,

@@ -10,6 +10,7 @@ the same zip at runtime with ``sc.addPyFile`` — idempotent per context.
 from __future__ import annotations
 
 import os
+import py_compile
 import tempfile
 import zipfile
 from pathlib import Path
@@ -22,16 +23,31 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     """Zip the package for --py-files / addPyFile: sources, the compiled
     kernel (.so — workers extract it from the zip to a temp path, see
     kernel/ckernel.py), and the C source (so a worker on a different
-    platform can rebuild instead of silently falling back)."""
+    platform can rebuild instead of silently falling back).
+
+    Each ``name.py`` gets a ``name.pyc`` beside it, where zipimport looks
+    for bytecode (not in ``__pycache__/``): zipimport writes no bytecode
+    cache, so without it every worker compiles each module it imports.
+    The ``.pyc`` is unchecked-hash, so no source stamp is compared; a
+    worker whose Python has another bytecode magic number skips it and
+    compiles the ``.py``."""
     dest = dest or os.path.join(
         tempfile.gettempdir(), f"go_boilerpipe_spark_{os.getpid()}.zip"
     )
     patterns = ("*.py", "*.c", "_ckernel*.so")
-    with zipfile.ZipFile(dest, "w", zipfile.ZIP_DEFLATED) as zf:
+    with tempfile.TemporaryDirectory() as tmp, \
+            zipfile.ZipFile(dest, "w", zipfile.ZIP_DEFLATED) as zf:
         for pat in patterns:
             for p in sorted(_PKG_ROOT.rglob(pat)):
                 rel = Path("go_boilerpipe_spark") / p.relative_to(_PKG_ROOT)
                 zf.write(p, str(rel))
+                if p.suffix == ".py":
+                    pyc = py_compile.compile(
+                        str(p), cfile=os.path.join(tmp, "m.pyc"),
+                        dfile=os.path.join(dest, rel), doraise=True,
+                        invalidation_mode=py_compile.PycInvalidationMode
+                        .UNCHECKED_HASH)
+                    zf.write(pyc, str(rel.with_suffix(".pyc")))
     return dest
 
 

@@ -76,7 +76,10 @@ def main():
     import __spark_entry__ as entry
     from go_boilerpipe_spark.spark_session import build_session
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    # no console progress bar: its redraws would share lines with the OK lines
+    spark = build_session(
+        master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     con = duckdb.connect()
     register_views(con, sf_dir)

@@ -126,3 +126,54 @@ class TestManifestEdges:
         # one lineage row per extraction-task partition per chunk
         assert len({(r["chunk_id"], r["part_id"]) for r in lin}) == len(lin)
 
+
+
+def _stub_job(tmp_path, monkeypatch, kernels_by_chunk):
+    """An ExtractJob over one tiny parquet file per chunk whose chunk runs
+    are stubbed: chunk ``i`` reports one lineage row per kernel path in
+    ``kernels_by_chunk[i]``. No Spark session is needed."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "pages"
+    src.mkdir()
+    for i in range(len(kernels_by_chunk)):
+        pq.write_table(pa.table({"url": [f"u{i}"], "html": [b"<p>x</p>"]}),
+                       str(src / f"part-{i}.parquet"))
+    job = ExtractJob(None, str(src), str(tmp_path / "sink"),
+                     chunk_target_bytes=1)
+
+    def run_chunk(run_id, chunk_id, chunk_files, schema):
+        lineage = [{"part_id": p, "docs_out": 1, "parse_errors": 0,
+                    "content_chars": 1, "kernel": k, "kernel_s": 0.0}
+                   for p, k in enumerate(kernels_by_chunk[int(chunk_id)])]
+        return {"chunk_id": chunk_id, "docs_out": len(lineage),
+                "parse_errors": 0, "lineage": lineage}
+
+    monkeypatch.setattr(job, "_completed_chunks", dict)
+    monkeypatch.setattr(job, "_drop_stale_chunks", lambda done, ids: None)
+    monkeypatch.setattr(job, "_commit_chunk", lambda entry: None)
+    monkeypatch.setattr(job, "_run_chunk", run_chunk)
+    return job
+
+
+def test_run_reports_kernel_paths_and_warns_on_pure(tmp_path, monkeypatch,
+                                                    caplog):
+    job = _stub_job(tmp_path, monkeypatch,
+                    [["c", "c"], ["c", "pure"], ["pure"]])
+    with caplog.at_level("WARNING", logger="go_boilerpipe_spark"):
+        stats = job.run(run_id="r1")
+    assert stats["kernel_paths"] == ["c", "pure"]
+    assert stats["chunks_done"] == 3 and stats["docs_out"] == 5
+    warnings = [r.getMessage() for r in caplog.records
+                if r.levelname == "WARNING"]
+    assert len(warnings) == 1
+    assert "000001, 000002" in warnings[0] and "000000" not in warnings[0]
+
+
+def test_run_on_the_c_kernel_does_not_warn(tmp_path, monkeypatch, caplog):
+    job = _stub_job(tmp_path, monkeypatch, [["c"], ["c", "c"]])
+    with caplog.at_level("WARNING", logger="go_boilerpipe_spark"):
+        stats = job.run()
+    assert stats["kernel_paths"] == ["c"]
+    assert not [r for r in caplog.records if r.levelname == "WARNING"]

@@ -67,3 +67,29 @@ def test_install_is_idempotent():
     assert go_boilerpipe_spark.install_zipimport_stat_check()
     assert zipimport.zipimporter.invalidate_caches is wrapped
     assert wrapped.stat_checked
+
+
+def test_pyfiles_zip_ships_bytecode(tmp_path):
+    """A worker imports the package from the shipped zip without compiling
+    any of its modules: each ``.py`` has an unchecked-hash ``.pyc`` beside
+    it."""
+    import subprocess
+
+    from go_boilerpipe_spark.pyfiles import build_pyfiles_zip
+
+    path = build_pyfiles_zip(str(tmp_path / "pkg.zip"))
+    code = f"""
+import builtins, sys
+
+def refuse(source, filename, *args, **kwargs):
+    raise AssertionError(f"compiled {{filename}}")
+
+builtins.compile = refuse
+sys.path.insert(0, {path!r})
+import go_boilerpipe_spark.kernel.document as document
+assert document.__file__ == {path!r} + "/go_boilerpipe_spark/kernel/document.pyc"
+assert document.extract_content("<p>" + "word " * 40 + "</p>")
+"""
+    out = subprocess.run([sys.executable, "-c", code], cwd=str(tmp_path),
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
