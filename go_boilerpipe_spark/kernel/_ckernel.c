@@ -13,24 +13,29 @@
  * with the pure path by construction.  Gate: tests/test_ckernel_parity.py
  * (golden 7/7 bytewise through BOTH paths + corpus/fuzz differentials).
  *
- * The input is a Python str; we take a UCS4 copy and scan uint32 arrays.
- * Lone surrogates (from surrogateescape decoding of invalid UTF-8) pass
- * through and count 1 byte in the byte-length gates, matching the Python
- * path's encode("utf-8","surrogateescape") arithmetic.
+ * The per-document entries take a Python str and scan a UCS4 copy of
+ * it; extract_batch decodes each page's UTF-8 bytes from the Arrow buffer
+ * into one UCS4 buffer that serves the whole batch, escaping each byte
+ * outside a well-formed sequence to U+DC00+byte as surrogateescape does.
+ * Those lone surrogates pass through and count 1 byte in the byte-length
+ * gates, matching the Python path's encode("utf-8","surrogateescape")
+ * arithmetic.
  *
- * How a text slice flows, and where it is copied: the scanner finds the
- * slice's end ('<') and notes in the same pass whether it holds '&' or
- * '\r'.  A slice with neither reaches text_token as a pointer into the
- * UCS4 copy; otherwise newline conversion and unescaping each copy it
- * once, only when needed.  Raw text is passed the same way unless it
- * holds '\r' or NUL.  text_token collapses spaces straight into text_buf
- * (copy 1) and appends the same chars to token_buf (copy 2).
- * flush_block counts tokens by walking token_buf in place: tokenize() is
- * built in scratch only when the buffer holds U+2063.  The block keeps
- * its own trimmed copy of text_buf (copy 3), and Content() is written
- * once, escaped, into the result str of the right kind: the joined text
- * is never built.  F2 normalizes a block text into scratch only when it
- * is short enough to equal a title candidate.
+ * How a text slice flows, and where it is copied: normal text is read as
+ * it is delivered (text_run): one loop scans for the markup, collapses
+ * spaces straight into text_buf (copy 1) and keeps the block's token
+ * counts, so flush_block has them ready.  handler.py's token buffer is
+ * text_buf plus the anchor markers; the markers are kept as offsets into
+ * text_buf, and the token buffer is built (h->tokens) only for a
+ * <title> that holds markers and for a block that holds U+2063, which is
+ * counted through tokenize().  A slice with a '&' is delivered from the
+ * '&' on the way raw text is: newline conversion and unescaping each copy
+ * it once, only when needed.  The block keeps its own trimmed copy of
+ * text_buf (copy 2), in a block taken from the handler's pool.  Content()
+ * is written once, escaped, into the result: a str of the right kind, or
+ * UTF-8 in the batch's content column.  The joined text is never built.
+ * F2 normalizes a block text into scratch only when it is short enough to
+ * equal a title candidate.
  *
  * Exposed:
  *   init_tables(cfg: dict)      -- must be called once before the others
@@ -38,6 +43,8 @@
  *   extract(html, resolve) -> (title, blocks, datetimes, merged)
  *   extract_content(html, resolve)
  *       -> (title, content, n_blocks, n_content, datetimes, merged)
+ *   extract_batch(n, offset, validity, offsets, data, resolve)
+ *       -> (title, author, date, content, n_blocks, n_content, parse_error)
  *   blocks: list[(text, num_words, num_linked_words,
  *                 num_words_in_wrapped_lines, num_wrapped_lines,
  *                 offset_start, offset_end, tag_level, is_content,
@@ -51,6 +58,20 @@
  * the last item (None when resolve was not called).  An exception from
  * resolve, or a result other than a (str, object) tuple, propagates
  * (TypeError for the latter) after the document's state is freed.
+ *
+ * extract_batch reads an Arrow binary or string array (its validity
+ * bitmap or None, int32 offsets and data buffers, and the array's row
+ * offset) and returns the output columns as buffers: each string column
+ * as (null_count, validity or None, int32 offsets, UTF-8 data), the date
+ * column as (null_count, validity or None, int64 microseconds), and the
+ * two counts as int32 values.  Its resolver has its own contract, see
+ * extract_row.  A page whose extraction raises an Exception is a row
+ * with only parse_error set, f"{type(e).__name__}: {e}"; any other
+ * exception ends the batch.  On a page that was not valid UTF-8 the
+ * title, author and content are scrubbed like str.encode("utf-8",
+ * "surrogateescape").decode("utf-8", "replace"); a lone surrogate that
+ * no byte escape explains (a JSON escape in ld+json) is written as
+ * U+FFFD, since Arrow strings are UTF-8.
  */
 
 #define PY_SSIZE_T_CLEAN
@@ -131,15 +152,25 @@ static unsigned char *g_space_bits;  /* GO_SPACE (Go unicode.IsSpace)       */
 static PyObject *g_entities;         /* html.entities.html5 dict            */
 static int g_ready;
 
-/* ASCII classes, one byte per char: the per-character loops answer every
- * test on an ASCII char with one load, before the Unicode bit tables */
+#define INVIS 0x2063u
+/* the private-use char inside the anchor markers "$\ue00a<" and
+ * ">\ue00a$" (handler.py ANCHOR_TEXT_START/END): text typed "$<" is no
+ * marker */
+#define ANCHOR_MARK 0xE00Au
+
+/* Char classes, one byte per char: the per-character loops answer every
+ * test on an ASCII or BMP char with one load, before the Unicode bit
+ * tables */
 #define CL_SPACE 1 /* GO_SPACE */
 #define CL_TOKW 2  /* [\p{L}0-9_] */
 #define CL_WORD 4  /* \p{L}\p{Nd}\p{Nl}\p{No} */
 #define CL_PUNCT 8 /* handler.py _TOKEN_PUNCT */
 #define CL_TPUNCT 16 /* filters.py _RE_TITLE_PUNCT: ?!.-: */
 #define CL_APOS 32   /* ' (dropped by _normalize_title_text) */
+#define CL_STOP 64   /* '<' and '&': where a text run may stop */
+#define CL_INVIS 128 /* U+2063, which makes a block take tokenize() */
 static unsigned char g_ascii_cls[128];
+static unsigned char *g_bmp_cls; /* CL_SPACE|CL_TOKW|CL_WORD|CL_INVIS */
 static const char TOKEN_PUNCT[] = "\"'.,!@-:;$?()/";
 
 static inline int bit_test(const unsigned char *bits, u32 c)
@@ -147,19 +178,30 @@ static inline int bit_test(const unsigned char *bits, u32 c)
     return c < CP_MAX && (bits[c >> 3] >> (c & 7)) & 1;
 }
 
+static inline int char_cls(u32 c)
+{
+    if (c < 128)
+        return g_ascii_cls[c];
+    if (c < 0x10000)
+        return g_bmp_cls[c];
+    return (bit_test(g_space_bits, c) ? CL_SPACE : 0) |
+           (bit_test(g_tokw_bits, c) ? CL_TOKW : 0) |
+           (bit_test(g_word_bits, c) ? CL_WORD : 0);
+}
+
 static inline int is_word_char(u32 c)
 {
-    return c < 128 ? g_ascii_cls[c] & CL_WORD : bit_test(g_word_bits, c);
+    return char_cls(c) & CL_WORD;
 }
 
 static inline int is_tok_word(u32 c)
 {
-    return c < 128 ? g_ascii_cls[c] & CL_TOKW : bit_test(g_tokw_bits, c);
+    return char_cls(c) & CL_TOKW;
 }
 
 static inline int is_go_space(u32 c)
 {
-    return c < 128 ? g_ascii_cls[c] & CL_SPACE : bit_test(g_space_bits, c);
+    return char_cls(c) & CL_SPACE;
 }
 
 /* token punctuation set — handler.py:66 _TOKEN_PUNCT (all ASCII) */
@@ -513,10 +555,33 @@ static inline double cb_link_density(const CBlock *b)
 /* ContentHandler — handler.py port                                    */
 /* ------------------------------------------------------------------ */
 
+/* flush_block's token counts (handler.py:397-427), kept as the block's
+ * text arrives.  Without U+2063, tokenize() splits the token buffer at
+ * ' ' and where a word run meets a char outside _TOKEN_PUNCT, so each
+ * char is looked at once.  head keeps a token's first three chars for
+ * the anchor-marker test. */
 typedef struct {
-    Buf token_buf;
+    long num_words, num_linked_words, num_wrapped_lines, num_tokens;
+    long num_words_current_line;
+    long current_line_length;
+    long done;      /* tokens ended, anchor markers included */
+    Py_ssize_t len; /* chars of the token being read, 0 between tokens */
+    int in_anchor, has_word, prev_tokw, prev_punct;
+    u32 head[3];
+} TokCount;
+
+typedef struct {
     Buf text_buf;
-    Buf scratch;  /* tokenize output / collapsed text reuse */
+    Buf scratch; /* tokenize output / collapsed text reuse */
+    Buf tokens;  /* handler.py's token buffer, rebuilt when it is needed */
+    Buf title;   /* the <title> text, when has_title */
+    int has_title;
+    /* the anchor markers of handler.py's token buffer, as offsets into
+     * text_buf: (offset << 1) | is_end_marker */
+    Py_ssize_t *marks;
+    Py_ssize_t nmarks, cap_marks;
+    TokCount tc;   /* the counts of text_buf and its markers so far */
+    int tok_invis; /* text_buf holds a U+2063: count through tokenize() */
     int depth_body, depth_anchor, depth_ignoreable, depth_tag;
     int depth_block_tag;
     int last_was_whitespace;
@@ -531,36 +596,176 @@ typedef struct {
     int last_start_len;
     CBlock **blocks;
     Py_ssize_t nblocks, cap_blocks;
-    PyObject *ld_json;   /* list of str */
-    PyObject *datetimes; /* list of str */
-    PyObject *title;     /* str or NULL */
+    CBlock **pool; /* released blocks, their text buffers kept for reuse */
+    Py_ssize_t npool, cap_pool;
+    PyObject *ld_json;   /* list of str, NULL until the first */
+    PyObject *datetimes; /* list of str, NULL until the first */
     int in_ld_json;
 } Handler;
 
-static int h_init(Handler *h)
+static inline void tc_start(TokCount *tc, int in_anchor)
+{
+    memset(tc, 0, sizeof(*tc));
+    tc->current_line_length = -1; /* don't count the first space */
+    tc->in_anchor = in_anchor;
+}
+
+/* one non-marker token of L chars */
+static inline void tc_count(TokCount *tc, Py_ssize_t L, int has_word)
+{
+    tc->num_tokens++;
+    if (!has_word)
+        return;
+    tc->num_words++;
+    tc->num_words_current_line++;
+    if (tc->in_anchor)
+        tc->num_linked_words++;
+    tc->current_line_length += L + 1;
+    if (tc->current_line_length > 80) { /* max line length */
+        tc->num_wrapped_lines++;
+        tc->current_line_length = L;
+        tc->num_words_current_line = 1;
+    }
+}
+
+/* end the token being read, if any */
+static inline void tc_end(TokCount *tc)
+{
+    Py_ssize_t L = tc->len;
+    int has_word = tc->has_word;
+    if (!L)
+        return;
+    tc->len = 0;
+    tc->has_word = 0;
+    tc->done++;
+    if (L == 3 && tc->head[1] == ANCHOR_MARK) {
+        if (tc->head[0] == '$' && tc->head[2] == '<') {
+            tc->in_anchor = 1;
+            return;
+        }
+        if (tc->head[0] == '>' && tc->head[2] == '$') {
+            tc->in_anchor = 0;
+            return;
+        }
+    }
+    tc_count(tc, L, has_word);
+}
+
+/* one non-space char c of class cls */
+static inline void tc_char(TokCount *tc, u32 c, int cls)
+{
+    int tokw = (cls & CL_TOKW) != 0;
+    if (tc->len && tokw != tc->prev_tokw &&
+        !(tokw ? tc->prev_punct : (cls & CL_PUNCT)))
+        tc_end(tc);
+    if (tc->len < 3)
+        tc->head[tc->len] = c;
+    tc->len++;
+    tc->has_word |= cls & CL_WORD;
+    tc->prev_tokw = tokw;
+    tc->prev_punct = cls & CL_PUNCT;
+}
+
+static void cblock_release(Handler *h, CBlock *cb);
+
+/* the block's buffers emptied */
+static void block_reset(Handler *h)
+{
+    h->text_buf.len = 0;
+    h->nmarks = 0;
+    h->tok_invis = 0;
+    tc_start(&h->tc, h->in_anchor_text);
+}
+
+/* a fresh document: the buffers and the block pool are kept */
+static void h_start(Handler *h)
+{
+    h->has_title = 0;
+    h->depth_body = h->depth_anchor = h->depth_ignoreable = 0;
+    h->depth_tag = 0;
+    h->depth_block_tag = -1;
+    h->last_was_whitespace = h->flush = h->in_anchor_text = 0;
+    h->offset_blocks = 0;
+    h->label_len = h->atom_len = 0;
+    h->last_start_len = 0;
+    while (h->nblocks)
+        cblock_release(h, h->blocks[--h->nblocks]);
+    Py_CLEAR(h->ld_json);
+    Py_CLEAR(h->datetimes);
+    h->in_ld_json = 0;
+    block_reset(h);
+}
+
+static void h_init(Handler *h)
 {
     memset(h, 0, sizeof(*h));
-    h->depth_block_tag = -1;
-    h->ld_json = PyList_New(0);
-    h->datetimes = PyList_New(0);
-    if (!h->ld_json || !h->datetimes)
-        return -1;
-    return 0;
+    h_start(h);
 }
 
 static void h_free(Handler *h)
 {
-    buf_free(&h->token_buf);
     buf_free(&h->text_buf);
     buf_free(&h->scratch);
+    buf_free(&h->tokens);
+    buf_free(&h->title);
+    PyMem_Free(h->marks);
     PyMem_Free(h->label_stack);
     PyMem_Free(h->atom_stack);
     for (Py_ssize_t i = 0; i < h->nblocks; i++)
         cblock_free(h->blocks[i]);
     PyMem_Free(h->blocks);
+    for (Py_ssize_t i = 0; i < h->npool; i++)
+        cblock_free(h->pool[i]);
+    PyMem_Free(h->pool);
     Py_XDECREF(h->ld_json);
     Py_XDECREF(h->datetimes);
-    Py_XDECREF(h->title);
+}
+
+/* a block with room for n chars, from the pool when it has one */
+static CBlock *cblock_new(Handler *h, Py_ssize_t n)
+{
+    CBlock *cb;
+    if (h->npool) {
+        cb = h->pool[--h->npool];
+    } else {
+        cb = (CBlock *)PyMem_Calloc(1, sizeof(CBlock));
+        if (!cb) {
+            PyErr_NoMemory();
+            return NULL;
+        }
+    }
+    u32 *text = cb->text;
+    Py_ssize_t cap = cb->text_cap;
+    if (!text || cap < n) {
+        PyMem_Free(text);
+        cap = n ? n : 1;
+        text = (u32 *)PyMem_Malloc((size_t)cap * sizeof(u32));
+        if (!text) {
+            PyMem_Free(cb);
+            PyErr_NoMemory();
+            return NULL;
+        }
+    }
+    memset(cb, 0, sizeof(*cb));
+    cb->text = text;
+    cb->text_cap = cap;
+    return cb;
+}
+
+static void cblock_release(Handler *h, CBlock *cb)
+{
+    if (h->npool >= h->cap_pool) {
+        Py_ssize_t nc = h->cap_pool ? h->cap_pool * 2 : 64;
+        CBlock **np = (CBlock **)PyMem_Realloc(h->pool,
+                                               (size_t)nc * sizeof(CBlock *));
+        if (!np) {
+            cblock_free(cb);
+            return;
+        }
+        h->pool = np;
+        h->cap_pool = nc;
+    }
+    h->pool[h->npool++] = cb;
 }
 
 static int ipush(int **arr, Py_ssize_t *len, Py_ssize_t *cap, int v)
@@ -588,11 +793,6 @@ static void trim_go_space(const u32 *s, Py_ssize_t *a, Py_ssize_t *b)
         (*b)--;
 }
 
-#define INVIS 0x2063u
-/* the private-use char inside the anchor markers "$\ue00a<" and
- * ">\ue00a$" (handler.py ANCHOR_TEXT_START/END): text typed "$<" is no
- * marker */
-#define ANCHOR_MARK 0xE00Au
 
 /* handler.py _junction_slow: the original marker-machine regexes over a
  * junction piece with word-adjacent edge markers attached.  Appends the
@@ -769,86 +969,6 @@ static PyObject *str_from_u32(const u32 *s, Py_ssize_t n)
     return PyUnicode_FromKindAndData(PyUnicode_4BYTE_KIND, s, n);
 }
 
-/* the running counts of flush_block's token loop (handler.py:397-427) */
-typedef struct {
-    long num_words, num_linked_words, num_wrapped_lines, num_tokens;
-    long num_words_current_line;
-    long current_line_length;
-    int in_anchor;
-} TokCount;
-
-/* one token t[0..L) of tokenize()'s output */
-static inline void count_token(TokCount *tc, const u32 *t, Py_ssize_t L,
-                               int has_word)
-{
-    if (L == 3 && t[0] == '$' && t[1] == ANCHOR_MARK && t[2] == '<') {
-        tc->in_anchor = 1;
-        return;
-    }
-    if (L == 3 && t[0] == '>' && t[1] == ANCHOR_MARK && t[2] == '$') {
-        tc->in_anchor = 0;
-        return;
-    }
-    tc->num_tokens++;
-    if (!has_word)
-        return;
-    tc->num_words++;
-    tc->num_words_current_line++;
-    if (tc->in_anchor)
-        tc->num_linked_words++;
-    tc->current_line_length += L + 1;
-    if (tc->current_line_length > 80) { /* max line length */
-        tc->num_wrapped_lines++;
-        tc->current_line_length = L;
-        tc->num_words_current_line = 1;
-    }
-}
-
-/* Count tokenize(s) without building it, s trimmed of GO_SPACE.  Without
- * U+2063, tokenize() only inserts ' ' at word-run edges whose non-word
- * char is not _TOKEN_PUNCT, so its tokens are the runs of s between
- * ' ' chars and those edges.  Returns 0, having counted nothing that
- * matters, when s holds a U+2063: the caller then tokenizes. */
-static int count_tokens_direct(const u32 *s, Py_ssize_t n, TokCount *tc)
-{
-    Py_ssize_t t0 = -1; /* start of the current token, -1 between */
-    int has_word = 0, prev_tokw = 0, prev_punct = 0;
-    for (Py_ssize_t i = 0; i < n; i++) {
-        u32 c = s[i];
-        int cls;
-        if (c < 128) {
-            cls = g_ascii_cls[c];
-        } else {
-            if (c == INVIS)
-                return 0;
-            cls = (bit_test(g_tokw_bits, c) ? CL_TOKW : 0) |
-                  (bit_test(g_word_bits, c) ? CL_WORD : 0);
-        }
-        if (c == ' ') {
-            if (t0 >= 0)
-                count_token(tc, s + t0, i - t0, has_word);
-            t0 = -1;
-            continue;
-        }
-        int tokw = (cls & CL_TOKW) != 0;
-        if (t0 >= 0 && tokw != prev_tokw &&
-            !(tokw ? prev_punct : (cls & CL_PUNCT))) {
-            count_token(tc, s + t0, i - t0, has_word);
-            t0 = -1;
-        }
-        if (t0 < 0) {
-            t0 = i;
-            has_word = 0;
-        }
-        has_word |= cls & CL_WORD;
-        prev_tokw = tokw;
-        prev_punct = cls & CL_PUNCT;
-    }
-    if (t0 >= 0)
-        count_token(tc, s + t0, n - t0, has_word);
-    return 1;
-}
-
 /* tokenize() into h->scratch, then its strip + split(' ') */
 static int count_tokens_split(Handler *h, const u32 *s, Py_ssize_t n,
                               TokCount *tc)
@@ -872,66 +992,105 @@ static int count_tokens_split(Handler *h, const u32 *s, Py_ssize_t n,
         int has_word = 0;
         while (j < b && tk[j] != ' ')
             has_word |= is_word_char(tk[j++]);
-        count_token(tc, tk + i, j - i, has_word);
+        Py_ssize_t L = j - i;
+        if (L == 3 && tk[i + 1] == ANCHOR_MARK &&
+            ((tk[i] == '$' && tk[i + 2] == '<') ||
+             (tk[i] == '>' && tk[i + 2] == '$')))
+            tc->in_anchor = tk[i] == '$';
+        else
+            tc_count(tc, L, has_word);
         i = j;
     }
+    return 0;
+}
+
+/* handler.py's token buffer into h->tokens: text_buf with the anchor
+ * markers "$< " and ">$ " put back at their offsets */
+static int token_view(Handler *h)
+{
+    static const u32 MARKER[2][4] = {{'$', ANCHOR_MARK, '<', ' '},
+                                     {'>', ANCHOR_MARK, '$', ' '}};
+    Buf *out = &h->tokens;
+    out->len = 0;
+    if (buf_reserve(out, h->text_buf.len + 4 * h->nmarks) < 0)
+        return -1;
+    Py_ssize_t from = 0;
+    for (Py_ssize_t m = 0; m < h->nmarks; m++) {
+        Py_ssize_t at = h->marks[m] >> 1;
+        buf_extend(out, h->text_buf.p + from, at - from);
+        buf_extend(out, MARKER[h->marks[m] & 1], 4);
+        from = at;
+    }
+    buf_extend(out, h->text_buf.p + from, h->text_buf.len - from);
     return 0;
 }
 
 /* handler.py:364-466 flush_block */
 static int flush_block(Handler *h)
 {
-    if (h->token_buf.len == 0)
+    Py_ssize_t tn = h->text_buf.len;
+    if (tn == 0 && h->nmarks == 0)
         return 0;
-    const u32 *ts = h->token_buf.p;
-    Py_ssize_t tn = h->token_buf.len;
 
     if (h->depth_body == 0) {
         if (h->last_start_len == 5 &&
             memcmp(h->last_start_tag, "title", 5) == 0) {
+            const u32 *ts = h->text_buf.p;
+            if (h->nmarks) {
+                if (token_view(h) < 0)
+                    return -1;
+                ts = h->tokens.p;
+                tn = h->tokens.len;
+            }
             Py_ssize_t a = 0, b = tn;
             trim_go_space(ts, &a, &b);
             if (b > a) {
-                PyObject *t = str_from_u32(ts + a, b - a);
-                if (!t)
+                h->title.len = 0;
+                if (buf_extend(&h->title, ts + a, b - a) < 0)
                     return -1;
-                Py_XDECREF(h->title);
-                h->title = t;
+                h->has_title = 1;
             }
         }
-        h->text_buf.len = 0;
-        h->token_buf.len = 0;
+        block_reset(h);
         return 0;
     }
 
-    /* the buffer's utf-8 length is 1 exactly when it holds one char of
-     * one byte (every char takes at least one); it is never 0 here */
-    if (tn == 1 && (ts[0] < 0x80 || (ts[0] >= 0xDC80 && ts[0] <= 0xDCFF)) &&
+    /* the token buffer's utf-8 length is 1 exactly when it holds one
+     * char of one byte (every char takes at least one, a marker three) */
+    const u32 *ts = h->text_buf.p;
+    if (h->nmarks == 0 && tn == 1 &&
+        (ts[0] < 0x80 || (ts[0] >= 0xDC80 && ts[0] <= 0xDCFF)) &&
         h->last_was_whitespace) {
-        h->text_buf.len = 0;
-        h->token_buf.len = 0;
+        block_reset(h);
         return 0;
     }
 
-    Py_ssize_t ta = 0, tb = tn;
-    trim_go_space(ts, &ta, &tb);
-    TokCount tc = {0, 0, 0, 0, 0, -1 /* don't count the first space */,
-                   h->in_anchor_text};
-    if (ta >= tb) {
-        tc.num_tokens = 1; /* tokenize returned [""] */
-    } else if (!count_tokens_direct(ts + ta, tb - ta, &tc)) {
-        TokCount fresh = {0, 0, 0, 0, 0, -1, h->in_anchor_text};
-        tc = fresh;
-        if (count_tokens_split(h, ts, tn, &tc) < 0)
+    TokCount tc;
+    if (h->tok_invis) {
+        if (token_view(h) < 0)
             return -1;
+        tc_start(&tc, h->in_anchor_text);
+        if (count_tokens_split(h, h->tokens.p, h->tokens.len, &tc) < 0)
+            return -1;
+    } else {
+        tc = h->tc;
+        tc_end(&tc);
+        if (tc.done == 0)
+            tc.num_tokens = 1; /* all spaces: tokenize returned [""] */
     }
     h->in_anchor_text = tc.in_anchor;
     long num_words = tc.num_words, num_linked_words = tc.num_linked_words;
     long num_wrapped_lines = tc.num_wrapped_lines;
 
-    if (tc.num_tokens == 0)
-        /* Go-port quirk: buffers NOT reset (content_handler.go:328-330) */
+    if (tc.num_tokens == 0) {
+        /* Go-port quirk: buffers NOT reset (content_handler.go:328-330).
+         * Every token so far is a marker, so counting the buffer again
+         * from the new in_anchor_text reaches h->tc, except for a token
+         * still being read with none ended before it. */
+        if (h->tc.done == 0)
+            h->tc.in_anchor = tc.in_anchor;
         return 0;
+    }
 
     long num_words_in_wrapped_lines;
     if (num_wrapped_lines == 0) {
@@ -941,29 +1100,30 @@ static int flush_block(Handler *h)
         num_words_in_wrapped_lines = num_words - tc.num_words_current_line;
     }
 
-    Py_ssize_t xa = 0, xb = h->text_buf.len;
-    trim_go_space(h->text_buf.p, &xa, &xb);
+    Py_ssize_t xa = 0, xb = tn;
+    trim_go_space(ts, &xa, &xb);
 
     if (xb > xa) {
         if (num_words_in_wrapped_lines == 0) {
             num_words_in_wrapped_lines = num_words;
             num_wrapped_lines = 1;
         }
-        CBlock *cb = (CBlock *)PyMem_Calloc(1, sizeof(CBlock));
-        if (!cb) {
-            PyErr_NoMemory();
-            return -1;
+        if (h->nblocks >= h->cap_blocks) {
+            Py_ssize_t nc = h->cap_blocks ? h->cap_blocks * 2 : 64;
+            CBlock **np = (CBlock **)PyMem_Realloc(
+                h->blocks, (size_t)nc * sizeof(CBlock *));
+            if (!np) {
+                PyErr_NoMemory();
+                return -1;
+            }
+            h->blocks = np;
+            h->cap_blocks = nc;
         }
-        cb->text_len = cb->text_cap = xb - xa;
-        cb->text = (u32 *)PyMem_Malloc(
-            (size_t)(cb->text_len ? cb->text_len : 1) * sizeof(u32));
-        if (!cb->text) {
-            PyMem_Free(cb);
-            PyErr_NoMemory();
+        CBlock *cb = cblock_new(h, xb - xa);
+        if (!cb)
             return -1;
-        }
-        memcpy(cb->text, h->text_buf.p + xa,
-               (size_t)cb->text_len * sizeof(u32));
+        cb->text_len = xb - xa;
+        memcpy(cb->text, ts + xa, (size_t)cb->text_len * sizeof(u32));
         cb->num_words = num_words;
         cb->num_linked_words = num_linked_words;
         cb->nwiwl = num_words_in_wrapped_lines;
@@ -978,24 +1138,11 @@ static int flush_block(Handler *h)
                 cb->labels[lv]++;
         }
         h->label_len = 0;
-        if (h->nblocks >= h->cap_blocks) {
-            Py_ssize_t nc = h->cap_blocks ? h->cap_blocks * 2 : 64;
-            CBlock **np = (CBlock **)PyMem_Realloc(
-                h->blocks, (size_t)nc * sizeof(CBlock *));
-            if (!np) {
-                cblock_free(cb);
-                PyErr_NoMemory();
-                return -1;
-            }
-            h->blocks = np;
-            h->cap_blocks = nc;
-        }
         h->blocks[h->nblocks++] = cb;
         h->offset_blocks++;
     }
 
-    h->text_buf.len = 0;
-    h->token_buf.len = 0;
+    block_reset(h);
     h->depth_block_tag = -1;
     return 0;
 }
@@ -1004,62 +1151,172 @@ static int flush_block(Handler *h)
 static int add_ws_if_necessary(Handler *h)
 {
     if (!h->last_was_whitespace) {
-        if (buf_push(&h->token_buf, ' ') < 0 ||
-            buf_push(&h->text_buf, ' ') < 0)
+        if (buf_push(&h->text_buf, ' ') < 0)
             return -1;
+        tc_end(&h->tc);
         h->last_was_whitespace = 1;
     }
     return 0;
 }
 
-/* handler.py:301-354 text_token.  The spaceRemover collapse writes
- * straight into text_buf and token_buf copies what it appended.  An
- * all-space d collapses to nothing, and d[0] is a space then, so it
- * takes the was_first branch of the Python fast path. */
+/* handler.py _action_start/_action_end for <a>: the whitespace, then an
+ * anchor marker and a space in the token buffer only */
+static int add_anchor_marker(Handler *h, int is_end)
+{
+    if (add_ws_if_necessary(h) < 0)
+        return -1;
+    if (h->nmarks >= h->cap_marks) {
+        Py_ssize_t nc = h->cap_marks ? h->cap_marks * 2 : 16;
+        Py_ssize_t *np = (Py_ssize_t *)PyMem_Realloc(
+            h->marks, (size_t)nc * sizeof(Py_ssize_t));
+        if (!np) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        h->marks = np;
+        h->cap_marks = nc;
+    }
+    h->marks[h->nmarks++] = (h->text_buf.len << 1) | is_end;
+    /* the marker is a token of its own: the buffer ends in a space */
+    h->tc.done++;
+    h->tc.in_anchor = !is_end;
+    h->last_was_whitespace = 1;
+    return 0;
+}
+
+static inline int is_ascii_alpha(u32 c)
+{
+    return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z');
+}
+
+/* '<' followed by c opens a tag, an end tag or markup */
+static inline int opens_markup(u32 c)
+{
+    return is_ascii_alpha(c) || c == '/' || c == '!' || c == '?';
+}
+
+/* handler.py:301-354 text_token's spaceRemover, and the block's token
+ * counts, over s[i..end) in one loop.  A GO_SPACE run becomes one ' '
+ * unless the last char written was a space, so no char writes more than
+ * one: the caller reserved end - i chars of text_buf.  With markup set
+ * the loop stops at a '&' or at a '<' that may open markup in s[..n) (a
+ * normal-text run, see text_run).  Returns where it stopped. */
+static inline Py_ssize_t collapse_count(Handler *h, const u32 *s,
+                                        Py_ssize_t i, Py_ssize_t end,
+                                        Py_ssize_t n, int markup)
+{
+    u32 *o = h->text_buf.p;
+    Py_ssize_t w = h->text_buf.len;
+    int lws = h->last_was_whitespace, cls_or = 0, wrote = 0;
+    TokCount tc = h->tc;
+    for (; i < end; i++) {
+        u32 c = s[i];
+        int cls;
+        if (c < 128) {
+            cls = g_ascii_cls[c];
+            if (markup && (cls & CL_STOP) &&
+                (c == '&' || (i + 1 < n && opens_markup(s[i + 1]))))
+                break;
+        } else {
+            cls = c < 0x10000 ? g_bmp_cls[c] : char_cls(c);
+            cls_or |= cls;
+        }
+        if (cls & CL_SPACE) {
+            if (!lws) {
+                o[w++] = ' ';
+                lws = 1;
+                tc_end(&tc);
+            }
+        } else {
+            o[w++] = c;
+            lws = 0;
+            wrote = 1;
+            tc_char(&tc, c, cls);
+            /* the rest of a word run: no token split, no marker.  Word
+             * chars are neither space, '<', '&' nor U+2063. */
+            while (tc.prev_tokw && i + 1 < end) {
+                u32 d = s[i + 1];
+                int k = d < 128 ? g_ascii_cls[d]
+                        : d < 0x10000 ? g_bmp_cls[d] : 0;
+                if (!(k & CL_TOKW))
+                    break;
+                o[w++] = d;
+                if (tc.len < 3)
+                    tc.head[tc.len] = d;
+                tc.len++;
+                tc.has_word |= k & CL_WORD;
+                i++;
+            }
+        }
+    }
+    if (wrote && h->depth_block_tag == -1)
+        h->depth_block_tag = h->depth_tag;
+    h->text_buf.len = w;
+    h->last_was_whitespace = lws;
+    h->tc = tc;
+    if (cls_or & CL_INVIS)
+        h->tok_invis = 1;
+    return i;
+}
+
+/* handler.py:301-354 text_token */
 static int text_token(Handler *h, const u32 *d, Py_ssize_t n)
 {
     if (h->flush) {
-        if (h->token_buf.len && flush_block(h) < 0)
+        if (flush_block(h) < 0)
             return -1;
         h->flush = 0;
     }
-    if (h->depth_ignoreable != 0)
+    if (h->depth_ignoreable != 0 || n == 0)
         return 0;
-    if (n == 0)
-        return 0;
-
-    Buf *tb = &h->text_buf;
-    if (buf_reserve(tb, n + 1) < 0)
+    if (buf_reserve(&h->text_buf, n) < 0)
         return -1;
-    u32 *o = tb->p;
-    Py_ssize_t start = tb->len, w = start;
-    if (is_go_space(d[0]) && !h->last_was_whitespace)
-        o[w++] = ' ';
-    Py_ssize_t body = w;
-    int pending = 0; /* a space run after the first non-space char */
-    for (Py_ssize_t i = 0; i < n; i++) {
-        u32 c = d[i];
-        if (is_go_space(c)) {
-            pending = w > body;
-        } else {
-            if (pending) {
-                o[w++] = ' ';
-                pending = 0;
-            }
-            o[w++] = c;
-        }
+    collapse_count(h, d, 0, n, n, 0);
+    return 0;
+}
+
+/* Normal text from s[i] up to a '&', a '<' that may open markup, or the
+ * end, read as it is delivered: the scan, text_token's collapse and the
+ * token counts are one loop.  text_token is split-invariant (text_token
+ * of a then b is text_token of a + b), so the rest of the slice, from a
+ * '&' on, can go the unescaping way.  Returns where the run stopped, or
+ * -1 on error. */
+static Py_ssize_t text_run(Handler *h, const u32 *s, Py_ssize_t i,
+                           Py_ssize_t n)
+{
+    if (i >= n || (s[i] < 128 && (g_ascii_cls[s[i]] & CL_STOP) &&
+                   (s[i] == '&' || (i + 1 < n && opens_markup(s[i + 1])))))
+        return i; /* an empty run: no text token */
+    if (h->flush) {
+        if (flush_block(h) < 0)
+            return -1;
+        h->flush = 0;
     }
-    if (w == body) {
-        h->last_was_whitespace = 1;
-    } else {
-        if (h->depth_block_tag == -1)
-            h->depth_block_tag = h->depth_tag;
-        if (pending) /* d ends in a space */
-            o[w++] = ' ';
-        h->last_was_whitespace = pending;
+    if (h->depth_ignoreable != 0) {
+        /* the text is dropped: only the markup matters */
+        for (; i < n; i++)
+            if (s[i] == '<' && i + 1 < n && opens_markup(s[i + 1]))
+                break;
+        return i;
     }
-    tb->len = w;
-    return buf_extend(&h->token_buf, o + start, w - start);
+    /* text_buf grows with what the run writes, not with the page */
+    for (;;) {
+        if (buf_reserve(&h->text_buf, n - i < 64 ? n - i : 64) < 0)
+            return -1;
+        Py_ssize_t room = h->text_buf.cap - h->text_buf.len;
+        Py_ssize_t end = n - i <= room ? n : i + room;
+        i = collapse_count(h, s, i, end, n, 1);
+        if (i < end || end == n)
+            return i;
+    }
+}
+
+/* append v to the list *lst, made on the first append */
+static int list_append(PyObject **lst, PyObject *v)
+{
+    if (!*lst && !(*lst = PyList_New(0)))
+        return -1;
+    return PyList_Append(*lst, v);
 }
 
 /* handler.py:132 — actions that change tag level */
@@ -1078,16 +1335,8 @@ static int action_start(Handler *h, int ta, const TagEnt *e)
         return 1;
     case TA_ANCHOR:
         h->depth_anchor++;
-        if (h->depth_ignoreable == 0) {
-            if (add_ws_if_necessary(h) < 0)
-                return -1;
-            if (buf_push(&h->token_buf, '$') < 0 ||
-                buf_push(&h->token_buf, ANCHOR_MARK) < 0 ||
-                buf_push(&h->token_buf, '<') < 0 ||
-                buf_push(&h->token_buf, ' ') < 0)
-                return -1;
-            h->last_was_whitespace = 1;
-        }
+        if (h->depth_ignoreable == 0 && add_anchor_marker(h, 0) < 0)
+            return -1;
         return 0;
     case TA_BODY:
         if (flush_block(h) < 0)
@@ -1122,16 +1371,9 @@ static int action_end(Handler *h, int ta)
         return 1;
     case TA_ANCHOR:
         h->depth_anchor--;
-        if (h->depth_anchor == 0 && h->depth_ignoreable == 0) {
-            if (add_ws_if_necessary(h) < 0)
-                return -1;
-            if (buf_push(&h->token_buf, '>') < 0 ||
-                buf_push(&h->token_buf, ANCHOR_MARK) < 0 ||
-                buf_push(&h->token_buf, '$') < 0 ||
-                buf_push(&h->token_buf, ' ') < 0)
-                return -1;
-            h->last_was_whitespace = 1;
-        }
+        if (h->depth_anchor == 0 && h->depth_ignoreable == 0 &&
+            add_anchor_marker(h, 1) < 0)
+            return -1;
         return 0;
     case TA_BODY:
         if (flush_block(h) < 0)
@@ -1164,10 +1406,8 @@ static int start_element(Handler *h, const void *nm_v,
 
     int ta = e ? e->action : TA_NONE;
     if (ta != TA_NONE) {
-        if (ta == TA_TIME && dt_val) {
-            if (PyList_Append(h->datetimes, dt_val) < 0)
-                return -1;
-        }
+        if (ta == TA_TIME && dt_val && list_append(&h->datetimes, dt_val) < 0)
+            return -1;
         if (changes_tag_level(ta))
             h->depth_tag++;
         int f = action_start(h, ta, e);
@@ -1212,7 +1452,7 @@ static int end_element(Handler *h, const TagEnt *e)
     if (ta == TA_NONE || changes_tag_level(ta))
         h->depth_tag--;
 
-    if (h->flush && h->token_buf.len && flush_block(h) < 0)
+    if (h->flush && flush_block(h) < 0)
         return -1;
 
     /* content_handler.go:151 — unconditional pop */
@@ -1242,11 +1482,6 @@ static inline u32 ascii_lower(u32 c)
 static inline int is_ws_char(u32 c) /* _WS = " \n\r\t\f" */
 {
     return c == ' ' || c == '\n' || c == '\r' || c == '\t' || c == '\f';
-}
-
-static inline int is_ascii_alpha(u32 c)
-{
-    return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z');
 }
 
 static void name_from(Name *nm, const u32 *s, Py_ssize_t a, Py_ssize_t b)
@@ -1696,7 +1931,7 @@ static int deliver_text(Handler *h, const u32 *d, Py_ssize_t n)
         PyObject *t = str_from_u32(d, n);
         if (!t)
             return -1;
-        int rc = PyList_Append(h->ld_json, t);
+        int rc = list_append(&h->ld_json, t);
         Py_DECREF(t);
         if (rc < 0)
             return -1;
@@ -1813,6 +2048,17 @@ static int run_parse(Parser *p, Handler *h)
             }
             /* empty raw text: fall through to normal scanning */
             i = p->i;
+        }
+
+        if (!h->in_ld_json) {
+            /* the common case: text read as it is delivered, up to the
+             * markup or a '&', which the loop below takes from */
+            i = text_run(h, s, i, n);
+            if (i < 0)
+                return -1;
+            p->i = i;
+            if (i >= n)
+                return 0;
         }
 
         Py_ssize_t text_start = i;
@@ -2013,20 +2259,40 @@ static int starts_with_number(const u32 *s, Py_ssize_t n)
 static const u32 PH_REUTERS[] = {0xA9, ' ', 'r', 'e', 'u', 't', 'e', 'r', 's'};
 static const u32 PH_RATTA[] = {'r', 0xE4, 't', 't', 'a', ' ', 'a', 'r', 't',
                                'i', 'k', 'e', 'l', 'n'};
-static const char *TERM_CONTAINS_ASCII[] = {
-    "what you think...", "add your comment", "add comment", "reader views",
-    "have your say", "reader comments", NULL,
-};
 
-static int u32_contains_ascii(const u32 *s, Py_ssize_t n, const char *lit)
+/* whether s holds one of F1's seven contained phrases (filters.py
+ * _TERMINATING_CONTAINS), in one scan: each position is tested only against the
+ * phrases that start with its char */
+static int contains_term(const u32 *s, Py_ssize_t n)
 {
-    Py_ssize_t m = (Py_ssize_t)strlen(lit);
-    for (Py_ssize_t i = 0; i + m <= n; i++) {
-        Py_ssize_t t = 0;
-        while (t < m && s[i + t] == (u32)(unsigned char)lit[t])
-            t++;
-        if (t == m)
-            return 1;
+    for (Py_ssize_t i = 0; i + 11 <= n; i++) { /* "add comment": 11 */
+        const u32 *t = s + i;
+        Py_ssize_t m = n - i;
+        switch (t[0]) {
+        case 'a':
+            if (t[1] == 'd' &&
+                (u32_startswith_ascii(t, m, "add comment") ||
+                 u32_startswith_ascii(t, m, "add your comment")))
+                return 1;
+            break;
+        case 'h':
+            if (u32_startswith_ascii(t, m, "have your say"))
+                return 1;
+            break;
+        case 'r':
+            if (t[1] == 'e' &&
+                (u32_startswith_ascii(t, m, "reader views") ||
+                 u32_startswith_ascii(t, m, "reader comments")))
+                return 1;
+            if (t[1] == 0xE4 && m >= (Py_ssize_t)(sizeof(PH_RATTA) / 4) &&
+                memcmp(t, PH_RATTA, sizeof(PH_RATTA)) == 0)
+                return 1;
+            break;
+        case 'w':
+            if (u32_startswith_ascii(t, m, "what you think..."))
+                return 1;
+            break;
+        }
     }
     return 0;
 }
@@ -2058,22 +2324,10 @@ static int f_terminating_blocks(Handler *h)
                 (ln >= 9 && memcmp(lc, PH_REUTERS, sizeof(PH_REUTERS)) == 0) ||
                 u32_startswith_ascii(lc, ln, "please rate this") ||
                 u32_startswith_ascii(lc, ln, "post a comment");
-            if (!hit) {
-                for (int t = 0; TERM_CONTAINS_ASCII[t]; t++)
-                    if (u32_contains_ascii(lc, ln, TERM_CONTAINS_ASCII[t])) {
-                        hit = 1;
-                        break;
-                    }
-                if (!hit &&
-                    u32_contains(lc, ln, PH_RATTA,
-                                 (Py_ssize_t)(sizeof(PH_RATTA) / 4)))
-                    hit = 1;
-                if (!hit &&
-                    u32_eq_ascii(lc, ln,
-                                 "thanks for your comments - this feedback "
-                                 "is now closed"))
-                    hit = 1;
-            }
+            hit = hit || contains_term(lc, ln) ||
+                  u32_eq_ascii(lc, ln,
+                               "thanks for your comments - this feedback "
+                               "is now closed");
             if (hit)
                 tb->labels[LBL_INDICATES_END_OF_TEXT]++;
         } else if (cb_link_density(tb) == 1.0) {
@@ -2529,7 +2783,7 @@ static int f_block_proximity_fusion(Handler *h, long max_dist,
                     h->nblocks = w + (h->nblocks - i);
                     return -1;
                 }
-                cblock_free(tb);
+                cblock_release(h, tb);
                 continue;
             }
         }
@@ -2549,7 +2803,7 @@ static void f_boilerplate_block(Handler *h)
         if (tb->is_content || tb->labels[LBL_TITLE] > 0)
             h->blocks[w++] = tb;
         else
-            cblock_free(tb);
+            cblock_release(h, tb);
     }
     h->nblocks = w;
 }
@@ -2764,7 +3018,8 @@ static PyObject *py_init_tables(PyObject *Py_UNUSED(self), PyObject *args)
         g_word_bits = (unsigned char *)PyMem_Calloc(CP_MAX / 8 + 1, 1);
         g_tokw_bits = (unsigned char *)PyMem_Calloc(CP_MAX / 8 + 1, 1);
         g_space_bits = (unsigned char *)PyMem_Calloc(CP_MAX / 8 + 1, 1);
-        if (!g_word_bits || !g_tokw_bits || !g_space_bits)
+        g_bmp_cls = (unsigned char *)PyMem_Calloc(0x10000, 1);
+        if (!g_word_bits || !g_tokw_bits || !g_space_bits || !g_bmp_cls)
             return PyErr_NoMemory();
     }
 
@@ -2805,7 +3060,14 @@ static PyObject *py_init_tables(PyObject *Py_UNUSED(self), PyObject *args)
             (bit_test(g_word_bits, c) ? CL_WORD : 0) |
             (strchr(TOKEN_PUNCT, (int)c) && c ? CL_PUNCT : 0) |
             (strchr("?!.-:", (int)c) && c ? CL_TPUNCT : 0) |
-            (c == '\'' ? CL_APOS : 0));
+            (c == '\'' ? CL_APOS : 0) |
+            (c == '<' || c == '&' ? CL_STOP : 0));
+    for (u32 c = 128; c < 0x10000; c++)
+        g_bmp_cls[c] = (unsigned char)(
+            (bit_test(g_space_bits, c) ? CL_SPACE : 0) |
+            (bit_test(g_tokw_bits, c) ? CL_TOKW : 0) |
+            (bit_test(g_word_bits, c) ? CL_WORD : 0) |
+            (c == INVIS ? CL_INVIS : 0));
     for (int si = 0; si < 6; si++)
         for (const char *q = SEP_SETS[si]; *q; q++)
             g_sep[si][(unsigned char)*q] = 1;
@@ -2959,17 +3221,13 @@ static inline int is_strip_nl(u32 c) { return c == ' ' || c == '\n'; }
         }                                                                  \
     } while (0)
 
-/* Content() rendered straight from the filtered block array
- * (boilerpipe.go:76-106 Text(true,false) + Go html.EscapeString):
- * '\n'-join of is_content texts, strip ' '/'\n' at both ends, escape
- * & ' < > " exactly like document.py go_escape_string. Skips the
- * per-block Python tuples and TextBlock objects entirely — the Spark
- * hot path only needs (content, n_blocks, n_content).  One pass counts
- * the escaped length and the largest char, the second writes into a
- * str of that size and kind: the joined text is never materialized. */
-static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
+/* The span Content() renders (boilerpipe.go:76-106 Text(true,false)):
+ * the '\n'-join of the is_content texts stripped of ' '/'\n' at both
+ * ends is content block b0 from char lo to content block b1's char hi.
+ * Returns 0 when it is empty.  *n_content counts the content blocks. */
+static int content_span(const Handler *h, Py_ssize_t *b0p, Py_ssize_t *b1p,
+                        Py_ssize_t *lop, Py_ssize_t *hip, long *n_content)
 {
-    /* the stripped span: content block b0 from char lo to b1's char hi */
     Py_ssize_t b0 = -1, b1 = -1, lo = 0, hi = 0;
     long nc = 0;
     for (Py_ssize_t i = 0; i < h->nblocks; i++) {
@@ -2993,9 +3251,25 @@ static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
             hi = k;
         }
     }
-    *n_blocks = (long)h->nblocks;
     *n_content = nc;
-    if (b0 < 0)
+    *b0p = b0;
+    *b1p = b1;
+    *lop = lo;
+    *hip = hi;
+    return b0 >= 0;
+}
+
+/* Content() rendered straight from the filtered block array, escaping
+ * & ' < > " exactly like document.py go_escape_string.  Skips the
+ * per-block Python tuples and TextBlock objects entirely — the Spark
+ * hot path only needs (content, n_blocks, n_content).  One pass counts
+ * the escaped length and the largest char, the second writes into a
+ * str of that size and kind: the joined text is never materialized. */
+static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
+{
+    Py_ssize_t b0, b1, lo, hi;
+    *n_blocks = (long)h->nblocks;
+    if (!content_span(h, &b0, &b1, &lo, &hi, n_content))
         return PyUnicode_New(0, 0);
 
     Py_ssize_t out_n = 0;
@@ -3033,6 +3307,45 @@ static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
     return res;
 }
 
+/* parse s[0..n) into h (handler.py events, then parse_document's final
+ * flush_block); p and h keep their buffers from the last document */
+static int parse_doc(Parser *p, Handler *h, const u32 *s, Py_ssize_t n)
+{
+    p->s = s;
+    p->n = n;
+    p->i = 0;
+    p->raw = NULL;
+    h_start(h);
+    if (run_parse(p, h) < 0)
+        return -1;
+    return flush_block(h);
+}
+
+static PyObject *title_str(const Handler *h)
+{
+    return h->has_title ? str_from_u32(h->title.p, h->title.len)
+                        : PyUnicode_New(0, 0);
+}
+
+/* a new reference to the list, or to a new empty list for NULL */
+static PyObject *list_or_empty(PyObject *lst)
+{
+    if (!lst)
+        return PyList_New(0);
+    Py_INCREF(lst);
+    return lst;
+}
+
+/* the Article pipeline with F2 matching the str filter_title */
+static int filter_doc(Handler *h, PyObject *filter_title)
+{
+    Py_ssize_t tn = PyUnicode_GET_LENGTH(filter_title);
+    Py_UCS4 *tb = PyUnicode_AsUCS4Copy(filter_title);
+    int rc = tb ? run_article_pipeline(h, (const u32 *)tb, tn) : -1;
+    PyMem_Free(tb);
+    return rc;
+}
+
 enum { MODE_PARSE, MODE_BLOCKS, MODE_CONTENT };
 
 /* The one per-document driver.  MODE_PARSE returns the raw blocks:
@@ -3059,33 +3372,20 @@ static PyObject *run_document(PyObject *html, int mode, PyObject *resolve)
 
     Parser p;
     memset(&p, 0, sizeof(p));
-    p.s = (const u32 *)buf;
-    p.n = n;
-
     Handler h;
-    if (h_init(&h) < 0) {
-        h_free(&h);
-        PyMem_Free(buf);
-        return NULL;
-    }
+    h_init(&h);
 
-    int rc = run_parse(&p, &h);
-    /* parse_document calls h.flush_block() once after the loop */
-    if (rc == 0)
-        rc = flush_block(&h);
-
+    int rc = parse_doc(&p, &h, (const u32 *)buf, n);
     PyObject *title = NULL, *merged = Py_None;
     Py_INCREF(Py_None);
     if (rc == 0) {
-        title = h.title ? h.title : PyUnicode_New(0, 0);
-        if (h.title)
-            Py_INCREF(h.title);
+        title = title_str(&h);
         if (!title)
             rc = -1;
     }
     if (rc == 0 && mode != MODE_PARSE) {
         PyObject *filter_title = title, *res = NULL;
-        if (PyList_GET_SIZE(h.ld_json) > 0) {
+        if (h.ld_json) {
             res = PyObject_CallFunctionObjArgs(resolve, title, h.ld_json,
                                                NULL);
             if (!res) {
@@ -3102,12 +3402,8 @@ static PyObject *run_document(PyObject *html, int mode, PyObject *resolve)
                 Py_INCREF(merged);
             }
         }
-        if (rc == 0) {
-            Py_ssize_t tn = PyUnicode_GET_LENGTH(filter_title);
-            Py_UCS4 *tb = PyUnicode_AsUCS4Copy(filter_title);
-            rc = tb ? run_article_pipeline(&h, (const u32 *)tb, tn) : -1;
-            PyMem_Free(tb);
-        }
+        if (rc == 0)
+            rc = filter_doc(&h, filter_title);
         Py_XDECREF(res);
     }
 
@@ -3115,17 +3411,18 @@ static PyObject *run_document(PyObject *html, int mode, PyObject *resolve)
     if (rc == 0 && mode != MODE_CONTENT) {
         PyObject *blocks = blocks_to_py(&h);
         if (blocks && mode == MODE_PARSE)
-            result = Py_BuildValue("(ONOO)", title, blocks, h.ld_json,
-                                   h.datetimes);
+            result = Py_BuildValue("(ONNN)", title, blocks,
+                                   list_or_empty(h.ld_json),
+                                   list_or_empty(h.datetimes));
         else if (blocks)
-            result = Py_BuildValue("(ONOO)", title, blocks, h.datetimes,
-                                   merged);
+            result = Py_BuildValue("(ONNO)", title, blocks,
+                                   list_or_empty(h.datetimes), merged);
     } else if (rc == 0) {
         long nb = 0, nc = 0;
         PyObject *content = render_content(&h, &nb, &nc);
         if (content)
-            result = Py_BuildValue("(ONllOO)", title, content, nb, nc,
-                                   h.datetimes, merged);
+            result = Py_BuildValue("(ONllNO)", title, content, nb, nc,
+                                   list_or_empty(h.datetimes), merged);
     }
     Py_XDECREF(title);
     Py_DECREF(merged);
@@ -3159,6 +3456,574 @@ static PyObject *py_extract_content(PyObject *Py_UNUSED(self), PyObject *args)
     return run_document(html, MODE_CONTENT, resolve);
 }
 
+/* ------------------------------------------------------------------ */
+/* extract_batch: one call per Arrow batch, UTF-8 in and out           */
+/* ------------------------------------------------------------------ */
+
+typedef struct {
+    char *p;
+    Py_ssize_t len, cap;
+} Bytes;
+
+static int bytes_reserve(Bytes *b, Py_ssize_t need)
+{
+    if (b->len + need <= b->cap)
+        return 0;
+    Py_ssize_t ncap = b->cap ? b->cap : 256;
+    while (ncap < b->len + need)
+        ncap *= 2;
+    char *np = (char *)PyMem_Realloc(b->p, (size_t)ncap);
+    if (!np) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    b->p = np;
+    b->cap = ncap;
+    return 0;
+}
+
+/* The well-formed UTF-8 sequence at b[0..m) (Unicode Table 3-7): returns
+ * its length, or 0 with *bad set to the length of the maximal subpart of
+ * a well-formed sequence that starts there (at least 1). */
+static inline int utf8_seq(const unsigned char *b, Py_ssize_t m, int *bad)
+{
+    unsigned c = b[0], lo = 0x80, hi = 0xBF;
+    int need;
+    if (c < 0x80)
+        return 1;
+    if (c >= 0xC2 && c <= 0xDF) {
+        need = 1;
+    } else if (c >= 0xE0 && c <= 0xEF) {
+        need = 2;
+        if (c == 0xE0)
+            lo = 0xA0;
+        else if (c == 0xED)
+            hi = 0x9F; /* no encoded surrogates */
+    } else if (c >= 0xF0 && c <= 0xF4) {
+        need = 3;
+        if (c == 0xF0)
+            lo = 0x90;
+        else if (c == 0xF4)
+            hi = 0x8F; /* nothing above U+10FFFF */
+    } else {
+        *bad = 1;
+        return 0;
+    }
+    int k = 1;
+    for (; k <= need && k < m; k++) {
+        if (b[k] < lo || b[k] > hi)
+            break;
+        lo = 0x80;
+        hi = 0xBF;
+    }
+    if (k > need)
+        return need + 1;
+    *bad = k;
+    return 0;
+}
+
+/* b[0..n) decoded into out, the way bytes.decode("utf-8",
+ * "surrogateescape") does: each byte outside a well-formed sequence
+ * becomes U+DC00 + byte.  Returns 1 when a byte was escaped, 0 when the
+ * strict decode succeeds, -1 on error. */
+static int decode_utf8(const unsigned char *b, Py_ssize_t n, Buf *out)
+{
+    out->len = 0;
+    if (buf_reserve(out, n) < 0)
+        return -1;
+    u32 *o = out->p;
+    Py_ssize_t i = 0, w = 0;
+    int escaped = 0;
+    while (i < n) {
+        unsigned c = b[i];
+        if (c < 0x80) {
+            o[w++] = c;
+            i++;
+            /* an ASCII run, eight bytes at a time */
+            uint64_t q;
+            while (i + 8 <= n &&
+                   (memcpy(&q, b + i, 8), !(q & 0x8080808080808080ULL))) {
+                for (int k = 0; k < 8; k++)
+                    o[w + k] = b[i + k];
+                w += 8;
+                i += 8;
+            }
+            continue;
+        }
+        int bad, len = utf8_seq(b + i, n - i, &bad);
+        if (len == 2) {
+            o[w++] = ((c & 0x1F) << 6) | (b[i + 1] & 0x3F);
+        } else if (len == 3) {
+            o[w++] = ((c & 0x0F) << 12) | ((u32)(b[i + 1] & 0x3F) << 6) |
+                     (b[i + 2] & 0x3F);
+        } else if (len == 4) {
+            o[w++] = ((c & 0x07) << 18) | ((u32)(b[i + 1] & 0x3F) << 12) |
+                     ((u32)(b[i + 2] & 0x3F) << 6) | (b[i + 3] & 0x3F);
+        } else {
+            /* the rest of a maximal subpart is continuation bytes, which
+             * start no sequence: escaping byte by byte escapes it all */
+            o[w++] = 0xDC00 + c;
+            escaped = 1;
+            len = 1;
+        }
+        i += len;
+    }
+    out->len = w;
+    return escaped;
+}
+
+/* c as UTF-8.  A surrogateescape char (U+DC80..U+DCFF) is its raw byte
+ * when raw is set, as str.encode("utf-8", "surrogateescape") writes it;
+ * any other lone surrogate is U+FFFD. */
+static inline char *put_utf8(char *o, u32 c, int raw)
+{
+    if (c < 0x80) {
+        *o++ = (char)c;
+    } else if (c < 0x800) {
+        *o++ = (char)(0xC0 | (c >> 6));
+        *o++ = (char)(0x80 | (c & 0x3F));
+    } else if (c >= 0xD800 && c <= 0xDFFF) {
+        if (raw && c >= 0xDC80 && c <= 0xDCFF) {
+            *o++ = (char)(c - 0xDC00);
+        } else {
+            *o++ = (char)0xEF;
+            *o++ = (char)0xBF;
+            *o++ = (char)0xBD;
+        }
+    } else if (c < 0x10000) {
+        *o++ = (char)(0xE0 | (c >> 12));
+        *o++ = (char)(0x80 | ((c >> 6) & 0x3F));
+        *o++ = (char)(0x80 | (c & 0x3F));
+    } else {
+        *o++ = (char)(0xF0 | (c >> 18));
+        *o++ = (char)(0x80 | ((c >> 12) & 0x3F));
+        *o++ = (char)(0x80 | ((c >> 6) & 0x3F));
+        *o++ = (char)(0x80 | (c & 0x3F));
+    }
+    return o;
+}
+
+static int put_u32s(Bytes *out, const u32 *s, Py_ssize_t n, int raw)
+{
+    if (bytes_reserve(out, 4 * n) < 0)
+        return -1;
+    char *o = out->p + out->len;
+    for (Py_ssize_t i = 0; i < n; i++)
+        o = put_utf8(o, s[i], raw);
+    out->len = o - out->p;
+    return 0;
+}
+
+static int put_str(Bytes *out, PyObject *str, int raw)
+{
+    Py_ssize_t n = PyUnicode_GET_LENGTH(str);
+    int kind = PyUnicode_KIND(str);
+    const void *data = PyUnicode_DATA(str);
+    if (bytes_reserve(out, 4 * n) < 0)
+        return -1;
+    char *o = out->p + out->len;
+    for (Py_ssize_t i = 0; i < n; i++)
+        o = put_utf8(o, (u32)PyUnicode_READ(kind, data, i), raw);
+    out->len = o - out->p;
+    return 0;
+}
+
+/* Content() as UTF-8 at the end of out: render_content's span and
+ * escapes, in one pass */
+static int put_content(Bytes *out, const Handler *h, int raw)
+{
+    Py_ssize_t b0, b1, lo, hi;
+    long nc;
+    if (!content_span(h, &b0, &b1, &lo, &hi, &nc))
+        return 0;
+    for (Py_ssize_t i = b0; i <= b1; i++) {
+        const CBlock *cb = h->blocks[i];
+        if (!cb->is_content)
+            continue;
+        Py_ssize_t e = i == b1 ? hi : cb->text_len;
+        Py_ssize_t k = i == b0 ? lo : 0;
+        /* "&amp;" and "&#39;" take 5 bytes, any other char at most 4 */
+        if (bytes_reserve(out, 1 + 5 * (e - k)) < 0)
+            return -1;
+        char *o = out->p + out->len;
+        if (i > b0)
+            *o++ = '\n';
+        for (; k < e; k++) {
+            u32 c = cb->text[k];
+            if (c >= 128) {
+                o = put_utf8(o, c, raw);
+            } else if (!ESC_EXTRA[c]) {
+                *o++ = (char)c;
+            } else {
+                const char *rep = c == '&'    ? "&amp;"
+                                  : c == '\'' ? "&#39;"
+                                  : c == '"'  ? "&#34;"
+                                  : c == '<'  ? "&lt;"
+                                              : "&gt;";
+                while (*rep)
+                    *o++ = *rep++;
+            }
+        }
+        out->len = o - out->p;
+    }
+    return 0;
+}
+
+/* out[from..] made valid UTF-8 the way bytes.decode("utf-8", "replace")
+ * does: each maximal invalid subpart becomes U+FFFD.  tmp is scratch. */
+static int scrub_utf8(Bytes *out, Py_ssize_t from, Bytes *tmp)
+{
+    Py_ssize_t n = out->len - from;
+    tmp->len = 0;
+    if (bytes_reserve(tmp, n) < 0)
+        return -1;
+    memcpy(tmp->p, out->p + from, (size_t)n);
+    out->len = from;
+    if (bytes_reserve(out, 3 * n) < 0)
+        return -1;
+    const unsigned char *b = (const unsigned char *)tmp->p;
+    char *o = out->p + from;
+    for (Py_ssize_t i = 0; i < n;) {
+        int bad, len = utf8_seq(b + i, n - i, &bad);
+        if (len) {
+            memcpy(o, b + i, (size_t)len);
+            o += len;
+            i += len;
+        } else {
+            *o++ = (char)0xEF;
+            *o++ = (char)0xBF;
+            *o++ = (char)0xBD;
+            i += bad;
+        }
+    }
+    out->len = o - out->p;
+    return 0;
+}
+
+/* an Arrow column under construction: validity bits, then int32 offsets
+ * and UTF-8 data (strings) or fixed-width values */
+typedef struct {
+    Bytes valid, offs, data;
+    Py_ssize_t nulls;
+} Col;
+
+static void col_free(Col *c)
+{
+    PyMem_Free(c->valid.p);
+    PyMem_Free(c->offs.p);
+    PyMem_Free(c->data.p);
+}
+
+/* room for n rows: validity zeroed (every row null until set); a
+ * string column (width 0) gets n + 1 offsets, any other n zeroed values
+ * of width bytes */
+static int col_init(Col *c, Py_ssize_t n, Py_ssize_t width)
+{
+    memset(c, 0, sizeof(*c));
+    if (bytes_reserve(&c->valid, (n + 7) / 8 + 1) < 0)
+        return -1;
+    memset(c->valid.p, 0, (size_t)(n + 7) / 8);
+    if (!width) {
+        if (bytes_reserve(&c->offs, 4 * (n + 1)) < 0)
+            return -1;
+        memset(c->offs.p, 0, 4); /* offsets[0] */
+    } else {
+        if (bytes_reserve(&c->data, width * n + 1) < 0)
+            return -1;
+        memset(c->data.p, 0, (size_t)(width * n));
+        c->data.len = width * n;
+    }
+    return 0;
+}
+
+static inline void set_bit(Bytes *v, Py_ssize_t r)
+{
+    v->p[r >> 3] |= (char)(1 << (r & 7));
+}
+
+/* end string row r: valid (its data written) or null (nothing written) */
+static int col_end_row(Col *c, Py_ssize_t r, int valid)
+{
+    if (c->data.len > INT32_MAX) {
+        PyErr_SetString(PyExc_OverflowError,
+                        "extract_batch: an output column passed 2 GiB");
+        return -1;
+    }
+    int32_t end = (int32_t)c->data.len;
+    memcpy(c->offs.p + 4 * (r + 1), &end, 4);
+    if (valid)
+        set_bit(&c->valid, r);
+    else
+        c->nulls++;
+    return 0;
+}
+
+/* (null_count, validity bytes or None, offsets bytes, data bytes) for a
+ * string column, (null_count, validity or None, values) otherwise */
+static PyObject *col_to_py(Col *c, Py_ssize_t n)
+{
+    PyObject *valid;
+    if (c->nulls) {
+        valid = PyBytes_FromStringAndSize(c->valid.p, (n + 7) / 8);
+    } else {
+        valid = Py_None;
+        Py_INCREF(valid);
+    }
+    if (!valid)
+        return NULL;
+    /* y# makes None of a NULL pointer: no data is b"" */
+    const char *data = c->data.p ? c->data.p : "";
+    if (!c->offs.p)
+        return Py_BuildValue("(nNy#)", c->nulls, valid, data, c->data.len);
+    return Py_BuildValue("(nNy#y#)", c->nulls, valid, c->offs.p,
+                         4 * (n + 1), data, c->data.len);
+}
+
+enum { C_TITLE, C_AUTHOR, C_DATE, C_CONTENT, C_NB, C_NC, C_ERR, N_COLS };
+/* bytes per value of each column, 0 for a string column */
+static const Py_ssize_t COL_WIDTH[N_COLS] = {0, 0, 8, 0, 4, 4, 0};
+
+typedef struct {
+    Parser p;
+    Handler h;
+    Buf in;    /* the decoded page */
+    Bytes tmp; /* scrub scratch */
+    Col col[N_COLS];
+} Batch;
+
+/* the row's message: f"{type(e).__name__}: {e}" of the exception set,
+ * cleared; NULL (the exception kept) when it is no Exception */
+static PyObject *error_message(void)
+{
+    if (!PyErr_ExceptionMatches(PyExc_Exception))
+        return NULL;
+    PyObject *type, *value, *tb;
+    PyErr_Fetch(&type, &value, &tb);
+    PyErr_NormalizeException(&type, &value, &tb);
+    PyObject *name = PyObject_GetAttrString(type, "__name__");
+    PyObject *text = name ? PyObject_Str(value) : NULL;
+    PyObject *msg = text ? PyUnicode_FromFormat("%U: %U", name, text) : NULL;
+    if (!msg) { /* the message itself failed: the type's name will do */
+        PyErr_Clear();
+        msg = PyUnicode_FromString(((PyTypeObject *)type)->tp_name);
+    }
+    Py_XDECREF(name);
+    Py_XDECREF(text);
+    Py_XDECREF(type);
+    Py_XDECREF(value);
+    Py_XDECREF(tb);
+    return msg;
+}
+
+/* the string str written as the column's value of the current row,
+ * scrubbed on a page that was not valid UTF-8 */
+static int put_value(Batch *bt, int ci, PyObject *str, const u32 *s,
+                     Py_ssize_t n, int scrub)
+{
+    Bytes *d = &bt->col[ci].data;
+    Py_ssize_t from = d->len;
+    if ((str ? put_str(d, str, scrub) : put_u32s(d, s, n, scrub)) < 0)
+        return -1;
+    return scrub ? scrub_utf8(d, from, &bt->tmp) : 0;
+}
+
+/* One page, decoded into bt->in, extracted into row r of the columns.
+ * On a page with ld+json or <time> values (and only there) resolve is
+ * called once, between parsing and filtering:
+ *   resolve(title, ld_json or None, datetimes or None)
+ *       -> (title: str, author: str, date: int | None, content: str | None)
+ * F2 matches the title it returns; date is microseconds since the epoch
+ * (UTC); a str content replaces the rendered one. */
+static int extract_row(Batch *bt, Py_ssize_t r, int scrub, PyObject *resolve)
+{
+    Handler *h = &bt->h;
+    if (parse_doc(&bt->p, h, bt->in.p, bt->in.len) < 0)
+        return -1;
+    PyObject *res = NULL, *title = NULL, *author = NULL, *content = NULL;
+    PyObject *date = Py_None;
+    int rc = -1;
+    if (h->ld_json || h->datetimes) {
+        PyObject *t = title_str(h);
+        if (!t)
+            return -1;
+        res = PyObject_CallFunctionObjArgs(
+            resolve, t, h->ld_json ? h->ld_json : Py_None,
+            h->datetimes ? h->datetimes : Py_None, NULL);
+        Py_DECREF(t);
+        if (!res)
+            return -1;
+        if (!PyTuple_Check(res) || PyTuple_GET_SIZE(res) != 4 ||
+            !PyUnicode_Check(title = PyTuple_GET_ITEM(res, 0)) ||
+            !PyUnicode_Check(author = PyTuple_GET_ITEM(res, 1)) ||
+            !((date = PyTuple_GET_ITEM(res, 2)) == Py_None ||
+              PyLong_Check(date)) ||
+            !((content = PyTuple_GET_ITEM(res, 3)) == Py_None ||
+              PyUnicode_Check(content))) {
+            PyErr_SetString(PyExc_TypeError,
+                            "resolve must return (str, str, int | None, "
+                            "str | None)");
+            goto done;
+        }
+        if (content == Py_None)
+            content = NULL;
+        if (filter_doc(h, title) < 0)
+            goto done;
+    } else if (run_article_pipeline(h, h->title.p,
+                                    h->has_title ? h->title.len : 0) < 0) {
+        return -1;
+    }
+
+    long long us = 0;
+    if (date != Py_None) {
+        us = PyLong_AsLongLong(date);
+        if (us == -1 && PyErr_Occurred())
+            goto done;
+    }
+    long n_content;
+    Py_ssize_t b0, b1, lo, hi;
+    content_span(h, &b0, &b1, &lo, &hi, &n_content);
+    if (put_value(bt, C_TITLE, title, h->title.p,
+                  h->has_title ? h->title.len : 0, scrub) < 0 ||
+        (author && put_value(bt, C_AUTHOR, author, NULL, 0, scrub) < 0))
+        goto done;
+    if (content) {
+        if (put_value(bt, C_CONTENT, content, NULL, 0, scrub) < 0)
+            goto done;
+    } else {
+        Bytes *d = &bt->col[C_CONTENT].data;
+        Py_ssize_t from = d->len;
+        if (put_content(d, h, scrub) < 0 ||
+            (scrub && scrub_utf8(d, from, &bt->tmp) < 0))
+            goto done;
+    }
+    int32_t nb = (int32_t)h->nblocks, nc = (int32_t)n_content;
+    memcpy(bt->col[C_NB].data.p + 4 * r, &nb, 4);
+    memcpy(bt->col[C_NC].data.p + 4 * r, &nc, 4);
+    if (date != Py_None) {
+        memcpy(bt->col[C_DATE].data.p + 8 * r, &us, 8);
+        set_bit(&bt->col[C_DATE].valid, r);
+    } else {
+        bt->col[C_DATE].nulls++;
+    }
+    rc = 0;
+done:
+    Py_XDECREF(res);
+    return rc;
+}
+
+static PyObject *py_extract_batch(PyObject *Py_UNUSED(self), PyObject *args)
+{
+    Py_ssize_t n, off;
+    PyObject *validity, *resolve;
+    Py_buffer offsets, data;
+    if (!PyArg_ParseTuple(args, "nnOy*y*O", &n, &off, &validity, &offsets,
+                          &data, &resolve))
+        return NULL;
+    PyObject *result = NULL;
+    Py_buffer vbuf = {0};
+    int have_v = 0;
+    Batch *bt = (Batch *)PyMem_Calloc(1, sizeof(Batch));
+    if (!bt) {
+        PyErr_NoMemory();
+        goto out;
+    }
+    h_init(&bt->h);
+    if (!g_ready) {
+        PyErr_SetString(PyExc_RuntimeError, "init_tables() not called");
+        goto out;
+    }
+    if (validity != Py_None) {
+        if (PyObject_GetBuffer(validity, &vbuf, PyBUF_SIMPLE) < 0)
+            goto out;
+        have_v = 1;
+    }
+    const unsigned char *bits = (const unsigned char *)vbuf.buf;
+    const int32_t *ofs = (const int32_t *)offsets.buf;
+    const unsigned char *bytes = (const unsigned char *)data.buf;
+    if (n < 0 || off < 0 || offsets.len < 4 * (off + n + 1) ||
+        (have_v && vbuf.len < (off + n + 7) / 8)) {
+        PyErr_SetString(PyExc_ValueError,
+                        "extract_batch: buffers shorter than the array");
+        goto out;
+    }
+    for (int ci = 0; ci < N_COLS; ci++)
+        if (col_init(&bt->col[ci], n, COL_WIDTH[ci]) < 0)
+            goto out;
+
+    for (Py_ssize_t r = 0; r < n; r++) {
+        Py_ssize_t idx = off + r;
+        int32_t b0 = ofs[idx], b1 = ofs[idx + 1];
+        PyObject *msg = NULL;
+        Py_ssize_t mark[N_COLS];
+        for (int ci = 0; ci < N_COLS; ci++)
+            mark[ci] = bt->col[ci].data.len;
+        if (have_v && !((bits[idx >> 3] >> (idx & 7)) & 1)) {
+            msg = PyUnicode_FromString("html is null");
+            if (!msg)
+                goto out;
+        } else {
+            if (b0 < 0 || b1 < b0 || b1 > data.len) {
+                PyErr_SetString(PyExc_ValueError,
+                                "extract_batch: offsets out of range");
+                goto out;
+            }
+            int scrub = decode_utf8(bytes + b0, b1 - b0, &bt->in);
+            if (scrub < 0 || extract_row(bt, r, scrub, resolve) < 0) {
+                msg = error_message();
+                if (!msg)
+                    goto out; /* no Exception: the batch fails */
+                for (int ci = 0; ci < N_COLS; ci++)
+                    if (!COL_WIDTH[ci])
+                        bt->col[ci].data.len = mark[ci];
+            }
+        }
+        if (msg) {
+            /* an error row: title, author, content and date are null, and
+             * extract_row wrote no value before it failed */
+            bt->col[C_DATE].nulls++;
+            /* scrubbed like document._scrub */
+            int rc = put_value(bt, C_ERR, msg, NULL, 0, 1);
+            Py_DECREF(msg);
+            if (rc < 0 || col_end_row(&bt->col[C_ERR], r, 1) < 0 ||
+                col_end_row(&bt->col[C_TITLE], r, 0) < 0 ||
+                col_end_row(&bt->col[C_AUTHOR], r, 0) < 0 ||
+                col_end_row(&bt->col[C_CONTENT], r, 0) < 0)
+                goto out;
+        } else if (col_end_row(&bt->col[C_TITLE], r, 1) < 0 ||
+                   col_end_row(&bt->col[C_AUTHOR], r, 1) < 0 ||
+                   col_end_row(&bt->col[C_CONTENT], r, 1) < 0 ||
+                   col_end_row(&bt->col[C_ERR], r, 0) < 0) {
+            goto out;
+        }
+    }
+    result = PyTuple_New(N_COLS);
+    if (!result)
+        goto out;
+    for (int ci = 0; ci < N_COLS; ci++) {
+        PyObject *item = col_to_py(&bt->col[ci], n);
+        if (!item) {
+            Py_CLEAR(result);
+            goto out;
+        }
+        PyTuple_SET_ITEM(result, ci, item);
+    }
+out:
+    if (bt) {
+        for (int ci = 0; ci < N_COLS; ci++)
+            col_free(&bt->col[ci]);
+        h_free(&bt->h);
+        parser_free(&bt->p);
+        buf_free(&bt->in);
+        PyMem_Free(bt->tmp.p);
+        PyMem_Free(bt);
+    }
+    if (have_v)
+        PyBuffer_Release(&vbuf);
+    PyBuffer_Release(&offsets);
+    PyBuffer_Release(&data);
+    return result;
+}
+
 static PyMethodDef ckernel_methods[] = {
     {"init_tables", py_init_tables, METH_VARARGS,
      "Install the shared kernel tables (idempotent)."},
@@ -3172,6 +4037,11 @@ static PyMethodDef ckernel_methods[] = {
      "extract_content(html, resolve) -> (title, content, n_blocks, "
      "n_content, datetimes, merged) -- extract + C-side Content() "
      "rendering, no block tuples"},
+    {"extract_batch", py_extract_batch, METH_VARARGS,
+     "extract_batch(n, offset, validity, offsets, data, resolve) -> "
+     "(title, author, date, content, n_blocks, n_content, parse_error) "
+     "-- one Arrow binary/string column of html in, the output columns' "
+     "Arrow buffers out"},
     {NULL, NULL, 0, NULL},
 };
 

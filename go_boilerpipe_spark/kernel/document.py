@@ -9,10 +9,16 @@ With the C kernel loaded, a document is one C call: parse, the 12
 filters and (for :func:`extract_content`) the Content() render. The
 ld+json merge stays in Python; on a page with ld+json the kernel calls
 :func:`_resolve_title` once between parsing and filtering. Without a
-compiler the pure modules run the same steps.
+compiler the pure modules run the same steps. :func:`extract_batch`
+takes a whole Arrow array of pages and returns the output columns; with
+the C kernel that is one C call per array.
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timedelta
+
+import pyarrow as pa
 
 from . import htmltok
 from .ckernel import load as _load_ckernel
@@ -248,6 +254,107 @@ def extract_content(html):
     date = art.date_published if art.date_published is not None else h_time
     return (art.headline or title, art.author_name, date,
             art.body or content, n_blocks, n_content)
+
+
+def _decode_html(html):
+    """Decode html bytes, reporting whether the bytes were valid UTF-8.
+
+    Strict decode is the fast common path; invalid pages fall back to
+    surrogateescape so the kernel sees Go-equivalent raw bytes (byte-length
+    parity), and the caller scrubs lone surrogates before Arrow (Arrow string
+    columns must be valid UTF-8 — a raw 0xFF in a <title> would otherwise
+    raise UnicodeEncodeError inside pa.array() and kill the task)."""
+    if isinstance(html, str):
+        return html, True
+    b = bytes(html)
+    try:
+        return b.decode("utf-8"), True
+    except UnicodeDecodeError:
+        return b.decode("utf-8", "surrogateescape"), False
+
+
+def _scrub(s):
+    """Replace surrogateescape'd invalid bytes with U+FFFD (valid UTF-8)."""
+    if s is None:
+        return None
+    return s.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
+
+
+_EPOCH = datetime(1970, 1, 1)
+_US = timedelta(microseconds=1)
+# the types of extract_batch's columns
+_BATCH_TYPES = (pa.string(), pa.string(), pa.timestamp("us", tz="UTC"),
+                pa.string(), pa.int32(), pa.int32(), pa.string())
+
+
+def _epoch_us(d):
+    """The value ``pa.array([d], pa.timestamp("us", tz="UTC"))`` stores:
+    pyarrow keeps the wall-clock time and drops the UTC offset."""
+    return None if d is None else (d.replace(tzinfo=None) - _EPOCH) // _US
+
+
+def _resolve_row(title, ld_json, datetimes):
+    """The C batch kernel's callback on a page with ld+json or ``<time>``
+    values, made once between parsing and filtering: returns the row's
+    title (the one F2 matches), author, date in microseconds since the
+    epoch or None, and the content that replaces the rendered one or
+    None, with :func:`extract_content`'s precedence."""
+    h_time = _last_valid_time(datetimes or ())
+    if not ld_json:
+        return title, "", _epoch_us(h_time), None
+    art = _merge_ld_json(ld_json)
+    date = art.date_published if art.date_published is not None else h_time
+    return (art.headline or title, art.author_name, _epoch_us(date),
+            art.body or None)
+
+
+def _extract_batch_pure(html):
+    """:func:`extract_batch` one document at a time, for the pure kernel."""
+    cols = tuple([] for _ in _BATCH_TYPES)
+    for h in html.to_pylist():
+        row = (None, None, None, None, 0, 0, "html is null")
+        if h is not None:
+            try:
+                text, clean = _decode_html(h)
+                title, author, date, content, nb, nc = extract_content(text)
+                if not clean:
+                    title, author, content = (
+                        _scrub(title), _scrub(author), _scrub(content))
+                row = (title, author, date, content, nb, nc, None)
+            except Exception as e:  # never fail the task on one document
+                row = (None, None, None, None, 0, 0,
+                       _scrub(f"{type(e).__name__}: {e}"))
+        for col, v in zip(cols, row):
+            col.append(v)
+    return [pa.array(c, t) for c, t in zip(cols, _BATCH_TYPES)]
+
+
+def extract_batch(html):
+    """Extract an Arrow array of pages (binary or string, UTF-8 bytes):
+    returns the arrays ``[title, author, date, content, n_blocks,
+    n_content, parse_error]``. A row is :func:`extract_content` of the page
+    decoded by :func:`_decode_html`, its strings scrubbed by
+    :func:`_scrub` when the page is not valid UTF-8. A null page, or one
+    whose extraction raises, is a row with only ``parse_error`` set.
+
+    With the C kernel the batch is one C call that reads the array's
+    buffers and writes the output columns' buffers: Python is entered
+    only on a page with ld+json or ``<time>`` values
+    (:func:`_resolve_row`)."""
+    if _CK is None:
+        return _extract_batch_pure(html)
+    if not (pa.types.is_binary(html.type) or pa.types.is_string(html.type)):
+        html = html.cast(pa.binary())
+    n = len(html)
+    validity, offsets, data = html.buffers()
+    cols = _CK.extract_batch(n, html.offset, validity, offsets,
+                             b"" if data is None else data, _resolve_row)
+    return [
+        pa.Array.from_buffers(
+            t, n, [valid and pa.py_buffer(valid), *map(pa.py_buffer, bufs)],
+            nulls)
+        for t, (nulls, valid, *bufs) in zip(_BATCH_TYPES, cols)
+    ]
 
 
 def extract_debug(html):

@@ -17,10 +17,13 @@ Scale notes (100 TB / 1000-executor design):
   storage; each extra Python task also adds a fixed cost (task launch and
   Arrow stream set-up; the package ``__init__`` keeps it from including a
   re-read of ``pyspark.zip``);
-- Arrow batches are *byte*-capped by the caller via
-  ``spark.sql.execution.arrow.maxRecordsPerBatch`` plus the size-aware
-  re-chunking below, keeping Python-worker memory bounded even when single
-  documents are multi-MB.
+- Spark caps each input batch at ``arrow.maxRecordsPerBatch`` records and
+  ``arrow.maxBytesPerBatch`` bytes, and each input batch becomes one
+  output batch, so Python-worker memory stays bounded by the input's even
+  when single documents are multi-MB;
+- a batch crosses into the kernel once (``kernel.document.extract_batch``):
+  the C kernel reads the html column's Arrow buffers and writes the output
+  columns' buffers, with no per-row Python objects.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from typing import Iterator
 
 import pyarrow as pa
 
-from ..kernel.document import KERNEL_PATH, extract_content
+from ..kernel.document import KERNEL_PATH, extract_batch
 
 # Sink schema — FIXTURES.md §4.
 OUTPUT_SCHEMA_DDL = (
@@ -51,118 +54,16 @@ _ARROW_SCHEMA = pa.schema(
     ]
 )
 
-# Cap the *decoded html bytes* we hold per output batch; documents vary
-# 1 KB..100 MB, so record-count caps alone do not bound memory.
-_MAX_BATCH_BYTES = 64 << 20
-
-
-def _decode_html(html):
-    """Decode html bytes, reporting whether the bytes were valid UTF-8.
-
-    Strict decode is the fast common path; invalid pages fall back to
-    surrogateescape so the kernel sees Go-equivalent raw bytes (byte-length
-    parity), and the caller scrubs lone surrogates before Arrow (Arrow string
-    columns must be valid UTF-8 — a raw 0xFF in a <title> would otherwise
-    raise UnicodeEncodeError inside pa.array() and kill the task)."""
-    if isinstance(html, str):
-        return html, True
-    b = bytes(html)
-    try:
-        return b.decode("utf-8"), True
-    except UnicodeDecodeError:
-        return b.decode("utf-8", "surrogateescape"), False
-
-
-def _scrub(s):
-    """Replace surrogateescape'd invalid bytes with U+FFFD (valid UTF-8)."""
-    if s is None:
-        return None
-    return s.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
-
-
 def extract_record_batches(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
     """mapInArrow kernel: (url, html) batches → OUTPUT_SCHEMA batches."""
     for batch in batches:
-        # one vectorized Arrow→Python conversion per column (C-side),
-        # not a per-element .as_py() round trip
-        urls = batch.column("url").to_pylist()
-        htmls = batch.column("html").to_pylist()
-        n = batch.num_rows
-
-        out_url, out_title, out_author, out_date = [], [], [], []
-        out_content, out_nb, out_ncb, out_err = [], [], [], []
-        acc_bytes = 0
-
-        for i in range(n):
-            url = urls[i]
-            html = htmls[i]
-            title = author = content = None
-            date = None
-            n_blocks = n_content = 0
-            err = None
-            if html is None:
-                err = "html is null"
-            else:
-                try:
-                    html_str, clean = _decode_html(html)
-                    # hot path: C renders Content() directly; no
-                    # TextBlock materialization (parity-gated twin of
-                    # extract_article + .content())
-                    (title, author, d, content,
-                     n_blocks, n_content) = extract_content(html_str)
-                    if d is not None:
-                        date = d
-                    if not clean:
-                        # invalid-UTF-8 page: make every output string a valid
-                        # UTF-8 string before it reaches pa.array()
-                        title = _scrub(title)
-                        author = _scrub(author)
-                        content = _scrub(content)
-                except Exception as e:  # never fail the task on one document
-                    err = _scrub(f"{type(e).__name__}: {e}")
-                acc_bytes += len(html)
-
-            out_url.append(url)
-            out_title.append(title)
-            out_author.append(author)
-            out_date.append(date)
-            out_content.append(content)
-            out_nb.append(n_blocks)
-            out_ncb.append(n_content)
-            out_err.append(err)
-
-            if acc_bytes >= _MAX_BATCH_BYTES and i < n - 1:
-                yield _make_batch(
-                    out_url, out_title, out_author, out_date,
-                    out_content, out_nb, out_ncb, out_err,
-                )
-                out_url, out_title, out_author, out_date = [], [], [], []
-                out_content, out_nb, out_ncb, out_err = [], [], [], []
-                acc_bytes = 0
-
-        if out_url:
-            yield _make_batch(
-                out_url, out_title, out_author, out_date,
-                out_content, out_nb, out_ncb, out_err,
-            )
-
-
-def _make_batch(urls, titles, authors, dates, contents, nbs, ncbs, errs):
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(urls, pa.string()),
-            pa.array(titles, pa.string()),
-            pa.array(authors, pa.string()),
-            pa.array(dates, pa.timestamp("us", tz="UTC")),
-            pa.array(contents, pa.string()),
-            pa.array(nbs, pa.int32()),
-            pa.array(ncbs, pa.int32()),
-            pa.array(errs, pa.string()),
-        ],
-        schema=_ARROW_SCHEMA,
-    )
+        url = batch.column("url")
+        if url.type != pa.string():
+            url = url.cast(pa.string())
+        yield pa.RecordBatch.from_arrays(
+            [url, *extract_batch(batch.column("html"))], schema=_ARROW_SCHEMA)
 
 
 class PartitionCountersParam:

@@ -18,7 +18,7 @@ from typing import Iterator
 import pyarrow as pa
 
 from go_boilerpipe_spark.kernel.links import page_links
-from go_boilerpipe_spark.operators.extract import _decode_html, _scrub
+from go_boilerpipe_spark.kernel.document import _decode_html, _scrub
 
 OUTPUT_SCHEMA_DDL = (
     "url string, href string, resolved string, anchor string"

@@ -6,7 +6,8 @@ North-rule requirements implemented here (BASELINE.json):
   (:func:`plan_chunks`), the scan splits each chunk's files into byte
   ranges of at most ``spark.sql.files.maxPartitionBytes`` (a deployment
   setting; Spark narrows them when that spreads a chunk over every core),
-  and the kernel caps its output batches at ``_MAX_BATCH_BYTES``. The
+  and Spark caps the kernel's Arrow batches at
+  ``spark.sql.execution.arrow.maxBytesPerBatch``. The
   plan is scan → null/lang filter → ``mapInArrow`` kernel → sink, with
   no exchange: a url hash would balance row counts rather than bytes and
   push the whole html column through shuffle storage;
@@ -29,7 +30,8 @@ North-rule requirements implemented here (BASELINE.json):
   (docs out, parse errors, content chars, kernel path and kernel
   seconds), carried in the chunk's manifest entry, so the manifest
   rename commits data and lineage at once and a chunk runs one Spark
-  write. The chunk's totals in the stats and the manifest are the sums
+  write, a job named ``extract chunk=<id>`` in Spark's UI and status
+  store. The chunk's totals in the stats and the manifest are the sums
   of the same counters; :func:`read_lineage` returns every committed
   row as a frame.
 
@@ -93,6 +95,20 @@ def list_input_files(spark, path: str):
     return files
 
 
+_HADOOP_CLASSES = None  # (jvm, Path, IOUtils) of the last gateway
+
+
+def _hadoop_classes(jvm):
+    """Hadoop's ``Path`` and commons-io's ``IOUtils`` on the gateway
+    ``jvm``, resolved once per gateway: each resolution is a chain of
+    py4j reflection calls, and a miss walks the whole class path."""
+    global _HADOOP_CLASSES
+    if _HADOOP_CLASSES is None or _HADOOP_CLASSES[0] is not jvm:
+        _HADOOP_CLASSES = (jvm, jvm.org.apache.hadoop.fs.Path,
+                           jvm.org.apache.commons.io.IOUtils)
+    return _HADOOP_CLASSES[1:]
+
+
 class _FS:
     """Manifest IO through the Hadoop FileSystem API, so the manifest is
     honored on hdfs://, s3a://, or any configured scheme — not only the
@@ -101,9 +117,8 @@ class _FS:
     duplicates)."""
 
     def __init__(self, spark, path: str):
-        jvm = spark._jvm
-        self._jvm = jvm
-        self.path = jvm.org.apache.hadoop.fs.Path(path)
+        self._path_cls, self._ioutils = _hadoop_classes(spark._jvm)
+        self.path = self._path_cls(path)
         self.fs = self.path.getFileSystem(spark._jsc.hadoopConfiguration())
         # plain-file semantics for the tiny JSON manifests: no .crc sidecars
         # on LocalFileSystem, no stale-checksum failures if an operator
@@ -115,7 +130,7 @@ class _FS:
             pass
 
     def child(self, name: str):
-        return self._jvm.org.apache.hadoop.fs.Path(self.path, name)
+        return self._path_cls(self.path, name)
 
     def exists_dir(self) -> bool:
         return bool(self.fs.exists(self.path)) and bool(
@@ -132,7 +147,7 @@ class _FS:
     def read_json(self, name: str) -> dict:
         stream = self.fs.open(self.child(name))
         try:
-            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            data = self._ioutils.toByteArray(stream)
         finally:
             stream.close()
         return json.loads(bytes(data).decode("utf-8"))
@@ -306,9 +321,19 @@ class ExtractJob:
             "part_id", F.spark_partition_id()
         )
 
-        # overwrite → idempotent re-run of a failed/partial chunk
-        extracted.write.mode("overwrite").parquet(
-            os.path.join(self.sink, f"chunk={chunk_id}"))
+        # the chunk's job is named in Spark's UI and status store; with
+        # both call-site properties set, Spark also skips its stack walk
+        sc = spark.sparkContext
+        sc.setLocalProperty("callSite.short", f"extract chunk={chunk_id}")
+        sc.setLocalProperty("callSite.long",
+                            f"ExtractJob run={run_id} chunk={chunk_id}")
+        try:
+            # overwrite → idempotent re-run of a failed/partial chunk
+            extracted.write.mode("overwrite").parquet(
+                os.path.join(self.sink, f"chunk={chunk_id}"))
+        finally:
+            sc.setLocalProperty("callSite.short", None)
+            sc.setLocalProperty("callSite.long", None)
 
         # the lineage rides in the manifest entry, so the manifest commit
         # is its only commit: a chunk re-run after a crash before it

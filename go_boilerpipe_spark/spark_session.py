@@ -7,7 +7,7 @@ open-source Spark configuration. Key choices (SURVEY.md §4.2-4.3):
 - Arrow batches capped at ``arrow_max_records`` (512) records because
   html blobs are 10 KB-10 MB; Spark 4.1 also caps them in bytes
   (``spark.sql.execution.arrow.maxBytesPerBatch``, 64 MiB by default), and
-  the extraction operator additionally byte-caps its *output* batches;
+  the extraction operator turns each input batch into one output batch;
 - shuffle partitions sized by caller (4× cores is a good local default;
   on a 1000-executor cluster set ~2-3× total cores).
 """

@@ -6,8 +6,11 @@ tests' page set (tests/page_set.py), long merge-run pages of 2,000 and
 8,000 blocks, a 3000-case quirk-heavy fuzz, and adversarial inputs (deep
 nesting, 5000-attribute tags, 100-digit charrefs) through parse, extract
 and extract_content. Every ld+json page also runs with a raising and a
-wrong-type resolver, the kernel's error exits. Any heap overflow /
-use-after-free aborts the process.
+wrong-type resolver, the kernel's error exits. The same pages, random
+byte strings and invalid UTF-8 then go through extract_batch as Arrow
+buffers (nulls, a leading offset), with the real, a raising and a
+wrong-type resolver. Any heap overflow / use-after-free aborts the
+process.
 
 Must run with the ASan runtime preloaded; this script builds the
 instrumented kernel into a private temporary directory (mode 0700, so no
@@ -80,7 +83,7 @@ def main():
 
     ck.init_tables(_build_config())
 
-    from go_boilerpipe_spark.kernel.document import _resolve_title
+    from go_boilerpipe_spark.kernel.document import _resolve_row, _resolve_title
     from tests.adversarial_inputs import long_run_pages
     from tests.page_set import page_rows
 
@@ -91,12 +94,14 @@ def main():
         return [title, None]
 
     n_ld = 0
+    every = []
 
     def run(html):
         """parse, then extract and extract_content with the real
         resolver; on an ld+json page also with a raising and a
         wrong-type resolver, whose errors must free the document."""
         nonlocal n_ld
+        every.append(html)
         ld_json = ck.parse(html)[2]
         ck.extract(html, _resolve_title)
         ck.extract_content(html, _resolve_title)
@@ -156,10 +161,63 @@ def main():
         cases.extend(cls)
     for s in cases:
         run(s)
+    n_batch = run_batches(ck, every, _resolve_row, rng)
     print(f"ASAN: {len(pages)} page-set pages + {len(long_runs)} long-run "
           f"pages + 3000 fuzz + adversarial inputs + {len(cases)} "
           f"parity-corpus cases through parse/extract/extract_content, "
-          f"raising and wrong-type resolvers on {n_ld} ld+json pages: clean")
+          f"raising and wrong-type resolvers on {n_ld} ld+json pages; "
+          f"{n_batch} extract_batch rows: clean")
+
+
+def arrow_buffers(pages, lead):
+    """(n, offset, validity, offsets, data) of an Arrow binary array of
+    ``pages`` (None is null) that starts ``lead`` rows into its buffers"""
+    import array
+
+    rows = [b"junk"] * lead + pages
+    validity = bytearray((len(rows) + 7) // 8)
+    offsets = array.array("i", [0])
+    data = bytearray()
+    for i, r in enumerate(rows):
+        if r is not None:
+            validity[i >> 3] |= 1 << (i & 7)
+            data += r
+        offsets.append(len(data))
+    return len(pages), lead, bytes(validity), offsets.tobytes(), bytes(data)
+
+
+def run_batches(ck, htmls, resolve, rng):
+    """extract_batch over the pages as UTF-8, random byte strings and
+    invalid UTF-8, with nulls and leading rows; every batch also with a
+    raising and a wrong-type resolver, which make error rows"""
+    invalid = [b"\xff", b"\xc3", b"\xe2\x82", b"\xf0\x9f\x98", b"\xc0\xaf",
+               b"\xe0\x80\xaf", b"\xed\xa0\x80", b"\xf4\x90\x80\x80", b"\x80",
+               b"\xbf\xbf"]
+    pages = [h.encode("utf-8", "surrogateescape") for h in htmls]
+    for _ in range(2000):
+        pages.append(bytes(rng.randrange(256)
+                           for _ in range(rng.randint(0, 60))))
+        pages.append(b"<title>" + rng.choice(invalid) + b"</title><p>"
+                     + b"w " * rng.randint(0, 40) + rng.choice(invalid)
+                     + b" &amp; x</p>")
+    pages += [None, b"", None]
+
+    def boom(*args):
+        raise LookupError("resolver failed")
+
+    def wrong_type(*args):
+        return (args[0], None)
+
+    rows = 0
+    for i in range(0, len(pages), 97):
+        chunk = pages[i:i + 97]
+        args = arrow_buffers(chunk, lead=i % 5)
+        for r in (resolve, boom, wrong_type):
+            out = ck.extract_batch(*args, r)
+            assert len(out) == 7, out
+        rows += len(chunk)
+    ck.extract_batch(0, 0, None, b"\0\0\0\0", b"", resolve)
+    return rows
 
 
 if __name__ == "__main__":

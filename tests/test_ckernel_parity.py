@@ -201,6 +201,30 @@ def test_fuzz_tag_soup_identical():
         assert_same(s, f"fuzz {t}: {s[:60]!r}")
 
 
+def test_fuzz_anchor_markers_identical():
+    # the C kernel keeps the anchor markers as offsets and counts tokens
+    # as text arrives; text that spells a marker ("$\ue00a<") is a marker
+    # token in both kernels, and a flush of markers alone keeps its
+    # buffers (the Go-port quirk) while the next text continues the token
+    for s in ("<body>$\ue00a<<div></div>!x more words here</body>",
+              "<body>$\ue00a<<p></p>!x more <a>y</a> z</body>",
+              "<title>$\ue00a<<div></div>!x</title><body>w</body>"):
+        assert_same(s, s)
+    rng = random.Random(20261020)
+    pieces = [
+        "<a href=x>", "</a>", "<a>", "$\ue00a<", ">\ue00a$", "\ue00a", "$",
+        "<", ">", "!", ".", "word", "w", " ", "  ", "\n", "<p>", "</p>",
+        "<b>", "</b>", "<div>", "</div>", "<title>", "</title>", "<body>",
+        "</body>", "⁣", "&amp;", "&lt;", "x" * 85, "中文", "<br>", "<li>",
+        "</li>", "<script>", "</script>", "<abbr>", "</abbr>",
+    ]
+    for t in range(1500):
+        s = "".join(
+            rng.choice(pieces) for _ in range(rng.randint(0, 30))
+        )
+        assert_same(s, f"markers {t}: {s[:60]!r}")
+
+
 def _pure_extract(html):
     h = parse_to_handler(html)
     h.flush_block()

@@ -177,3 +177,62 @@ def test_run_on_the_c_kernel_does_not_warn(tmp_path, monkeypatch, caplog):
         stats = job.run()
     assert stats["kernel_paths"] == ["c"]
     assert not [r for r in caplog.records if r.levelname == "WARNING"]
+
+
+def test_fs_resolves_hadoop_classes_once_per_gateway(tmp_path):
+    """_FS resolves Hadoop's Path and IOUtils once per py4j gateway: each
+    resolution is a chain of reflection calls. Many child() and
+    read_json() calls over several _FS objects see one lookup each."""
+    from types import SimpleNamespace
+
+    from go_boilerpipe_spark.plans import extract_job
+
+    lookups = []
+
+    class Package:
+        def __init__(self, name):
+            self._name = name
+
+        def __getattr__(self, attr):
+            name = f"{self._name}.{attr}"
+            if attr == "Path":
+                lookups.append(name)
+                return FakePath
+            if attr == "IOUtils":
+                lookups.append(name)
+                return SimpleNamespace(toByteArray=lambda s: s.read())
+            return Package(name)
+
+    class FakeFS:
+        def setWriteChecksum(self, flag):
+            pass
+
+        def setVerifyChecksum(self, flag):
+            pass
+
+        def open(self, path):
+            return open(path.name, "rb")
+
+    class FakePath:
+        def __init__(self, parent, name=None):
+            self.name = parent if name is None else os.path.join(
+                parent.name, name)
+
+        def getFileSystem(self, conf):
+            return FakeFS()
+
+    (tmp_path / "a.json").write_text(json.dumps({"chunk_id": "a"}))
+    jvm = Package("jvm")
+    spark = SimpleNamespace(
+        _jvm=jvm, _jsc=SimpleNamespace(hadoopConfiguration=lambda: None))
+    for _ in range(3):
+        fs = extract_job._FS(spark, str(tmp_path))
+        for _ in range(5):
+            fs.child("x")
+            assert fs.read_json("a.json") == {"chunk_id": "a"}
+    assert sorted(lookups) == ["jvm.org.apache.commons.io.IOUtils",
+                               "jvm.org.apache.hadoop.fs.Path"]
+    # a new gateway resolves them again
+    spark._jvm = Package("jvm2")
+    extract_job._FS(spark, str(tmp_path)).read_json("a.json")
+    assert len(lookups) == 4

@@ -200,6 +200,34 @@ def _article_urls():
     return [u for u, h in page_rows() if h and b"<h1>Harbor story" in h]
 
 
+    def test_input_batches_arrive_byte_capped(self, spark):
+        # the operator turns each input batch into one output batch, so
+        # its memory bound is Spark's byte cap on the input batches
+        import pyarrow as pa
+
+        row_bytes, cap = 10_000, 64 << 10
+        df = spark.createDataFrame(
+            [(f"u{i}", b"x" * row_bytes) for i in range(64)],
+            "url string, html binary").coalesce(1)
+
+        def sizes(batches):
+            for b in batches:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([b.num_rows], pa.int64()),
+                     pa.array([b.column("html").nbytes], pa.int64())],
+                    names=["rows", "bytes"])
+
+        key = "spark.sql.execution.arrow.maxBytesPerBatch"
+        spark.conf.set(key, str(cap))
+        try:
+            got = df.mapInArrow(sizes, "rows long, bytes long").collect()
+        finally:
+            spark.conf.unset(key)
+        assert sum(r.rows for r in got) == 64
+        assert len(got) >= 64 * row_bytes // cap
+        assert max(r.bytes for r in got) <= cap + row_bytes
+
+
 class TestExtractLinks:
     def test_links_through_spark(self, spark, page_set):
         from go_boilerpipe_spark.operators.links import extract_links_df
@@ -270,6 +298,27 @@ class TestExtractJob:
         lineage = read_lineage(spark, sink)
         assert lineage.count() > 0
         assert lineage.agg(F.sum("docs_out")).collect()[0][0] == n
+
+    def test_chunk_jobs_are_named(self, spark, tmp_path):
+        src = str(tmp_path / "pages")
+        write_page_set(src, 2)
+        store = spark.sparkContext._jsc.sc().statusStore()
+
+        def jobs():
+            seq = store.jobsList(None)  # a Scala Seq of JobData
+            return {j.jobId(): j.name()
+                    for j in (seq.apply(i) for i in range(seq.size()))}
+
+        before = jobs()
+        stats = ExtractJob(spark, src, str(tmp_path / "sink"),
+                           chunk_target_bytes=1).run()
+        assert stats["chunks_done"] == 2
+        names = [n for i, n in sorted(jobs().items()) if i not in before]
+        assert names == ["extract chunk=000000", "extract chunk=000001"]
+        # the properties are cleared after each chunk's write
+        sc = spark.sparkContext
+        assert sc.getLocalProperty("callSite.short") is None
+        assert sc.getLocalProperty("callSite.long") is None
 
 
 class TestDedup:
