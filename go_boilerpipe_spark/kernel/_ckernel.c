@@ -3191,36 +3191,6 @@ static const unsigned char ESC_EXTRA[128] = {
 
 static inline int is_strip_nl(u32 c) { return c == ' ' || c == '\n'; }
 
-/* write the escaped content into the str's data: the content blocks
- * [b0..b1] from b0's char lo to b1's char hi, '\n'-joined */
-#define RENDER_INTO(T)                                                     \
-    do {                                                                   \
-        T *o = (T *)PyUnicode_DATA(res);                                   \
-        for (Py_ssize_t i = b0; i <= b1; i++) {                            \
-            const CBlock *cb = h->blocks[i];                               \
-            if (!cb->is_content)                                           \
-                continue;                                                  \
-            if (i > b0)                                                    \
-                *o++ = '\n';                                               \
-            Py_ssize_t e = i == b1 ? hi : cb->text_len;                    \
-            for (Py_ssize_t k = i == b0 ? lo : 0; k < e; k++) {            \
-                u32 c = cb->text[k];                                       \
-                const char *rep = NULL;                                    \
-                if (c < 128 && ESC_EXTRA[c])                               \
-                    rep = c == '&'    ? "&amp;"                            \
-                          : c == '\'' ? "&#39;"                            \
-                          : c == '"'  ? "&#34;"                            \
-                          : c == '<'  ? "&lt;"                             \
-                                      : "&gt;";                            \
-                if (rep)                                                   \
-                    while (*rep)                                           \
-                        *o++ = (T)*rep++;                                  \
-                else                                                       \
-                    *o++ = (T)c;                                           \
-            }                                                              \
-        }                                                                  \
-    } while (0)
-
 /* The span Content() renders (boilerpipe.go:76-106 Text(true,false)):
  * the '\n'-join of the is_content texts stripped of ' '/'\n' at both
  * ends is content block b0 from char lo to content block b1's char hi.
@@ -3259,51 +3229,124 @@ static int content_span(const Handler *h, Py_ssize_t *b0p, Py_ssize_t *b1p,
     return b0 >= 0;
 }
 
-/* Content() rendered straight from the filtered block array, escaping
- * & ' < > " exactly like document.py go_escape_string.  Skips the
- * per-block Python tuples and TextBlock objects entirely — the Spark
- * hot path only needs (content, n_blocks, n_content).  One pass counts
- * the escaped length and the largest char, the second writes into a
- * str of that size and kind: the joined text is never materialized. */
-static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
+typedef struct {
+    char *p;
+    Py_ssize_t len, cap;
+} Bytes;
+
+static int bytes_reserve(Bytes *b, Py_ssize_t need)
+{
+    if (b->len + need <= b->cap)
+        return 0;
+    Py_ssize_t ncap = b->cap ? b->cap : 256;
+    while (ncap < b->len + need)
+        ncap *= 2;
+    char *np = (char *)PyMem_Realloc(b->p, (size_t)ncap);
+    if (!np) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    b->p = np;
+    b->cap = ncap;
+    return 0;
+}
+
+/* how put_utf8 writes a lone surrogate: as U+FFFD; a surrogateescape
+ * char (U+DC80..U+DCFF) as its raw byte, as str.encode("utf-8",
+ * "surrogateescape") writes it, and any other as U+FFFD; or as its three
+ * bytes, as str.encode("utf-8", "surrogatepass") writes it */
+enum { SUR_FFFD, SUR_RAW, SUR_PASS };
+
+/* c as UTF-8, a lone surrogate written the sur way */
+static inline char *put_utf8(char *o, u32 c, int sur)
+{
+    if (c < 0x80) {
+        *o++ = (char)c;
+    } else if (c < 0x800) {
+        *o++ = (char)(0xC0 | (c >> 6));
+        *o++ = (char)(0x80 | (c & 0x3F));
+    } else if (c >= 0xD800 && c <= 0xDFFF && sur != SUR_PASS) {
+        if (sur == SUR_RAW && c >= 0xDC80 && c <= 0xDCFF) {
+            *o++ = (char)(c - 0xDC00);
+        } else {
+            *o++ = (char)0xEF;
+            *o++ = (char)0xBF;
+            *o++ = (char)0xBD;
+        }
+    } else if (c < 0x10000) {
+        *o++ = (char)(0xE0 | (c >> 12));
+        *o++ = (char)(0x80 | ((c >> 6) & 0x3F));
+        *o++ = (char)(0x80 | (c & 0x3F));
+    } else {
+        *o++ = (char)(0xF0 | (c >> 18));
+        *o++ = (char)(0x80 | ((c >> 12) & 0x3F));
+        *o++ = (char)(0x80 | ((c >> 6) & 0x3F));
+        *o++ = (char)(0x80 | (c & 0x3F));
+    }
+    return o;
+}
+
+/* Content() (boilerpipe.go:76-106 Text(true,false)) as UTF-8 at the end
+ * of out, in one pass over the content span, escaping & ' < > " exactly
+ * like document.py go_escape_string; a lone surrogate written the sur
+ * way */
+static int put_content(Bytes *out, const Handler *h, int sur)
 {
     Py_ssize_t b0, b1, lo, hi;
-    *n_blocks = (long)h->nblocks;
-    if (!content_span(h, &b0, &b1, &lo, &hi, n_content))
-        return PyUnicode_New(0, 0);
-
-    Py_ssize_t out_n = 0;
-    u32 maxc = 0;
+    long nc;
+    if (!content_span(h, &b0, &b1, &lo, &hi, &nc))
+        return 0;
     for (Py_ssize_t i = b0; i <= b1; i++) {
         const CBlock *cb = h->blocks[i];
         if (!cb->is_content)
             continue;
-        if (i > b0) {
-            out_n++; /* '\n' */
-            maxc = maxc > '\n' ? maxc : '\n';
-        }
         Py_ssize_t e = i == b1 ? hi : cb->text_len;
         Py_ssize_t k = i == b0 ? lo : 0;
-        out_n += e - k;
+        /* "&amp;" and "&#39;" take 5 bytes, any other char at most 4 */
+        if (bytes_reserve(out, 1 + 5 * (e - k)) < 0)
+            return -1;
+        char *o = out->p + out->len;
+        if (i > b0)
+            *o++ = '\n';
         for (; k < e; k++) {
             u32 c = cb->text[k];
-            out_n += c < 128 ? ESC_EXTRA[c] : 0;
-            maxc = maxc > c ? maxc : c;
+            if (c >= 128) {
+                o = put_utf8(o, c, sur);
+            } else if (!ESC_EXTRA[c]) {
+                *o++ = (char)c;
+            } else {
+                const char *rep = c == '&'    ? "&amp;"
+                                  : c == '\'' ? "&#39;"
+                                  : c == '"'  ? "&#34;"
+                                  : c == '<'  ? "&lt;"
+                                              : "&gt;";
+                while (*rep)
+                    *o++ = *rep++;
+            }
         }
+        out->len = o - out->p;
     }
-    PyObject *res = PyUnicode_New(out_n, maxc);
-    if (!res)
+    return 0;
+}
+
+/* Content() rendered straight from the filtered block array: the
+ * per-block Python tuples and TextBlock objects are never made, since
+ * extract_content only needs (content, n_blocks, n_content).  The UTF-8
+ * is put_content's, every lone surrogate passed through so that the
+ * decode gives back each char. */
+static PyObject *render_content(Handler *h, long *n_blocks, long *n_content)
+{
+    Py_ssize_t b0, b1, lo, hi;
+    Bytes out = {0};
+    *n_blocks = (long)h->nblocks;
+    content_span(h, &b0, &b1, &lo, &hi, n_content);
+    if (put_content(&out, h, SUR_PASS) < 0) {
+        PyMem_Free(out.p);
         return NULL;
-    switch (PyUnicode_KIND(res)) {
-    case PyUnicode_1BYTE_KIND:
-        RENDER_INTO(Py_UCS1);
-        break;
-    case PyUnicode_2BYTE_KIND:
-        RENDER_INTO(Py_UCS2);
-        break;
-    default:
-        RENDER_INTO(Py_UCS4);
     }
+    PyObject *res =
+        PyUnicode_DecodeUTF8(out.p ? out.p : "", out.len, "surrogatepass");
+    PyMem_Free(out.p);
     return res;
 }
 
@@ -3460,28 +3503,6 @@ static PyObject *py_extract_content(PyObject *Py_UNUSED(self), PyObject *args)
 /* extract_batch: one call per Arrow batch, UTF-8 in and out           */
 /* ------------------------------------------------------------------ */
 
-typedef struct {
-    char *p;
-    Py_ssize_t len, cap;
-} Bytes;
-
-static int bytes_reserve(Bytes *b, Py_ssize_t need)
-{
-    if (b->len + need <= b->cap)
-        return 0;
-    Py_ssize_t ncap = b->cap ? b->cap : 256;
-    while (ncap < b->len + need)
-        ncap *= 2;
-    char *np = (char *)PyMem_Realloc(b->p, (size_t)ncap);
-    if (!np) {
-        PyErr_NoMemory();
-        return -1;
-    }
-    b->p = np;
-    b->cap = ncap;
-    return 0;
-}
-
 /* The well-formed UTF-8 sequence at b[0..m) (Unicode Table 3-7): returns
  * its length, or 0 with *bad set to the length of the maximal subpart of
  * a well-formed sequence that starts there (at least 1). */
@@ -3572,49 +3593,18 @@ static int decode_utf8(const unsigned char *b, Py_ssize_t n, Buf *out)
     return escaped;
 }
 
-/* c as UTF-8.  A surrogateescape char (U+DC80..U+DCFF) is its raw byte
- * when raw is set, as str.encode("utf-8", "surrogateescape") writes it;
- * any other lone surrogate is U+FFFD. */
-static inline char *put_utf8(char *o, u32 c, int raw)
-{
-    if (c < 0x80) {
-        *o++ = (char)c;
-    } else if (c < 0x800) {
-        *o++ = (char)(0xC0 | (c >> 6));
-        *o++ = (char)(0x80 | (c & 0x3F));
-    } else if (c >= 0xD800 && c <= 0xDFFF) {
-        if (raw && c >= 0xDC80 && c <= 0xDCFF) {
-            *o++ = (char)(c - 0xDC00);
-        } else {
-            *o++ = (char)0xEF;
-            *o++ = (char)0xBF;
-            *o++ = (char)0xBD;
-        }
-    } else if (c < 0x10000) {
-        *o++ = (char)(0xE0 | (c >> 12));
-        *o++ = (char)(0x80 | ((c >> 6) & 0x3F));
-        *o++ = (char)(0x80 | (c & 0x3F));
-    } else {
-        *o++ = (char)(0xF0 | (c >> 18));
-        *o++ = (char)(0x80 | ((c >> 12) & 0x3F));
-        *o++ = (char)(0x80 | ((c >> 6) & 0x3F));
-        *o++ = (char)(0x80 | (c & 0x3F));
-    }
-    return o;
-}
-
-static int put_u32s(Bytes *out, const u32 *s, Py_ssize_t n, int raw)
+static int put_u32s(Bytes *out, const u32 *s, Py_ssize_t n, int sur)
 {
     if (bytes_reserve(out, 4 * n) < 0)
         return -1;
     char *o = out->p + out->len;
     for (Py_ssize_t i = 0; i < n; i++)
-        o = put_utf8(o, s[i], raw);
+        o = put_utf8(o, s[i], sur);
     out->len = o - out->p;
     return 0;
 }
 
-static int put_str(Bytes *out, PyObject *str, int raw)
+static int put_str(Bytes *out, PyObject *str, int sur)
 {
     Py_ssize_t n = PyUnicode_GET_LENGTH(str);
     int kind = PyUnicode_KIND(str);
@@ -3623,49 +3613,8 @@ static int put_str(Bytes *out, PyObject *str, int raw)
         return -1;
     char *o = out->p + out->len;
     for (Py_ssize_t i = 0; i < n; i++)
-        o = put_utf8(o, (u32)PyUnicode_READ(kind, data, i), raw);
+        o = put_utf8(o, (u32)PyUnicode_READ(kind, data, i), sur);
     out->len = o - out->p;
-    return 0;
-}
-
-/* Content() as UTF-8 at the end of out: render_content's span and
- * escapes, in one pass */
-static int put_content(Bytes *out, const Handler *h, int raw)
-{
-    Py_ssize_t b0, b1, lo, hi;
-    long nc;
-    if (!content_span(h, &b0, &b1, &lo, &hi, &nc))
-        return 0;
-    for (Py_ssize_t i = b0; i <= b1; i++) {
-        const CBlock *cb = h->blocks[i];
-        if (!cb->is_content)
-            continue;
-        Py_ssize_t e = i == b1 ? hi : cb->text_len;
-        Py_ssize_t k = i == b0 ? lo : 0;
-        /* "&amp;" and "&#39;" take 5 bytes, any other char at most 4 */
-        if (bytes_reserve(out, 1 + 5 * (e - k)) < 0)
-            return -1;
-        char *o = out->p + out->len;
-        if (i > b0)
-            *o++ = '\n';
-        for (; k < e; k++) {
-            u32 c = cb->text[k];
-            if (c >= 128) {
-                o = put_utf8(o, c, raw);
-            } else if (!ESC_EXTRA[c]) {
-                *o++ = (char)c;
-            } else {
-                const char *rep = c == '&'    ? "&amp;"
-                                  : c == '\'' ? "&#39;"
-                                  : c == '"'  ? "&#34;"
-                                  : c == '<'  ? "&lt;"
-                                              : "&gt;";
-                while (*rep)
-                    *o++ = *rep++;
-            }
-        }
-        out->len = o - out->p;
-    }
     return 0;
 }
 
@@ -3822,7 +3771,8 @@ static int put_value(Batch *bt, int ci, PyObject *str, const u32 *s,
 {
     Bytes *d = &bt->col[ci].data;
     Py_ssize_t from = d->len;
-    if ((str ? put_str(d, str, scrub) : put_u32s(d, s, n, scrub)) < 0)
+    int sur = scrub ? SUR_RAW : SUR_FFFD;
+    if ((str ? put_str(d, str, sur) : put_u32s(d, s, n, sur)) < 0)
         return -1;
     return scrub ? scrub_utf8(d, from, &bt->tmp) : 0;
 }
@@ -3892,7 +3842,7 @@ static int extract_row(Batch *bt, Py_ssize_t r, int scrub, PyObject *resolve)
     } else {
         Bytes *d = &bt->col[C_CONTENT].data;
         Py_ssize_t from = d->len;
-        if (put_content(d, h, scrub) < 0 ||
+        if (put_content(d, h, scrub ? SUR_RAW : SUR_FFFD) < 0 ||
             (scrub && scrub_utf8(d, from, &bt->tmp) < 0))
             goto done;
     }

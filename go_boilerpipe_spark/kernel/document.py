@@ -16,6 +16,7 @@ the C kernel that is one C call per array.
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timedelta
 
 import pyarrow as pa
@@ -159,14 +160,21 @@ def _last_valid_time(datetimes):
     return h_time
 
 
+def _ld_fields(title, art, h_time):
+    """ParseDocument's field precedence (boilerpipe.go:47-73) between the
+    merged ld+json article and the page's own fields: the document's
+    title, author, date, and the content that replaces the rendered one
+    (None when the article has no body)."""
+    date = art.date_published if art.date_published is not None else h_time
+    return art.headline or title, art.author_name, date, art.body or None
+
+
 def _finish_document(title, text_blocks, art, h_time) -> Document:
-    """Shared ParseDocument tail (boilerpipe.go:47-73): field precedence
-    between the merged ld+json article and the page's own fields."""
+    """Shared ParseDocument tail (boilerpipe.go:47-73); :meth:`Document.content`
+    prefers the article's body."""
     doc = Document()
     doc.linked_data = art
-    doc.title = art.headline if art.headline else title
-    doc.author = art.author_name
-    doc.date = art.date_published if art.date_published is not None else h_time
+    doc.title, doc.author, doc.date, _ = _ld_fields(title, art, h_time)
     doc.text_blocks = text_blocks
     return doc
 
@@ -251,9 +259,8 @@ def extract_content(html):
     h_time = _last_valid_time(datetimes)
     if art is None:  # common case: no ld+json, no Python call was made
         return title, "", h_time, content, n_blocks, n_content
-    date = art.date_published if art.date_published is not None else h_time
-    return (art.headline or title, art.author_name, date,
-            art.body or content, n_blocks, n_content)
+    title, author, date, body = _ld_fields(title, art, h_time)
+    return title, author, date, body or content, n_blocks, n_content
 
 
 def _decode_html(html):
@@ -273,11 +280,24 @@ def _decode_html(html):
         return b.decode("utf-8", "surrogateescape"), False
 
 
-def _scrub(s):
-    """Replace surrogateescape'd invalid bytes with U+FFFD (valid UTF-8)."""
+# every lone surrogate, and those that no surrogateescape'd byte explains
+# (a JSON \ud800 escape in ld+json)
+_SURROGATE = re.compile("[\ud800-\udfff]")
+_NOT_BYTE = re.compile("[\ud800-\udc7f\udd00-\udfff]")
+
+
+def _scrub(s, clean=False):
+    """s as valid UTF-8, the way the C batch kernel writes it: a lone
+    surrogate becomes U+FFFD (as Go's encoding/json decodes a lone
+    surrogate escape). When the page was not valid UTF-8 (clean False),
+    each surrogateescape'd byte is its raw byte first, and the bytes are
+    decoded with "replace"."""
     if s is None:
         return None
-    return s.encode("utf-8", "surrogateescape").decode("utf-8", "replace")
+    if clean:
+        return _SURROGATE.sub("\ufffd", s)
+    return (_NOT_BYTE.sub("\ufffd", s).encode("utf-8", "surrogateescape")
+            .decode("utf-8", "replace"))
 
 
 _EPOCH = datetime(1970, 1, 1)
@@ -299,13 +319,10 @@ def _resolve_row(title, ld_json, datetimes):
     title (the one F2 matches), author, date in microseconds since the
     epoch or None, and the content that replaces the rendered one or
     None, with :func:`extract_content`'s precedence."""
-    h_time = _last_valid_time(datetimes or ())
-    if not ld_json:
-        return title, "", _epoch_us(h_time), None
-    art = _merge_ld_json(ld_json)
-    date = art.date_published if art.date_published is not None else h_time
-    return (art.headline or title, art.author_name, _epoch_us(date),
-            art.body or None)
+    title, author, date, body = _ld_fields(
+        title, _merge_ld_json(ld_json or ()),
+        _last_valid_time(datetimes or ()))
+    return title, author, _epoch_us(date), body
 
 
 def _extract_batch_pure(html):
@@ -317,10 +334,8 @@ def _extract_batch_pure(html):
             try:
                 text, clean = _decode_html(h)
                 title, author, date, content, nb, nc = extract_content(text)
-                if not clean:
-                    title, author, content = (
-                        _scrub(title), _scrub(author), _scrub(content))
-                row = (title, author, date, content, nb, nc, None)
+                row = (_scrub(title, clean), _scrub(author, clean), date,
+                       _scrub(content, clean), nb, nc, None)
             except Exception as e:  # never fail the task on one document
                 row = (None, None, None, None, 0, 0,
                        _scrub(f"{type(e).__name__}: {e}"))
@@ -333,9 +348,9 @@ def extract_batch(html):
     """Extract an Arrow array of pages (binary or string, UTF-8 bytes):
     returns the arrays ``[title, author, date, content, n_blocks,
     n_content, parse_error]``. A row is :func:`extract_content` of the page
-    decoded by :func:`_decode_html`, its strings scrubbed by
-    :func:`_scrub` when the page is not valid UTF-8. A null page, or one
-    whose extraction raises, is a row with only ``parse_error`` set.
+    decoded by :func:`_decode_html`, its strings made valid UTF-8 by
+    :func:`_scrub`. A null page, or one whose extraction raises, is a row
+    with only ``parse_error`` set.
 
     With the C kernel the batch is one C call that reads the array's
     buffers and writes the output columns' buffers: Python is entered

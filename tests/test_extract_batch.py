@@ -1,8 +1,8 @@
 """The batch entry ``kernel.document.extract_batch``: one C call per Arrow
 array of pages must give, row for row, what the per-document kernel gives
 (``extract_content`` of the page decoded strictly or with surrogateescape,
-its strings scrubbed to valid UTF-8 when the page was not valid UTF-8),
-and the pure one-document-at-a-time fallback must give the same arrays."""
+its strings made valid UTF-8 by ``_scrub``), and the pure
+one-document-at-a-time fallback must give the same arrays."""
 
 import os
 import random
@@ -53,8 +53,7 @@ def expected(html):
         return (None, None, None, None, 0, 0, "html is null")
     text, clean = _decode_html(html)
     title, author, date, content, nb, nc = extract_content(text)
-    if not clean:
-        title, author, content = _scrub(title), _scrub(author), _scrub(content)
+    title, author, content = (_scrub(s, clean) for s in (title, author, content))
     # the date as the operator's output column holds it
     date = pa.array([date], document._BATCH_TYPES[2])[0].as_py()
     return (title, author, date, content, nb, nc, None)
@@ -153,6 +152,35 @@ def test_ld_json_and_time_pages():
     assert got[2].cast(pa.int64())[0].as_py() == 1580702706000000
 
 
+@pytest.mark.parametrize("bad", [b"", b"\xff"], ids=["valid", "invalid"])
+def test_lone_surrogate_json_escapes(bad):
+    # json.loads turns a lone \ud800 escape into a lone surrogate, which no
+    # byte of the page explains: every path writes U+FFFD, as Go's
+    # encoding/json decodes it. An escaped U+DC80..U+DCFF is a raw byte
+    # on an invalid page, so two of them can scrub to one valid character.
+    ld = ('<script type="application/ld+json">{"@type": "Article", '
+          '"headline": "H %s", "author": {"name": "A %s"}%s}</script>')
+    body = ("<body>" + (BODY % b"ld").decode() + "</body>").encode() + bad
+    pages = [
+        (ld % ("\\ud800", "\\udfff x", "")).encode() + body,
+        (ld % ("x", "y", ', "articleBody": "B \\ud800\\udc00 \\udbff"')
+         ).encode() + body,
+        (ld % ("\\udcc3\\udca9", "\\udc80", ', "articleBody": "\\udcff"')
+         ).encode() + body,
+        b"<title>T " + bad + b"</title>" + (ld % ("", "\\ud83d", "")).encode()
+        + body,
+    ]
+    got = check(pages)
+    titles, authors, _, contents = (a.to_pylist() for a in got[:4])
+    assert titles[0] == "H \ufffd" and authors[0] == "A \ufffd x"
+    # a well-formed pair stays one character
+    assert contents[1] == "B \U00010000 \ufffd"
+    if bad:
+        assert titles[2] == "H \u00e9"
+    else:
+        assert titles[2] == "H \ufffd\ufffd"
+
+
 def test_raising_resolver_is_a_row_error_and_the_batch_goes_on(monkeypatch):
     ld = (b'<title>T</title><script type="application/ld+json">'
           b'{"@type": "Article", "headline": "H"}</script>' + BODY % b"x")
@@ -160,13 +188,14 @@ def test_raising_resolver_is_a_row_error_and_the_batch_goes_on(monkeypatch):
     want = [expected(h) for h in pages]
 
     def boom(ld_json):
-        raise ValueError("merge failed \udcff")
+        raise ValueError("merge failed \udcff \ud800")
 
     monkeypatch.setattr(document, "_merge_ld_json", boom)
     got = rows(extract_batch(pa.array(pages, pa.binary())))
     assert got[0] == want[0] and got[2] == want[2]
     assert got[1] == (None, None, None, None, 0, 0,
-                      "ValueError: merge failed �")
+                      "ValueError: merge failed \ufffd \ufffd")
+    assert rows(_extract_batch_pure(pa.array(pages, pa.binary()))) == got
 
 
 def test_wrong_type_resolver_is_a_row_error():

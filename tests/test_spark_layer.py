@@ -193,13 +193,6 @@ class TestExtractOperator:
         assert {r["parse_error"] for r in errs} == {"html is null"}
         assert out.count() == len(with_html) + len(null_html)
 
-
-def _article_urls():
-    """The page set's article pages with html (each links to its site's
-    "/" and "/news")."""
-    return [u for u, h in page_rows() if h and b"<h1>Harbor story" in h]
-
-
     def test_input_batches_arrive_byte_capped(self, spark):
         # the operator turns each input batch into one output batch, so
         # its memory bound is Spark's byte cap on the input batches
@@ -226,6 +219,12 @@ def _article_urls():
         assert sum(r.rows for r in got) == 64
         assert len(got) >= 64 * row_bytes // cap
         assert max(r.bytes for r in got) <= cap + row_bytes
+
+
+def _article_urls():
+    """The page set's article pages with html (each links to its site's
+    "/" and "/news")."""
+    return [u for u, h in page_rows() if h and b"<h1>Harbor story" in h]
 
 
 class TestExtractLinks:
